@@ -54,25 +54,6 @@ object SparkEntry {
   private val registeredDomainSql =
     "CASE WHEN host LIKE '%.%' THEN regexp_extract(host, '([^.]+\\.[^.]+)$', 1) ELSE host END"
 
-  /** Session-scoped temp dir on tmpfs when available (same stance as Bench's
-    * `spark.local.dir`: /tmp sits on the shared virtio disk whose writeback
-    * storms are measurement noise), deleted on JVM exit (round 6 — VERDICT r5
-    * "what's wrong" #2 temp-dir hygiene + the I/O half of guide §6).
-    */
-  private def tmpDir(prefix: String): String = {
-    val base =
-      if (new java.io.File("/dev/shm").isDirectory) java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val d = java.nio.file.Files.createTempDirectory(base, prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rec(p: java.io.File): Unit = {
-        val cs = p.listFiles(); if (cs != null) cs.foreach(rec); p.delete(); ()
-      }
-      rec(d.toFile)
-    }))
-    d.toString
-  }
-
   /** The log pipeline over the synthetic web_pages table, mined+matched once per
     * (session, sfDir) and cached — several queries project from it. All its
     * consumers read only (url, line_no, event_id, event_template, matched_by),
@@ -106,7 +87,7 @@ object SparkEntry {
       // file, so a 6-file trigger ran each micro-batch 6-wide on a 32-core
       // session — per-batch parallelism now matches the cluster width while
       // the batch COUNT (2) is unchanged (maxFilesPerTrigger scales with it)
-      val out = tmpDir("graft_stream_src")
+      val out = TempDirs.create("graft_stream_src").toString
       WebPagesGen.pagesNarrow(s, WebPagesGen.pagesForSfDir(dir)).toDF()
         .repartition(64).write.mode("overwrite").parquet(out)
       out
@@ -235,11 +216,7 @@ object SparkEntry {
     }),
     "log_eval_scores" -> ((s, dir) => {
       val (_, asg) = assignedFor(s, dir)
-      val n = WebPagesGen.pagesForSfDir(dir)
-      val gt = WebPagesGen.groundTruth(s, n).toDF()
-      val joined = asg.select("url", "line_no", "event_id")
-        .join(gt, Seq("url", "line_no")).withColumnRenamed("gt_tpl", "gt_id")
-      val sc = Evaluator.evaluate(joined)
+      val sc = Evaluator.evaluate(Evaluator.withGtId(asg, WebPagesGen.templateIdAt))
       import s.implicits._
       Seq((sc.precision, sc.recall, sc.f1, sc.parsingAccuracy, sc.total))
         .toDF("precision", "recall", "f1", "parsing_accuracy", "total")
@@ -258,9 +235,6 @@ object SparkEntry {
         // the 7 loghub-shaped styles added round 3 (16-dataset sweep parity):
         "hadoop" -> 0.8, "bgl" -> 0.8, "hpc" -> 0.8, "thunderbird" -> 0.8,
         "android" -> 0.8, "openstack" -> 0.8, "mac" -> 0.8)
-      def score(asg: DataFrame, gt: DataFrame): Evaluator.Scores =
-        Evaluator.evaluate(asg.select("url", "line_no", "event_id")
-          .join(gt, Seq("url", "line_no")).withColumnRenamed("gt_tpl", "gt_id"))
       // 16 independent 150-page mini-pipelines: each one leaves most of the
       // cluster idle, so submit them concurrently (bounded pool) — Spark's
       // scheduler interleaves independent jobs exactly as a shared cluster
@@ -273,13 +247,14 @@ object SparkEntry {
         (() => {
           val (_, asg) = LogPipeline.assignNarrow(s, WebPagesGen.pagesNarrow(s, n).toDF(),
             PipelineConfig.hdfs)
-          ("hdfs", score(asg, WebPagesGen.groundTruth(s, n).toDF()))
+          ("hdfs", Evaluator.evaluate(Evaluator.withGtId(asg, WebPagesGen.templateIdAt)))
         }) +: graft.ingest.LogStyles.all.map { spec => () => {
           val cfg = PipelineConfig(spec.style.logFormat, spec.style.rexes,
             st = spec.style.st, depth = spec.style.depth)
           val (_, asg) = LogPipeline.assignNarrow(s,
             graft.ingest.LogStyles.pagesFor(s, spec, n).toDF(), cfg)
-          (spec.style.name, score(asg, graft.ingest.LogStyles.groundTruthFor(s, spec, n).toDF()))
+          (spec.style.name, Evaluator.evaluate(
+            Evaluator.withGtId(asg, graft.ingest.LogStyles.templateIdAt(spec, _, _))))
         }}
       val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
       val rows = try {
@@ -552,7 +527,7 @@ object SparkEntry {
       // Staged on tmpfs (round 6): the run is commit-protocol bound — 3 chunks ×
       // (staged snapshot + 3 control appends) of small files, where /tmp's
       // virtio disk charged ~2 s of unlink/fsync noise to the query.
-      val out = tmpDir("graft_resume_q")
+      val out = TempDirs.create("graft_resume_q").toString
       val rep = graft.pipeline.ResumableRunner.run(s, PipelineConfig.hdfs, 100L, out,
         nChunks = 3)
       graft.table.ParquetManifestTable.read(s, rep.controlTable)

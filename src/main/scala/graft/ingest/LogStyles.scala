@@ -395,12 +395,25 @@ object LogStyles {
     sb.toString
   }
 
-  def lineFor(spec: StyleSpec, rowId: Long, lineNo: Int): (String, Int) = {
+  /** The template index of line `lineNo` of styled page `rowId`. */
+  def templateIdFor(spec: StyleSpec, rowId: Long, lineNo: Int): Int =
+    pick(mix(rowId, 6000L + lineNo), spec.templates.size)
+
+  def lineFor(spec: StyleSpec, rowId: Long, lineNo: Int): String = {
     val h0 = mix(rowId, 5000L + lineNo)
-    val tplIdx = pick(mix(rowId, 6000L + lineNo), spec.templates.size)
-    val content = fillSlots(spec.templates(tplIdx), h0)
-    (spec.header(rowId, lineNo, h0) + content, tplIdx)
+    val content = fillSlots(spec.templates(templateIdFor(spec, rowId, lineNo)), h0)
+    spec.header(rowId, lineNo, h0) + content
   }
+
+  /** The url of styled page `rowId`. */
+  def urlFor(spec: StyleSpec, rowId: Long): String =
+    s"https://${WebPagesGen.domainFor(rowId)}/${spec.style.name}/$rowId"
+
+  /** [[WebPagesGen.templateIdAt]] for a style: the `gt_tpl` that
+    * [[groundTruthFor]] holds for (url, lineNo), or None when there is none.
+    */
+  def templateIdAt(spec: StyleSpec, url: String, lineNo: Int): Option[Int] =
+    WebPagesGen.rowIdAt(url, lineNo, urlFor(spec, _)).map(templateIdFor(spec, _, lineNo))
 
   /** Styled pages + groundtruth, same determinism contract as WebPagesGen. */
   def pagesFor(spark: org.apache.spark.sql.SparkSession, spec: StyleSpec, n: Long)
@@ -408,10 +421,9 @@ object LogStyles {
     import spark.implicits._
     spark.range(n).as[Long].map { rowId =>
       val lines = (0 until WebPagesGen.linesPerPage(rowId))
-        .map(i => lineFor(spec, rowId, i)._1)
+        .map(i => lineFor(spec, rowId, i))
       val text = lines.mkString("\n")
-      val url = s"https://${WebPagesGen.domainFor(rowId)}/${spec.style.name}/$rowId"
-      WebPage(url, new java.sql.Timestamp(1704067200000L + rowId * 997L),
+      WebPage(urlFor(spec, rowId), new java.sql.Timestamp(1704067200000L + rowId * 997L),
         s"<html><body>$text</body></html>".getBytes(java.nio.charset.StandardCharsets.UTF_8),
         text, "en")
     }
@@ -421,9 +433,9 @@ object LogStyles {
       : org.apache.spark.sql.Dataset[GroundTruthLine] = {
     import spark.implicits._
     spark.range(n).as[Long].flatMap { rowId =>
-      val url = s"https://${WebPagesGen.domainFor(rowId)}/${spec.style.name}/$rowId"
+      val url = urlFor(spec, rowId)
       (0 until WebPagesGen.linesPerPage(rowId))
-        .map(i => GroundTruthLine(url, i, lineFor(spec, rowId, i)._2))
+        .map(i => GroundTruthLine(url, i, templateIdFor(spec, rowId, i)))
     }
   }
 }

@@ -156,10 +156,26 @@ object WebPagesGen {
     else s"d${NumHot + pick(mix(rowId, 4), NumDomains - NumHot)}.example.com"
   }
 
+  /** The url of page `rowId` — every page and ground-truth row is keyed by it. */
+  def urlFor(rowId: Long): String = s"https://${domainFor(rowId)}/p/$rowId"
+
+  /** Inverse of the (url, line_no) keying: the ground-truth template id of line
+    * `lineNo` of the page whose url is `url`, or None when `url` is not one
+    * [[urlFor]] builds or the page has no such line. Equal, row for row, to the
+    * `gt_tpl` of [[groundTruth]] joined on (url, line_no), without generating
+    * or shuffling the ground truth.
+    */
+  def templateIdAt(url: String, lineNo: Int): Option[Int] =
+    rowIdAt(url, lineNo, urlFor).map(templateIdFor(_, lineNo))
+
+  /** The row id whose page `urlOf` keys as `url`, if that page has line `lineNo`. */
+  private[ingest] def rowIdAt(url: String, lineNo: Int, urlOf: Long => String): Option[Long] =
+    url.substring(url.lastIndexOf('/') + 1).toLongOption
+      .filter(r => r >= 0 && lineNo >= 0 && lineNo < linesPerPage(r) && urlOf(r) == url)
+
   /** Pure page constructor — THE determinism contract of the generator. */
   def pageFor(rowId: Long): WebPage = {
-    val domain = domainFor(rowId)
-    val url = s"https://$domain/p/$rowId"
+    val url = urlFor(rowId)
     val n = linesPerPage(rowId)
     val text = (0 until n).map(lineFor(rowId, _)).mkString("\n")
     val lang = langs(pick(mix(url.hashCode.toLong, 5), langs.size))
@@ -183,16 +199,15 @@ object WebPagesGen {
   def pagesNarrow(spark: SparkSession, n: Long): Dataset[WebPageNarrow] = {
     import spark.implicits._
     spark.range(n).as[Long].mapPartitions(_.map { rowId =>
-      val url = s"https://${domainFor(rowId)}/p/$rowId"
       val text = (0 until linesPerPage(rowId)).map(lineFor(rowId, _)).mkString("\n")
-      WebPageNarrow(url, new Timestamp(BaseTs + rowId * 997L), text)
+      WebPageNarrow(urlFor(rowId), new Timestamp(BaseTs + rowId * 997L), text)
     })
   }
 
   def groundTruth(spark: SparkSession, n: Long): Dataset[GroundTruthLine] = {
     import spark.implicits._
     spark.range(n).as[Long].flatMap { rowId =>
-      val url = s"https://${domainFor(rowId)}/p/$rowId"
+      val url = urlFor(rowId)
       (0 until linesPerPage(rowId)).map(i => GroundTruthLine(url, i, templateIdFor(rowId, i)))
     }
   }

@@ -214,8 +214,10 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
         // (bit-exact sequential per-length mine), a 100× corpus gets ~100×
         // more buckets, so reducer parallelism scales with the data instead of
         // plateauing at a constant (see the config scaladoc for why the
-        // derivation must be layout-independent).
-        val parsedLines = masked.filter(col("parsed")).count()
+        // derivation must be layout-independent). Counted over the physical
+        // rows, not with Dataset.count(): that one job scans (and so fills)
+        // the cache, where count()'s aggregate exchange costs three jobs.
+        val parsedLines = masked.filter(col("parsed")).queryExecution.toRdd.count()
         math.max(1L, math.min(256L,
           (parsedLines + cfgL.mineRowsPerBucket - 1) / cfgL.mineRowsPerBucket)).toInt
       }

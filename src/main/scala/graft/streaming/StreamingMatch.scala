@@ -148,21 +148,11 @@ object StreamingMatch {
       .outputMode(OutputMode.Append())
 
   /** Drive a matched stream into an in-memory table synchronously (test/demo).
-    * The checkpoint dir sits on tmpfs when available (the commit/offset log is
-    * fsync-per-batch — /tmp's shared virtio disk charged its writeback noise to
-    * the query) and is deleted on JVM exit (round 6 temp-dir hygiene).
+    * The checkpoint dir is a [[graft.TempDirs]] dir: on tmpfs when it has room
+    * (the commit/offset log is fsync-per-batch), deleted on JVM exit.
     */
   def runToMemory(df: DataFrame, name: String, outputMode: OutputMode): Unit = {
-    val base =
-      if (new java.io.File("/dev/shm").isDirectory) java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(base, s"graft_ckpt_$name")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rec(p: java.io.File): Unit = {
-        val cs = p.listFiles(); if (cs != null) cs.foreach(rec); p.delete(); ()
-      }
-      rec(ckpt.toFile)
-    }))
+    val ckpt = graft.TempDirs.create(s"graft_ckpt_$name")
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(outputMode)
       .option("checkpointLocation", ckpt.toString)

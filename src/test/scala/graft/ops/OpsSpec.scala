@@ -350,5 +350,9 @@ class OpsSpec extends SparkSuite {
     val s3 = Evaluator.evaluate(merged)
     assert(s3.parsingAccuracy == 0.0)
     assert(s3.precision < 1.0 && s3.recall == 1.0)
+
+    // nothing parsed (an empty join) scores zero instead of throwing
+    val none = Seq.empty[(String, String)].toDF("event_id", "gt_id")
+    assert(Evaluator.evaluate(none) == Evaluator.Scores(0.0, 0.0, 0.0, 0.0, 0L))
   }
 }
