@@ -75,7 +75,10 @@ object Bench {
       .start().waitFor()
   }
 
-  private def session(cpus: Int): SparkSession = {
+  /** A fresh `local[cpus]` session with the bench settings (the active one is
+    * stopped first). `tools.BenchExtra` times its queries in this same session.
+    */
+  private[graft] def session(cpus: Int): SparkSession = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -96,9 +99,7 @@ object Bench {
     s
   }
 
-  private def localDir: String =
-    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_bench_local"
-    else "/tmp/graft_bench_local"
+  private def localDir: String = TempDirs.root.resolve("graft_bench_local").toString
 
   /** The scale-configured pipeline: identical operators to the correctness path, with
     * the SURVEY-documented 10^12-row knob engaged — `mineSampleLimit` bounds the rows
@@ -190,8 +191,7 @@ object Bench {
     // not I/O realism. A real cluster reads from per-executor-striped distributed
     // storage, which a single shared noisy virtio disk does not model either.
     val work = sys.env.getOrElse("SPARK_GRAFT_BENCH_DIR",
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_bench"
-      else "/tmp/graft_bench")
+      TempDirs.root.resolve("graft_bench").toString)
     val nPages = WebPagesGen.pagesForSfDir(sfDir)
     // Scaling input = the sf page count (mult 1). Round 2 defaulted this to 2×
     // (400k pages measured 0.939 with a 3× tighter spread than 200k's 0.74–0.86,

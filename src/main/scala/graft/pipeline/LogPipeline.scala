@@ -286,9 +286,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
     * run-to-run nondeterministic. Partition membership is a pure function of
     * hash(url), so the whole mine is deterministic for a fixed partition count;
     * at ONE shuffle partition it is bit-identical to the old sequential mine
-    * (SpellAggregatorSpec pins both). [[graft.spell.SpellAggregator]] remains the
-    * §2.8 Aggregator-API surface with DrainAggregator's weaker merge-tree
-    * contract.
+    * (SpellAggregatorSpec pins both).
     */
   def mineSpellResidue(masked: DataFrame, drain: DrainTree): SpellModel = {
     val spark = masked.sparkSession
@@ -423,17 +421,7 @@ object LogPipeline {
     * owns unpersist (dropping the returned DataFrame releases it with the session).
     */
   def assignAll(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig)
-      : (MatchCatalog, DataFrame) = {
-    val p = new LogPipeline(cfg)
-    val maskedRaw = p.withMasked(p.structure(p.explodeLines(pages)))
-    val masked = if (sys.env.contains("GRAFT_NO_PERSIST")) maskedRaw
-      else maskedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val drain = p.mineDrain(masked)
-    val spell = p.mineSpellResidue(masked, drain)
-    val catalog = new MatchCatalog(drain, spell)
-    val bc = spark.sparkContext.broadcast(catalog)
-    (catalog, p.matchPhase(masked, bc))
-  }
+      : (MatchCatalog, DataFrame) = assign(spark, pages, cfg, narrow = false)
 
   /** [[assignAll]] for consumers that only read
     * (url, line_no, event_id, event_template, matched_by) — the evaluator /
@@ -447,17 +435,26 @@ object LogPipeline {
     * catalog — and with it every projected column — is provably identical.
     */
   def assignNarrow(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig)
-      : (MatchCatalog, DataFrame) = {
+      : (MatchCatalog, DataFrame) = assign(spark, pages, cfg, narrow = true)
+
+  /** The one assign body behind [[assignAll]] and [[assignNarrow]]. `narrow`
+    * changes only the persisted columns and the match projection; the full path
+    * adds no projection, so its plan is the plain `matchPhase` plan.
+    */
+  private def assign(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
+                     narrow: Boolean): (MatchCatalog, DataFrame) = {
     val p = new LogPipeline(cfg)
-    val maskedRaw = p.withMasked(p.structure(p.explodeLines(pages)))
-      .select("url", "line_no", "parsed", "masked")
-    val masked = if (sys.env.contains("GRAFT_NO_PERSIST")) maskedRaw
-      else maskedRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val structured = p.withMasked(p.structure(p.explodeLines(pages)))
+    val masked = (if (narrow) structured.select("url", "line_no", "parsed", "masked")
+      else structured).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val drain = p.mineDrain(masked)
     val spell = p.mineSpellResidue(masked, drain)
     val catalog = new MatchCatalog(drain, spell)
     val bc = spark.sparkContext.broadcast(catalog)
-    (catalog, p.matchCore(masked, bc)
-      .select("url", "line_no", "event_id", "event_template", "matched_by"))
+    val assigned =
+      if (narrow) p.matchCore(masked, bc)
+        .select("url", "line_no", "event_id", "event_template", "matched_by")
+      else p.matchPhase(masked, bc)
+    (catalog, assigned)
   }
 }

@@ -163,7 +163,8 @@ final class SpellModel(val tau: Double = 0.5) extends Serializable {
   }
 
   /** Lines consumed by [[add]] — lets a bounded distributed mine cap per-partition
-    * work (see [[SpellAggregator]]); purely informational for the sequential path.
+    * work (see `LogPipeline.mineSpellResidue`); purely informational for the
+    * sequential path.
     */
   var minedLines: Long = 0L
 
@@ -206,8 +207,8 @@ final class SpellModel(val tau: Double = 0.5) extends Serializable {
     * way, so `a.canonicalMerge(b)` and `b.canonicalMerge(a)` are bit-identical.
     * Like online Drain, online Spell is insertion-order dependent, so results
     * across different merge-TREE shapes are grouping-grade reproducible, not
-    * provably bit-identical — [[SpellAggregator]] carries the same contract as
-    * DrainAggregator.
+    * provably bit-identical; `LogPipeline.mineSpellResidue` therefore folds its
+    * partials in ascending partition order.
     */
   def canonicalMerge(other: SpellModel): SpellModel = {
     // Empty-side shortcut: merging with an empty partial is the IDENTITY (not a

@@ -36,22 +36,16 @@ object StreamingMatch {
     maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n)).parquet(dir)
   }
 
-  /** The streaming match plan: same explode/structure/mask/match columns as batch
-    * (pure transformations stream untouched), carrying `warc_ts` for windowing.
+  /** The streaming match plan: the batch structure/mask and [[LogPipeline.matchCore]]
+    * (pure transformations stream untouched). The stream keeps its own explode
+    * because it carries `warc_ts` for windowing.
     */
   def matchedStream(pages: DataFrame, cfg: PipelineConfig,
                     catalog: Broadcast[MatchCatalog]): DataFrame = {
     val p = new LogPipeline(cfg)
     val lines = pages.select(col("url"), col("warc_ts"),
       posexplode(split(col("text"), "\n")).as(Seq("line_no", "line")))
-    val masked = p.withMasked(p.structure(lines))
-    val matcher = udf { (m: String) => catalog.value.matchLine(m) }
-    masked.filter(col("parsed"))
-      .withColumn("m", matcher(col("masked")))
-      .withColumn("event_template", col("m._1"))
-      .withColumn("matched_by", col("m._2"))
-      .drop("m")
-      .withColumn("event_id", substring(md5(col("event_template")), 1, 8))
+    p.matchCore(p.withMasked(p.structure(lines)), catalog)
   }
 
   /** Watermarked per-window template counts — the streaming A1/S5 aggregate sink. */

@@ -1,44 +1,25 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 measurement harness (guide §1) — NOT part of the driver contract.
   *
-  * Replicates `Bench`'s per-query session and timing methodology exactly
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, AQE on, noop sink,
-  * tmpfs spark.local.dir) but runs only the queries named on the command line
-  * (all when none given), with optional repeats, so a single query can be
-  * iterated on in seconds instead of re-running the full frozen bench.
+  * Times queries in `Bench`'s own per-query session ([[graft.Bench.session]]:
+  * local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, AQE on, spark.local.dir
+  * under [[graft.TempDirs]]) with the same noop-sink methodology, but runs only
+  * the queries named on the command line (all when none given), with optional
+  * repeats, so a single query can be iterated on in seconds instead of
+  * re-running the full frozen bench.
   *
   * Usage:
-  *   sbt "runMain graft.tools.BenchExtra [--reps N] [--plans DIR] [query ...]"
+  *   sbt "runMain graft.tools.BenchExtra [--reps N] [--plans DIR] [--stages N] [query ...]"
   *
   * With `--plans DIR`, each query's `.explain("formatted")` output is written to
   * DIR/<query>.txt before timing (the judge-facing plan evidence for
-  * plans/r06/). Timings print as one JSON line per rep, with the queries that
-  * failed listed under "failed"; each failure also prints its own error line.
+  * plans/r06/). With `--stages N`, each query prints how many stages it
+  * completed and its N longest ones. Timings print as one JSON line per rep,
+  * with the queries that failed listed under "failed"; each failure also prints
+  * its own error line.
   */
 object BenchExtra {
-
-  private def session(cpus: Int): SparkSession = {
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-benchextra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_bench_local"
-        else "/tmp/graft_bench_local")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** Per-stage wall/task-time/shuffle attribution (guide §7.1, sans UI). */
   private final class StageListener extends org.apache.spark.scheduler.SparkListener {
@@ -54,18 +35,18 @@ object BenchExtra {
         i.taskMetrics.shuffleReadMetrics.totalBytesRead,
         i.taskMetrics.shuffleWriteMetrics.bytesWritten))
     }
-    def drainTop(n: Int): Seq[St] = {
+    /** Empties the queue: the number of stages recorded and the `n` longest. */
+    def drain(n: Int): (Int, Seq[St]) = {
       val out = scala.collection.mutable.ArrayBuffer[St]()
       var s = stages.poll()
       while (s != null) { out += s; s = stages.poll() }
-      out.sortBy(-_.wallMs).take(n).toSeq
+      (out.size, out.sortBy(-_.wallMs).take(n).toSeq)
     }
-    def drainCount(): Int = { var c = 0; while (stages.poll() != null) c += 1; c }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     var reps = 1
     var plansDir: Option[String] = None
     var stageTop = 0
@@ -82,7 +63,7 @@ object BenchExtra {
     val all = graft.SparkEntry.queries
     val picked = if (names.isEmpty) all.toSeq.sortBy(_._1)
       else names.toSeq.map(n => n -> all(n))
-    val spark = session(cpus)
+    val spark = graft.Bench.session(cpus)
     val listener = if (stageTop > 0) {
       val l = new StageListener; spark.sparkContext.addSparkListener(l); Some(l)
     } else None
@@ -90,7 +71,7 @@ object BenchExtra {
     for (r <- 1 to reps) {
       val results = picked.map { case (name, fn) =>
         spark.sparkContext.setJobDescription(name)
-        listener.foreach(_.drainCount())
+        listener.foreach(_.drain(0))
         plansDir.filter(_ => r == 1).foreach { d =>
           java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
           val df = fn(spark, sfDir)
@@ -117,9 +98,9 @@ object BenchExtra {
         }
         listener.foreach { l =>
           Thread.sleep(200) // let stage-completed events drain
-          val all = l.drainTop(stageTop)
-          println(f"STAGES $name rep=$r nStages=?")
-          all.foreach { s =>
+          val (nStages, top) = l.drain(stageTop)
+          println(s"STAGES $name rep=$r nStages=$nStages")
+          top.foreach { s =>
             println(f"  ${s.wallMs}%6d ms wall  ${s.taskMs}%7d ms task  " +
               f"${s.tasks}%3d tasks  shR=${s.shRead}%9d shW=${s.shWrite}%9d  ${s.name}")
           }

@@ -20,6 +20,12 @@ class TempDirsSpec extends AnyFunSuite {
     } finally Files.delete(cand)
   }
 
+  test("root: /dev/shm under the MinFreeBytes floor, else java.io.tmpdir") {
+    val r = TempDirs.root
+    assert(r == TempDirs.base(new File("/dev/shm"), TempDirs.MinFreeBytes))
+    assert(r == Paths.get("/dev/shm") || r == tmp)
+  }
+
   test("create: a fresh dir under the chosen base") {
     val d = TempDirs.create("graft_tempdirs_spec")
     assert(Files.isDirectory(d))
