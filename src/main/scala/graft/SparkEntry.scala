@@ -729,8 +729,7 @@ object SparkEntry {
       // (HUGEINT wrapping arithmetic + per-bit majority); at maxHamming=0 the
       // pigeonhole banding is EXACT (hamming 0 ⇒ all four 16-bit bands equal), so
       // the pair set is provably all equal-simhash pairs — no recall caveat
-      Dedup.simhashDupPairs(docsWithDups(s, dir), "doc_id", "text", maxHamming = 0,
-        hashFn = c => Dedup.simhash64Fnv(c))
+      Dedup.simhashDupPairs(docsWithDups(s, dir), "doc_id", "text", maxHamming = 0)
         .select(col("id_a"), col("id_b"))),
     "d_jaccard_pairs" -> ((s, dir) =>
       Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "doc_id", "text",
@@ -1017,8 +1016,8 @@ object SparkEntry {
 
   // ---- oracles ---------------------------------------------------------------
 
-  // shared fragments for the composite pipeline oracle (each already validated by
-  // its own query's oracle: t_quality, t_langid, t_token_count, d_exact_dedup)
+  // one spelling per fragment: the t_quality and t_langid oracles are built from
+  // these, and the composite pipeline oracles reuse them
   private val qualityExpr =
     "GREATEST(0, LEAST(100000, " +
       "CASE WHEN length(text) BETWEEN 200 AND 20000 THEN 40000 " +
@@ -1280,13 +1279,7 @@ object SparkEntry {
       ("SELECT doc_id, CASE WHEN trim(text) = '' THEN 0 ELSE " +
         "len(string_split_regex(trim(text), '\\s+')) END::BIGINT AS n_tokens FROM documents"),
     "t_quality" ->
-      ("SELECT doc_id, GREATEST(0, LEAST(100000, " +
-        "CASE WHEN length(text) BETWEEN 200 AND 20000 THEN 40000 " +
-        "WHEN length(text) >= 50 THEN 20000 ELSE 0 END " +
-        "+ CAST(floor((length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g'))) * 60000 / GREATEST(length(text), 1)) AS BIGINT) " +
-        "- CAST(floor(((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g'))) " +
-        "+ (length(text) - length(regexp_replace(text, '[0-9]', '', 'g')))) * 30000 / GREATEST(length(text), 1)) AS BIGINT)" +
-        "))::BIGINT AS quality_milli FROM documents"),
+      s"SELECT doc_id, $qualityExpr::BIGINT AS quality_milli FROM documents",
     "t_stopword_ratio" ->
       ("SELECT doc_id, CASE WHEN trim(text) = '' THEN 0 ELSE " +
         "CAST(floor(len(list_filter(string_split_regex(trim(text), '\\s+'), " +
@@ -1295,17 +1288,7 @@ object SparkEntry {
         "AS stopword_milli FROM documents"),
     "t_fingerprint" ->
       "SELECT doc_id, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fp FROM documents",
-    "t_langid" ->
-      ("SELECT doc_id, CASE WHEN best = 0 THEN 'und' WHEN s1 = best THEN 'en' " +
-        "WHEN s2 = best THEN 'es' WHEN s3 = best THEN 'de' WHEN s4 = best THEN 'fr' " +
-        "ELSE 'zh' END AS pred_lang FROM (SELECT doc_id, s1, s2, s3, s4, s5, " +
-        "GREATEST(s1, s2, s3, s4, s5) AS best FROM (SELECT doc_id, " +
-        "len(list_filter(toks, x -> list_contains(['the','and','of','is','that','with','for'], x))) AS s1, " +
-        "len(list_filter(toks, x -> list_contains(['el','la','de','que','los','una','por'], x))) AS s2, " +
-        "len(list_filter(toks, x -> list_contains(['der','die','und','das','nicht','ein','mit'], x))) AS s3, " +
-        "len(list_filter(toks, x -> list_contains(['le','les','des','est','une','dans','pour'], x))) AS s4, " +
-        "len(list_filter(toks, x -> list_contains(['的','是','不','了','在','人','有'], x))) AS s5 " +
-        "FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents))) "),
+    "t_langid" -> langIdSubquery,
     "t_subword_count" ->
       // lookaround-free equivalent of the Spark split: insert spaces at punct and
       // camelCase boundaries, then split on whitespace (RE2 has no lookbehind) —

@@ -1,5 +1,6 @@
 package graft.ael
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -25,10 +26,11 @@ import org.apache.spark.sql.functions._
   *     structural — every merge strictly reduces the template count — and a
   *     `maxReconcile` guard fail-stops rather than looping silently.
   *
-  * Stages 1–3 are a map + one aggregation; stage 4 operates on template GROUPS
-  * (post-categorize cardinality, orders of magnitude below row count), so its
-  * explode-by-position is bounded by |templates|·len. Order-independent,
-  * collect-free, DuckDB-provable (SparkEntry `ael_templates`).
+  * Stages 1–3 are a map over the distinct lines + one aggregation; stage 4
+  * operates on template GROUPS (post-categorize cardinality, orders of
+  * magnitude below row count), so its explode-by-position is bounded by
+  * |templates|·len. Order-independent, collect-free, DuckDB-provable
+  * (SparkEntry `ael_templates`).
   */
 object Ael {
 
@@ -41,40 +43,18 @@ object Ael {
         .when(t.rlike("[0-9]"), lit(Wildcard))
         .otherwise(t))
 
-  /** trim+split+[[anonymizeTokens]] fused into one compiled-pattern UDF pass
+  /** [[anonymizeTokens]] as one compiled-pattern UDF pass over a token array
     * (round 6): the HOF form evaluates two interpreted regex predicates per
-    * token of every raw line — the miner's dominant per-row cost. Rule-for-rule
-    * identical: Spark `trim` strips ' ' only, Spark `split` keeps trailing
-    * empties (limit -1); `key=value` → `key=<*>` (the replace pattern `=.*$`
-    * consumes from the FIRST '=' to end-of-token, exactly like
+    * token. Rule-for-rule identical: `key=value` → `key=<*>` (the replace
+    * pattern `=.*$` consumes from the FIRST '=' to end-of-token, exactly like
     * `regexp_replace`), else any digit-bearing token → `<*>`, else unchanged.
     */
   private val KeyValue = java.util.regex.Pattern.compile("^\\w+=\\S+$")
-  private[ael] val anonymizeLine = udf { (line: String) =>
-    if (line == null) null
-    else {
-      var b = 0; var e = line.length
-      while (b < e && line.charAt(b) == ' ') b += 1
-      while (e > b && line.charAt(e - 1) == ' ') e -= 1
-      val toks = line.substring(b, e).split("\\s+", -1)
-      var i = 0
-      while (i < toks.length) {
-        val t = toks(i)
-        if (KeyValue.matcher(t).matches()) {
-          toks(i) = t.substring(0, t.indexOf('=')) + "=<*>"
-        } else {
-          var j = 0
-          var digit = false
-          while (j < t.length && !digit) {
-            val c = t.charAt(j)
-            if (c >= '0' && c <= '9') digit = true
-            j += 1
-          }
-          if (digit) toks(i) = Wildcard
-        }
-        i += 1
-      }
-      toks.toSeq
+  private val anonymize = udf { (toks: Seq[String]) =>
+    toks.map { t =>
+      if (KeyValue.matcher(t).matches()) t.substring(0, t.indexOf('=')) + "=<*>"
+      else if (t.exists(c => c >= '0' && c <= '9')) Wildcard
+      else t
     }
   }
 
@@ -125,11 +105,11 @@ object Ael {
   /** Mine the reconciled catalog: (event_template, occurrences). */
   def mineTemplates(lines: DataFrame, lineCol: String,
                     maxReconcile: Int = 20): DataFrame = {
-    // stages 1–3: anonymize per token (fused UDF pass), bin, categorize
-    var cat = lines
-      .select(anonymizeLine(col(lineCol)).as("pieces"))
+    // stages 1–3: anonymize the distinct lines' tokens, bin, categorize
+    var cat = MinerOutput.distinctLines(lines, lineCol)
+      .select(anonymize(col("toks")).as("pieces"), col("cnt"))
       .groupBy(col("pieces"))
-      .agg(count(lit(1)).as("occurrences"))
+      .agg(sum(col("cnt")).as("occurrences"))
       .localCheckpoint(true)
     // stage 4 to fixpoint: every merge strictly reduces the template count, so
     // equality means the round merged nothing. localCheckpoint per round stops
@@ -153,5 +133,5 @@ object Ael {
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String,
                   maxReconcile: Int = 20): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol, maxReconcile))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol, maxReconcile))
 }

@@ -1,5 +1,6 @@
 package graft.brain
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -38,61 +39,50 @@ import org.apache.spark.sql.functions._
 object Brain {
 
   /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame = {
-    // persisted: feeds the frequency table, the modal/LCP joins AND the final
-    // assembly — one corpus scan+dedup instead of three.
-    // The per-line joins below key on pid = xxhash64(line), not the line
-    // STRING (round 6): the modal/LCP stages shuffle one row per (line,
-    // position), each formerly carrying the full raw line as its key — 8-byte
-    // keys shuffle and compare for a fraction of that (guide §2.3 "narrower
-    // types"). Collision contract as LogMine's pattern lid: ~n²/2⁶⁴.
-    val base = lines
-      .select(trim(col(lineCol)).as("line"))
-      .filter(col("line") =!= "")
-      .groupBy("line").agg(count(lit(1)).as("cnt"))
-      .withColumn("pid", xxhash64(col("line")))
-      .withColumn("toks", split(col("line"), "\\s+"))
-      .withColumn("len", size(col("toks")))
-      .persist()
+  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      // The per-line joins below key on pid = xxhash64(p), not the line
+      // STRING (round 6): the modal/LCP stages shuffle one row per (line,
+      // position), each formerly carrying the full raw line as its key — 8-byte
+      // keys shuffle and compare for a fraction of that (guide §2.3 "narrower
+      // types"). Collision contract as LogMine's pattern lid: ~n²/2⁶⁴.
+      val base = dl.withColumn("pid", xxhash64(col("p")))
+        .withColumn("len", size(col("toks")))
 
-    val pe = base.select(col("pid"), col("cnt"), col("len"),
-      posexplode(col("toks")).as(Seq("pos", "tok")))
-    // frequency of each (len, pos, word), weighted by line multiplicity
-    val freq = pe.groupBy("len", "pos", "tok").agg(sum(col("cnt")).as("f"))
-    val m = pe.join(freq, Seq("len", "pos", "tok"))
+      val pe = base.select(col("pid"), col("cnt"), col("len"),
+        posexplode(col("toks")).as(Seq("pos", "tok")))
+      // frequency of each (len, pos, word), weighted by line multiplicity
+      val freq = pe.groupBy("len", "pos", "tok").agg(sum(col("cnt")).as("f"))
+      val m = pe.join(freq, Seq("len", "pos", "tok"))
 
-    // Modal frequency + LCP key per line in ONE gather + UDF pass (round 6):
-    // both are pure functions of the line's own (pos, tok, f) vector, so the
-    // former two modal aggregations, the LCP join + aggregation and the
-    // join-back to `base` (four per-token exchanges) collapse into one
-    // groupBy(pid). Rule-for-rule identical: modal f = the value carried by
-    // the most positions, ties to the LARGER f; LCP = the
-    // LEXICOGRAPHICALLY sorted "pos:tok" strings at the modal f, joined by
-    // ','; ckey = "len|lcp".
-    val ckeyU = udf { (len: Int, toks: Seq[String], fs: Seq[Long]) =>
-      val counts = new scala.collection.mutable.HashMap[Long, Int]()
-      fs.foreach(f => counts.update(f, counts.getOrElse(f, 0) + 1))
-      val modal = counts.maxBy { case (f, n) => (n, f) }._1
-      val lcp = fs.indices.collect { case i if fs(i) == modal => s"$i:${toks(i)}" }
-        .sorted.mkString(",")
-      s"$len|$lcp"
+      // Modal frequency + LCP key per line in ONE gather + UDF pass (round 6):
+      // both are pure functions of the line's own (pos, tok, f) vector, so the
+      // former two modal aggregations, the LCP join + aggregation and the
+      // join-back to `base` (four per-token exchanges) collapse into one
+      // groupBy(pid). Rule-for-rule identical: modal f = the value carried by
+      // the most positions, ties to the LARGER f; LCP = the
+      // LEXICOGRAPHICALLY sorted "pos:tok" strings at the modal f, joined by
+      // ','; ckey = "len|lcp".
+      val ckeyU = udf { (len: Int, toks: Seq[String], fs: Seq[Long]) =>
+        val counts = new scala.collection.mutable.HashMap[Long, Int]()
+        fs.foreach(f => counts.update(f, counts.getOrElse(f, 0) + 1))
+        val modal = counts.maxBy { case (f, n) => (n, f) }._1
+        val lcp = fs.indices.collect { case i if fs(i) == modal => s"$i:${toks(i)}" }
+          .sorted.mkString(",")
+        s"$len|$lcp"
+      }
+      val withCluster = m.groupBy("pid")
+        .agg(first(col("cnt")).as("cnt"), first(col("len")).as("len"),
+          array_sort(collect_list(struct(col("pos"), col("tok"), col("f")))).as("arr"))
+        .withColumn("ckey", ckeyU(col("len"),
+          col("arr.tok"), col("arr.f")))
+
+      MinerOutput.agreementTemplates(
+        withCluster.select(col("ckey"), col("cnt").as("w"),
+          posexplode(col("arr.tok")).as(Seq("pos", "tok"))))
     }
-    val withCluster = m.groupBy("pid")
-      .agg(first(col("cnt")).as("cnt"), first(col("len")).as("len"),
-        array_sort(collect_list(struct(col("pos"), col("tok"), col("f")))).as("arr"))
-      .withColumn("ckey", ckeyU(col("len"),
-        col("arr.tok"), col("arr.f")))
-
-    // eager checkpoint of the tiny catalog, then release the staged cache
-    val out = graft.miner.MinerOutput.agreementTemplates(
-      withCluster.select(col("ckey"), col("cnt").as("w"),
-        posexplode(col("arr.tok")).as(Seq("pos", "tok"))))
-      .localCheckpoint(true)
-    base.unpersist()
-    out
-  }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 }

@@ -154,7 +154,7 @@ object Dedup {
     * HOF form (`transform(seq, h => array_min(transform(bh, …)))`) is interpreted
     * per lambda element and allocates a shingle-sized array per hash function —
     * measured ~1 µs/element vs ~5 ns for the loop (same justification as the
-    * simhash64 bit-loop; there is no built-in that expresses "k mins in one pass").
+    * simhash64Fnv bit-loop; there is no built-in that expresses "k mins in one pass").
     * The mix is splitmix64-style over (baseHash, seed) — any good 64-bit family
     * works; nothing pins the exact values.
     */
@@ -188,11 +188,6 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => struct(b.as("band"), xxhash64(concat_ws(",",
         transform(slice(sig, b * rows + 1, lit(rows)), x => x.cast("string")))).as("band_hash")))
-
-  /** Estimated Jaccard from two signatures: fraction of agreeing positions. */
-  def sigAgreement(a: Column, b: Column): Column =
-    size(filter(zip_with(a, b, (x, y) => x === y), p => p)).cast("double") /
-      size(a).cast("double")
 
   /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
     *
@@ -314,34 +309,11 @@ object Dedup {
 
   // ---- SimHash ---------------------------------------------------------------
 
-  /** 64-bit SimHash over word tokens: per-bit majority vote of token hashes.
-    * Implemented as a Scala UDF (bit loop); per-row cost is O(tokens × 64 / word).
-    */
-  val simhash64 = udf { (text: String) =>
-    if (text == null) 0L
-    else {
-      val toks = text.trim.split("\\s+")
-      val counts = new Array[Int](64)
-      toks.foreach { t =>
-        var h = scala.util.hashing.MurmurHash3.stringHash(t).toLong & 0xFFFFFFFFL
-        // widen to 64 bits deterministically
-        h = h * 0x9E3779B97F4A7C15L + 0xC2B2AE3D27D4EB4FL
-        h = (h ^ (h >>> 30)) * 0xBF58476D1CE4E5B9L
-        var i = 0
-        while (i < 64) { if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1; i += 1 }
-      }
-      var out = 0L
-      var i = 0
-      while (i < 64) { if (counts(i) > 0) out |= (1L << i); i += 1 }
-      out
-    }
-  }
-
-  /** SimHash over the FNV-1a token-hash family (same per-token hash as
-    * [[graft.text.TextOps.rollingFingerprint]], whose wrapping 64-bit arithmetic is
-    * already emulated in DuckDB HUGEINT) — bit-reproducible by a SQL oracle, unlike
-    * [[simhash64]]'s MurmurHash3 family. Same algorithm, same banding pipeline; only
-    * the hash family differs, so either variant exercises identical plan shapes.
+  /** 64-bit SimHash over word tokens: per-bit majority vote of token hashes, a
+    * Scala UDF (bit loop; per-row cost O(tokens × 64 / word)). Tokens hash with
+    * FNV-1a (same per-token hash as [[graft.text.TextOps.rollingFingerprint]],
+    * whose wrapping 64-bit arithmetic is already emulated in DuckDB HUGEINT), so
+    * a SQL oracle reproduces every sketch bit for bit.
     */
   val simhash64Fnv = udf { (text: String) =>
     if (text == null) 0L
@@ -374,13 +346,11 @@ object Dedup {
   /** Near-dup candidates by SimHash: docs whose simhash agrees on a `prefixBits`-bit
     * band (4 rotations) are candidates; verified by Hamming distance ≤ maxHamming.
     * The rotation-band trick keeps this a hash-equi-join (shuffleable) rather than a
-    * quadratic distance scan. `hashFn` selects the sketch family: [[simhash64]]
-    * (MurmurHash3 tokens, the fast default) or [[simhash64Fnv]] (DuckDB-reproducible).
+    * quadratic distance scan. The sketch is [[simhash64Fnv]].
     */
   def simhashDupPairs(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3,
-                      hashFn: Column => Column = c => simhash64(c)): DataFrame = {
-    val withH = df.select(col(idCol).as("id"), hashFn(col(textCol)).as("sh"))
+                      maxHamming: Int = 3): DataFrame = {
+    val withH = df.select(col(idCol).as("id"), simhash64Fnv(col(textCol)).as("sh"))
     // 4 bands of 16 bits: pigeonhole — hamming ≤ 3 ⇒ at least one identical band
     val banded = withH.select(col("id"), col("sh"),
       explode(array((0 until 4).map(b =>

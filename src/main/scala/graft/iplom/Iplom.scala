@@ -1,6 +1,7 @@
 package graft.iplom
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.miner.MinerOutput
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** IPLoM-style template miner (Makanju, Zincir-Heywood & Milios, "Clustering Event
@@ -35,7 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object Iplom {
 
-
   /** Mine templates from a string column of log lines.
     *
     * @param lines       input rows
@@ -53,12 +53,8 @@ object Iplom {
     */
   def mineTemplates(lines: DataFrame, lineCol: String, refinements: Int = 1,
                     ct: Double = 0.35): DataFrame = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-
     // step 1: tokenize; the initial partition key is the token count
-    val toks = lines
-      .select(split(trim(col(lineCol)), "\\s+").as("toks"))
+    val toks = MinerOutput.lineTokens(lines, lineCol)
       .select(col("toks"), size(col("toks")).as("len"))
       .withColumn("pkey", col("len").cast("string"))
 
@@ -136,7 +132,7 @@ object Iplom {
 
     // step 4: per partition, a position is constant iff it has exactly one
     // distinct token — the shared agreement assembly (weight 1 per raw line)
-    graft.miner.MinerOutput.agreementTemplates(
+    MinerOutput.agreementTemplates(
       mapped.select(col("pkey").as("ckey"), lit(1L).as("w"),
         posexplode(col("toks")).as(Seq("pos", "tok"))))
   }
@@ -144,5 +140,5 @@ object Iplom {
   /** [[mineTemplates]] plus the md5-prefix event id used across the engine. */
   def mineCatalog(lines: DataFrame, lineCol: String, refinements: Int = 1,
                   ct: Double = 0.35): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol, refinements, ct))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol, refinements, ct))
 }

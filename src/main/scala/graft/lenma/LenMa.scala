@@ -1,5 +1,6 @@
 package graft.lenma
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,94 +45,82 @@ import org.apache.spark.sql.functions._
   */
 object LenMa {
 
-
   /** Mine the template catalog: (event_template, occurrences). */
   def mineTemplates(lines: DataFrame, lineCol: String): DataFrame = {
-    val toks = lines
-      .select(split(trim(col(lineCol)), "\\s+").as("toks"))
+    val toks = MinerOutput.lineTokens(lines, lineCol)
       .withColumn("lkey", concat_ws(",",
         transform(col("toks"), t => length(t).cast("string"))))
 
-    graft.miner.MinerOutput.agreementTemplates(
+    MinerOutput.agreementTemplates(
       toks.select(col("lkey").as("ckey"), lit(1L).as("w"),
         posexplode(col("toks")).as(Seq("pos", "tok"))))
   }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 
   /** The sub-1.0 cosine instance (see class doc): clusters = connected
     * components of {equal token count ∧ ≤ ⌊maxMismatchFrac·len⌋ differing
     * length-vector positions ∧ cosine(lv_a, lv_b) ≥ sim}.
     */
   def mineTemplatesSim(lines: DataFrame, lineCol: String, sim: Double,
-                       maxMismatchFrac: Double = 0.5): DataFrame = {
-    // persisted: feeds the banding and both verify sides — one corpus
-    // scan+dedup instead of three (same contract as LogMine)
-    val patterns = lines
-      .select(trim(col(lineCol)).as("p"))
-      .filter(col("p") =!= "")
-      .groupBy("p").agg(count(lit(1)).as("cnt"))
-      .withColumn("pid", xxhash64(col("p")))
-      .withColumn("toks", split(col("p"), "\\s+"))
-      .withColumn("lv", transform(col("toks"), t => length(t).cast("long")))
-      .withColumn("len", size(col("toks")))
-      .persist()
+                       maxMismatchFrac: Double = 0.5): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      val patterns = dl
+        .withColumn("pid", xxhash64(col("p")))
+        .withColumn("lv", transform(col("toks"), t => length(t).cast("long")))
+        .withColumn("len", size(col("toks")))
 
-    // exact pigeonhole banding over the LENGTH VECTOR (LogMine's trick): with
-    // nb = floor(frac·len)+1 contiguous bands, a pair differing in ≤ floor(frac·len)
-    // positions leaves at least one band untouched
-    val banded = patterns
-      .withColumn("nb", (floor(col("len") * maxMismatchFrac) + 1).cast("int"))
-      .select(col("pid"), col("len"), col("lv"), col("nb"),
-        explode(sequence(lit(0), col("nb") - 1)).as("band"))
-      .withColumn("bstart", floor(col("band") * col("len") / col("nb")).cast("int"))
-      .withColumn("bend", floor((col("band") + 1) * col("len") / col("nb")).cast("int"))
-      .withColumn("bh", xxhash64(col("band"), concat_ws(",",
-        transform(slice(col("lv"), col("bstart") + 1, col("bend") - col("bstart")),
-          x => x.cast("string")))))
-      .select(col("len"), col("band"), col("bh"), col("pid"))
+      // exact pigeonhole banding over the LENGTH VECTOR (LogMine's trick): with
+      // nb = floor(frac·len)+1 contiguous bands, a pair differing in ≤ floor(frac·len)
+      // positions leaves at least one band untouched
+      val banded = patterns
+        .withColumn("nb", (floor(col("len") * maxMismatchFrac) + 1).cast("int"))
+        .select(col("pid"), col("len"), col("lv"), col("nb"),
+          explode(sequence(lit(0), col("nb") - 1)).as("band"))
+        .withColumn("bstart", floor(col("band") * col("len") / col("nb")).cast("int"))
+        .withColumn("bend", floor((col("band") + 1) * col("len") / col("nb")).cast("int"))
+        .withColumn("bh", xxhash64(col("band"), concat_ws(",",
+          transform(slice(col("lv"), col("bstart") + 1, col("bend") - col("bstart")),
+            x => x.cast("string")))))
+        .select(col("len"), col("band"), col("bh"), col("pid"))
 
-    val ca = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
-    val cb = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_b"))
-    val cand = ca.join(cb, Seq("len", "band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+      val ca = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
+      val cb = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_b"))
+      val cand = ca.join(cb, Seq("len", "band", "bh"))
+        .filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b").distinct()
 
-    // verify: mismatch bound + cosine over exact long moments (IEEE-identical
-    // to the DuckDB oracle's expression)
-    def sumSq(c: org.apache.spark.sql.Column) =
-      aggregate(c, lit(0L), (acc, x) => acc + x * x).cast("double")
-    val pa = patterns.select(col("pid").as("id_a"), col("lv").as("lv_a"), col("len"))
-    val pb = patterns.select(col("pid").as("id_b"), col("lv").as("lv_b"),
-      col("len").as("len_b"))
-    val pairs = cand.join(pa, Seq("id_a")).join(pb, Seq("id_b"))
-      .filter(col("len") === col("len_b"))
-      .withColumn("mism", size(filter(zip_with(col("lv_a"), col("lv_b"),
-        (x, y) => x =!= y), m => m)))
-      .filter(col("mism") <= floor(col("len") * maxMismatchFrac))
-      .withColumn("dot", aggregate(zip_with(col("lv_a"), col("lv_b"),
-        (x, y) => x * y), lit(0L), (acc, x) => acc + x).cast("double"))
-      .filter(col("dot") / (sqrt(sumSq(col("lv_a"))) * sqrt(sumSq(col("lv_b")))) >= sim)
-      .select("id_a", "id_b")
+      // verify: mismatch bound + cosine over exact long moments (IEEE-identical
+      // to the DuckDB oracle's expression)
+      def sumSq(c: org.apache.spark.sql.Column) =
+        aggregate(c, lit(0L), (acc, x) => acc + x * x).cast("double")
+      val pa = patterns.select(col("pid").as("id_a"), col("lv").as("lv_a"), col("len"))
+      val pb = patterns.select(col("pid").as("id_b"), col("lv").as("lv_b"),
+        col("len").as("len_b"))
+      val pairs = cand.join(pa, Seq("id_a")).join(pb, Seq("id_b"))
+        .filter(col("len") === col("len_b"))
+        .withColumn("mism", size(filter(zip_with(col("lv_a"), col("lv_b"),
+          (x, y) => x =!= y), m => m)))
+        .filter(col("mism") <= floor(col("len") * maxMismatchFrac))
+        .withColumn("dot", aggregate(zip_with(col("lv_a"), col("lv_b"),
+          (x, y) => x * y), lit(0L), (acc, x) => acc + x).cast("double"))
+        .filter(col("dot") / (sqrt(sumSq(col("lv_a"))) * sqrt(sumSq(col("lv_b")))) >= sim)
+        .select("id_a", "id_b")
 
-    val labeled = graft.dedup.Dedup.connectedComponents(pairs)
-    val withCluster = patterns
-      .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
-      .withColumn("cluster", coalesce(col("component"), col("pid")))
-    // eager checkpoint of the tiny catalog, then release the staged cache
-    val out = graft.miner.MinerOutput.agreementTemplates(
-      withCluster.select(col("cluster").as("ckey"), col("cnt").as("w"),
-        posexplode(col("toks")).as(Seq("pos", "tok"))))
-      .localCheckpoint(true)
-    patterns.unpersist()
-    out
-  }
+      val labeled = graft.dedup.Dedup.connectedComponents(pairs)
+      val withCluster = patterns
+        .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
+        .withColumn("cluster", coalesce(col("component"), col("pid")))
+      MinerOutput.agreementTemplates(
+        withCluster.select(col("cluster").as("ckey"), col("cnt").as("w"),
+          posexplode(col("toks")).as(Seq("pos", "tok"))))
+    }
 
   /** [[mineTemplatesSim]] plus the engine's md5-prefix event id. */
   def mineCatalogSim(lines: DataFrame, lineCol: String, sim: Double,
                      maxMismatchFrac: Double = 0.5): DataFrame =
-    graft.miner.MinerOutput.withEventId(
+    MinerOutput.withEventId(
       mineTemplatesSim(lines, lineCol, sim, maxMismatchFrac))
 }

@@ -1,5 +1,6 @@
 package graft.lfa
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,73 +36,66 @@ object Lfa {
     * exactly one template (LFA has no outlier stream — rare lines simply become
     * heavily-wildcarded templates with small occurrence counts).
     */
-  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame = {
-    // Round-6 shape: pass 2 — the largest-relative-gap split — is a PURE
-    // FUNCTION of a line's token frequencies, and duplicate lines only scale
-    // counts, so the mine runs over DISTINCT lines with multiplicities: one
-    // (pos, tok)-weighted frequency count, one hash join of the distinct
-    // lines' tokens against it (the frequency table is unbounded — every
-    // distinct parameter token — so unlike SLCT's support-filtered set it
-    // must NOT be driver-collected), one per-line gather, and one UDF pass
-    // replacing the former two windows + threshold join + assembly groupBy.
-    val dl = lines
-      .select(trim(col(lineCol)).as("line"))
-      .groupBy("line").agg(count(lit(1)).as("cnt"))
-      .withColumn("toks", split(col("line"), "\\s+"))
-      .persist()
-    val pe = dl.select(col("line"), col("cnt"),
-      posexplode(col("toks")).as(Seq("pos", "tok")))
-    val freq = pe.groupBy("pos", "tok").agg(sum(col("cnt")).as("wf"))
-    val gathered = pe.join(freq, Seq("pos", "tok"))
-      .groupBy("line")
-      .agg(first(col("cnt")).as("cnt"),
-        array_sort(collect_list(struct(col("pos"), col("tok"), col("wf")))).as("arr"))
+  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      // Round-6 shape: pass 2 — the largest-relative-gap split — is a PURE
+      // FUNCTION of a line's token frequencies, and duplicate lines only scale
+      // counts, so the mine runs over DISTINCT lines with multiplicities: one
+      // (pos, tok)-weighted frequency count, one hash join of the distinct
+      // lines' tokens against it (the frequency table is unbounded — every
+      // distinct parameter token — so unlike SLCT's support-filtered set it
+      // must NOT be driver-collected), one per-line gather, and one UDF pass
+      // replacing the former two windows + threshold join + assembly groupBy.
+      val pe = dl.select(col("p"), col("cnt"),
+        posexplode(col("toks")).as(Seq("pos", "tok")))
+      val freq = pe.groupBy("pos", "tok").agg(sum(col("cnt")).as("wf"))
+      val gathered = pe.join(freq, Seq("pos", "tok"))
+        .groupBy("p")
+        .agg(first(col("cnt")).as("cnt"),
+          array_sort(collect_list(struct(col("pos"), col("tok"), col("wf")))).as("arr"))
 
-    // largest-RELATIVE-gap split per line: order the line's tokens by frequency
-    // descending (ties by position); ratio_i = wf_i / wf_{i+1} (1.0 for the
-    // last row). The split threshold is the smallest wf among rows achieving
-    // the max ratio — ties split as low as possible, keeping more tokens
-    // constant. A relative gap separates the static band from the parameter
-    // band even when the static tokens' own frequencies differ a lot (freqs
-    // [90,50,2]: ratios [1.8, 25] put the split under 50 → "login <*> ok"; an
-    // ABSOLUTE gap would split under 90 and wildcard the verb). All-equal
-    // frequencies give ratio 1.0 everywhere and threshold = the common
-    // frequency → fully constant line. The ratio stays an IEEE double
-    // division of two exact integers — bit-identical to the former window
-    // formulation and to the SQL oracle.
-    val splitLine = udf { (toks: Seq[String], wfs: Seq[Long]) =>
-      val n = toks.length
-      val order = (0 until n).sortBy(i => (-wfs(i), i))
-      var rmax = 0.0
-      val ratios = new Array[Double](n)
-      var k = 0
-      while (k < n) {
-        val next = if (k + 1 < n) wfs(order(k + 1)) else wfs(order(k))
-        ratios(k) = wfs(order(k)).toDouble / next
-        if (ratios(k) > rmax) rmax = ratios(k)
-        k += 1
+      // largest-RELATIVE-gap split per line: order the line's tokens by frequency
+      // descending (ties by position); ratio_i = wf_i / wf_{i+1} (1.0 for the
+      // last row). The split threshold is the smallest wf among rows achieving
+      // the max ratio — ties split as low as possible, keeping more tokens
+      // constant. A relative gap separates the static band from the parameter
+      // band even when the static tokens' own frequencies differ a lot (freqs
+      // [90,50,2]: ratios [1.8, 25] put the split under 50 → "login <*> ok"; an
+      // ABSOLUTE gap would split under 90 and wildcard the verb). All-equal
+      // frequencies give ratio 1.0 everywhere and threshold = the common
+      // frequency → fully constant line. The ratio stays an IEEE double
+      // division of two exact integers — bit-identical to the former window
+      // formulation and to the SQL oracle.
+      val splitLine = udf { (toks: Seq[String], wfs: Seq[Long]) =>
+        val n = toks.length
+        val order = (0 until n).sortBy(i => (-wfs(i), i))
+        var rmax = 0.0
+        val ratios = new Array[Double](n)
+        var k = 0
+        while (k < n) {
+          val next = if (k + 1 < n) wfs(order(k + 1)) else wfs(order(k))
+          ratios(k) = wfs(order(k)).toDouble / next
+          if (ratios(k) > rmax) rmax = ratios(k)
+          k += 1
+        }
+        var thr = Long.MaxValue
+        k = 0
+        while (k < n) {
+          if (ratios(k) == rmax && wfs(order(k)) < thr) thr = wfs(order(k))
+          k += 1
+        }
+        toks.iterator.zipWithIndex
+          .map { case (t, i) => if (wfs(i) >= thr) t else Wildcard }
+          .mkString(" ")
       }
-      var thr = Long.MaxValue
-      k = 0
-      while (k < n) {
-        if (ratios(k) == rmax && wfs(order(k)) < thr) thr = wfs(order(k))
-        k += 1
-      }
-      toks.iterator.zipWithIndex
-        .map { case (t, i) => if (wfs(i) >= thr) t else Wildcard }
-        .mkString(" ")
+      gathered
+        .select(splitLine(col("arr.tok"), col("arr.wf")).as("event_template"),
+          col("cnt"))
+        .groupBy("event_template")
+        .agg(sum(col("cnt")).as("occurrences"))
     }
-    val out = gathered
-      .select(splitLine(col("arr.tok"), col("arr.wf")).as("event_template"),
-        col("cnt"))
-      .groupBy("event_template")
-      .agg(sum(col("cnt")).as("occurrences"))
-      .localCheckpoint(true)
-    dl.unpersist()
-    out
-  }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 }

@@ -1,5 +1,6 @@
 package graft.lke
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -103,128 +104,121 @@ object Lke {
 
   /** Mine the template catalog: (event_template, occurrences). */
   def mineTemplates(lines: DataFrame, lineCol: String, splitThreshold: Int = 4,
-                    maxPatterns: Int = 2000, maxRounds: Int = 10): DataFrame = {
-    val spark = lines.sparkSession
-    val patterns = lines
-      .select(trim(col(lineCol)).as("p"))
-      .filter(col("p") =!= "")
-      .groupBy("p").agg(count(lit(1)).as("cnt"))
-      .withColumn("pid", xxhash64(col("p")))
-      .withColumn("toks", split(col("p"), "\\s+"))
-      .persist()
-    val n = patterns.count()
-    require(n <= maxPatterns,
-      s"Lke.mineTemplates: $n distinct lines exceeds maxPatterns=$maxPatterns; " +
-        "the pairwise distance graph would be quadratic — sample or raise the cap explicitly")
+                    maxPatterns: Int = 2000, maxRounds: Int = 10): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      val patterns = dl.withColumn("pid", xxhash64(col("p")))
+      val n = patterns.count()
+      require(n <= maxPatterns,
+        s"Lke.mineTemplates: $n distinct lines exceeds maxPatterns=$maxPatterns; " +
+          "the pairwise distance graph would be quadratic — sample or raise the cap explicitly")
 
-    val a = patterns.select(col("pid").as("id_a"), col("toks").as("t_a"))
-    val b = patterns.select(col("pid").as("id_b"), col("toks").as("t_b"))
-    // small pure UDF (VERDICT r2 contract: justified where no built-in exists —
-    // there is no weighted-token-edit-distance expression); inputs are the
-    // already-bounded distinct-pattern set, never raw lines
-    val distU = udf((x: Seq[String], y: Seq[String]) => weightedTokenDist(x, y))
-    val pairs = a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), distU(col("t_a"), col("t_b")).as("dist"))
-      .persist()
+      val a = patterns.select(col("pid").as("id_a"), col("toks").as("t_a"))
+      val b = patterns.select(col("pid").as("id_b"), col("toks").as("t_b"))
+      // small pure UDF (VERDICT r2 contract: justified where no built-in exists —
+      // there is no weighted-token-edit-distance expression); inputs are the
+      // already-bounded distinct-pattern set, never raw lines
+      val distU = udf((x: Seq[String], y: Seq[String]) => weightedTokenDist(x, y))
+      val pairs = a.crossJoin(b).filter(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"), distU(col("t_a"), col("t_b")).as("dist"))
+        .persist()
 
-    // 1-D optimal 2-means over the distance histogram: candidate boundary = each
-    // distinct distance as the max of the LEFT cluster; SSE from cumulative
-    // count/sum/sum-of-squares. All three sums are exact longs converted to
-    // double before the arithmetic, so DuckDB replays every comparison
-    // bit-identically (IEEE ops on identical inputs).
-    val thr: Option[Long] = if (pairs.limit(1).count() == 0) None else {
-      // The histogram has few distinct distances (weighted sums over a ~8-entry
-      // distinguishable weight table), so the prefix
-      // sums come from a broadcast range self-join (tiny × tiny, distributed)
-      // instead of an unpartitioned window — no single-partition WindowExec
-      // stage anywhere in the miner. Sums stay exact longs, so the DuckDB
-      // oracle replays every comparison bit-identically, same as before.
-      val dv = pairs.groupBy("dist").agg(count(lit(1)).as("w"))
-      val rhs = dv.select(col("dist").as("d2"), col("w").as("w2"))
-      val cum = dv.select("dist").join(broadcast(rhs), col("d2") <= col("dist"))
-        .groupBy("dist")
-        .agg(
-          sum(col("w2")).as("cn"),
-          sum(col("w2") * col("d2")).as("cs"),
-          sum(col("w2") * col("d2") * col("d2")).as("cq"))
-      val tot = dv.agg(
-        sum(col("w")).as("tn"),
-        sum(col("w") * col("dist")).as("ts"),
-        sum(col("w") * col("dist") * col("dist")).as("tq"))
-      val scan = cum.crossJoin(broadcast(tot))
-        .withColumn("sse",
-          (col("cq").cast("double") -
-            col("cs").cast("double") * col("cs").cast("double") / col("cn").cast("double")) +
-          when(col("tn") === col("cn"), lit(0.0)).otherwise(
-            (col("tq") - col("cq")).cast("double") -
-              (col("ts") - col("cs")).cast("double") * (col("ts") - col("cs")).cast("double") /
-                (col("tn") - col("cn")).cast("double")))
-      // one scalar collect: a learned fit parameter, same contract as Ann's
-      // k-means centroids (VERDICT r2: documented mine/fit collects are fine).
-      // min_by on (sse, dist) = SSE argmin with ties to the smaller boundary —
-      // ONE job, no recomputed-aggregate equality join (round-3 VERDICT #3)
-      Some(scan.agg(min_by(col("dist"), struct(col("sse"), col("dist"))))
-        .first().getLong(0))
-    }
-
-    val edges = thr match {
-      case Some(t) => pairs.filter(col("dist") <= t).select("id_a", "id_b")
-      case None => pairs.select("id_a", "id_b")
-    }
-    val labeled = graft.dedup.Dedup.connectedComponents(edges)
-    pairs.unpersist()
-    var cur = patterns
-      .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
-      .select(col("pid"), col("cnt"), col("toks"),
-        coalesce(col("component"), col("pid")).cast("string").as("cluster"))
-      .localCheckpoint(true)
-    patterns.unpersist()
-
-    // private-content splitting to fixpoint; localCheckpoint per round truncates
-    // the growing iterative plan (same guard as connectedComponents)
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      val pe = cur.select(col("pid"), col("cluster"),
-        posexplode(col("toks")).as(Seq("pos", "tok")))
-      val msize = cur.groupBy("cluster").agg(count(lit(1)).as("m"))
-      val chosen = pe.groupBy("cluster", "pos")
-        .agg(count_distinct(col("tok")).as("nd"), count(lit(1)).as("np"))
-        .join(msize, "cluster")
-        .filter(col("np") === col("m") && col("nd") > 1 && col("nd") <= splitThreshold)
-        .groupBy("cluster")
-        .agg(min_by(col("pos"), struct(col("nd"), col("pos"))).as("spos"))
-      changed = chosen.limit(1).count() > 0
-      if (changed) {
-        val newKey = pe.join(chosen, "cluster").filter(col("pos") === col("spos"))
-          .select(col("pid"), concat(col("cluster"), lit("|"), col("tok")).as("nk"))
-        cur = cur.join(newKey, Seq("pid"), "left")
-          .withColumn("cluster", coalesce(col("nk"), col("cluster"))).drop("nk")
-          .localCheckpoint(true)
+      // 1-D optimal 2-means over the distance histogram: candidate boundary = each
+      // distinct distance as the max of the LEFT cluster; SSE from cumulative
+      // count/sum/sum-of-squares. All three sums are exact longs converted to
+      // double before the arithmetic, so DuckDB replays every comparison
+      // bit-identically (IEEE ops on identical inputs).
+      val thr: Option[Long] = if (pairs.limit(1).count() == 0) None else {
+        // The histogram has few distinct distances (weighted sums over a ~8-entry
+        // distinguishable weight table), so the prefix
+        // sums come from a broadcast range self-join (tiny × tiny, distributed)
+        // instead of an unpartitioned window — no single-partition WindowExec
+        // stage anywhere in the miner. Sums stay exact longs, so the DuckDB
+        // oracle replays every comparison bit-identically, same as before.
+        val dv = pairs.groupBy("dist").agg(count(lit(1)).as("w"))
+        val rhs = dv.select(col("dist").as("d2"), col("w").as("w2"))
+        val cum = dv.select("dist").join(broadcast(rhs), col("d2") <= col("dist"))
+          .groupBy("dist")
+          .agg(
+            sum(col("w2")).as("cn"),
+            sum(col("w2") * col("d2")).as("cs"),
+            sum(col("w2") * col("d2") * col("d2")).as("cq"))
+        val tot = dv.agg(
+          sum(col("w")).as("tn"),
+          sum(col("w") * col("dist")).as("ts"),
+          sum(col("w") * col("dist") * col("dist")).as("tq"))
+        val scan = cum.crossJoin(broadcast(tot))
+          .withColumn("sse",
+            (col("cq").cast("double") -
+              col("cs").cast("double") * col("cs").cast("double") / col("cn").cast("double")) +
+            when(col("tn") === col("cn"), lit(0.0)).otherwise(
+              (col("tq") - col("cq")).cast("double") -
+                (col("ts") - col("cs")).cast("double") * (col("ts") - col("cs")).cast("double") /
+                  (col("tn") - col("cn")).cast("double")))
+        // one scalar collect: a learned fit parameter, same contract as Ann's
+        // k-means centroids (VERDICT r2: documented mine/fit collects are fine).
+        // min_by on (sse, dist) = SSE argmin with ties to the smaller boundary —
+        // ONE job, no recomputed-aggregate equality join (round-3 VERDICT #3)
+        Some(scan.agg(min_by(col("dist"), struct(col("sse"), col("dist"))))
+          .first().getLong(0))
       }
-      round += 1
-    }
 
-    // assembly: constant iff all members HAVE the position and agree
-    val pe = cur.select(col("cluster"), col("cnt"),
-      posexplode(col("toks")).as(Seq("pos", "tok")))
-    val m = cur.groupBy("cluster").agg(count(lit(1)).as("m"), sum("cnt").as("occ"))
-    pe.groupBy("cluster", "pos")
-      .agg(min("tok").as("lo"), max("tok").as("hi"), count(lit(1)).as("np"))
-      .join(m, "cluster")
-      .withColumn("piece",
-        when(col("lo") === col("hi") && col("np") === col("m"), col("lo"))
-          .otherwise(lit("<*>")))
-      .groupBy("cluster", "occ")
-      .agg(concat_ws(" ", array_sort(collect_list(struct(col("pos"), col("piece"))))
-        .getField("piece")).as("event_template"))
-      .groupBy("event_template")
-      .agg(sum("occ").as("occurrences"))
-  }
+      val edges = thr match {
+        case Some(t) => pairs.filter(col("dist") <= t).select("id_a", "id_b")
+        case None => pairs.select("id_a", "id_b")
+      }
+      val labeled = graft.dedup.Dedup.connectedComponents(edges)
+      pairs.unpersist()
+      var cur = patterns
+        .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
+        .select(col("pid"), col("cnt"), col("toks"),
+          coalesce(col("component"), col("pid")).cast("string").as("cluster"))
+        .localCheckpoint(true)
+
+      // private-content splitting to fixpoint; localCheckpoint per round truncates
+      // the growing iterative plan (same guard as connectedComponents)
+      var round = 0
+      var changed = true
+      while (changed && round < maxRounds) {
+        val pe = cur.select(col("pid"), col("cluster"),
+          posexplode(col("toks")).as(Seq("pos", "tok")))
+        val msize = cur.groupBy("cluster").agg(count(lit(1)).as("m"))
+        val chosen = pe.groupBy("cluster", "pos")
+          .agg(count_distinct(col("tok")).as("nd"), count(lit(1)).as("np"))
+          .join(msize, "cluster")
+          .filter(col("np") === col("m") && col("nd") > 1 && col("nd") <= splitThreshold)
+          .groupBy("cluster")
+          .agg(min_by(col("pos"), struct(col("nd"), col("pos"))).as("spos"))
+        changed = chosen.limit(1).count() > 0
+        if (changed) {
+          val newKey = pe.join(chosen, "cluster").filter(col("pos") === col("spos"))
+            .select(col("pid"), concat(col("cluster"), lit("|"), col("tok")).as("nk"))
+          cur = cur.join(newKey, Seq("pid"), "left")
+            .withColumn("cluster", coalesce(col("nk"), col("cluster"))).drop("nk")
+            .localCheckpoint(true)
+        }
+        round += 1
+      }
+
+      // assembly: constant iff all members HAVE the position and agree
+      val pe = cur.select(col("cluster"), col("cnt"),
+        posexplode(col("toks")).as(Seq("pos", "tok")))
+      val m = cur.groupBy("cluster").agg(count(lit(1)).as("m"), sum("cnt").as("occ"))
+      pe.groupBy("cluster", "pos")
+        .agg(min("tok").as("lo"), max("tok").as("hi"), count(lit(1)).as("np"))
+        .join(m, "cluster")
+        .withColumn("piece",
+          when(col("lo") === col("hi") && col("np") === col("m"), col("lo"))
+            .otherwise(lit("<*>")))
+        .groupBy("cluster", "occ")
+        .agg(concat_ws(" ", array_sort(collect_list(struct(col("pos"), col("piece"))))
+          .getField("piece")).as("event_template"))
+        .groupBy("event_template")
+        .agg(sum("occ").as("occurrences"))
+    }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String, splitThreshold: Int = 4,
                   maxPatterns: Int = 2000): DataFrame =
-    graft.miner.MinerOutput.withEventId(
+    MinerOutput.withEventId(
       mineTemplates(lines, lineCol, splitThreshold, maxPatterns))
 }

@@ -1,5 +1,6 @@
 package graft.logcluster
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,92 +47,76 @@ object LogCluster {
     * broadcast — bounded by Σlines/support, the same bound that let the old
     * per-token join broadcast it.
     */
-  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame = {
-    val spark = lines.sparkSession
-    // Blank lines trim to "" and are dropped up front (their split yields the
-    // empty token, whose frequency would collapse ambiguously in the
-    // space-joined cluster key — round-3 ADVICE fix); non-blank trimmed lines
-    // cannot produce "" tokens.
-    val dl = lines
-      .select(trim(col(lineCol)).as("line"))
-      .filter(col("line") =!= "")
-      .groupBy("line").agg(count(lit(1)).as("cnt"))
-      .withColumn("toks", split(col("line"), "\\s+"))
-      .persist()
+  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      // support = lines containing the word, counted once per line
+      val freqWords = dl
+        .select(col("cnt"), explode(array_distinct(col("toks"))).as("tok"))
+        .groupBy("tok").agg(sum(col("cnt")).as("wf"))
+        .filter(col("wf") >= support)
+        .select("tok").collect().map(_.getString(0)).toSet
+      val bcFreq = lines.sparkSession.sparkContext.broadcast(freqWords)
 
-    // support = lines containing the word, counted once per line
-    val freqWords = dl
-      .select(col("cnt"), explode(array_distinct(col("toks"))).as("tok"))
-      .groupBy("tok").agg(sum(col("cnt")).as("wf"))
-      .filter(col("wf") >= support)
-      .select("tok").collect().map(_.getString(0)).toSet
-    val bcFreq = spark.sparkContext.broadcast(freqWords)
-
-    // per distinct line: (ordered frequent words, gap length per slot 0..nfreq)
-    // — slot k holds the infrequent run between frequent words k-1 and k
-    // (slot 0 before the first, slot nfreq after the last), zeros included so
-    // cluster-level min() sees members that skipped nothing
-    val lineStats = udf { (toks: Seq[String]) =>
-      val fw = bcFreq.value
-      val key = new java.lang.StringBuilder()
-      val gaps = scala.collection.mutable.ArrayBuffer[Long]()
-      var cur = 0L
-      toks.foreach { t =>
-        if (fw.contains(t)) {
-          if (key.length > 0) key.append(' ')
-          key.append(t)
-          gaps += cur
-          cur = 0L
-        } else cur += 1L
+      // per distinct line: (ordered frequent words, gap length per slot 0..nfreq)
+      // — slot k holds the infrequent run between frequent words k-1 and k
+      // (slot 0 before the first, slot nfreq after the last), zeros included so
+      // cluster-level min() sees members that skipped nothing
+      val lineStats = udf { (toks: Seq[String]) =>
+        val fw = bcFreq.value
+        val key = new java.lang.StringBuilder()
+        val gaps = scala.collection.mutable.ArrayBuffer[Long]()
+        var cur = 0L
+        toks.foreach { t =>
+          if (fw.contains(t)) {
+            if (key.length > 0) key.append(' ')
+            key.append(t)
+            gaps += cur
+            cur = 0L
+          } else cur += 1L
+        }
+        gaps += cur
+        (key.toString, gaps.toSeq)
       }
-      gaps += cur
-      (key.toString, gaps.toSeq)
+      val stats = dl
+        .withColumn("st", lineStats(col("toks")))
+        .select(col("cnt"), col("st._1").as("ckey"),
+          col("st._2").as("gaps"),
+          (size(col("st._2")) - 1).cast("long").as("nfreq"))
+
+      // per cluster: occurrences = Σ member multiplicities; gap bounds over the
+      // DISTINCT members (duplicates carry identical gap vectors)
+      val members = stats.groupBy("ckey", "nfreq")
+        .agg(sum(col("cnt")).as("occurrences"))
+        .filter(col("occurrences") >= support)
+      val slots = stats.select(col("ckey"),
+        posexplode(col("gaps")).as(Seq("slot", "g")))
+      val gapBounds = slots.join(members.select("ckey"), Seq("ckey"), "left_semi")
+        .groupBy("ckey", "slot")
+        .agg(min(col("g")).as("mn"), max(col("g")).as("mx"))
+
+      // reassemble: slot i's gap piece precedes word i; word pieces come from the
+      // key split back on spaces (safe: words are whitespace-free by construction)
+      val gapPieces = gapBounds
+        .withColumn("piece", when(col("mx") === 0, lit(null))
+          .otherwise(concat(lit("*{"), col("mn").cast("string"), lit(","),
+            col("mx").cast("string"), lit("}"))))
+        .select(col("ckey"), (col("slot") * 2).cast("long").as("ord"), col("piece"))
+      val wordPieces = members
+        .select(col("ckey"),
+          posexplode(when(col("nfreq") === 0, array().cast("array<string>"))
+            .otherwise(split(col("ckey"), " "))).as(Seq("wpos", "piece")))
+        .select(col("ckey"), (col("wpos") * 2 + 1).cast("long").as("ord"), col("piece"))
+      val assembled = gapPieces.unionByName(wordPieces)
+        .filter(col("piece").isNotNull)
+        .groupBy("ckey")
+        .agg(concat_ws(" ", array_sort(collect_list(struct(col("ord"), col("piece"))))
+          .getField("piece")).as("event_template"))
+
+      members.join(assembled, Seq("ckey"))
+        .select(col("event_template"), col("occurrences"))
     }
-    val stats = dl
-      .withColumn("st", lineStats(col("toks")))
-      .select(col("line"), col("cnt"), col("st._1").as("ckey"),
-        col("st._2").as("gaps"),
-        (size(col("st._2")) - 1).cast("long").as("nfreq"))
-
-    // per cluster: occurrences = Σ member multiplicities; gap bounds over the
-    // DISTINCT members (duplicates carry identical gap vectors)
-    val members = stats.groupBy("ckey", "nfreq")
-      .agg(sum(col("cnt")).as("occurrences"))
-      .filter(col("occurrences") >= support)
-    val slots = stats.select(col("ckey"),
-      posexplode(col("gaps")).as(Seq("slot", "g")))
-    val gapBounds = slots.join(members.select("ckey"), Seq("ckey"), "left_semi")
-      .groupBy("ckey", "slot")
-      .agg(min(col("g")).as("mn"), max(col("g")).as("mx"))
-
-    // reassemble: slot i's gap piece precedes word i; word pieces come from the
-    // key split back on spaces (safe: words are whitespace-free by construction)
-    val gapPieces = gapBounds
-      .withColumn("piece", when(col("mx") === 0, lit(null))
-        .otherwise(concat(lit("*{"), col("mn").cast("string"), lit(","),
-          col("mx").cast("string"), lit("}"))))
-      .select(col("ckey"), (col("slot") * 2).cast("long").as("ord"), col("piece"))
-    val wordPieces = members
-      .select(col("ckey"),
-        posexplode(when(col("nfreq") === 0, array().cast("array<string>"))
-          .otherwise(split(col("ckey"), " "))).as(Seq("wpos", "piece")))
-      .select(col("ckey"), (col("wpos") * 2 + 1).cast("long").as("ord"), col("piece"))
-    val assembled = gapPieces.unionByName(wordPieces)
-      .filter(col("piece").isNotNull)
-      .groupBy("ckey")
-      .agg(concat_ws(" ", array_sort(collect_list(struct(col("ord"), col("piece"))))
-        .getField("piece")).as("event_template"))
-
-    // eager checkpoint of the tiny catalog, then release the staged cache
-    // (same contract as minhashDupPairs — no persist leaks past return)
-    val out = members.join(assembled, Seq("ckey"))
-      .select(col("event_template"), col("occurrences"))
-      .localCheckpoint(true)
-    dl.unpersist()
-    out
-  }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
 }

@@ -1,5 +1,6 @@
 package graft.logmine
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -51,26 +52,19 @@ import org.apache.spark.sql.functions._
   */
 object LogMine {
 
-
-  /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String, maxDist: Double = 0.3): DataFrame = {
-    // level 0: distinct processed patterns with multiplicities; the pattern
-    // string doubles as a stable id via xxhash64 (collision ~n²/2⁶⁴ — negligible
-    // at mine-phase inputs, same contract as the miner lid)
-    // persisted: the distinct-pattern set feeds the banding AND both verify
-    // sides — without the cache each consumer re-runs the full corpus scan +
-    // dedup exchange (3 scans instead of 1 at any scale)
-    val patterns = lines
-      .select(trim(col(lineCol)).as("p"))
-      .filter(col("p") =!= "")
-      .groupBy("p").agg(count(lit(1)).as("cnt"))
-      .withColumn("pid", xxhash64(col("p")))
-      .withColumn("toks", split(col("p"), "\\s+"))
+  /** Level-0 patterns: the distinct lines with multiplicities (`p`, `cnt`,
+    * `toks`), the pattern string doubling as a stable id via xxhash64
+    * (collision ~n²/2⁶⁴ — negligible at mine-phase inputs).
+    */
+  private def withPid(dl: DataFrame): DataFrame =
+    dl.withColumn("pid", xxhash64(col("p")))
       .withColumn("len", size(col("toks")))
-      .persist()
 
-    // exact pigeonhole banding: nb = floor(maxDist·len)+1 contiguous bands; a
-    // pair within maxDist matches at least one full band
+  /** Exact pigeonhole banding over equal-length patterns: nb =
+    * floor(maxDist·len)+1 contiguous bands; a pair within maxDist matches at
+    * least one full band. Candidate pairs `(id_a, id_b)`, id_a < id_b.
+    */
+  private def sameLenCandidates(patterns: DataFrame, maxDist: Double): DataFrame = {
     val banded = patterns
       .withColumn("nb", (floor(col("len") * maxDist) + 1).cast("int"))
       .select(col("pid"), col("len"), col("toks"), col("nb"),
@@ -80,53 +74,54 @@ object LogMine {
       .withColumn("bh", xxhash64(col("band"),
         concat_ws(" ", slice(col("toks"), col("bstart") + 1, col("bend") - col("bstart")))))
       .select(col("len"), col("band"), col("bh"), col("pid"))
-
     val a = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
     val b = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_b"))
-    val cand = a.join(b, Seq("len", "band", "bh"))
+    a.join(b, Seq("len", "band", "bh"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-
-    // exact distance verify: mismatched positions / len <= maxDist. The
-    // mismatch count is a tight-loop UDF (round 6): the zip_with + filter +
-    // size HOF chain is interpreted per lambda element and allocates a
-    // boolean array per pair — with hot band buckets (one shared type-token
-    // band ⇒ ~C(bucket,2) candidates) it dominated the verify stage. Same
-    // integer count, null-free inputs by construction.
-    val mismU = udf { (a: Seq[String], b: Seq[String]) =>
-      var c = 0; var i = 0
-      while (i < a.length) { if (a(i) != b(i)) c += 1; i += 1 }
-      c
-    }
-    val pa = patterns.select(col("pid").as("id_a"), col("toks").as("t_a"), col("len"))
-    val pb = patterns.select(col("pid").as("id_b"), col("toks").as("t_b"), col("len").as("len_b"))
-    val pairs = cand.join(pa, Seq("id_a")).join(pb, Seq("id_b"))
-      .filter(col("len") === col("len_b"))
-      .withColumn("mism", mismU(col("t_a"), col("t_b")))
-      .filter(col("mism") <= floor(col("len") * maxDist))
-      .select("id_a", "id_b")
-
-    // transitive closure -> cluster labels; singletons keep their own pid
-    val labeled = graft.dedup.Dedup.connectedComponents(pairs)
-    val withCluster = patterns
-      .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
-      .withColumn("cluster", coalesce(col("component"), col("pid")))
-
-    // per cluster: positionwise agreement -> constant, else wildcard (shared
-    // assembly; weight = the level-0 pattern multiplicity). The tiny catalog
-    // is eagerly checkpointed so the staged cache can be RELEASED here instead
-    // of leaking past return (round-3 ADVICE contract, same as minhash).
-    val out = graft.miner.MinerOutput.agreementTemplates(
-      withCluster.select(col("cluster").as("ckey"), col("cnt").as("w"),
-        posexplode(col("toks")).as(Seq("pos", "tok"))))
-      .localCheckpoint(true)
-    patterns.unpersist()
-    out
   }
+
+  /** Mine the template catalog: (event_template, occurrences). */
+  def mineTemplates(lines: DataFrame, lineCol: String, maxDist: Double = 0.3): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      val patterns = withPid(dl)
+      val cand = sameLenCandidates(patterns, maxDist)
+
+      // exact distance verify: mismatched positions / len <= maxDist. The
+      // mismatch count is a tight-loop UDF (round 6): the zip_with + filter +
+      // size HOF chain is interpreted per lambda element and allocates a
+      // boolean array per pair — with hot band buckets (one shared type-token
+      // band ⇒ ~C(bucket,2) candidates) it dominated the verify stage. Same
+      // integer count, null-free inputs by construction.
+      val mismU = udf { (a: Seq[String], b: Seq[String]) =>
+        var c = 0; var i = 0
+        while (i < a.length) { if (a(i) != b(i)) c += 1; i += 1 }
+        c
+      }
+      val pa = patterns.select(col("pid").as("id_a"), col("toks").as("t_a"), col("len"))
+      val pb = patterns.select(col("pid").as("id_b"), col("toks").as("t_b"), col("len").as("len_b"))
+      val pairs = cand.join(pa, Seq("id_a")).join(pb, Seq("id_b"))
+        .filter(col("len") === col("len_b"))
+        .withColumn("mism", mismU(col("t_a"), col("t_b")))
+        .filter(col("mism") <= floor(col("len") * maxDist))
+        .select("id_a", "id_b")
+
+      // transitive closure -> cluster labels; singletons keep their own pid
+      val labeled = graft.dedup.Dedup.connectedComponents(pairs)
+      val withCluster = patterns
+        .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
+        .withColumn("cluster", coalesce(col("component"), col("pid")))
+
+      // per cluster: positionwise agreement -> constant, else wildcard (shared
+      // assembly; weight = the level-0 pattern multiplicity)
+      MinerOutput.agreementTemplates(
+        withCluster.select(col("cluster").as("ckey"), col("cnt").as("w"),
+          posexplode(col("toks")).as(Seq("pos", "tok"))))
+    }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String, maxDist: Double = 0.3): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol, maxDist))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol, maxDist))
 
   /** Token LCS length (max matches over all alignments) — the paper's distance
     * numerator for cross-length pairs.
@@ -185,126 +180,100 @@ object LogMine {
     * [[alignMerge]] in canonical order.
     */
   def mineTemplatesXLen(lines: DataFrame, lineCol: String, maxDist: Double = 0.3,
-                        maxLenDelta: Int = 1): DataFrame = {
-    val patterns = lines
-      .select(trim(col(lineCol)).as("p"))
-      .filter(col("p") =!= "")
-      .groupBy("p").agg(count(lit(1)).as("cnt"))
-      .withColumn("pid", xxhash64(col("p")))
-      .withColumn("toks", split(col("p"), "\\s+"))
-      .withColumn("len", size(col("toks")))
-      .persist()
+                        maxLenDelta: Int = 1): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      val patterns = withPid(dl)
+      val candSame = sameLenCandidates(patterns, maxDist)
 
-    // ---- same-length candidates: the exact pigeonhole of mineTemplates ------
-    val bandedSame = patterns
-      .withColumn("nb", (floor(col("len") * maxDist) + 1).cast("int"))
-      .select(col("pid"), col("len"), col("toks"), col("nb"),
-        explode(sequence(lit(0), col("nb") - 1)).as("band"))
-      .withColumn("bstart", floor(col("band") * col("len") / col("nb")).cast("int"))
-      .withColumn("bend", floor((col("band") + 1) * col("len") / col("nb")).cast("int"))
-      .withColumn("bh", xxhash64(col("band"),
-        concat_ws(" ", slice(col("toks"), col("bstart") + 1, col("bend") - col("bstart")))))
-      .select(col("len"), col("band"), col("bh"), col("pid"))
-    val sa = bandedSame.select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
-    val sb = bandedSame.select(col("len"), col("band"), col("bh"), col("pid").as("id_b"))
-    val candSame = sa.join(sb, Seq("len", "band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+      // ---- cross-length candidates (Δ = 1..maxLenDelta, one insertion per Δ
+      // step assumed by the banding; see class doc). Bands are sized by the
+      // SHORTER length l: s_max = floor(l − (1−maxDist)(l + lenB)/2); the longer
+      // side emits each band's slice at every offset 0..Δ.
+      val crossCands = (1 to maxLenDelta).map { delta =>
+        // nb = s_max + delta + 1: each of the ≤ s_max substitutions damages its
+        // band and each of the delta insertion points splits one band into an
+        // offset-0/offset-k boundary — one band always survives intact
+        val sMax = floor(col("len") - (lit(1.0) - maxDist) * (col("len") * 2 + delta) / 2)
+        val bandedShort = patterns
+          .withColumn("nbx", (greatest(sMax, lit(0)) + delta + 1).cast("int"))
+          .filter(sMax >= 0)
+          .select(col("pid"), col("len"), col("toks"), col("nbx"),
+            explode(sequence(lit(0), col("nbx") - 1)).as("band"))
+          .withColumn("bstart", floor(col("band") * col("len") / col("nbx")).cast("int"))
+          .withColumn("bend", floor((col("band") + 1) * col("len") / col("nbx")).cast("int"))
+          .withColumn("bh", xxhash64(col("band"),
+            concat_ws(" ", slice(col("toks"), col("bstart") + 1, col("bend") - col("bstart")))))
+          .select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
+        // the longer pattern bands against the SHORTER length's geometry, at
+        // every insertion offset 0..delta
+        val lenShort = col("len") - delta
+        val sMaxL = floor(lenShort - (lit(1.0) - maxDist) * (lenShort * 2 + delta) / 2)
+        val bandedLong = patterns
+          .filter(col("len") > delta && sMaxL >= 0)
+          .withColumn("nbx", (greatest(sMaxL, lit(0)) + delta + 1).cast("int"))
+          .withColumn("lshort", lenShort)
+          .select(col("pid"), col("lshort"), col("toks"), col("nbx"),
+            explode(sequence(lit(0), col("nbx") - 1)).as("band"))
+          .withColumn("off", explode(sequence(lit(0), lit(delta))))
+          .withColumn("bstart", floor(col("band") * col("lshort") / col("nbx")).cast("int"))
+          .withColumn("bend", floor((col("band") + 1) * col("lshort") / col("nbx")).cast("int"))
+          .withColumn("bh", xxhash64(col("band"), concat_ws(" ",
+            slice(col("toks"), col("bstart") + col("off") + 1, col("bend") - col("bstart")))))
+          .select(col("lshort").as("len"), col("band"), col("bh"), col("pid").as("id_b"))
+        bandedShort.join(bandedLong, Seq("len", "band", "bh"))
+          .select("id_a", "id_b").distinct()
+      }
+      // ---- verify: exact alignment distance ------------------------------------
+      // same-length pairs use the positional-mismatch metric (= mineTemplates
+      // semantics — shifted same-length alignments are out of contract, matching
+      // the same-length banding's guarantee); cross-length pairs use the LCS
+      // alignment (max matches over all alignments)
+      val lcsU = udf((x: Seq[String], y: Seq[String]) => lcsLen(x, y))
+      val pa = patterns.select(col("pid").as("id_a"), col("toks").as("t_a"),
+        col("len").as("len_a"))
+      val pb = patterns.select(col("pid").as("id_b"), col("toks").as("t_b"),
+        col("len").as("len_b"))
+      val allCand = crossCands.reduceOption(_ unionByName _) match {
+        case Some(cc) => candSame.unionByName(
+          cc.select(least(col("id_a"), col("id_b")).as("id_a"),
+            greatest(col("id_a"), col("id_b")).as("id_b"))).distinct()
+        case None => candSame
+      }
+      // equal-length matches via a tight count UDF (round 6, same rationale as
+      // the equal-length instance's mismatch UDF — the HOF chain was interpreted
+      // per element per candidate pair); cross-length stays the LCS DP UDF
+      val eqU = udf { (a: Seq[String], b: Seq[String]) =>
+        var c = 0; var i = 0
+        while (i < a.length) { if (a(i) == b(i)) c += 1; i += 1 }
+        c
+      }
+      val pairs = allCand.join(pa, Seq("id_a")).join(pb, Seq("id_b"))
+        .filter(abs(col("len_a") - col("len_b")) <= maxLenDelta)
+        .withColumn("matches", when(col("len_a") === col("len_b"),
+          eqU(col("t_a"), col("t_b")))
+          .otherwise(lcsU(col("t_a"), col("t_b"))))
+        .filter(lit(1.0) - col("matches") * 2.0 / (col("len_a") + col("len_b")) <= maxDist)
+        .select("id_a", "id_b")
 
-    // ---- cross-length candidates (Δ = 1..maxLenDelta, one insertion per Δ
-    // step assumed by the banding; see class doc). Bands are sized by the
-    // SHORTER length l: s_max = floor(l − (1−maxDist)(l + lenB)/2); the longer
-    // side emits each band's slice at every offset 0..Δ.
-    val crossCands = (1 to maxLenDelta).map { delta =>
-      // nb = s_max + delta + 1: each of the ≤ s_max substitutions damages its
-      // band and each of the delta insertion points splits one band into an
-      // offset-0/offset-k boundary — one band always survives intact
-      val sMax = floor(col("len") - (lit(1.0) - maxDist) * (col("len") * 2 + delta) / 2)
-      val bandedShort = patterns
-        .withColumn("nbx", (greatest(sMax, lit(0)) + delta + 1).cast("int"))
-        .filter(sMax >= 0)
-        .select(col("pid"), col("len"), col("toks"), col("nbx"),
-          explode(sequence(lit(0), col("nbx") - 1)).as("band"))
-        .withColumn("bstart", floor(col("band") * col("len") / col("nbx")).cast("int"))
-        .withColumn("bend", floor((col("band") + 1) * col("len") / col("nbx")).cast("int"))
-        .withColumn("bh", xxhash64(col("band"),
-          concat_ws(" ", slice(col("toks"), col("bstart") + 1, col("bend") - col("bstart")))))
-        .select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
-      // the longer pattern bands against the SHORTER length's geometry, at
-      // every insertion offset 0..delta
-      val lenShort = col("len") - delta
-      val sMaxL = floor(lenShort - (lit(1.0) - maxDist) * (lenShort * 2 + delta) / 2)
-      val bandedLong = patterns
-        .filter(col("len") > delta && sMaxL >= 0)
-        .withColumn("nbx", (greatest(sMaxL, lit(0)) + delta + 1).cast("int"))
-        .withColumn("lshort", lenShort)
-        .select(col("pid"), col("lshort"), col("toks"), col("nbx"),
-          explode(sequence(lit(0), col("nbx") - 1)).as("band"))
-        .withColumn("off", explode(sequence(lit(0), lit(delta))))
-        .withColumn("bstart", floor(col("band") * col("lshort") / col("nbx")).cast("int"))
-        .withColumn("bend", floor((col("band") + 1) * col("lshort") / col("nbx")).cast("int"))
-        .withColumn("bh", xxhash64(col("band"), concat_ws(" ",
-          slice(col("toks"), col("bstart") + col("off") + 1, col("bend") - col("bstart")))))
-        .select(col("lshort").as("len"), col("band"), col("bh"), col("pid").as("id_b"))
-      bandedShort.join(bandedLong, Seq("len", "band", "bh"))
-        .select("id_a", "id_b").distinct()
+      val labeled = graft.dedup.Dedup.connectedComponents(pairs)
+      val withCluster = patterns
+        .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
+        .withColumn("cluster", coalesce(col("component"), col("pid")))
+
+      // canonical-order fold merge; occurrences = Σ member multiplicities
+      // (`p` is the single-space join of its tokens, so a split on ' ' is exact)
+      val mergeU = udf((members: Seq[String]) =>
+        members.map(_.split(" ").toSeq).reduceLeft(alignMerge).mkString(" "))
+      withCluster.groupBy("cluster")
+        .agg(mergeU(sort_array(collect_list(col("p")))).as("event_template"),
+          sum("cnt").as("occurrences"))
+        .groupBy("event_template")
+        .agg(sum("occurrences").as("occurrences"))
     }
-    // ---- verify: exact alignment distance ------------------------------------
-    // same-length pairs use the positional-mismatch metric (= mineTemplates
-    // semantics — shifted same-length alignments are out of contract, matching
-    // the same-length banding's guarantee); cross-length pairs use the LCS
-    // alignment (max matches over all alignments)
-    val lcsU = udf((x: Seq[String], y: Seq[String]) => lcsLen(x, y))
-    val pa = patterns.select(col("pid").as("id_a"), col("toks").as("t_a"),
-      col("len").as("len_a"))
-    val pb = patterns.select(col("pid").as("id_b"), col("toks").as("t_b"),
-      col("len").as("len_b"))
-    val allCand = crossCands.reduceOption(_ unionByName _) match {
-      case Some(cc) => candSame.unionByName(
-        cc.select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"))).distinct()
-      case None => candSame
-    }
-    // equal-length matches via a tight count UDF (round 6, same rationale as
-    // the equal-length instance's mismatch UDF — the HOF chain was interpreted
-    // per element per candidate pair); cross-length stays the LCS DP UDF
-    val eqU = udf { (a: Seq[String], b: Seq[String]) =>
-      var c = 0; var i = 0
-      while (i < a.length) { if (a(i) == b(i)) c += 1; i += 1 }
-      c
-    }
-    val pairs = allCand.join(pa, Seq("id_a")).join(pb, Seq("id_b"))
-      .filter(abs(col("len_a") - col("len_b")) <= maxLenDelta)
-      .withColumn("matches", when(col("len_a") === col("len_b"),
-        eqU(col("t_a"), col("t_b")))
-        .otherwise(lcsU(col("t_a"), col("t_b"))))
-      .filter(lit(1.0) - col("matches") * 2.0 / (col("len_a") + col("len_b")) <= maxDist)
-      .select("id_a", "id_b")
-
-    val labeled = graft.dedup.Dedup.connectedComponents(pairs)
-    val withCluster = patterns
-      .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
-      .withColumn("cluster", coalesce(col("component"), col("pid")))
-
-    // canonical-order fold merge; occurrences = Σ member multiplicities. The
-    // tiny catalog is eagerly checkpointed BEFORE the cache release — an
-    // unpersist ahead of materialization would silently re-run the corpus
-    // dedup once per downstream consumer.
-    val mergeU = udf((members: Seq[String]) =>
-      members.map(_.split("\\s+").toSeq).reduceLeft(alignMerge).mkString(" "))
-    val out = withCluster.groupBy("cluster")
-      .agg(mergeU(sort_array(collect_list(col("p")))).as("event_template"),
-        sum("cnt").as("occurrences"))
-      .groupBy("event_template")
-      .agg(sum("occurrences").as("occurrences"))
-      .localCheckpoint(true)
-    patterns.unpersist()
-    out
-  }
 
   /** [[mineTemplatesXLen]] plus the engine's md5-prefix event id. */
   def mineCatalogXLen(lines: DataFrame, lineCol: String, maxDist: Double = 0.3,
                       maxLenDelta: Int = 1): DataFrame =
-    graft.miner.MinerOutput.withEventId(
+    MinerOutput.withEventId(
       mineTemplatesXLen(lines, lineCol, maxDist, maxLenDelta))
 }

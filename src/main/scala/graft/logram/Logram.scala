@@ -1,5 +1,6 @@
 package graft.logram
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,60 +42,49 @@ object Logram {
   val Eos = "\u0002"
 
   /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame = {
-    // persisted: feeds the dictionary build, the vote join AND the token
-    // explode — one corpus scan+dedup instead of three.
-    // Joins below key on pid = xxhash64(line), not the line STRING (round 6):
-    // the vote/judge joins each shuffled ~4 rows per line keyed by the full
-    // raw line — 8-byte keys shuffle and compare for a fraction of that
-    // (guide §2.3 "narrower types"). Collision contract is the same as
-    // LogMine's pattern lid: ~n²/2⁶⁴, negligible at mine-phase inputs.
-    val base = lines
-      .select(trim(col(lineCol)).as("line"))
-      .filter(col("line") =!= "")
-      .groupBy("line").agg(count(lit(1)).as("cnt"))
-      .withColumn("pid", xxhash64(col("line")))
-      .withColumn("toks", split(col("line"), "\\s+"))
-      .persist()
-    // boundary-extended bigrams: ext = BOS +: toks :+ EOS; bigram k =
-    // (ext(k), ext(k+1)), k = 0..len — bigram k covers token k−1 (right
-    // element) and token k (left element)
-    val ext = concat(array(lit(Bos)), col("toks"), array(lit(Eos)))
-    val withBg = base.withColumn("bgs",
-      zip_with(slice(ext, lit(1), size(ext) - 1), slice(ext, lit(2), size(ext) - 1),
-        (a, b) => concat(a, lit(" "), b)))
+  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      // Joins below key on pid = xxhash64(p), not the line STRING (round 6):
+      // the vote/judge joins each shuffled ~4 rows per line keyed by the full
+      // raw line — 8-byte keys shuffle and compare for a fraction of that
+      // (guide §2.3 "narrower types"). Collision contract is the same as
+      // LogMine's pattern lid: ~n²/2⁶⁴, negligible at mine-phase inputs.
+      val base = dl.withColumn("pid", xxhash64(col("p")))
+      // boundary-extended bigrams: ext = BOS +: toks :+ EOS; bigram k =
+      // (ext(k), ext(k+1)), k = 0..len — bigram k covers token k−1 (right
+      // element) and token k (left element)
+      val ext = concat(array(lit(Bos)), col("toks"), array(lit(Eos)))
+      val withBg = base.withColumn("bgs",
+        zip_with(slice(ext, lit(1), size(ext) - 1), slice(ext, lit(2), size(ext) - 1),
+          (a, b) => concat(a, lit(" "), b)))
 
-    val bg = withBg.select(col("pid"), col("cnt"),
-      posexplode(col("bgs")).as(Seq("bpos", "bg")))
-    // the n-gram dictionary: one weighted, map-side-combinable count
-    val dict = bg.groupBy("bg").agg(sum(col("cnt")).as("f"))
+      val bg = withBg.select(col("pid"), col("cnt"),
+        posexplode(col("bgs")).as(Seq("bpos", "bg")))
+      // the n-gram dictionary: one weighted, map-side-combinable count
+      val dict = bg.groupBy("bg").agg(sum(col("cnt")).as("f"))
 
-    // token j's covering bigrams are bpos j and j+1 → each bigram row votes
-    // for tokens bpos−1 and bpos; keep the max covering frequency per token
-    val votes = bg.join(dict, Seq("bg"))
-      .select(col("pid"), explode(array(col("bpos") - 1, col("bpos"))).as("pos"),
-        col("f"))
-      .filter(col("pos") >= 0)
-    val toks = base.select(col("pid"), col("cnt"),
-      posexplode(col("toks")).as(Seq("pos", "tok")))
-    val judged = toks.join(votes, Seq("pid", "pos"))
-      .groupBy("pid", "cnt", "pos", "tok")
-      .agg(max(col("f")).as("fmax"))
-      .withColumn("piece",
-        when(col("fmax") >= support, col("tok")).otherwise(lit("<*>")))
+      // token j's covering bigrams are bpos j and j+1 → each bigram row votes
+      // for tokens bpos−1 and bpos; keep the max covering frequency per token
+      val votes = bg.join(dict, Seq("bg"))
+        .select(col("pid"), explode(array(col("bpos") - 1, col("bpos"))).as("pos"),
+          col("f"))
+        .filter(col("pos") >= 0)
+      val toks = base.select(col("pid"), col("cnt"),
+        posexplode(col("toks")).as(Seq("pos", "tok")))
+      val judged = toks.join(votes, Seq("pid", "pos"))
+        .groupBy("pid", "cnt", "pos", "tok")
+        .agg(max(col("f")).as("fmax"))
+        .withColumn("piece",
+          when(col("fmax") >= support, col("tok")).otherwise(lit("<*>")))
 
-    // eager checkpoint of the tiny catalog, then release the staged cache
-    val out = judged.groupBy("pid", "cnt")
-      .agg(concat_ws(" ", array_sort(collect_list(struct(col("pos"), col("piece"))))
-        .getField("piece")).as("event_template"))
-      .groupBy("event_template")
-      .agg(sum("cnt").as("occurrences"))
-      .localCheckpoint(true)
-    base.unpersist()
-    out
-  }
+      judged.groupBy("pid", "cnt")
+        .agg(concat_ws(" ", array_sort(collect_list(struct(col("pos"), col("piece"))))
+          .getField("piece")).as("event_template"))
+        .groupBy("event_template")
+        .agg(sum("cnt").as("occurrences"))
+    }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
 }

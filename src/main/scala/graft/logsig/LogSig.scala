@@ -1,5 +1,6 @@
 package graft.logsig
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -46,72 +47,64 @@ object LogSig {
 
   /** Mine the template catalog: (event_template, occurrences). */
   def mineTemplates(lines: DataFrame, lineCol: String, k: Int = 3,
-                    maxIters: Int = 10, init: Option[Column] = None): DataFrame = {
-    val patterns = lines
-      .select(trim(col(lineCol)).as("p"))
-      .filter(col("p") =!= "")
-      .groupBy("p").agg(count(lit(1)).as("cnt"))
-      .withColumn("toks", split(col("p"), "\\s+"))
-      .persist()
+                    maxIters: Int = 10, init: Option[Column] = None): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { patterns =>
+      // distinct ordered term pairs per message (same-value pair counted once)
+      val pe = patterns.select(col("p"), posexplode(col("toks")).as(Seq("pos", "tok")))
+      val msgPairs = pe.as("a").join(pe.as("b"), col("a.p") === col("b.p") &&
+          col("a.pos") < col("b.pos"))
+        .select(col("a.p").as("p"),
+          concat(col("a.tok"), lit(Sep), col("b.tok")).as("r"))
+        .distinct()
+        .persist()
 
-    // distinct ordered term pairs per message (same-value pair counted once)
-    val pe = patterns.select(col("p"), posexplode(col("toks")).as(Seq("pos", "tok")))
-    val msgPairs = pe.as("a").join(pe.as("b"), col("a.p") === col("b.p") &&
-        col("a.pos") < col("b.pos"))
-      .select(col("a.p").as("p"),
-        concat(col("a.tok"), lit(Sep), col("b.tok")).as("r"))
-      .distinct()
-      .persist()
-
-    val initCol = init.getOrElse(pmod(ascii(substring(col("p"), 1, 1)), lit(k)))
-    var assign = patterns.select(col("p"), col("cnt"), initCol.cast("int").as("g"))
-      .localCheckpoint(true)
-
-    var round = 0
-    var changed = true
-    while (changed && round < maxIters) {
-      val pairStats = msgPairs.join(assign, "p")
-        .groupBy("r", "g").agg(sum("cnt").as("n"))
-      val gsize = assign.groupBy("g").agg(sum("cnt").as("sz"))
-      val best = msgPairs.join(pairStats, "r")
-        .groupBy("p", "g").agg(sum(col("n") * col("n")).as("num"))
-        .join(gsize, "g")
-        .withColumn("score",
-          col("num").cast("double") / (col("sz") * col("sz")).cast("double"))
-        .groupBy("p")
-        .agg(max_by(col("g"), struct(col("score"), lit(0) - col("g"))).as("gnew"))
-      val next = assign.join(best, Seq("p"), "left")
-        .select(col("p"), col("cnt"),
-          coalesce(col("gnew"), col("g")).as("g"))
+      val initCol = init.getOrElse(pmod(ascii(substring(col("p"), 1, 1)), lit(k)))
+      var assign = patterns.select(col("p"), col("cnt"), initCol.cast("int").as("g"))
         .localCheckpoint(true)
-      changed = next.join(assign.withColumnRenamed("g", "gold"), "p")
-        .filter(col("g") =!= col("gold")).limit(1).count() > 0
-      assign = next
-      round += 1
-    }
-    msgPairs.unpersist()
 
-    // strict-majority positional signature per group
-    val gsize = assign.groupBy("g").agg(sum("cnt").as("sz"))
-    val tokCnt = patterns.join(assign.select("p", "g"), "p")
-      .select(col("g"), col("cnt"), posexplode(col("toks")).as(Seq("pos", "tok")))
-      .groupBy("g", "pos", "tok").agg(sum("cnt").as("c"))
-    val out = tokCnt.groupBy("g", "pos")
-      .agg(max_by(col("tok"), struct(col("c"), col("tok"))).as("btok"),
-        max("c").as("bc"))
-      .join(gsize, "g")
-      .withColumn("piece",
-        when(col("bc") * 2 > col("sz"), col("btok")).otherwise(lit("<*>")))
-      .groupBy("g", "sz")
-      .agg(concat_ws(" ", array_sort(collect_list(struct(col("pos"), col("piece"))))
-        .getField("piece")).as("event_template"))
-      .groupBy("event_template")
-      .agg(sum("sz").as("occurrences"))
-    patterns.unpersist()
-    out
-  }
+      var round = 0
+      var changed = true
+      while (changed && round < maxIters) {
+        val pairStats = msgPairs.join(assign, "p")
+          .groupBy("r", "g").agg(sum("cnt").as("n"))
+        val gsize = assign.groupBy("g").agg(sum("cnt").as("sz"))
+        val best = msgPairs.join(pairStats, "r")
+          .groupBy("p", "g").agg(sum(col("n") * col("n")).as("num"))
+          .join(gsize, "g")
+          .withColumn("score",
+            col("num").cast("double") / (col("sz") * col("sz")).cast("double"))
+          .groupBy("p")
+          .agg(max_by(col("g"), struct(col("score"), lit(0) - col("g"))).as("gnew"))
+        val next = assign.join(best, Seq("p"), "left")
+          .select(col("p"), col("cnt"),
+            coalesce(col("gnew"), col("g")).as("g"))
+          .localCheckpoint(true)
+        changed = next.join(assign.withColumnRenamed("g", "gold"), "p")
+          .filter(col("g") =!= col("gold")).limit(1).count() > 0
+        assign = next
+        round += 1
+      }
+      msgPairs.unpersist()
+
+      // strict-majority positional signature per group
+      val gsize = assign.groupBy("g").agg(sum("cnt").as("sz"))
+      val tokCnt = patterns.join(assign.select("p", "g"), "p")
+        .select(col("g"), col("cnt"), posexplode(col("toks")).as(Seq("pos", "tok")))
+        .groupBy("g", "pos", "tok").agg(sum("cnt").as("c"))
+      tokCnt.groupBy("g", "pos")
+        .agg(max_by(col("tok"), struct(col("c"), col("tok"))).as("btok"),
+          max("c").as("bc"))
+        .join(gsize, "g")
+        .withColumn("piece",
+          when(col("bc") * 2 > col("sz"), col("btok")).otherwise(lit("<*>")))
+        .groupBy("g", "sz")
+        .agg(concat_ws(" ", array_sort(collect_list(struct(col("pos"), col("piece"))))
+          .getField("piece")).as("event_template"))
+        .groupBy("event_template")
+        .agg(sum("sz").as("occurrences"))
+    }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String, k: Int = 3): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol, k))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol, k))
 }

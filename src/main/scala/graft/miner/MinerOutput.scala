@@ -1,13 +1,56 @@
 package graft.miner
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Shared output/input shapes for the declarative miners (IPLoM, SLCT, AEL,
-  * LogCluster) — one definition of the engine's md5-prefix event id and of the
-  * line→token explode, so a change to either is a single edit.
+/** The DataFrame miners' one input stage and shared output shapes: every miner
+  * reads its lines through [[lineTokens]] (IPLoM and exact LenMa, per raw
+  * line), [[distinctLines]] or [[withDistinctLines]] (everyone else), and emits
+  * the engine's md5-prefix event id through [[withEventId]]. A change to
+  * tokenization, to the id or to the cache lifetime of the distinct lines is a
+  * single edit.
   */
 object MinerOutput {
+
+  /** Whitespace tokens of a line, Python `str.split()` semantics (the
+    * reference's): split on runs of `\s`, no empty tokens, so a leading tab or
+    * a trailing CR adds no `""` token and a blank line gives `[]`. Built-ins
+    * only (Spark `trim` strips ' ' alone, so trim-then-split is not enough).
+    */
+  private def tokens(line: Column): Column = array_remove(split(line, "\\s+"), "")
+
+  /** One row per raw line, its [[tokens]] as `toks` (a blank line gives `[]`,
+    * which every positional explode drops): the input of the miners that
+    * weight raw lines instead of distinct ones (IPLoM, exact LenMa).
+    */
+  def lineTokens(lines: DataFrame, lineCol: String): DataFrame =
+    lines.select(tokens(col(lineCol)).as("toks"))
+
+  /** Distinct non-blank lines with multiplicities: `(p, cnt, toks)`, where
+    * `toks` are the line's [[tokens]] and `p` is those tokens joined by single
+    * spaces — so code that reads `p` (a first character, a re-split on ' ', a
+    * sort key) sees exactly `toks`, and lines that differ only in whitespace
+    * are one pattern. One map-side-combinable aggregation keyed by `p`;
+    * `toks` is re-split from `p` per distinct line, after the shuffle.
+    */
+  def distinctLines(lines: DataFrame, lineCol: String): DataFrame =
+    lines
+      .select(array_join(tokens(col(lineCol)), " ").as("p"))
+      .filter(col("p") =!= "")
+      .groupBy("p").agg(count(lit(1)).as("cnt"))
+      .withColumn("toks", split(col("p"), " "))
+
+  /** Runs `mine` over the persisted [[distinctLines]] (a miner that reads
+    * them more than once scans and dedups the corpus once) and returns its
+    * small result eagerly `localCheckpoint`ed, so the cache is released before
+    * return and no caller action re-runs the gather.
+    */
+  def withDistinctLines(lines: DataFrame, lineCol: String)(
+      mine: DataFrame => DataFrame): DataFrame = {
+    val dl = distinctLines(lines, lineCol).persist()
+    try mine(dl).localCheckpoint(true)
+    finally dl.unpersist()
+  }
 
   /** `(event_template, occurrences)` → the engine's catalog projection with
     * `event_id = substr(md5(template), 1, 8)` (F5, same as [[graft.drain.DrainTree.eventId]]).
@@ -35,31 +78,4 @@ object MinerOutput {
         max(when(col("pos") === 0, col("n"))).as("occurrences"))
       .groupBy("event_template")
       .agg(sum("occurrences").as("occurrences"))
-
-  /** Exploded `(lid, pos, tok)` tokens per line — whitespace tokenization matching
-    * the engine's F2 semantics.
-    *
-    * `lid` is a STABLE content-derived line id (round-3 fix; was
-    * `monotonically_increasing_id`, which SURVEY S3 bans for grouping keys: under
-    * AQE re-planning or lost-executor recompute two plan branches could see
-    * different ids for the same line and a miner's per-line grouping silently
-    * shifts). The id is `struct(h = xxhash64(line), dup = row_number over lines
-    * with identical content)`: any re-evaluation reproduces the same multiset of
-    * ids, and which physical duplicate gets dup=k is irrelevant because identical
-    * lines are indistinguishable to every downstream grouping. The duplicate
-    * sequence comes from a count-then-re-expand (groupBy gets a MAP-SIDE partial
-    * combine, so the exchange moves one row per distinct line — strictly cheaper
-    * than the window-over-content alternative, which shuffles and sorts every
-    * row). A 64-bit hash collision merging two distinct lines has p ≈ n²/2⁶⁴ —
-    * at the mine phase's bounded input (≤10⁵ lines after sampling) that is ~10⁻⁹.
-    */
-  def explodedTokens(lines: DataFrame, lineCol: String): DataFrame =
-    lines
-      .select(trim(col(lineCol)).as("line"))
-      .groupBy("line").agg(count(lit(1)).as("line_cnt"))
-      .select(col("line"),
-        explode(sequence(lit(1), col("line_cnt").cast("int"))).as("dup"))
-      .select(struct(xxhash64(col("line")).as("h"), col("dup")).as("lid"),
-        split(col("line"), "\\s+").as("toks"))
-      .select(col("lid"), posexplode(col("toks")).as(Seq("pos", "tok")))
 }

@@ -1,5 +1,6 @@
 package graft.molfi
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -55,16 +56,12 @@ object Molfi {
                     gens: Int = 20, maxGroup: Int = 2000): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
-    val patterns = lines
-      .select(trim(col(lineCol)).as("p"))
-      .filter(col("p") =!= "")
-      .groupBy("p").agg(count(lit(1)).as("cnt"))
-      .as[(String, Long)]
-    patterns
-      .groupByKey(_._1.split("\\s+").length)
+    MinerOutput.distinctLines(lines, lineCol)
+      .as[(String, Long, Seq[String])] // (p, cnt, toks)
+      .groupByKey(_._3.length)
       .flatMapGroups { (len, it) =>
         val msgs = it.toVector.sortBy(_._1)
-          .map { case (p, w) => (p.split("\\s+").toVector, w) }
+          .map { case (_, w, toks) => (toks.toVector, w) }
         require(msgs.size <= maxGroup,
           s"Molfi.mineTemplates: length group $len has ${msgs.size} distinct " +
             s"messages > maxGroup=$maxGroup; sample or raise the cap explicitly")
@@ -76,7 +73,7 @@ object Molfi {
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 
   // ---- per-length-group NSGA-II (sequential by design; see scaladoc) --------
 

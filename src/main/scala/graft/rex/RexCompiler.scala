@@ -102,11 +102,6 @@ object RexCompiler {
       regexp_extract(line, fmt.pattern, gi).as(h)
     }
 
-  /** A line "matches" the format iff the anchored pattern matches (reference drops
-    * non-matching lines silently — S1; we filter + count them instead).
-    */
-  def matchesFormat(line: Column, fmt: CompiledFormat): Column = line.rlike(fmt.pattern)
-
   /** The reference's `preprocess` (F1): for each masking regex, replace every match
     * with `<*>`, in list order. Chained `regexp_replace` — Catalyst codegens the chain.
     */

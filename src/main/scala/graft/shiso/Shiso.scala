@@ -1,5 +1,6 @@
 package graft.shiso
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -55,22 +56,18 @@ object Shiso {
     // single task serialized the whole mine (measured ~1 s single-threaded on
     // a 32-core session). Width follows the cluster, not a local constant;
     // the downstream is a pure groupBy, partition-count invariant.
-    val patterns = lines
-      .select(trim(col(lineCol)).as("p"))
-      .filter(col("p") =!= "")
-      .groupBy("p").agg(count(lit(1)).as("cnt"))
+    val patterns = MinerOutput.distinctLines(lines, lineCol)
       .repartition(lines.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("toks", split(col("p"), "\\s+"))
 
     val keyed = patterns.withColumn("ckey",
       concat_ws(",", transform(col("toks"), classSignature(_))))
 
-    graft.miner.MinerOutput.agreementTemplates(
+    MinerOutput.agreementTemplates(
       keyed.select(col("ckey"), col("cnt").as("w"),
         posexplode(col("toks")).as(Seq("pos", "tok"))))
   }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 }

@@ -1,6 +1,7 @@
 package graft.slct
 
-import org.apache.spark.sql.{DataFrame}
+import graft.miner.MinerOutput
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SLCT-style frequent-word template miner (Vaarandi, "A Data Clustering Algorithm
@@ -43,37 +44,28 @@ object Slct {
     * driver-collected and broadcast — ≤ positions·n/support entries, the same
     * bound that made the old per-token broadcast join safe.
     */
-  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame = {
-    val spark = lines.sparkSession
-    val dl = lines
-      .select(trim(col(lineCol)).as("line"))
-      .groupBy("line").agg(count(lit(1)).as("cnt"))
-      .withColumn("toks", split(col("line"), "\\s+"))
-      .persist()
-    val freqSet = dl
-      .select(col("cnt"), posexplode(col("toks")).as(Seq("pos", "tok")))
-      .groupBy("pos", "tok").agg(sum(col("cnt")).as("wf"))
-      .filter(col("wf") >= support)
-      .select("pos", "tok").collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSet
-    val bcFreq = spark.sparkContext.broadcast(freqSet)
-    val abstractLine = udf { (toks: Seq[String]) =>
-      val fw = bcFreq.value
-      toks.iterator.zipWithIndex
-        .map { case (t, i) => if (fw((i, t))) t else Wildcard }
-        .mkString(" ")
+  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame =
+    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      val freqSet = dl
+        .select(col("cnt"), posexplode(col("toks")).as(Seq("pos", "tok")))
+        .groupBy("pos", "tok").agg(sum(col("cnt")).as("wf"))
+        .filter(col("wf") >= support)
+        .select("pos", "tok").collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSet
+      val bcFreq = lines.sparkSession.sparkContext.broadcast(freqSet)
+      val abstractLine = udf { (toks: Seq[String]) =>
+        val fw = bcFreq.value
+        toks.iterator.zipWithIndex
+          .map { case (t, i) => if (fw((i, t))) t else Wildcard }
+          .mkString(" ")
+      }
+      dl.select(abstractLine(col("toks")).as("event_template"), col("cnt"))
+        .groupBy("event_template")
+        .agg(sum(col("cnt")).as("occurrences"))
+        .filter(col("occurrences") >= support)
     }
-    val out = dl
-      .select(abstractLine(col("toks")).as("event_template"), col("cnt"))
-      .groupBy("event_template")
-      .agg(sum(col("cnt")).as("occurrences"))
-      .filter(col("occurrences") >= support)
-      .localCheckpoint(true)
-    dl.unpersist()
-    out
-  }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
 }

@@ -149,12 +149,6 @@ object ParquetManifestTable extends TableFormat {
 
   def dataDir(table: String, dir: String): String = new Path(table, s"data/$dir").toString
 
-  /** Physical dir of the data committed by snapshot `id` (its last dir). */
-  def snapshotDataDir(spark: SparkSession, table: String, id: Long): String = {
-    val snaps = loadManifest(spark, table)
-    dataDir(table, snaps.find(_._1 == id).get._2.last)
-  }
-
   override def read(spark: SparkSession, table: String): DataFrame = {
     val snaps = loadManifest(spark, table)
     require(snaps.nonEmpty, s"table $table has no snapshots")

@@ -1,5 +1,6 @@
 package graft.ulp
 
+import graft.miner.MinerOutput
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -50,12 +51,10 @@ object Ulp {
     * singleton group simply keeps all its surviving tokens static).
     */
   def mineTemplates(lines: DataFrame, lineCol: String): DataFrame = {
-    // distinct-pattern compression: one hash agg over raw lines, then mask and
-    // re-aggregate (two raw lines can collapse onto one masked pattern)
-    val pat = lines
-      .select(trim(col(lineCol)).as("line"))
-      .groupBy("line").agg(count(lit(1)).as("cnt"))
-      .select(maskTokens(split(col("line"), "\\s+")).as("toks"), col("cnt"))
+    // distinct-pattern compression: the distinct lines, then mask and
+    // re-aggregate (two distinct lines can collapse onto one masked pattern)
+    val pat = MinerOutput.distinctLines(lines, lineCol)
+      .select(maskTokens(col("toks")).as("toks"), col("cnt"))
       .groupBy("toks").agg(sum("cnt").as("cnt"))
     // stage-2 group key: the masked layout (length + wildcard positions)
     val keyed = pat.withColumn("ckey",
@@ -65,10 +64,10 @@ object Ulp {
     // multiplicity; masked positions agree on <*> by construction
     val rows = keyed.select(col("ckey"), col("cnt").as("w"),
       posexplode(col("toks")).as(Seq("pos", "tok")))
-    graft.miner.MinerOutput.agreementTemplates(rows)
+    MinerOutput.agreementTemplates(rows)
   }
 
   /** [[mineTemplates]] plus the engine's md5-prefix event id. */
   def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    graft.miner.MinerOutput.withEventId(mineTemplates(lines, lineCol))
+    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 }

