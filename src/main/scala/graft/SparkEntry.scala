@@ -1,128 +1,16 @@
 package graft
 
-import graft.dedup.Dedup
-import graft.eval.Evaluator
-import graft.ingest.WebPagesGen
-import graft.mm.Multimodal
-import graft.pipeline.{LogPipeline, MatchCatalog, PipelineConfig}
-import graft.rex.RexCompiler
-import graft.sim.Ann
-import graft.text.TextOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
+import graft.pipeline.{LogPipeline, PipelineConfig}
+import graft.registry._
+import graft.registry.QuerySupport.assignedFor
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — one `queries` entry per implemented operator (SURVEY.md §2 +
-  * the training-data operator families), with a DuckDB oracle for every
-  * SQL-expressible one. Column names are aliased identically on both sides (the
-  * driver's compare hashes by sorted column name).
+/** The query contract `Verify` and `Bench` run — one registry entry per
+  * implemented operator (SURVEY.md §2 + the training-data operator families),
+  * each with its DuckDB oracle. The entries live in five family files under
+  * `graft.registry`; `queries` and `oracleSql` are views of that one list.
   */
 object SparkEntry {
-
-  // ---- helpers ---------------------------------------------------------------
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-
-  /** Deterministic synthetic URL from `documents` columns (no url column exists in
-    * the testdata) — shared by the URL-curation queries and replayed verbatim by
-    * their DuckDB oracles. Collapses onto three registered domains so the per-
-    * domain cap query has genuinely hot keys.
-    */
-  private def synthUrl: Column = concat(lit("https://"),
-    when(col("doc_id") % 7 === 0, lit("www.")).otherwise(lit("")),
-    col("source"), lit("-"), (col("doc_id") % 50).cast("string"),
-    when(col("doc_id") % 3 === 0, lit(".example.com"))
-      .when(col("doc_id") % 3 === 1, lit(".example.org"))
-      .otherwise(lit(".example.net")),
-    lit("/"), col("lang"), lit("/p"), (col("doc_id") % 100).cast("string"),
-    when(col("doc_id") % 4 === 0, lit("/view?ref=1")).otherwise(lit("")))
-
-  /** DuckDB replay of [[synthUrl]] — ONE definition, interpolated into every
-    * URL-curation oracle so the recipe can't silently diverge between copies.
-    */
-  private val synthUrlSql: String =
-    "SELECT doc_id, 'https://' || CASE WHEN doc_id % 7 = 0 THEN 'www.' ELSE '' END || " +
-      "source || '-' || (doc_id % 50)::VARCHAR || " +
-      "CASE WHEN doc_id % 3 = 0 THEN '.example.com' WHEN doc_id % 3 = 1 THEN '.example.org' ELSE '.example.net' END || " +
-      "'/' || lang || '/p' || (doc_id % 100)::VARCHAR || " +
-      "CASE WHEN doc_id % 4 = 0 THEN '/view?ref=1' ELSE '' END AS url FROM documents"
-
-  /** DuckDB replays of TextOps.urlHost / registeredDomain (expects cols url / host). */
-  private val urlHostSql = "regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)"
-  private val registeredDomainSql =
-    "CASE WHEN host LIKE '%.%' THEN regexp_extract(host, '([^.]+\\.[^.]+)$', 1) ELSE host END"
-
-  /** The log pipeline over the synthetic web_pages table, mined+matched once per
-    * (session, sfDir) and cached — several queries project from it. All its
-    * consumers read only (url, line_no, event_id, event_template, matched_by),
-    * so the mine/match runs via `assignNarrow` (round 6): identical catalog and
-    * projected columns, but neither the passthrough headers nor the F6
-    * parameter arrays are computed or cached, and the page generator skips the
-    * html bytes those consumers never see (`pagesNarrow`).
-    */
-  private val pipeCache = TrieMap[String, (MatchCatalog, DataFrame)]()
-  private def assignedFor(s: SparkSession, dir: String): (MatchCatalog, DataFrame) =
-    pipeCache.getOrElseUpdate(s"${s.sparkContext.applicationId}:$dir", {
-      val n = WebPagesGen.pagesForSfDir(dir)
-      val pages = WebPagesGen.pagesNarrow(s, n).toDF()
-      val (cat, asg) = LogPipeline.assignNarrow(s, pages, PipelineConfig.hdfs)
-      (cat, asg.persist())
-    })
-
-  /** The seed-fixed web_pages corpus materialized as a parquet DIRECTORY (the
-    * streaming file-source needs files on disk, not an in-memory Dataset), once
-    * per (session, sfDir). Written as several files so `maxFilesPerTrigger`
-    * yields real multi-micro-batch streams over it.
-    */
-  private val streamSrcCache = TrieMap[String, String]()
-  private def streamSrcFor(s: SparkSession, dir: String): String =
-    streamSrcCache.getOrElseUpdate(s"${s.sparkContext.applicationId}:$dir", {
-      // written NARROW (url, warc_ts, text — the columns the streaming match
-      // reads; readPages' declared schema fills html/lang with nulls) and on
-      // tmpfs: the html bytes were ~half the generated/written volume for a
-      // column the stream never touches (round 6, guide §6)
-      // 64 files (was 12): the file source spawns roughly one task per small
-      // file, so a 6-file trigger ran each micro-batch 6-wide on a 32-core
-      // session — per-batch parallelism now matches the cluster width while
-      // the batch COUNT (2) is unchanged (maxFilesPerTrigger scales with it)
-      val out = TempDirs.create("graft_stream_src").toString
-      WebPagesGen.pagesNarrow(s, WebPagesGen.pagesForSfDir(dir)).toDF()
-        .repartition(64).write.mode("overwrite").parquet(out)
-      out
-    })
-
-  /** The minhash near-dup pair set over [[docsWithDups]], computed once per
-    * (session, sfDir) — `minhashDupPairs` eagerly checkpoints its (small) result
-    * and releases its staged caches (round-3 ADVICE fix), so sharing the returned
-    * frame across the queries that consume it (d_minhash_pairs, d_components) is
-    * a cheap ExistingRDD scan, not a leaked cache.
-    */
-  private val minhashCache = TrieMap[String, DataFrame]()
-  private def minhashPairsFor(s: SparkSession, dir: String): DataFrame =
-    minhashCache.getOrElseUpdate(s"${s.sparkContext.applicationId}:$dir",
-      Dedup.minhashDupPairs(docsWithDups(s, dir), "doc_id", "text",
-        k = 3, numHashes = 64, bands = 16, threshold = 0.9))
-
-  /** documents ∪ exact copies (ids +100000 for every 5th doc) — guaranteed
-    * duplicates so dedup queries return non-empty, fully deterministic results.
-    */
-  private def docsWithDups(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    d.unionByName(d.filter(col("doc_id") % 5 === 0)
-      .withColumn("doc_id", col("doc_id") + 100000))
-  }
-
-  /** documents ∪ perturbed copies (one appended word) — near-dups, not exact. */
-  private def docsWithNearDups(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents").filter(col("doc_id") < 100)
-    d.unionByName(d.filter(col("doc_id") % 2 === 0)
-      .withColumn("doc_id", col("doc_id") + 100000)
-      .withColumn("text", concat(col("text"), lit(" zzappended"))))
-  }
-
-  // ---- flagship --------------------------------------------------------------
 
   /** Flagship: full parse→mine→match pipeline on sf0.001-scale synthetic web pages,
     * returning per-template-cluster counts (the north_rule parity quantity).
@@ -132,1863 +20,12 @@ object SparkEntry {
     new LogPipeline(PipelineConfig.hdfs).templateCounts(asg)
   }
 
-  // ---- queries ---------------------------------------------------------------
+  /** Every registry query; names are unique (RegistrySpec). */
+  val registry: Seq[Query] = LogQueries.all ++ MinerQueries.all ++ CurationQueries.all ++
+    DedupAnnQueries.all ++ EventsTpchQueries.all
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---------- log pipeline (non-SQL-expressible core → rows-only checks) ----
-    "log_templates" -> ((s, dir) => {
-      val (_, asg) = assignedFor(s, dir)
-      new LogPipeline(PipelineConfig.hdfs).templateCounts(asg)
-    }),
-    "log_stream_templates" -> ((s, dir) => {
-      // §2.7 driver-graded (round 5, VERDICT #3): the SAME frozen catalog matched
-      // over the SAME seed-fixed corpus, but through the Structured Streaming
-      // path — file-source micro-batches (maxFilesPerTrigger bounds each trigger,
-      // so incremental aggregation state genuinely carries across batches) →
-      // complete-mode stateful count → memory sink. StreamingSpec proves
-      // stream==batch in sbt; this row pins the same equality against the pinned
-      // log_templates VALUES oracle at driver-gate scale, so the streaming
-      // surface is no longer spec-only.
-      val (cat, _) = assignedFor(s, dir)
-      val bc = s.sparkContext.broadcast(cat)
-      val matched = graft.streaming.StreamingMatch.matchedStream(
-        graft.streaming.StreamingMatch.readPages(s, streamSrcFor(s, dir),
-          maxFilesPerTrigger = Some(32)),
-        PipelineConfig.hdfs, bc)
-      val counts = matched.groupBy("event_id", "event_template")
-        .agg(count(lit(1)).as("occurrences"))
-      val name = "log_stream_templates_out"
-      graft.streaming.StreamingMatch.runToMemory(counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete())
-      s.table(name).orderBy("event_id")
-    }),
-    "log_matched_by" -> ((s, dir) => {
-      val (_, asg) = assignedFor(s, dir)
-      asg.groupBy("matched_by").agg(count(lit(1)).as("rows")).orderBy("matched_by")
-    }),
-    "log_routed_rows" -> ((s, dir) => {
-      // The north_rule's parity quantity, made ORACLE-GRADABLE (round 4): one
-      // row per routed sink with its row count plus an order-independent
-      // row-SET checksum (bit_xor of the per-row key hash) — routed-row
-      // EQUALITY evidence over the full 230k-line assignment compressed into
-      // 23 pinnable rows. The raw (url, line_no, event_id) projection this
-      // replaces was rows-only forever: 230k rows can't live in a VALUES
-      // oracle, their digest can.
-      val (_, asg) = assignedFor(s, dir)
-      asg.groupBy("event_id").agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(xxhash64(url, line_no, event_id))").as("row_set_hash"))
-    }),
-    "log_params" -> ((s, dir) => {
-      // F6 re-based on the documents table (round 3) so the real ParamExtractor —
-      // with the reference's `<.{1,5}>` quirk — gets an INDEPENDENT oracle: the
-      // oracle derives the expected parameters from the synthesis rule, not by
-      // replaying the regex machinery. Case 1 is the plain multi-slot path; case
-      // 2's literal `<init>` token must become a parameter slot via the quirk.
-      // The in-pipeline extraction stays covered by ParamExtractorSpec + goldens.
-      val ex = udf((t: String, c: String) =>
-        graft.drain.ParamExtractor.extract(t, c).toSeq)
-      val d = t(s, dir, "documents")
-      val c1 = d.select(col("doc_id"), lit(1L).as("case_id"),
-        lit("req <*> user <*> lang <*>").as("tpl"),
-        concat(lit("req "), col("source"), lit(" user "),
-          col("doc_id").cast("string"), lit(" lang "), col("lang")).as("content"))
-      val c2 = d.select(col("doc_id"), lit(2L).as("case_id"),
-        lit("boot <init> phase <*>").as("tpl"),
-        concat(lit("boot <init> phase "),
-          (col("doc_id") % 100).cast("string")).as("content"))
-      c1.unionByName(c2).select(col("doc_id"), col("case_id"),
-        concat_ws("|", ex(col("tpl"), col("content"))).as("params"))
-    }),
-    "log_enrich_region" -> ((s, dir) => {
-      // J-enrich re-based on the documents table (round 3): the same
-      // LogPipeline.enrich path (parse_url host + broadcast hash join) over a
-      // deterministic dim derived from `source`, so the whole enrich gets a
-      // DuckDB oracle. PlanSpec still asserts the join is a BroadcastHashJoin.
-      val d = t(s, dir, "documents").withColumn("url",
-        concat(lit("https://"), col("source"), lit(".example.com/"),
-          col("doc_id").cast("string")))
-      val dim = d.select(col("source")).distinct()
-        .select(concat(col("source"), lit(".example.com")).as("domain"),
-          concat(lit("r"), (length(col("source")) % 3).cast("string")).as("region"),
-          concat(lit("t"), (length(col("source")) % 2).cast("string")).as("tier"))
-      new LogPipeline(PipelineConfig.hdfs).enrich(d, dim)
-        .groupBy("region", "tier").agg(count(lit(1)).as("n_rows"))
-    }),
-    "log_eval_scores" -> ((s, dir) => {
-      val (_, asg) = assignedFor(s, dir)
-      val sc = Evaluator.evaluate(Evaluator.withGtId(asg, WebPagesGen.templateIdAt))
-      import s.implicits._
-      Seq((sc.precision, sc.recall, sc.f1, sc.parsingAccuracy, sc.total))
-        .toDF("precision", "recall", "f1", "parsing_accuracy", "total")
-    }),
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-    "log_pa_by_style" -> ((s, dir) => {
-      // PA-threshold harness: every style's Parsing Accuracy must clear its pinned
-      // floor (the engine-side analog of the reference benchmark's per-dataset
-      // accuracy table, BASELINE.md §1) — a regression FAILS the query instead of
-      // silently shipping a lower score. Floors mirror MultiStyleSpec's bars.
-      import s.implicits._
-      val n = 150L
-      val floors = Map("hdfs" -> 0.95, "apache" -> 0.8, "proxifier" -> 0.5,
-        "spark" -> 0.8, "zookeeper" -> 0.8, "openssh" -> 0.8, "healthapp" -> 0.7,
-        "windows" -> 0.8, "linux" -> 0.8,
-        // the 7 loghub-shaped styles added round 3 (16-dataset sweep parity):
-        "hadoop" -> 0.8, "bgl" -> 0.8, "hpc" -> 0.8, "thunderbird" -> 0.8,
-        "android" -> 0.8, "openstack" -> 0.8, "mac" -> 0.8)
-      // 16 independent 150-page mini-pipelines: each one leaves most of the
-      // cluster idle, so submit them concurrently (bounded pool) — Spark's
-      // scheduler interleaves independent jobs exactly as a shared cluster
-      // would, and every mine/score is per-invocation state (no globals).
-      // Future.traverse preserves input order, so the output rows (and the
-      // floor checks) are deterministic.
-      // assignNarrow (round 6): the scorer reads only (url, line_no, event_id),
-      // so none of the 16 mini-pipelines computes headers or parameter arrays
-      val tasks: Seq[() => (String, Evaluator.Scores)] =
-        (() => {
-          val (_, asg) = LogPipeline.assignNarrow(s, WebPagesGen.pagesNarrow(s, n).toDF(),
-            PipelineConfig.hdfs)
-          ("hdfs", Evaluator.evaluate(Evaluator.withGtId(asg, WebPagesGen.templateIdAt)))
-        }) +: graft.ingest.LogStyles.all.map { spec => () => {
-          val cfg = PipelineConfig(spec.style.logFormat, spec.style.rexes,
-            st = spec.style.st, depth = spec.style.depth)
-          val (_, asg) = LogPipeline.assignNarrow(s,
-            graft.ingest.LogStyles.pagesFor(s, spec, n).toDF(), cfg)
-          (spec.style.name, Evaluator.evaluate(
-            Evaluator.withGtId(asg, graft.ingest.LogStyles.templateIdAt(spec, _, _))))
-        }}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-      val rows = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.traverse(tasks)(tk => scala.concurrent.Future(tk())),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-      rows.foreach { case (name, sc) =>
-        require(sc.parsingAccuracy >= floors(name),
-          f"PA floor violated for style $name: ${sc.parsingAccuracy}%.4f < ${floors(name)}%.2f")
-      }
-      rows.map { case (name, sc) => (name, sc.parsingAccuracy, floors(name), sc.total) }
-        .toDF("style", "parsing_accuracy", "floor", "n_lines")
-    }),
-
-    "log_templates_agg" -> ((s, dir) => {
-      // the shuffle-light scale-path miner (typed Aggregator: only O(#templates)
-      // partial trees cross the wire — the mine you run when the corpus is 10^12
-      // rows and grouping-metric parity suffices) exposed as a first-class operator
-      import s.implicits._
-      val cfg = PipelineConfig.hdfs
-      val p = new LogPipeline(cfg)
-      val pages = WebPagesGen.pagesNarrow(s, 2000L).toDF()
-      val toks = p.withMasked(p.structure(p.explodeLines(pages)))
-        .filter(col("parsed")).select("masked").as[String]
-        .map(RexCompiler.tokenize)
-      val agg = new graft.drain.DrainAggregator(cfg.depth, cfg.st, cfg.maxChild)
-      toks.select(agg.toColumn).collect()(0).toSeq
-        .sortBy(r => (r.event_template, r.event_id))
-        .toDF()
-    }),
-
-    "iplom_templates" -> ((s, dir) => {
-      // the third miner (IPLoM partition refinement, Makanju et al. KDD'09): fully
-      // declarative — the whole mine is groupBy/agg — so unlike the online
-      // Drain/Spell miners its complete template catalog has a DuckDB oracle
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), col("user_id").cast("string"),
-          lit(" v"), round(col("value") * 100).cast("long").cast("string")).as("line"))
-      graft.iplom.Iplom.mineCatalog(lines, "line")
-    }),
-
-    "slct_templates" -> ((s, dir) => {
-      // fourth miner (SLCT frequent-word clustering): also fully declarative (two
-      // counting passes), also DuckDB-provable; support = 10% of rows so the same
-      // construction separates frequent event types from rare user/value tokens
-      // at every sf
-      // persisted: the support count and the mine's two passes read one cached
-      // materialization instead of scanning events three times
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), col("user_id").cast("string"),
-          lit(" v"), round(col("value") * 100).cast("long").cast("string")).as("line"))
-        .persist()
-      graft.slct.Slct.mineCatalog(lines, "line", support = lines.count() / 10)
-    }),
-
-    "ael_templates" -> ((s, dir) => {
-      // fifth miner (AEL anonymize→bin→categorize→reconcile): the two line shapes
-      // exercise both paths — the long shape's five per-type templates reconcile
-      // into one (they differ only at the type position), the short 'ping' shape
-      // has no merge partner and must survive unchanged
-      val lines = t(s, dir, "events").select(
-        when(col("event_type") === "click", concat(col("event_type"), lit(" ping")))
-          .otherwise(concat(col("event_type"), lit(" user="),
-            col("user_id").cast("string"), lit(" code "),
-            (col("user_id") % 7).cast("string"))).as("line"))
-      graft.ael.Ael.mineCatalog(lines, "line")
-    }),
-
-    "logcluster_templates" -> ((s, dir) => {
-      // sixth miner (LogCluster: position-independent frequent-word patterns with
-      // *{min,max} gap bounds) — same declarative family as SLCT/IPLoM/AEL, same
-      // 10%-of-rows support so types are frequent and user/value tokens are not
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), col("user_id").cast("string"),
-          lit(" v"), round(col("value") * 100).cast("long").cast("string")).as("line"))
-        .persist()
-      graft.logcluster.LogCluster.mineCatalog(lines, "line",
-        support = lines.count() / 10)
-    }),
-
-    "logmine_templates" -> ((s, dir) => {
-      // ninth miner (LogMine threshold-graph clustering): level-0 exact pattern
-      // dedup → exact pigeonhole band join → distance verify → connected
-      // components → positionwise template. The u/c construction makes the
-      // cluster structure nontrivial (patterns pair via a shared u OR a shared c)
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), (col("user_id") % 30).cast("string"),
-          lit(" c"), (col("user_id") % 7).cast("string")).as("line"))
-      graft.logmine.LogMine.mineCatalog(lines, "line", maxDist = 0.34)
-    }),
-
-    "logram_templates" -> ((s, dir) => {
-      // fourteenth miner (Logram n-gram dictionary, TSE'20 — the first of the
-      // post-2023 upstream additions, VERDICT missing #2): u spans 50 values
-      // so every (E,uK) bigram sits at ~N/250 « support = N/100, while the
-      // boundary bigram (BOS,E) carries the full type count ≈ N/5 — the type
-      // token stays static, both parameter tokens wildcard
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), (col("user_id") % 50).cast("string"),
-          lit(" v"), round(col("value") * 100).cast("long").cast("string")).as("line"))
-        .persist()
-      graft.logram.Logram.mineCatalog(lines, "line", support = lines.count() / 100)
-    }),
-
-    "brain_templates" -> ((s, dir) => {
-      // fifteenth miner (Brain frequency-pattern LCP grouping, TSC'23): each
-      // line's three (pos, word) frequencies are well separated (type ≈ N/5,
-      // u ≈ N/50, v ≈ N/1000), so the per-line modal tie resolves to the type
-      // frequency and the LCP is exactly the type token → five clusters,
-      // parameters wildcard by agreement
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), (col("user_id") % 50).cast("string"),
-          lit(" v"), round(col("value") * 100).cast("long").cast("string")).as("line"))
-      graft.brain.Brain.mineCatalog(lines, "line")
-    }),
-
-    "ulp_templates" -> ((s, dir) => {
-      // sixteenth miner (ULP local-frequency grouping, ICSME'22 — closes the
-      // post-2023 upstream roster, VERDICT r4 missing #3): each type's line
-      // carries ascii(type[0]) % 4 digit-free pad tokens, so the masked layout
-      // (length + wildcard positions) clusters by type; 'click' and 'signup'
-      // share pad count 3 and merge (their type token wildcards by LOCAL
-      // disagreement — the group's frequency analysis, not a global pass),
-      // the letters-only u-token always wildcards locally, and the digit
-      // n-token is removed by ULP preprocessing. Catalog: 4 templates.
-      val lines = t(s, dir, "events").selectExpr(
-        "concat(event_type, ' ', repeat('pad ', ascii(substr(event_type, 1, 1)) % 4), " +
-          "'u', repeat(char(97 + user_id % 3), 2), ' n', cast(user_id as string)) AS line")
-      graft.ulp.Ulp.mineCatalog(lines, "line")
-    }),
-
-    "logmine_xlen_templates" -> ((s, dir) => {
-      // LogMine's CROSS-LENGTH alignment instance (round 4, VERDICT missing
-      // #5): every 4th event's line carries an inserted trailing token, so each
-      // type's corpus holds both "E E uK" (3 tokens) and "E E uK extra" (4).
-      // The DOUBLED type token keeps inter-type pairs apart (≥ 2 mismatches:
-      // 2/3, 4/8 — both > 0.34) while intra-type length-3 pairs connect (1/3 ≤
-      // 0.34) and each 3-token pattern hooks into the cluster through its
-      // same-K single-insertion pair (LCS dist 1 − 6/7 ≈ 0.14) — the 5
-      // per-type clusters each MIX token counts, which the equal-length
-      // instance cannot produce. The NW fold wildcards both parameter columns,
-      // so the catalog is derivable from the synthesis rule: "E E <*> <*>"
-      // with the type's event count — the oracle derives exactly that,
-      // independent of the alignment machinery (LogMineSpec pins the
-      // machinery itself).
-      val lines = t(s, dir, "events").select(
-        when(col("event_id") % 4 === 0,
-          concat(col("event_type"), lit(" "), col("event_type"), lit(" u"),
-            (col("user_id") % 6).cast("string"), lit(" extra")))
-          .otherwise(concat(col("event_type"), lit(" "), col("event_type"),
-            lit(" u"), (col("user_id") % 6).cast("string"))).as("line"))
-      graft.logmine.LogMine.mineCatalogXLen(lines, "line", maxDist = 0.34)
-    }),
-
-    "lfa_templates" -> ((s, dir) => {
-      // seventh miner (LFA largest-frequency-gap split, no support knob): the
-      // event-type token's frequency dwarfs the u/v parameter tokens', so every
-      // line splits after its type token → "type <*> <*>" templates
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), col("user_id").cast("string"),
-          lit(" v"), round(col("value") * 100).cast("long").cast("string")).as("line"))
-      graft.lfa.Lfa.mineCatalog(lines, "line")
-    }),
-
-    "lenma_templates" -> ((s, dir) => {
-      // eighth miner (LenMa word-length-vector clustering at similarity 1.0):
-      // same-shape lines cluster; positions where members disagree become <*>
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), col("user_id").cast("string"),
-          lit(" v"), round(col("value") * 100).cast("long").cast("string")).as("line"))
-      graft.lenma.LenMa.mineCatalog(lines, "line")
-    }),
-
-    "lenma_sim_templates" -> ((s, dir) => {
-      // LenMa's tunable sub-1.0 cosine instance (round 4, VERDICT missing #4):
-      // each type's two leading tokens have complementary lengths (3+4k,
-      // 19−4k for a type-distinct k), so INTER-type length vectors sit far
-      // apart in angle (cos ≤ 0.963) while intra-type pairs — only the
-      // trailing digit-run token's length varies (1..3) — stay ≥ 0.9895.
-      // sim = 0.98 separates the modes and merges three length SHAPES per type
-      // into one cluster, which the exact (sim 1.0) instance cannot produce.
-      // The SQL oracle replays the full relation (mismatch bound + cosine) and
-      // the components.
-      val lines = t(s, dir, "events").selectExpr(
-        "concat(repeat(substr(event_type, 1, 1), 3 + 4 * (ascii(substr(event_type, 1, 1)) % 5)), " +
-          "' ', repeat('x', 19 - 4 * (ascii(substr(event_type, 1, 1)) % 5)), " +
-          "' u', CAST(user_id % 7 AS STRING), ' ', " +
-          "repeat('9', CAST(1 + user_id % 3 AS INT))) AS line")
-      graft.lenma.LenMa.mineCatalogSim(lines, "line", sim = 0.98)
-    }),
-
-    "shiso_templates" -> ((s, dir) => {
-      // tenth miner (SHISO char-class composition vectors, deterministic exact
-      // instance): tokens cluster by (upper, lower, digit, other) count
-      // signatures — "u7" and "u123" land in different clusters (digit count
-      // differs), disagreeing positions inside a cluster wildcard
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), col("user_id").cast("string"),
-          lit(" v"), round(col("value") * 100).cast("long").cast("string")).as("line"))
-      graft.shiso.Shiso.mineCatalog(lines, "line")
-    }),
-
-    "lke_templates" -> ((s, dir) => {
-      // eleventh miner (LKE weighted-token-distance graph → learned 2-means
-      // threshold → components → private-content splitting). Every token of a
-      // line carries the type's initial, so INTER-type pairs mismatch at
-      // positions {0,1,3} — a constant 816-milli distance mode — while intra
-      // distances stay ≤ 316 milli: the weighted-distance histogram is cleanly
-      // bimodal and 2-means learns the 316 boundary. The job column
-      // (cardinality 3 ≤ splitThreshold 4) splits, the u column (cardinality
-      // 5 > 4) wildcards — this corpus reaches the split fixpoint in one
-      // effective round, which the one-round-unrolled SQL oracle mirrors (the
-      // multi-round loop and the distance DP are exercised by LkeSpec)
-      val pfx = substring(col("event_type"), 1, 1)
-      val lines = t(s, dir, "events").select(
-        concat(repeat(pfx, 8), lit(" "), pfx, (col("user_id") % 5).cast("string"),
-          lit(" job "), pfx, (col("user_id") % 3).cast("string")).as("line"))
-      graft.lke.Lke.mineCatalog(lines, "line")
-    }),
-
-    "logsig_templates" -> ((s, dir) => {
-      // twelfth miner (LogSig pair-potential local search, deterministic
-      // synchronous instance). Every term pair in this corpus contains a
-      // type-derived token and the ascii-initial init groups each type whole, so
-      // no message shares a pair with a foreign group — the init is PROVABLY the
-      // search fixpoint and the loop's one round verifies it, which is what the
-      // loop-free SQL oracle replays (real reassignment is driven by LogSigSpec's
-      // adversarial init). Groups: {click}, {error}, {purchase,signup,view} —
-      // the mixed group majority-wildcards every position
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), (col("user_id") % 4).cast("string"),
-          lit(" "), upper(substring(col("event_type"), 1, 2))).as("line"))
-      graft.logsig.LogSig.mineCatalog(lines, "line")
-    }),
-
-    "molfi_templates" -> ((s, dir) => {
-      // thirteenth miner (MoLFI seeded NSGA-II over per-length partitions) — the
-      // one genuinely non-SQL-expressible miner (population search), so this is
-      // a rows-only driver check; MolfiSpec pins exact catalogs on five corpora.
-      // Expected knee here: the by-type partition (spec 1/2 × freq 1/5 beats
-      // one-cluster's 0 and singletons' 1/30) → five "type <*>" templates
-      val lines = t(s, dir, "events").select(
-        concat(col("event_type"), lit(" u"), (col("user_id") % 6).cast("string"))
-          .as("line"))
-      graft.molfi.Molfi.mineCatalog(lines, "line")
-    }),
-
-    "log_spell_templates" -> ((s, dir) => {
-      // Spell as the PRIMARY miner (reference ships it as a full parser) —
-      // DISTRIBUTED since round 3: an empty Drain tree makes every parsed line
-      // residue, so LogPipeline.mineSpellResidue mines the corpus slice
-      // partition-locally and merges the partials canonically in ascending
-      // partition order (no driver-side line collect, VERDICT r2 #5).
-      val cfg = PipelineConfig.hdfs
-      val p = new LogPipeline(cfg)
-      val pages = WebPagesGen.pagesNarrow(s, 300).toDF()
-      val masked = p.withMasked(p.structure(p.explodeLines(pages)))
-      val model = p.mineSpellResidue(masked,
-        new graft.drain.DrainTree(cfg.depth, cfg.st, cfg.maxChild))
-      import s.implicits._
-      model.clusterList.toSeq
-        .map(c => (graft.drain.DrainTree.eventId(c.templateStr), c.templateStr, c.count))
-        .sortBy(x => (x._2, x._1))
-        .toDF("event_id", "event_template", "occurrences")
-    }),
-    "log_resume_metrics" -> ((s, dir) => {
-      // checkpoint-resume surface: chunked run → per-chunk metrics control sink.
-      // Staged on tmpfs (round 6): the run is commit-protocol bound — 3 chunks ×
-      // (staged snapshot + 3 control appends) of small files, where /tmp's
-      // virtio disk charged ~2 s of unlink/fsync noise to the query.
-      val out = TempDirs.create("graft_resume_q").toString
-      val rep = graft.pipeline.ResumableRunner.run(s, PipelineConfig.hdfs, 100L, out,
-        nChunks = 3)
-      graft.table.ParquetManifestTable.read(s, rep.controlTable)
-        .orderBy("chunk", "matched_by")
-    }),
-
-    // ---------- S2/F5/A1 primitives with real DuckDB oracles ------------------
-    "s2_structure" -> ((s, dir) => {
-      val fmt = RexCompiler.compile("<Tag> <Lang> <Src>: <Rest>")
-      val lines = t(s, dir, "documents")
-        .select(col("doc_id"),
-          concat(lit("REQ "), col("lang"), lit(" "), col("source"), lit(": "),
-            substring(col("text"), 1, 40)).as("line"))
-      lines.select(Seq(col("doc_id")) ++ RexCompiler.structureColumns(col("line"), fmt): _*)
-    }),
-    "f5_eventid_md5" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        substring(md5(col("text")), 1, 8).as("event_id"))),
-    "a1_group_counts" -> ((s, dir) =>
-      t(s, dir, "documents").groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("occurrences"))),
-    "a4_contingency" -> ((s, dir) =>
-      Evaluator.contingency(t(s, dir, "documents")
-        .select(col("source").as("event_id"), col("lang").as("gt_id")))),
-    "a5_eval_scores" -> ((s, dir) => {
-      // the evaluator's WHOLE score math (pair precision/recall/F1 + the 1:1
-      // Parsing Accuracy rule) oracled on a deterministic grouping (round 3):
-      // event_id = source vs gt_id = lang. log_eval_scores keeps exercising the
-      // same code over the real pipeline assignment (non-SQL-expressible there).
-      def r6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val sc = Evaluator.evaluate(t(s, dir, "documents")
-        .select(col("source").as("event_id"), col("lang").as("gt_id")))
-      import s.implicits._
-      Seq((r6(sc.precision), r6(sc.recall), r6(sc.f1), r6(sc.parsingAccuracy), sc.total))
-        .toDF("precision6", "recall6", "f16", "pa6", "total")
-    }),
-    "j1_line_join" -> ((s, dir) => {
-      // J1: explicit equi-join on the line key (evaluator's implicit align)
-      val d = t(s, dir, "documents")
-      val a = d.select(col("doc_id"), col("lang"))
-      val b = d.select(col("doc_id"), col("source"))
-      a.join(b, Seq("doc_id")).groupBy("lang", "source")
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // ---------- text analysis -------------------------------------------------
-    "t_token_count" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))),
-    "t_quality" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextOps.qualityScoreMilli(col("text")).as("quality_milli"))),
-    "t_stopword_ratio" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextOps.stopwordRatioMilli(col("text"), TextOps.EnglishStopwords)
-          .as("stopword_milli"))),
-    "t_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextOps.normFingerprint(col("text")).as("fp"))),
-    "t_langid" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextOps.langId(col("text")).as("pred_lang"))),
-    "t_rolling_fp" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextOps.rollingFingerprint(col("text")).as("rfp"))),
-    "t_subword_count" -> ((s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        TextOps.subwordCount(col("text")).cast("long").as("n_subwords"))),
-    "t_pii_mask" -> ((s, dir) => {
-      // the documents corpus is PII-free word salad, so PII-bearing text is
-      // synthesized deterministically from doc columns (same move as log_params):
-      // every doc gains one email, one IPv4, one SSN and one phone, then the
-      // masking chain runs — the oracle replays both the synthesis and the mask
-      val d = t(s, dir, "documents")
-      val synth = concat(col("text"), lit(" contact user"),
-        col("doc_id").cast("string"), lit("@example.com from 10."),
-        (col("doc_id") % 200).cast("string"), lit(".0.7 ssn 123-45-"),
-        lpad((col("doc_id") % 10000).cast("string"), 4, "0"), lit(" call 555-123-4567"))
-      val masked = TextOps.piiMask(synth)
-      d.select(col("doc_id"), masked.as("masked"),
-        TextOps.piiCount(masked).as("n_pii"))
-    }),
-    "t_quality_gate" -> ((s, dir) =>
-      // composite Gopher-style gate (token band + mean word length + alpha-word
-      // ratio + repetition + stopword presence) — all pure codegen'd exprs
-      t(s, dir, "documents").select(col("doc_id"),
-        TextOps.meanWordLenMilli(col("text")).as("mean_word_milli"),
-        TextOps.alphaWordRatioMilli(col("text")).as("alpha_word_milli"),
-        TextOps.gopherPass(col("text")).cast("long").as("pass"))),
-    "t_url_ops" -> ((s, dir) => {
-      // URL curation primitives (host / registered domain / path depth / domain
-      // blocklist) over urls synthesized deterministically from doc columns —
-      // regexp-based (NOT parse_url) so the DuckDB oracle replays them verbatim
-      val url = synthUrl
-      val host = TextOps.urlHost(url)
-      val domain = TextOps.registeredDomain(host)
-      t(s, dir, "documents").select(col("doc_id"), host.as("host"), domain.as("domain"),
-        TextOps.urlPathDepth(url).as("depth"),
-        (domain === "example.net").cast("long").as("blocked"))
-    }),
-    "td_domain_cap" -> ((s, dir) => {
-      // at most K docs per registered domain (skew-safe two-phase cap,
-      // Sampling.keyCap) — the synthetic urls collapse onto THREE registered
-      // domains, so at sf0.1 each domain is a ~67k-row hot key: exactly the skew
-      // the salted pre-cap exists for. Deterministic order (doc_id) makes the
-      // result row-identical to the oracle's single window.
-      val domain = TextOps.registeredDomain(TextOps.urlHost(synthUrl))
-      graft.sample.Sampling.keyCap(
-        t(s, dir, "documents").select(col("doc_id"), domain.as("domain")),
-        "domain", "doc_id", k = 50)
-    }),
-    "t_repetition" -> ((s, dir) => {
-      // Gopher-style repetition quality signals: duplicate-token fraction (pure
-      // column expr) + top-bigram fraction. The bigram top/total counts are
-      // computed in ONE pass per document inside a UDF (round 6): a document's
-      // bigrams are already colocated on its row, so the former explode →
-      // ~1M-row (doc_id, bigram) shuffle → re-agg → join-back moved zero
-      // information between rows (2 Exchanges + 1 join removed, guide §2.4 —
-      // and the shape stays shuffle-free at any corpus size). The UDF replays
-      // wordShingles(k=2) token-for-token: Spark `trim` strips ' ' only, Spark
-      // `split` keeps trailing empties (split limit -1), n<2 docs contribute
-      // one whole-text shingle (count 1/1, same ratio as the joined string).
-      val bigramStats = udf { (text: String) =>
-        if (text == null) null
-        else {
-          var b = 0; var e = text.length
-          while (b < e && text.charAt(b) == ' ') b += 1
-          while (e > b && text.charAt(e - 1) == ' ') e -= 1
-          val toks = text.substring(b, e).split("\\s+", -1)
-          var top = 1L
-          var nbg = 1L
-          if (toks.length >= 2) {
-            val m = new scala.collection.mutable.HashMap[String, Long]()
-            var i = 0
-            while (i < toks.length - 1) {
-              val bg = toks(i) + " " + toks(i + 1)
-              val c = m.getOrElse(bg, 0L) + 1L
-              m.update(bg, c)
-              if (c > top) top = c
-              i += 1
-            }
-            nbg = toks.length - 1L
-          }
-          (top, nbg)
-        }
-      }
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextOps.dupWordMilli(col("text")).as("dup_word_milli"),
-          bigramStats(col("text")).as("bs"))
-        .filter(col("bs").isNotNull)
-        .select(col("doc_id"), col("dup_word_milli"),
-          floor(col("bs._1") * 1000L / col("bs._2")).cast("long").as("top_bigram_milli"))
-    }),
-
-    // ---------- dedup ---------------------------------------------------------
-    "d_exact_groups" -> ((s, dir) =>
-      Dedup.exactGroups(docsWithDups(s, dir), "doc_id", "text")),
-    "d_exact_dedup" -> ((s, dir) =>
-      Dedup.exactDedup(docsWithDups(s, dir), "doc_id", "text").select("doc_id")),
-    "d_incremental" -> ((s, dir) => {
-      // incremental crawl-snapshot dedup: the "new batch" (doc_id % 3 == 0) is
-      // deduped within itself, then anti-joined on content hash against the
-      // already-ingested snapshot (doc_id % 2 == 0) — the per-snapshot step of an
-      // incremental pipeline. The slices OVERLAP at doc_id % 6 == 0, so the
-      // oracle genuinely exercises the drop path; the seen side ships hashes
-      // only, never text.
-      val docs = t(s, dir, "documents")
-      Dedup.incrementalDedup(
-        docs.filter(col("doc_id") % 3 === 0),
-        docs.filter(col("doc_id") % 2 === 0),
-        "doc_id", "text").select("doc_id")
-    }),
-    "d_para_dedup" -> ((s, dir) => {
-      // paragraph-level exact dedup (C4/Dolma curation step): every doc is
-      // [unique head ¶][GLOBAL boilerplate ¶][unique tail ¶] — after dedup the
-      // boilerplate survives only in the smallest doc_id; docs shorter than 51
-      // chars contribute colliding empty tails, exercising the same rule. The
-      // result ships as (doc_id, md5(text), length) so the compare stays
-      // compact while digesting the full reassembled text.
-      val docs = t(s, dir, "documents").select(col("doc_id"), concat(
-        substring(col("text"), 1, 50), lit("\n\n"),
-        lit("subscribe to our newsletter for updates"), lit("\n\n"),
-        substring(col("text"), 51, 50)).as("text"))
-      Dedup.paragraphDedup(docs, "doc_id", "text")
-        .select(col("doc_id"), md5(col("text")).as("text_md5"),
-          length(col("text")).cast("long").as("n_chars"))
-    }),
-    "d_minhash_pairs" -> ((s, dir) =>
-      // oracled against the EXACT all-pairs Jaccard≥0.9 set: the trailing verify
-      // stage guarantees precision 1.0, and at (bands=16, rows=4) every J≥0.9 pair
-      // in this corpus lands in a shared band (exact copies have J=1 → identical
-      // signatures → every band; the natural near-dup pairs are verified equal to
-      // the exact set), so the oracle doubles as a recall=1.0 assertion
-      minhashPairsFor(s, dir).select(col("id_a"), col("id_b"))),
-    "d_simhash_pairs" -> ((s, dir) =>
-      // FNV sketch family so the DuckDB oracle can recompute the simhash bit-for-bit
-      // (HUGEINT wrapping arithmetic + per-bit majority); at maxHamming=0 the
-      // pigeonhole banding is EXACT (hamming 0 ⇒ all four 16-bit bands equal), so
-      // the pair set is provably all equal-simhash pairs — no recall caveat
-      Dedup.simhashDupPairs(docsWithDups(s, dir), "doc_id", "text", maxHamming = 0)
-        .select(col("id_a"), col("id_b"))),
-    "d_jaccard_pairs" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(docsWithNearDups(s, dir), "doc_id", "text",
-        k = 3, threshold = 0.5).select(col("id_a"), col("id_b"))),
-    "d_embed_pairs" -> ((s, dir) => {
-      // oracled against the EXACT all-pairs float64 cosine ≥ 0.99 set (round 3):
-      // the trailing cosine filter makes precision exact, and recall 1.0 is
-      // pinned on this deterministic corpus — every perturbed dup (+0.001f) lands
-      // in its original's bucket at these seeded planes (the perturbation's
-      // projection shift is far from any plane boundary here; checked at sf0.001
-      // and sf0.01). Vectors are widened to float64 BEFORE bucketing+scoring so
-      // the threshold compare is bit-reproducible against DuckDB.
-      val e = t(s, dir, "embeddings")
-      val withDups = e.unionByName(e.filter(col("vec_id") % 5 === 0)
-        .withColumn("vec_id", col("vec_id") + 100000)
-        .withColumn("embedding", transform(col("embedding"), x => x + lit(0.001f))))
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      Dedup.embeddingDupPairs(withDups, "vec_id", "embedding", dim = 64,
-        planes = 12, threshold = 0.99).select(col("id_a"), col("id_b"))
-    }),
-
-    "d_components" -> ((s, dir) =>
-      // pairs → clusters: min-label connected components over the LSH near-dup
-      // pair list (the step a real dedup pipeline needs before keeping one doc per
-      // cluster); oracled against a DuckDB recursive CTE over the exact pair set
-      Dedup.connectedComponents(minhashPairsFor(s, dir))
-        .select(col("id"), col("component"))),
-
-    "td_pipeline" -> ((s, dir) => {
-      // the training-data pipeline composed end-to-end: quality gate → exact dedup
-      // → per-language doc/token budget (all stages individually oracled)
-      // scored checkpointed (round 6): exactDedup consumes it on BOTH join
-      // sides, re-running the quality + langId interpreted-HOF chain twice
-      val scored = t(s, dir, "documents")
-        .withColumn("q", TextOps.qualityScoreMilli(col("text")))
-        .withColumn("pred_lang", TextOps.langId(col("text")))
-        .filter(col("q") >= 30000)
-        .localCheckpoint(true)
-      Dedup.exactDedup(scored, "doc_id", "text")
-        .groupBy("pred_lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextOps.tokenCount(col("text")).cast("long")).as("n_tokens"))
-    }),
-
-    "td_pipeline_full" -> ((s, dir) => {
-      // the whole curation pipeline, every stage oracled: quality gate → exact
-      // dedup → LSH near-dup pairs → connected-components keep-min → per-language
-      // token budget → corpus stats. The DuckDB oracle replays all six stages.
-      // scored/exact are EAGERLY checkpointed (round 6): `exact` feeds the
-      // minhash staging, the loser anti-join AND the budget branch, and each
-      // branch re-ran the quality + langId interpreted-HOF chain over the
-      // corpus (~4 recomputes measured). Same staged-materialization contract
-      // as minhashDupPairs; blocks are ContextCleaner-collected when the
-      // result frame is dropped.
-      val scored = t(s, dir, "documents")
-        .withColumn("q", TextOps.qualityScoreMilli(col("text")))
-        .withColumn("pred_lang", TextOps.langId(col("text")))
-        .filter(col("q") >= 30000)
-        .localCheckpoint(true)
-      val exact = Dedup.exactDedup(scored, "doc_id", "text").localCheckpoint(true)
-      val pairs = Dedup.minhashDupPairs(exact, "doc_id", "text",
-        k = 3, numHashes = 64, bands = 16, threshold = 0.9)
-      val losers = Dedup.connectedComponents(pairs)
-        .filter(col("id") =!= col("component")).select(col("id").as("doc_id"))
-      val kept = exact.join(losers, Seq("doc_id"), "left_anti")
-        .withColumn("n_tokens", TextOps.tokenCount(col("text")).cast("long"))
-      graft.sample.Sampling.tokenBudgetSample(kept, "doc_id", "pred_lang",
-          "n_tokens", budget = 20000L)
-        .groupBy("pred_lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-    }),
-
-    "td_stratified_sample" -> ((s, dir) =>
-      // deterministic hash-stratified sampling (curation primitive): kept set is a
-      // pure function of content hash + per-stratum fraction, reproducible across
-      // engines/layouts — the oracle replays the same md5 arithmetic
-      graft.sample.Sampling.stratifiedSample(t(s, dir, "documents"), "doc_id",
-        "lang", Map("en" -> 0.5, "es" -> 0.25, "de" -> 0.1))
-        .select("doc_id", "lang")),
-    "td_budget_sample" -> ((s, dir) =>
-      // per-language token budget: hash-ordered running total <= budget
-      graft.sample.Sampling.tokenBudgetSample(
-        t(s, dir, "documents").withColumn("n_tokens",
-          TextOps.tokenCount(col("text")).cast("long")),
-        "doc_id", "lang", "n_tokens", budget = 5000L)
-        .select("doc_id")),
-    "td_decontam" -> ((s, dir) => {
-      // benchmark decontamination: docs with doc_id%37==0 act as the eval set;
-      // the training side is everything else PLUS a deterministic "leak" of each
-      // benchmark doc (3-word prefix prepended) that must be flagged. Benchmark
-      // shingles are broadcast — the training corpus never shuffles its text.
-      val d = t(s, dir, "documents")
-      val bench = d.filter(col("doc_id") % 37 === 0).select("doc_id", "text")
-      val leaked = bench.select((col("doc_id") + 200000).as("doc_id"),
-        concat(lit("leaked copy of "), col("text")).as("text"))
-      val train = d.filter(col("doc_id") % 37 =!= 0).select("doc_id", "text")
-        .unionByName(leaked)
-      graft.text.Decontam.ngramOverlap(train, bench, "doc_id", "text",
-        n = 5, minOverlap = 3)
-    }),
-
-    // ---------- similarity search --------------------------------------------
-    "ann_brute_topk" -> ((s, dir) => {
-      // embeddings cast to double BEFORE scoring: the DuckDB oracle computes in
-      // float64, and a float32 multiply disagrees in ulps right at round()'s
-      // half-way points — double-in, double-out is bit-reproducible on both sides
-      val e = t(s, dir, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      val q = e.filter(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Double](0)
-      Ann.bruteForceTopK(e, "vec_id", "embedding", q, 10)
-        .select(col("id"), round(col("score"), 4).as("score4"))
-    }),
-    "ann_lsh_topk" -> ((s, dir) => {
-      // exactness setting (round 3): probeHamming = planes accepts every bucket,
-      // so the LSH path must reproduce the brute-force float64 oracle EXACTLY —
-      // this oracles the bucketing+probe machinery itself. The pruned path
-      // (probeHamming=3, float32) keeps its recall bars in OpsSpec.
-      val e = t(s, dir, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      val q = e.filter(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Double](0)
-      Ann.lshTopK(e, "vec_id", "embedding", 64, q, 10, planes = 10, probeHamming = 10)
-        .select(col("id"), round(col("score"), 4).as("score4"))
-    }),
-    "ann_ivf_topk" -> ((s, dir) => {
-      // exactness setting: nProbe = #centroids probes every bucket, so the IVF
-      // path (fit → bucket assign → probe → float64 score) must equal brute force
-      val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0).select("embedding")
-        .collect()(0).getSeq[Float](0)
-      val idx = Ann.ivfFit(e, "vec_id", "embedding", k = 8, iters = 2)
-      Ann.ivfTopK(idx, q, k = 10, nProbe = 8)
-        .select(col("id"), round(col("score"), 4).as("score4"))
-    }),
-    "ann_topk_join" -> ((s, dir) => {
-      // exactness setting: probeHamming = planes joins every bucket pair, so the
-      // bucketed top-k join must equal the exact per-row top-k (float64 both sides)
-      val e = t(s, dir, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      Ann.topKJoin(e.filter(col("vec_id") < 20), e, "vec_id", "vec_id",
-        "embedding", 64, k = 5, planes = 8, probeHamming = 8)
-        .select(col("id_l"), col("id_r"), col("rank").cast("long").as("rank"))
-    }),
-
-    // ---------- multimodal plumbing ------------------------------------------
-    "mm_features" -> ((s, dir) => {
-      // binary media column synthesized from the documents table (html-wrapped
-      // UTF-8 bytes) so the decode plumbing — batched mapPartitions over a true
-      // BinaryType column — has a DuckDB oracle; the metadata features (byte_len,
-      // content_hash, fake dims) are pure functions of the bytes
-      val media = t(s, dir, "documents").select(
-        col("doc_id").cast("string").as("url"),
-        encode(concat(lit("<html><body>"), col("text"), lit("</body></html>")), "UTF-8")
-          .as("html"))
-      Multimodal.featureTable(s, media)
-        .select("url", "kind", "byte_len", "content_hash", "width", "height")
-    }),
-
-    "mm_frames" -> ((s, dir) => {
-      // frame-sampling plan (video-like payloads): deterministic stride offsets
-      // as a pure column expression over the synthesized binary column
-      val media = t(s, dir, "documents").select(
-        col("doc_id"),
-        encode(concat(lit("<html><body>"), col("text"), lit("</body></html>")), "UTF-8")
-          .as("html"))
-      media.select(col("doc_id"),
-        concat_ws(",", transform(
-          Multimodal.frameSampleOffsets("html", stride = 1000, maxFrames = 4),
-          x => x.cast("string"))).as("offsets"))
-    }),
-
-    // ---------- events (agg / window / json / sessionize) ---------------------
-    "e_type_agg" -> ((s, dir) =>
-      t(s, dir, "events").groupBy("event_type").agg(
-        count(lit(1)).as("cnt"),
-        sum(round(col("value") * 100).cast("long")).as("sum_cents"))),
-    "e_hourly" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH").as("hour"))
-        .agg(count(lit(1)).as("cnt"))),
-    "e_json_extract" -> ((s, dir) =>
-      t(s, dir, "events").groupBy("event_type").agg(
-        sum(regexp_extract(col("props"), "\"k\":\\s*(\\d+)", 1).cast("long"))
-          .as("sum_k"))),
-    "e_sessionize" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      t(s, dir, "events")
-        .withColumn("prev_ts", lag("ts", 1).over(w))
-        .withColumn("new_sess",
-          when(col("prev_ts").isNull ||
-            unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > 1800, 1L)
-            .otherwise(0L))
-        .groupBy("user_id").agg(sum("new_sess").as("n_sessions"),
-          count(lit(1)).as("n_events"))
-    }),
-    "e_pivot" -> ((s, dir) =>
-      // relational pivot with an EXPLICIT value list — no values-discovery job,
-      // so the plan is a single hash aggregate over (hour) with map-side combine
-      t(s, dir, "events")
-        .withColumn("hour", date_trunc("hour", col("ts")))
-        .groupBy("hour")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0L, Seq("click", "error", "purchase", "signup", "view"))),
-    "j_asof" -> ((s, dir) => {
-      // as-of enrichment: each click joined to the user's most recent purchase
-      // at or before it (one keyed shuffle — graft.ops.AsofJoin's union+window
-      // re-expression; oracle = DuckDB's native ASOF LEFT JOIN)
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts")
-        .agg(max(col("event_id")).as("p_event_id"),
-          round(max_by(col("value"), col("event_id")) * 100).cast("long").as("p_cents"))
-      graft.ops.AsofJoin.asof(clicks, purchases, "user_id", "ts",
-        Seq("p_event_id", "p_cents"))
-    }),
-    "e_session_windows" -> ((s, dir) =>
-      // native session_window sessionization (same expression streams watermarked
-      // via graft.streaming.Sessionize.sessionStream; parity in StreamingSpec)
-      graft.streaming.Sessionize.sessions(t(s, dir, "events"))),
-    "e_topk_users" -> ((s, dir) =>
-      t(s, dir, "events").filter(col("event_type") === "purchase")
-        .groupBy("user_id")
-        .agg(sum(round(col("value") * 100).cast("long")).as("purchase_cents"))
-        .orderBy(desc("purchase_cents"), col("user_id")).limit(10)),
-
-    // ---------- TPC-H-ish (join / agg / window / set / semi / anti) -----------
-    "q1_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem").filter(col("l_shipdate") <= lit("1998-09-01"))
-        .groupBy("l_returnflag", "l_linestatus").agg(
-          sum(col("l_quantity").cast("long")).as("sum_qty"),
-          sum(round(col("l_extendedprice") * 100).cast("long")).as("sum_base_cents"),
-          count(lit(1)).as("cnt"))),
-    "q3_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      val l = t(s, dir, "lineitem")
-      c.join(o, c("c_custkey") === o("o_custkey"))
-        .join(l, o("o_orderkey") === l("l_orderkey"))
-        .groupBy("c_mktsegment")
-        .agg(sum(round(col("l_extendedprice") * (lit(1) - col("l_discount")) * 10000)
-          .cast("long")).as("rev_e4"), count(lit(1)).as("n"))
-    }),
-    "j_semi" -> ((s, dir) => {
-      val o = t(s, dir, "orders"); val l = t(s, dir, "lineitem")
-      o.join(l.select(col("l_orderkey").as("o_orderkey")).distinct(),
-          Seq("o_orderkey"), "left_semi")
-        .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
-    }),
-    "j_anti" -> ((s, dir) => {
-      val c = t(s, dir, "customer"); val o = t(s, dir, "orders")
-      c.join(o.select(col("o_custkey").as("c_custkey")).distinct(),
-          Seq("c_custkey"), "left_anti")
-        .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
-    }),
-    "w_window_topk" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy(desc("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select(col("l_suppkey"), col("l_orderkey"),
-          col("l_linenumber").cast("long").as("l_linenumber"), col("rn").cast("long").as("rn"))
-    }),
-    "set_except" -> ((s, dir) => {
-      val l = t(s, dir, "lineitem").select("l_partkey").distinct()
-      val p = t(s, dir, "part").filter(col("p_size") > 40)
-        .select(col("p_partkey").as("l_partkey")).distinct()
-      l.except(p)
-    }),
-    "agg_distinct" -> ((s, dir) =>
-      t(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(count_distinct(col("l_orderkey")).as("n_orders"),
-          count_distinct(col("l_partkey")).as("n_parts"))),
-    "agg_rollup" -> ((s, dir) =>
-      t(s, dir, "lineitem").rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("long")).as("sum_qty")))
-  )
-
-  // ---- oracles ---------------------------------------------------------------
-
-  // one spelling per fragment: the t_quality and t_langid oracles are built from
-  // these, and the composite pipeline oracles reuse them
-  private val qualityExpr =
-    "GREATEST(0, LEAST(100000, " +
-      "CASE WHEN length(text) BETWEEN 200 AND 20000 THEN 40000 " +
-      "WHEN length(text) >= 50 THEN 20000 ELSE 0 END " +
-      "+ CAST(floor((length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g'))) * 60000 / GREATEST(length(text), 1)) AS BIGINT) " +
-      "- CAST(floor(((length(text) - length(regexp_replace(text, '[!-/:-@[-`{-~]', '', 'g'))) " +
-      "+ (length(text) - length(regexp_replace(text, '[0-9]', '', 'g')))) * 30000 / GREATEST(length(text), 1)) AS BIGINT)))"
-
-  private val langIdSubquery =
-    "SELECT doc_id, CASE WHEN best = 0 THEN 'und' WHEN s1 = best THEN 'en' " +
-      "WHEN s2 = best THEN 'es' WHEN s3 = best THEN 'de' WHEN s4 = best THEN 'fr' " +
-      "ELSE 'zh' END AS pred_lang FROM (SELECT doc_id, s1, s2, s3, s4, s5, " +
-      "GREATEST(s1, s2, s3, s4, s5) AS best FROM (SELECT doc_id, " +
-      "len(list_filter(toks, x -> list_contains(['the','and','of','is','that','with','for'], x))) AS s1, " +
-      "len(list_filter(toks, x -> list_contains(['el','la','de','que','los','una','por'], x))) AS s2, " +
-      "len(list_filter(toks, x -> list_contains(['der','die','und','das','nicht','ein','mit'], x))) AS s3, " +
-      "len(list_filter(toks, x -> list_contains(['le','les','des','est','une','dans','pour'], x))) AS s4, " +
-      "len(list_filter(toks, x -> list_contains(['的','是','不','了','在','人','有'], x))) AS s5 " +
-      "FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents)))"
-
-  private val annBruteOracle =
-    "WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0) " +
-      "SELECT vec_id AS id, round(score, 4) AS score4 FROM (" +
-      "SELECT e.vec_id, list_dot_product(e.embedding::DOUBLE[], q.qv) / " +
-      "GREATEST(sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) * " +
-      "sqrt(list_dot_product(q.qv, q.qv)), 1e-12) AS score FROM embeddings e, q) " +
-      "ORDER BY score DESC, vec_id LIMIT 10"
-
-  // ---- pinned literal oracles (round 4, VERDICT #1) --------------------------
-  // The mining core's inputs are SEED-FIXED (WebPagesGen.Seed + the driver
-  // gate's page count), so its catalogs are CONSTANTS — pinned here as VALUES
-  // oracles, converting the engine's flagship Drain/Spell mine from sbt-only
-  // evidence into driver-graded CORRECTNESS rows. log_templates_agg (n=2000)
-  // and log_spell_templates (n=300) are sf-independent; log_templates,
-  // log_matched_by and log_routed_rows are pinned for the sf0.01 corpus the
-  // driver's correctness gate runs (pagesForSfDir = 20000 pages ≈ 230k lines).
-  // Regenerate after an INTENDED mining-semantics change with the checked-in
-  // tool (round-5, ADVICE r4 #3): run graft.Verify on /root/testdata/sf0.01,
-  // then `python3 tools/regen_pinned_oracles.py <verify_out_dir>` emits each
-  // pinned VALUES block ready to paste here; justify the catalog diff in the
-  // commit message (same contract as GoldenSpec).
-
-  private val logTemplatesOracle =
-    "SELECT * FROM (VALUES ('0567184d', 'Receiving empty packet for block <*>', CAST(2629 AS BIGINT)), " +
-      "('09a53393', 'Receiving block <*> src: <*> dest: <*>', CAST(30589 AS BIGINT)), " +
-      "('2d83edf2', 'Session <*> <*> for user <*>', CAST(5181 AS BIGINT)), " +
-      "('2e68ccc3', 'Unexpected error trying to delete block <*>. BlockInfo not found in volumeMap.', CAST(2376 AS BIGINT)), " +
-      "('32777b38', 'Verification succeeded for <*>', CAST(15022 AS BIGINT)), " +
-      "('3d91fa85', 'BLOCK* NameSystem.allocateBlock: <*> <*>', CAST(20293 AS BIGINT)), " +
-      "('5d5de21c', 'BLOCK* NameSystem.addStoredBlock: blockMap updated: <*> is added to <*> size <*>', CAST(23129 AS BIGINT)), " +
-      "('676b041f', 'Transmitted block <*> to <*>', CAST(5285 AS BIGINT)), " +
-      "('69bca6e5', 'Exception in receiveBlock for block <*> java.io.IOException: Connection reset by peer', CAST(2580 AS BIGINT)), " +
-      "('6e765aef', 'Namesystem checkpoint completed in <*> seconds', CAST(2514 AS BIGINT)), " +
-      "('8983d3bc', 'Cache hit ratio <*> percent over <*> requests', CAST(2493 AS BIGINT)), " +
-      "('90da654d', 'Slow BlockReceiver write data to disk cost <*> ms for block <*>', CAST(2562 AS BIGINT)), " +
-      "('aa895ef1', 'Served block <*> to <*>', CAST(12741 AS BIGINT)), " +
-      "('ac41c2de', 'Starting thread to transfer block <*> to <*>', CAST(7558 AS BIGINT)), " +
-      "('aef1f07e', 'Report from <*> heartbeat took <*> ms', CAST(2598 AS BIGINT)), " +
-      "('b15ffff8', 'Changing block file offset of block <*> from <*> to <*> meta file offset to <*>', CAST(2579 AS BIGINT)), " +
-      "('bcc910df', 'writeBlock <*> received exception java.io.IOException: Could not read from stream', CAST(2541 AS BIGINT)), " +
-      "('dba996ef', 'Deleting block <*> file <*>', CAST(18093 AS BIGINT)), " +
-      "('dc2c74b7', 'PacketResponder <*> for block <*> terminating', CAST(25357 AS BIGINT)), " +
-      "('e3df2680', 'Received block <*> of size <*> from <*>', CAST(28259 AS BIGINT)), " +
-      "('f753fb05', 'Got exception while serving <*> to <*>', CAST(10136 AS BIGINT)), " +
-      "('f86f95ce', 'Failed to transfer <*> to <*> got java.io.IOException: Connection reset', CAST(2595 AS BIGINT)), " +
-      "('fcd37a6d', 'Adding an already existing block <*>', CAST(2563 AS BIGINT))) " +
-      "AS t(event_id, event_template, occurrences)"
-
-  private val logTemplatesAggOracle =
-    "SELECT * FROM (VALUES ('0567184d', 'Receiving empty packet for block <*>', CAST(265 AS BIGINT)), " +
-      "('09a53393', 'Receiving block <*> src: <*> dest: <*>', CAST(2987 AS BIGINT)), " +
-      "('2d83edf2', 'Session <*> <*> for user <*>', CAST(521 AS BIGINT)), " +
-      "('2e68ccc3', 'Unexpected error trying to delete block <*>. BlockInfo not found in volumeMap.', CAST(235 AS BIGINT)), " +
-      "('32777b38', 'Verification succeeded for <*>', CAST(1470 AS BIGINT)), " +
-      "('3d91fa85', 'BLOCK* NameSystem.allocateBlock: <*> <*>', CAST(1998 AS BIGINT)), " +
-      "('5d5de21c', 'BLOCK* NameSystem.addStoredBlock: blockMap updated: <*> is added to <*> size <*>', CAST(2272 AS BIGINT)), " +
-      "('676b041f', 'Transmitted block <*> to <*>', CAST(481 AS BIGINT)), " +
-      "('69bca6e5', 'Exception in receiveBlock for block <*> java.io.IOException: Connection reset by peer', CAST(270 AS BIGINT)), " +
-      "('6e765aef', 'Namesystem checkpoint completed in <*> seconds', CAST(267 AS BIGINT)), " +
-      "('8983d3bc', 'Cache hit ratio <*> percent over <*> requests', CAST(264 AS BIGINT)), " +
-      "('90da654d', 'Slow BlockReceiver write data to disk cost <*> ms for block <*>', CAST(247 AS BIGINT)), " +
-      "('aa895ef1', 'Served block <*> to <*>', CAST(1266 AS BIGINT)), " +
-      "('ac41c2de', 'Starting thread to transfer block <*> to <*>', CAST(759 AS BIGINT)), " +
-      "('aef1f07e', 'Report from <*> heartbeat took <*> ms', CAST(243 AS BIGINT)), " +
-      "('b15ffff8', 'Changing block file offset of block <*> from <*> to <*> meta file offset to <*>', CAST(287 AS BIGINT)), " +
-      "('bcc910df', 'writeBlock <*> received exception java.io.IOException: Could not read from stream', CAST(234 AS BIGINT)), " +
-      "('dba996ef', 'Deleting block <*> file <*>', CAST(1735 AS BIGINT)), " +
-      "('dc2c74b7', 'PacketResponder <*> for block <*> terminating', CAST(2566 AS BIGINT)), " +
-      "('e3df2680', 'Received block <*> of size <*> from <*>', CAST(2824 AS BIGINT)), " +
-      "('f753fb05', 'Got exception while serving <*> to <*>', CAST(1061 AS BIGINT)), " +
-      "('f86f95ce', 'Failed to transfer <*> to <*> got java.io.IOException: Connection reset', CAST(276 AS BIGINT)), " +
-      "('fcd37a6d', 'Adding an already existing block <*>', CAST(255 AS BIGINT))) " +
-      "AS t(event_id, event_template, occurrences)"
-
-  private val logSpellTemplatesOracle =
-    "SELECT * FROM (VALUES ('168ee1d1', '<*> block <*> <*> <*> <*> <*> <*> <*> to <*>', CAST(451 AS BIGINT)), " +
-      "('51b41a52', '<*> <*> for <*> <*> <*>', CAST(821 AS BIGINT)), " +
-      "('5b992f13', 'writeBlock <*> received exception java.io.IOException Could not read from stream', CAST(37 AS BIGINT)), " +
-      "('5d8c5df5', 'BLOCK* NameSystem.allocateBlock <*> <*>', CAST(296 AS BIGINT)), " +
-      "('6726e475', 'Failed to transfer <*> to <*> got java.io.IOException Connection reset', CAST(35 AS BIGINT)), " +
-      "('6e765aef', 'Namesystem checkpoint completed in <*> seconds', CAST(39 AS BIGINT)), " +
-      "('8983d3bc', 'Cache hit ratio <*> percent over <*> requests', CAST(39 AS BIGINT)), " +
-      "('8fadbdec', 'BLOCK* NameSystem.addStoredBlock blockMap updated <*> is added to <*> size <*>', CAST(379 AS BIGINT)), " +
-      "('aef1f07e', 'Report from <*> heartbeat took <*> ms', CAST(31 AS BIGINT)), " +
-      "('b0d5b921', 'Receiving block <*> src <*> dest <*>', CAST(455 AS BIGINT)), " +
-      "('dba996ef', 'Deleting block <*> file <*>', CAST(276 AS BIGINT)), " +
-      "('e3df2680', 'Received block <*> of size <*> from <*>', CAST(418 AS BIGINT)), " +
-      "('f753fb05', 'Got exception while serving <*> to <*>', CAST(153 AS BIGINT)), " +
-      "('fcd37a6d', 'Adding an already existing block <*>', CAST(36 AS BIGINT))) " +
-      "AS t(event_id, event_template, occurrences)"
-
-  private val logRoutedRowsOracle =
-    "SELECT * FROM (VALUES ('0567184d', CAST(2629 AS BIGINT), CAST(-8659580359842762119 AS BIGINT)), " +
-      "('09a53393', CAST(30589 AS BIGINT), CAST(-2367568357696703207 AS BIGINT)), " +
-      "('2d83edf2', CAST(5181 AS BIGINT), CAST(-8615477565423155850 AS BIGINT)), " +
-      "('2e68ccc3', CAST(2376 AS BIGINT), CAST(-8875953875391109425 AS BIGINT)), " +
-      "('32777b38', CAST(15022 AS BIGINT), CAST(-3480489528699943523 AS BIGINT)), " +
-      "('3d91fa85', CAST(20293 AS BIGINT), CAST(-6093152224575646952 AS BIGINT)), " +
-      "('5d5de21c', CAST(23129 AS BIGINT), CAST(-5929677563696198528 AS BIGINT)), " +
-      "('676b041f', CAST(5285 AS BIGINT), CAST(2702918824721871563 AS BIGINT)), " +
-      "('69bca6e5', CAST(2580 AS BIGINT), CAST(8879017440207475120 AS BIGINT)), " +
-      "('6e765aef', CAST(2514 AS BIGINT), CAST(-399313104773465711 AS BIGINT)), " +
-      "('8983d3bc', CAST(2493 AS BIGINT), CAST(-1772129313237820150 AS BIGINT)), " +
-      "('90da654d', CAST(2562 AS BIGINT), CAST(3224465776449637456 AS BIGINT)), " +
-      "('aa895ef1', CAST(12741 AS BIGINT), CAST(5219979011039042663 AS BIGINT)), " +
-      "('ac41c2de', CAST(7558 AS BIGINT), CAST(-29792433624014881 AS BIGINT)), " +
-      "('aef1f07e', CAST(2598 AS BIGINT), CAST(3982819088871238736 AS BIGINT)), " +
-      "('b15ffff8', CAST(2579 AS BIGINT), CAST(-8485553622588745872 AS BIGINT)), " +
-      "('bcc910df', CAST(2541 AS BIGINT), CAST(5385917796866049425 AS BIGINT)), " +
-      "('dba996ef', CAST(18093 AS BIGINT), CAST(7973495011590777258 AS BIGINT)), " +
-      "('dc2c74b7', CAST(25357 AS BIGINT), CAST(1842016103665369585 AS BIGINT)), " +
-      "('e3df2680', CAST(28259 AS BIGINT), CAST(5591962934449598999 AS BIGINT)), " +
-      "('f753fb05', CAST(10136 AS BIGINT), CAST(-533908730131797247 AS BIGINT)), " +
-      "('f86f95ce', CAST(2595 AS BIGINT), CAST(5587188860079508447 AS BIGINT)), " +
-      "('fcd37a6d', CAST(2563 AS BIGINT), CAST(1491580627426978565 AS BIGINT))) " +
-      "AS t(event_id, n_rows, row_set_hash)"
-
-  def oracleSql: Map[String, String] = Map(
-    "log_templates" -> logTemplatesOracle,
-    // Streaming match == batch match over the same frozen catalog and corpus,
-    // so the streaming surface reuses the batch catalog pin VERBATIM — the
-    // equality itself is the thing being graded (VERDICT r4 #3).
-    "log_stream_templates" -> logTemplatesOracle,
-    "log_templates_agg" -> logTemplatesAggOracle,
-    "log_spell_templates" -> logSpellTemplatesOracle,
-    "log_routed_rows" -> logRoutedRowsOracle,
-    "log_matched_by" ->
-      // every sf0.01 line matches via the Drain tree (Spell/self paths carry
-      // zero lines on this well-formed corpus — SampledMineSpec exercises them)
-      "SELECT * FROM (VALUES ('drain', CAST(229673 AS BIGINT))) AS t(matched_by, \"rows\")",
-    "log_eval_scores" ->
-      // pinned for the sf0.01 gate: the evaluator's scores over the seed-fixed
-      // assignment are IEEE constants (17-sig-digit literals round-trip the
-      // exact float64 bits); a1/a4/a5 oracle the score MATH relationally —
-      // this row pins the end-to-end pipeline quality itself, so any silent
-      // mining/matching drift now fails the driver gate, not just GoldenSpec
-      // STRING-cast doubles: a bare decimal literal goes through DECIMAL and
-      // shifts the last ulp; string→DOUBLE parsing is correctly rounded
-      ("SELECT * FROM (VALUES (CAST('0.9968969523403495' AS DOUBLE), CAST(1.0 AS DOUBLE), " +
-        "CAST('0.9984460652033077' AS DOUBLE), CAST('0.9774418412264393' AS DOUBLE), " +
-        "CAST(229673 AS BIGINT))) AS t(\"precision\", \"recall\", \"f1\", \"parsing_accuracy\", \"total\")"),
-    "log_pa_by_style" ->
-      // pinned (sf-independent: the sweep mines a fixed 150 pages per style);
-      // the query ALSO self-asserts per-style floors, so this oracle upgrades
-      // an already-failing-below-floor check into exact-PA driver evidence
-      ("SELECT * FROM (VALUES ('android', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('apache', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('bgl', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('hadoop', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('hdfs', CAST('0.9740634005763689' AS DOUBLE), CAST(0.95 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('healthapp', CAST(1.0 AS DOUBLE), CAST(0.7 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('hpc', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('linux', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('mac', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('openssh', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('openstack', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('proxifier', CAST(1.0 AS DOUBLE), CAST(0.5 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('spark', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('thunderbird', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('windows', CAST('0.8570605187319885' AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT)), " +
-        "('zookeeper', CAST(1.0 AS DOUBLE), CAST(0.8 AS DOUBLE), CAST(1735 AS BIGINT))) " +
-        "AS t(\"style\", \"parsing_accuracy\", \"floor\", \"n_lines\")"),
-    "log_resume_metrics" ->
-      // pinned (sf-independent: the resumable run covers a fixed 100 pages in
-      // 3 chunks); per-chunk routed-row counts + the zero unparsed rows are
-      // deterministic generator facts
-      ("SELECT * FROM (VALUES ('drain', CAST(396 AS BIGINT), CAST(0 AS INTEGER)), " +
-        "('unparsed', CAST(0 AS BIGINT), CAST(0 AS INTEGER)), " +
-        "('drain', CAST(350 AS BIGINT), CAST(1 AS INTEGER)), " +
-        "('unparsed', CAST(0 AS BIGINT), CAST(1 AS INTEGER)), " +
-        "('drain', CAST(429 AS BIGINT), CAST(2 AS INTEGER)), " +
-        "('unparsed', CAST(0 AS BIGINT), CAST(2 AS INTEGER))) " +
-        "AS t(\"matched_by\", \"rows\", \"chunk\")"),
-    "molfi_templates" ->
-      // expectations derived from the synthesis rule: the by-type partition is
-      // the Pareto knee (spec 1/2 × freq 1/5 beats one-cluster's 0 and
-      // singletons' 1/30), so the catalog is five "type <*>" templates with the
-      // type's event count — independent of the NSGA-II machinery (MolfiSpec
-      // pins the search itself on five corpora)
-      ("SELECT substr(md5(event_type || ' <*>'), 1, 8) AS event_id, " +
-        "event_type || ' <*>' AS event_template, count(*) AS occurrences " +
-        "FROM events GROUP BY event_type"),
-    "td_pipeline" ->
-      (s"WITH scored AS (SELECT d.doc_id, d.text, $qualityExpr AS q, l.pred_lang " +
-        s"FROM documents d JOIN ($langIdSubquery) l ON d.doc_id = l.doc_id), " +
-        "filtered AS (SELECT * FROM scored WHERE q >= 30000), " +
-        "kept AS (SELECT * FROM filtered WHERE doc_id IN " +
-        "(SELECT min(doc_id) FROM filtered GROUP BY md5(text))) " +
-        "SELECT pred_lang, count(*) AS n_docs, " +
-        "CAST(SUM(CASE WHEN trim(text) = '' THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END) AS BIGINT) AS n_tokens " +
-        "FROM kept GROUP BY pred_lang"),
-    "s2_structure" ->
-      ("SELECT doc_id, regexp_extract(line, p, 1) AS Tag, regexp_extract(line, p, 2) AS Lang, " +
-        "regexp_extract(line, p, 3) AS Src, regexp_extract(line, p, 4) AS Rest FROM (" +
-        "SELECT doc_id, 'REQ ' || lang || ' ' || source || ': ' || substr(text, 1, 40) AS line, " +
-        "'^(.*?)\\s+(.*?)\\s+(.*?):\\s+(.*?)$' AS p FROM documents)"),
-    "f5_eventid_md5" ->
-      "SELECT doc_id, substr(md5(text), 1, 8) AS event_id FROM documents",
-    "log_params" ->
-      // expected params derived from the synthesis rule, independent of the
-      // extractor's regex machinery: case 1 = the three spliced values; case 2 =
-      // the `<.{1,5}>` quirk turning literal '<init>' into a captured slot
-      ("SELECT doc_id, CAST(1 AS BIGINT) AS case_id, " +
-        "source || '|' || CAST(doc_id AS VARCHAR) || '|' || lang AS params FROM documents " +
-        "UNION ALL SELECT doc_id, CAST(2 AS BIGINT), " +
-        "'<init>|' || CAST(doc_id % 100 AS VARCHAR) FROM documents"),
-    "log_enrich_region" ->
-      ("SELECT 'r' || CAST(length(source) % 3 AS VARCHAR) AS region, " +
-        "'t' || CAST(length(source) % 2 AS VARCHAR) AS tier, count(*) AS n_rows " +
-        "FROM documents GROUP BY 1, 2"),
-    "a1_group_counts" ->
-      "SELECT lang, source, count(*) AS occurrences FROM documents GROUP BY lang, source",
-    "a4_contingency" ->
-      "SELECT source AS event_id, lang AS gt_id, count(*) AS n FROM documents GROUP BY 1, 2",
-    "a5_eval_scores" ->
-      // pair-counting metrics replayed: TP = Σ C(n,2) over contingency cells,
-      // parsed/real pairs over group sizes, PA = lines in 1:1 groups / total.
-      // Every division is IEEE double over exact integers — bit-reproducible.
-      ("WITH j AS (SELECT source AS event_id, lang AS gt_id FROM documents), " +
-        "cont AS (SELECT event_id, gt_id, count(*) AS n FROM j GROUP BY 1, 2), " +
-        "tp AS (SELECT CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS pairs, CAST(SUM(n) AS BIGINT) AS total FROM cont), " +
-        "gt AS (SELECT gt_id, CAST(SUM(n) AS BIGINT) AS gsize FROM cont GROUP BY 1), " +
-        "rp AS (SELECT CAST(SUM(gsize * (gsize - 1) // 2) AS BIGINT) AS real_pairs FROM gt), " +
-        "pa AS (SELECT event_id, count(DISTINCT gt_id) AS span, CAST(SUM(n) AS BIGINT) AS psize, max(gt_id) AS gt1 FROM cont GROUP BY 1), " +
-        "pp AS (SELECT CAST(SUM(psize * (psize - 1) // 2) AS BIGINT) AS parsed_pairs FROM pa), " +
-        "acc AS (SELECT CAST(coalesce(SUM(psize), 0) AS BIGINT) AS accurate FROM pa JOIN gt ON pa.gt1 = gt.gt_id " +
-        "WHERE pa.span = 1 AND pa.psize = gt.gsize), " +
-        "m AS (SELECT CAST(tp.pairs AS DOUBLE) / pp.parsed_pairs AS p, " +
-        "CAST(tp.pairs AS DOUBLE) / rp.real_pairs AS r, " +
-        "CAST(acc.accurate AS DOUBLE) / tp.total AS pa_v, tp.total AS total " +
-        "FROM tp, rp, pp, acc) " +
-        "SELECT round(p, 6) AS precision6, round(r, 6) AS recall6, " +
-        "round(2 * p * r / (p + r), 6) AS f16, round(pa_v, 6) AS pa6, total FROM m"),
-    "j1_line_join" ->
-      ("SELECT lang, source, count(*) AS n FROM " +
-        "(SELECT a.doc_id, a.lang, b.source FROM documents a JOIN documents b ON a.doc_id = b.doc_id) " +
-        "GROUP BY lang, source"),
-    "t_token_count" ->
-      ("SELECT doc_id, CASE WHEN trim(text) = '' THEN 0 ELSE " +
-        "len(string_split_regex(trim(text), '\\s+')) END::BIGINT AS n_tokens FROM documents"),
-    "t_quality" ->
-      s"SELECT doc_id, $qualityExpr::BIGINT AS quality_milli FROM documents",
-    "t_stopword_ratio" ->
-      ("SELECT doc_id, CASE WHEN trim(text) = '' THEN 0 ELSE " +
-        "CAST(floor(len(list_filter(string_split_regex(trim(text), '\\s+'), " +
-        "x -> list_contains(['the','of','and','a','to','in','is','it','that','for','on','with'], x))) " +
-        "* 1000 / GREATEST(len(string_split_regex(trim(text), '\\s+')), 1)) AS BIGINT) END::BIGINT " +
-        "AS stopword_milli FROM documents"),
-    "t_fingerprint" ->
-      "SELECT doc_id, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fp FROM documents",
-    "t_langid" -> langIdSubquery,
-    "t_subword_count" ->
-      // lookaround-free equivalent of the Spark split: insert spaces at punct and
-      // camelCase boundaries, then split on whitespace (RE2 has no lookbehind) —
-      // validated piece-equal against the Java-regex split on the real tables
-      ("SELECT doc_id, CAST(len(list_filter(string_split_regex(s2, '\\s+'), x -> x != '')) AS BIGINT) AS n_subwords " +
-        "FROM (SELECT doc_id, regexp_replace(regexp_replace(text, '([^A-Za-z0-9\\s])', ' \\1 ', 'g'), " +
-        "'([a-z])([A-Z])', '\\1 \\2', 'g') AS s2 FROM documents)"),
-    "t_pii_mask" ->
-      // same synthesis + the same 4-pattern RE2-safe mask chain, email→IP→SSN→phone
-      ("WITH synth AS (SELECT doc_id, text || ' contact user' || doc_id::VARCHAR || " +
-        "'@example.com from 10.' || (doc_id % 200)::VARCHAR || '.0.7 ssn 123-45-' || " +
-        "lpad((doc_id % 10000)::VARCHAR, 4, '0') || ' call 555-123-4567' AS s FROM documents), " +
-        "m AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(regexp_replace(s, " +
-        "'[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'), " +
-        "'\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '<IP>', 'g'), " +
-        "'\\b\\d{3}-\\d{2}-\\d{4}\\b', '<SSN>', 'g'), " +
-        "'\\b\\d{3}-\\d{3}-\\d{4}\\b', '<PHONE>', 'g') AS masked FROM synth) " +
-        "SELECT doc_id, masked, (len(string_split_regex(masked, '<(EMAIL|IP|SSN|PHONE)>')) - 1)::BIGINT " +
-        "AS n_pii FROM m"),
-    "t_quality_gate" ->
-      ("WITH m AS (SELECT doc_id, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE len(ts) END AS n_tok, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE CAST(floor(list_sum(list_transform(ts, t -> length(t))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS mean_word_milli, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE CAST(floor(len(list_filter(ts, t -> regexp_matches(t, '[A-Za-z]'))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS alpha_word_milli, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE CAST(floor((len(ts) - len(list_distinct(ts))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS dup_milli, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE CAST(floor(len(list_filter(ts, x -> list_contains(['the','of','and','a','to','in','is','it','that','for','on','with'], x))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS sw " +
-        "FROM (SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS ts FROM documents)) " +
-        "SELECT doc_id, mean_word_milli, alpha_word_milli, " +
-        "(n_tok BETWEEN 10 AND 100000 AND mean_word_milli BETWEEN 2000 AND 12000 " +
-        "AND alpha_word_milli >= 800 AND dup_milli <= 500 AND sw >= 1)::BIGINT AS pass FROM m"),
-    "t_url_ops" ->
-      (s"WITH u AS ($synthUrlSql), " +
-        s"h AS (SELECT doc_id, $urlHostSql AS host, " +
-        "regexp_extract(url, '^[a-z][a-z0-9+.-]*://[^/?#]*(/[^?#]*)', 1) AS path FROM u), " +
-        s"d AS (SELECT doc_id, host, path, $registeredDomainSql AS domain FROM h) " +
-        "SELECT doc_id, host, domain, " +
-        "(CASE WHEN path = '' OR path = '/' THEN 0 ELSE len(string_split(path, '/')) - 1 END)::BIGINT AS depth, " +
-        "(domain = 'example.net')::BIGINT AS blocked FROM d"),
-    "td_domain_cap" ->
-      (s"WITH u AS ($synthUrlSql), " +
-        s"h AS (SELECT doc_id, $urlHostSql AS host FROM u), " +
-        s"d AS (SELECT doc_id, $registeredDomainSql AS domain FROM h), " +
-        "r AS (SELECT doc_id, domain, row_number() OVER (PARTITION BY domain ORDER BY doc_id) AS rn FROM d) " +
-        "SELECT doc_id, domain FROM r WHERE rn <= 50"),
-    "t_repetition" ->
-      ("WITH base AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN 0 ELSE " +
-        "CAST(floor((len(ts) - len(list_distinct(ts))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS dup_word_milli, " +
-        "CASE WHEN len(ts) < 2 THEN [array_to_string(ts, ' ')] " +
-        "ELSE list_transform(range(1, len(ts)), i -> array_to_string(ts[i:i+1], ' ')) END AS bigrams " +
-        "FROM (SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS ts FROM documents)), " +
-        "cnt AS (SELECT doc_id, bg, count(*) AS c FROM (SELECT doc_id, unnest(bigrams) AS bg FROM base) GROUP BY doc_id, bg), " +
-        "agg AS (SELECT doc_id, max(c) AS top_c, sum(c) AS n_bg FROM cnt GROUP BY doc_id) " +
-        "SELECT b.doc_id, b.dup_word_milli, CAST(floor(top_c * 1000 / n_bg) AS BIGINT) AS top_bigram_milli " +
-        "FROM base b JOIN agg USING (doc_id)"),
-    "t_rolling_fp" ->
-      // the wrapping-64-bit FNV chain emulated in HUGEINT: mod-2^64 after every
-      // multiply/add, xor applied on the low 16 bits (char codes < 2^16), final
-      // value mapped back to signed BIGINT
-      ("WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM documents), " +
-        "th AS (SELECT doc_id, list_transform(ts, t -> list_reduce(" +
-        "list_prepend(14695981039346656037::HUGEINT, " +
-        "list_transform(list_filter(regexp_split_to_array(t, ''), x -> x != ''), c -> unicode(c)::HUGEINT)), " +
-        "(acc, c) -> ((acc - (acc % 65536) + xor((acc % 65536)::BIGINT, (c % 65536)::BIGINT)::HUGEINT) " +
-        "* 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)) AS hs FROM toks) " +
-        "SELECT doc_id, CAST(CASE WHEN u >= 9223372036854775808::HUGEINT " +
-        "THEN u - 18446744073709551616::HUGEINT ELSE u END AS BIGINT) AS rfp " +
-        "FROM (SELECT doc_id, list_reduce(list_prepend(1469598103934665603::HUGEINT, hs), " +
-        "(acc, t) -> (acc * 1099511628211::HUGEINT + t) % 18446744073709551616::HUGEINT) AS u FROM th)"),
-    "iplom_templates" ->
-      // the full IPLoM mine replayed relationally: length partition → cardinality
-      // table → leftmost-min split (arg_min keyed nd*1e6+pos) → cluster-goodness
-      // gate → bijection-mapping split (B1/B2/MM, round 3) → per-partition
-      // constant/wildcard pieces → merged catalog
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id AS VARCHAR) || ' v' || " +
-        "CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS line FROM events), " +
-        "t2 AS (SELECT string_split_regex(trim(line), '\\s+') AS toks, " +
-        "CAST(len(string_split_regex(trim(line), '\\s+')) AS VARCHAR) AS pkey FROM lines), " +
-        "pe AS (SELECT pkey, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t2), " +
-        "cards AS (SELECT pkey, arg_min(pos1, nd * 1000000 + pos1) AS split_pos1 FROM " +
-        "(SELECT pkey, pos1, count(DISTINCT tok) AS nd FROM pe GROUP BY pkey, pos1) WHERE nd > 1 GROUP BY pkey), " +
-        "r AS (SELECT CASE WHEN c.split_pos1 IS NULL THEN t2.pkey " +
-        "ELSE t2.pkey || ' ' || t2.toks[c.split_pos1] END AS pkey, t2.toks " +
-        "FROM t2 LEFT JOIN cards c ON t2.pkey = c.pkey), " +
-        "cards3 AS (SELECT pkey, pos1, count(DISTINCT tok) AS nd FROM " +
-        "(SELECT pkey, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM r) GROUP BY 1, 2), " +
-        "elig AS (SELECT pkey FROM (SELECT pkey, " +
-        "CAST(sum(CASE WHEN nd = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS gc, " +
-        "sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS nm FROM cards3 GROUP BY pkey) " +
-        "WHERE gc < 0.35 AND nm >= 2), " +
-        "ppx AS (SELECT pkey, max(CASE WHEN rn = 1 THEN pos1 END) AS p1, " +
-        "max(CASE WHEN rn = 2 THEN pos1 END) AS p2 FROM " +
-        "(SELECT pkey, pos1, row_number() OVER (PARTITION BY pkey ORDER BY nd, pos1) AS rn " +
-        "FROM cards3 WHERE nd > 1 AND pkey IN (SELECT pkey FROM elig)) WHERE rn <= 2 GROUP BY pkey), " +
-        "r2x AS (SELECT r.pkey, r.toks, ppx.p1, ppx.p2, r.toks[ppx.p1] AS t1, " +
-        "r.toks[ppx.p2] AS t2 FROM r LEFT JOIN ppx USING (pkey)), " +
-        "m1x AS (SELECT pkey, t1, count(DISTINCT t2) AS m1 FROM r2x WHERE p1 IS NOT NULL GROUP BY 1, 2), " +
-        "m2x AS (SELECT pkey, t2, count(DISTINCT t1) AS m2 FROM r2x WHERE p1 IS NOT NULL GROUP BY 1, 2), " +
-        "r3 AS (SELECT r2x.pkey || CASE WHEN r2x.p1 IS NULL THEN '' " +
-        "WHEN m2x.m2 = 1 THEN ' B1:' || r2x.t1 WHEN m1x.m1 = 1 THEN ' B2:' || r2x.t2 " +
-        "ELSE ' MM' END AS pkey, r2x.toks FROM r2x " +
-        "LEFT JOIN m1x ON r2x.pkey = m1x.pkey AND r2x.t1 = m1x.t1 " +
-        "LEFT JOIN m2x ON r2x.pkey = m2x.pkey AND r2x.t2 = m2x.t2), " +
-        "pe2 AS (SELECT pkey, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM r3), " +
-        "agg AS (SELECT pkey, pos1, min(tok) AS lo, max(tok) AS hi, count(*) AS n FROM pe2 GROUP BY pkey, pos1), " +
-        "tpl AS (SELECT pkey, string_agg(CASE WHEN lo = hi THEN lo ELSE '<*>' END, ' ' ORDER BY pos1) AS event_template, " +
-        "max(CASE WHEN pos1 = 1 THEN n END) AS occurrences FROM agg GROUP BY pkey) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(SUM(occurrences) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"),
-    "ael_templates" ->
-      // AEL's four stages replayed relationally: per-token anonymize (CASE chain —
-      // lookbehind-free by construction), bin+categorize (GROUP BY pieces), and
-      // the leftmost-hole greedy reconcile (hole explode → mergeable signatures →
-      // per-template min hole → merge only where >= 2 templates chose it)
-      ("WITH lines AS (SELECT CASE WHEN event_type = 'click' THEN event_type || ' ping' " +
-        "ELSE event_type || ' user=' || CAST(user_id AS VARCHAR) || ' code ' || " +
-        "CAST(user_id % 7 AS VARCHAR) END AS line FROM events), " +
-        "anon AS (SELECT list_transform(string_split_regex(trim(line), '\\s+'), t -> " +
-        "CASE WHEN regexp_matches(t, '^\\w+=\\S+$') THEN regexp_replace(t, '=.*$', '=<*>') " +
-        "WHEN regexp_matches(t, '[0-9]') THEN '<*>' ELSE t END) AS pieces FROM lines), " +
-        "cat AS (SELECT pieces, len(pieces) AS len, " +
-        "len(list_filter(pieces, p -> p = '<*>' OR ends_with(p, '=<*>'))) AS nwild, " +
-        "count(*) AS occurrences FROM anon GROUP BY pieces), " +
-        "holes AS (SELECT len, nwild, pieces, occurrences, unnest(range(1, len + 1)) AS p FROM cat), " +
-        "holes2 AS (SELECT *, list_transform(pieces, (x, i) -> CASE WHEN i = p THEN '<*>' ELSE x END) AS holed FROM holes), " +
-        "mergeable AS (SELECT len, nwild, p, holed FROM holes2 GROUP BY 1, 2, 3, 4 HAVING count(DISTINCT pieces) >= 2), " +
-        "chosen AS (SELECT h.len, h.nwild, h.pieces, min(CASE WHEN m.holed IS NOT NULL THEN h.p END) AS p_chosen, " +
-        "first(h.occurrences) AS occurrences FROM holes2 h LEFT JOIN mergeable m " +
-        "ON h.len = m.len AND h.nwild = m.nwild AND h.p = m.p AND h.holed = m.holed GROUP BY 1, 2, 3), " +
-        "withm AS (SELECT len, nwild, p_chosen, pieces, occurrences, " +
-        "CASE WHEN p_chosen IS NULL THEN pieces ELSE list_transform(pieces, (x, i) -> " +
-        "CASE WHEN i = p_chosen THEN '<*>' ELSE x END) END AS merged FROM chosen), " +
-        "fin AS (SELECT len, nwild, p_chosen, merged, count(DISTINCT pieces) AS ntpl, " +
-        "sum(occurrences) AS occ, min(pieces) AS lone FROM withm GROUP BY 1, 2, 3, 4) " +
-        "SELECT substr(md5(tpl), 1, 8) AS event_id, tpl AS event_template, CAST(SUM(occ) AS BIGINT) AS occurrences " +
-        "FROM (SELECT array_to_string(CASE WHEN p_chosen IS NOT NULL AND ntpl >= 2 THEN merged ELSE lone END, ' ') AS tpl, occ FROM fin) " +
-        "GROUP BY tpl"),
-    "logmine_templates" ->
-      // LogMine replayed relationally: distinct patterns → all-pairs distance
-      // within a length group (the oracle can afford all-pairs; the engine's
-      // pigeonhole banding is provably recall-exact, so the sets agree) →
-      // recursive-CTE components → positionwise template assembly
-      ("WITH RECURSIVE lines AS (SELECT event_type || ' u' || CAST(user_id % 30 AS VARCHAR) || " +
-        "' c' || CAST(user_id % 7 AS VARCHAR) AS line FROM events), " +
-        "pat AS (SELECT line AS p, count(*) AS cnt FROM lines GROUP BY line), " +
-        "pr AS (SELECT row_number() OVER (ORDER BY p) AS pid, p, cnt, " +
-        "string_split(p, ' ') AS toks, len(string_split(p, ' ')) AS l FROM pat), " +
-        "pairs AS (SELECT a.pid AS ia, b.pid AS ib FROM pr a, pr b WHERE a.pid < b.pid " +
-        "AND a.l = b.l AND len(list_filter(range(1, a.l + 1), i -> a.toks[i] != b.toks[i])) " +
-        "<= CAST(floor(a.l * 0.34) AS BIGINT)), " +
-        "e AS (SELECT ia AS src, ib AS dst FROM pairs UNION SELECT ib, ia FROM pairs), " +
-        "r AS (SELECT src AS id, src AS comp FROM e UNION SELECT e.dst, r.comp FROM r JOIN e ON r.id = e.src), " +
-        "lab AS (SELECT id, min(comp) AS component FROM r GROUP BY id), " +
-        "wc AS (SELECT pr.pid, pr.cnt, pr.toks, coalesce(lab.component, pr.pid) AS cluster " +
-        "FROM pr LEFT JOIN lab ON pr.pid = lab.id), " +
-        "pe AS (SELECT cluster, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM wc), " +
-        "agg AS (SELECT cluster, pos1, min(tok) AS lo, max(tok) AS hi, sum(cnt) AS n FROM pe GROUP BY 1, 2), " +
-        "tpl AS (SELECT cluster, string_agg(CASE WHEN lo = hi THEN lo ELSE '<*>' END, ' ' ORDER BY pos1) AS event_template, " +
-        "max(CASE WHEN pos1 = 1 THEN n END) AS occurrences FROM agg GROUP BY cluster) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(SUM(occurrences) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"),
-    "logram_templates" ->
-      // Logram replayed relationally: boundary-extended bigram dictionary
-      // (chr(1)/chr(2) = the engine's BOS/EOS markers) → per-token max
-      // covering-bigram frequency vs support → piece assembly
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id % 50 AS VARCHAR) || ' v' || " +
-        "CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS line FROM events), " +
-        "s AS (SELECT count(*) // 100 AS sup FROM lines), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "t AS (SELECT p, cnt, string_split_regex(p, '\\s+') AS toks, " +
-        "list_concat(list_concat([chr(1)], string_split_regex(p, '\\s+')), [chr(2)]) AS ext FROM pat), " +
-        "bgx AS (SELECT p, cnt, i AS bpos1, ext[i] || ' ' || ext[i + 1] AS bg FROM " +
-        "(SELECT p, cnt, ext, unnest(range(1, len(ext))) AS i FROM t)), " +
-        "dict AS (SELECT bg, sum(cnt) AS f FROM bgx GROUP BY bg), " +
-        "votes AS (SELECT bgx.p, unnest([bgx.bpos1 - 1, bgx.bpos1]) AS tpos1, d.f " +
-        "FROM bgx JOIN dict d ON bgx.bg = d.bg), " +
-        "pe AS (SELECT p, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
-        "judged AS (SELECT pe.p, pe.cnt, pe.pos1, pe.tok, max(v.f) AS fmax FROM pe " +
-        "JOIN votes v ON pe.p = v.p AND pe.pos1 = v.tpos1 GROUP BY 1, 2, 3, 4), " +
-        "tpl AS (SELECT p, cnt, string_agg(CASE WHEN fmax >= (SELECT sup FROM s) " +
-        "THEN tok ELSE '<*>' END, ' ' ORDER BY pos1) AS event_template FROM judged GROUP BY p, cnt) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(SUM(cnt) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"),
-    "brain_templates" ->
-      // Brain replayed relationally: weighted (len, pos, word) frequencies →
-      // per-line modal frequency (most positions, ties to larger f) → LCP key
-      // (the (pos:word) set at the modal f, sorted as strings exactly like the
-      // engine's array_sort(collect_list)) → agreement assembly
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id % 50 AS VARCHAR) || ' v' || " +
-        "CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS line FROM events), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "t AS (SELECT p, cnt, string_split_regex(p, '\\s+') AS toks, " +
-        "len(string_split_regex(p, '\\s+')) AS l FROM pat), " +
-        "pe AS (SELECT p, cnt, l, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
-        "freq AS (SELECT l, pos1, tok, sum(cnt) AS f FROM pe GROUP BY 1, 2, 3), " +
-        "m AS (SELECT pe.p, pe.l, pe.pos1, pe.tok, freq.f FROM pe JOIN freq " +
-        "ON pe.l = freq.l AND pe.pos1 = freq.pos1 AND pe.tok = freq.tok), " +
-        "fc AS (SELECT p, f, count(*) AS npos FROM m GROUP BY 1, 2), " +
-        "modal AS (SELECT p, f AS modal_f FROM (SELECT p, f, " +
-        "row_number() OVER (PARTITION BY p ORDER BY npos DESC, f DESC) AS rk FROM fc) WHERE rk = 1), " +
-        "lcp AS (SELECT m.p, string_agg(CAST(m.pos1 - 1 AS VARCHAR) || ':' || m.tok, ',' " +
-        "ORDER BY CAST(m.pos1 - 1 AS VARCHAR) || ':' || m.tok) AS lcp FROM m " +
-        "JOIN modal ON m.p = modal.p AND m.f = modal.modal_f GROUP BY m.p), " +
-        "wc AS (SELECT t.p, t.cnt, t.toks, CAST(t.l AS VARCHAR) || '|' || lcp.lcp AS ckey " +
-        "FROM t JOIN lcp ON t.p = lcp.p), " +
-        "pe2 AS (SELECT ckey, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM wc), " +
-        "agg AS (SELECT ckey, pos1, min(tok) AS lo, max(tok) AS hi, sum(cnt) AS n FROM pe2 GROUP BY 1, 2), " +
-        "tpl AS (SELECT ckey, string_agg(CASE WHEN lo = hi THEN lo ELSE '<*>' END, ' ' ORDER BY pos1) AS event_template, " +
-        "max(CASE WHEN pos1 = 1 THEN n END) AS occurrences FROM agg GROUP BY ckey) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(SUM(occurrences) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"),
-    "ulp_templates" ->
-      // ULP replayed relationally: digit-token preprocessing mask → masked-layout
-      // group key (length + wildcard positions) → local positionwise agreement
-      ("WITH lines AS (SELECT event_type || ' ' || " +
-        "repeat('pad ', ascii(substr(event_type, 1, 1)) % 4) || 'u' || " +
-        "repeat(chr(97 + CAST(user_id % 3 AS INT)), 2) || ' n' || CAST(user_id AS VARCHAR) AS line FROM events), " +
-        "pat0 AS (SELECT trim(line) AS line, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "mk AS (SELECT list_transform(string_split_regex(line, '\\s+'), " +
-        "t -> CASE WHEN regexp_matches(t, '[0-9]') THEN '<*>' ELSE t END) AS toks, cnt FROM pat0), " +
-        "pat AS (SELECT toks, sum(cnt) AS cnt FROM mk GROUP BY toks), " +
-        "keyed AS (SELECT array_to_string(list_transform(toks, " +
-        "t -> CASE WHEN t = '<*>' THEN '<*>' ELSE '_' END), ' ') AS ckey, toks, cnt FROM pat), " +
-        "pe AS (SELECT ckey, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM keyed), " +
-        "agg AS (SELECT ckey, pos1, min(tok) AS lo, max(tok) AS hi, sum(cnt) AS n FROM pe GROUP BY 1, 2), " +
-        "tpl AS (SELECT ckey, string_agg(CASE WHEN lo = hi THEN lo ELSE '<*>' END, ' ' ORDER BY pos1) AS event_template, " +
-        "max(CASE WHEN pos1 = 1 THEN n END) AS occurrences FROM agg GROUP BY ckey) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(SUM(occurrences) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"),
-    "logmine_xlen_templates" ->
-      // expectations derived from the synthesis rule (see the query comment):
-      // every type's mixed-length cluster NW-folds to "E E <*> <*>"
-      ("SELECT substr(md5(event_type || ' ' || event_type || ' <*> <*>'), 1, 8) AS event_id, " +
-        "event_type || ' ' || event_type || ' <*> <*>' AS event_template, count(*) AS occurrences " +
-        "FROM events GROUP BY event_type"),
-    "lfa_templates" ->
-      // LFA replayed relationally: (pos, word) frequencies → per-line
-      // largest-relative-gap threshold (max ratio per line, ties → smallest wf,
-      // matching the engine exactly — IEEE double division of equal integers)
-      // → constant/wildcard assembly
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id AS VARCHAR) || ' v' || " +
-        "CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS line FROM events), " +
-        "t AS (SELECT row_number() OVER () AS lid, string_split_regex(trim(line), '\\s+') AS toks FROM lines), " +
-        "pe AS (SELECT lid, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
-        "freq AS (SELECT pos1, tok, count(*) AS wf FROM pe GROUP BY 1, 2), " +
-        "m AS (SELECT pe.lid, pe.pos1, pe.tok, f.wf FROM pe JOIN freq f ON pe.pos1 = f.pos1 AND pe.tok = f.tok), " +
-        "g AS (SELECT *, CAST(wf AS DOUBLE) / coalesce(lead(wf) OVER (PARTITION BY lid ORDER BY wf DESC, pos1), wf) AS ratio FROM m), " +
-        "g2 AS (SELECT *, max(ratio) OVER (PARTITION BY lid) AS rmax FROM g), " +
-        "thr AS (SELECT lid, min(CASE WHEN ratio = rmax THEN wf END) AS thr FROM g2 GROUP BY lid), " +
-        "ab AS (SELECT m.lid, string_agg(CASE WHEN m.wf >= thr.thr THEN m.tok ELSE '<*>' END, ' ' ORDER BY m.pos1) " +
-        "AS event_template FROM m JOIN thr ON m.lid = thr.lid GROUP BY m.lid) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, count(*) AS occurrences " +
-        "FROM ab GROUP BY event_template"),
-    "lenma_templates" ->
-      // LenMa replayed relationally: cluster key = word-length vector; a position
-      // is constant iff min(tok) = max(tok) within the cluster
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id AS VARCHAR) || ' v' || " +
-        "CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS line FROM events), " +
-        "t AS (SELECT string_split_regex(trim(line), '\\s+') AS toks FROM lines), " +
-        "k AS (SELECT toks, array_to_string(list_transform(toks, x -> CAST(length(x) AS VARCHAR)), ',') AS lkey FROM t), " +
-        "pe AS (SELECT lkey, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM k), " +
-        "agg AS (SELECT lkey, pos1, min(tok) AS lo, max(tok) AS hi, count(*) AS n FROM pe GROUP BY 1, 2), " +
-        "tpl AS (SELECT lkey, string_agg(CASE WHEN lo = hi THEN lo ELSE '<*>' END, ' ' ORDER BY pos1) AS event_template, " +
-        "max(CASE WHEN pos1 = 1 THEN n END) AS occurrences FROM agg GROUP BY lkey) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(SUM(occurrences) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"),
-    "lenma_sim_templates" ->
-      // LenMa sub-1.0 instance replayed relationally: length vectors → exact
-      // all-pairs {equal count, ≤⌊len/2⌋ mismatches, cosine ≥ 0.98} (the
-      // engine's banding is pigeonhole-exact for this relation, so the sets
-      // agree; cosine = exact-long moments cast to double, IEEE-identical
-      // expression on both sides) → recursive-CTE components → agreement
-      // template assembly
-      ("WITH RECURSIVE lines AS (SELECT repeat(substr(event_type, 1, 1), " +
-        "3 + 4 * (ascii(substr(event_type, 1, 1)) % 5)) || ' ' || " +
-        "repeat('x', 19 - 4 * (ascii(substr(event_type, 1, 1)) % 5)) || ' u' || " +
-        "CAST(user_id % 7 AS VARCHAR) || ' ' || " +
-        "repeat('9', CAST(1 + user_id % 3 AS INT)) AS line FROM events), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "pr AS (SELECT row_number() OVER (ORDER BY p) AS pid, p, cnt, " +
-        "string_split_regex(p, '\\s+') AS toks, len(string_split_regex(p, '\\s+')) AS l FROM pat), " +
-        "lvt AS (SELECT pid, cnt, toks, l, list_transform(toks, t -> length(t)::BIGINT) AS v FROM pr), " +
-        "pairs AS (SELECT a.pid AS ia, b.pid AS ib FROM lvt a, lvt b WHERE a.pid < b.pid " +
-        "AND a.l = b.l AND len(list_filter(range(1, a.l + 1), i -> a.v[i] != b.v[i])) " +
-        "<= CAST(floor(a.l * 0.5) AS BIGINT) " +
-        "AND CAST(list_sum(list_transform(range(1, a.l + 1), i -> a.v[i] * b.v[i])) AS DOUBLE) / " +
-        "(sqrt(CAST(list_sum(list_transform(a.v, x -> x * x)) AS DOUBLE)) * " +
-        "sqrt(CAST(list_sum(list_transform(b.v, x -> x * x)) AS DOUBLE))) >= 0.98), " +
-        "e AS (SELECT ia AS src, ib AS dst FROM pairs UNION SELECT ib, ia FROM pairs), " +
-        "r AS (SELECT src AS id, src AS comp FROM e UNION SELECT e.dst, r.comp FROM r JOIN e ON r.id = e.src), " +
-        "lab AS (SELECT id, min(comp) AS component FROM r GROUP BY id), " +
-        "wc AS (SELECT lvt.pid, lvt.cnt, lvt.toks, coalesce(lab.component, lvt.pid) AS cluster " +
-        "FROM lvt LEFT JOIN lab ON lvt.pid = lab.id), " +
-        "pe AS (SELECT cluster, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM wc), " +
-        "agg AS (SELECT cluster, pos1, min(tok) AS lo, max(tok) AS hi, sum(cnt) AS n FROM pe GROUP BY 1, 2), " +
-        "tpl AS (SELECT cluster, string_agg(CASE WHEN lo = hi THEN lo ELSE '<*>' END, ' ' ORDER BY pos1) AS event_template, " +
-        "max(CASE WHEN pos1 = 1 THEN n END) AS occurrences FROM agg GROUP BY cluster) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(SUM(occurrences) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"),
-    "shiso_templates" ->
-      // SHISO replayed relationally: cluster key = per-token char-class count
-      // signature sequence (u:l:d:o); a position is constant iff min(tok) =
-      // max(tok) within the cluster ('g' flag: DuckDB regexp_replace is
-      // first-match-only by default, Spark's replaces all)
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id AS VARCHAR) || ' v' || " +
-        "CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS line FROM events), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "k AS (SELECT cnt, string_split_regex(p, '\\s+') AS toks FROM pat), " +
-        "k2 AS (SELECT cnt, toks, array_to_string(list_transform(toks, x -> " +
-        "CAST(length(regexp_replace(x, '[^A-Z]', '', 'g')) AS VARCHAR) || ':' || " +
-        "CAST(length(regexp_replace(x, '[^a-z]', '', 'g')) AS VARCHAR) || ':' || " +
-        "CAST(length(regexp_replace(x, '[^0-9]', '', 'g')) AS VARCHAR) || ':' || " +
-        "CAST(length(x) - length(regexp_replace(x, '[^A-Z]', '', 'g')) - " +
-        "length(regexp_replace(x, '[^a-z]', '', 'g')) - " +
-        "length(regexp_replace(x, '[^0-9]', '', 'g')) AS VARCHAR)), ',') AS ckey FROM k), " +
-        "pe AS (SELECT ckey, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM k2), " +
-        "agg AS (SELECT ckey, pos1, min(tok) AS lo, max(tok) AS hi, sum(cnt) AS n FROM pe GROUP BY 1, 2), " +
-        "tpl AS (SELECT ckey, string_agg(CASE WHEN lo = hi THEN lo ELSE '<*>' END, ' ' ORDER BY pos1) AS event_template, " +
-        "max(CASE WHEN pos1 = 1 THEN n END) AS occurrences FROM agg GROUP BY ckey) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(SUM(occurrences) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"),
-    "lke_templates" ->
-      // LKE replayed relationally: all-pairs WEIGHTED TOKEN EDIT DISTANCE on
-      // distinct lines (equal token counts by construction, so the DP's value is
-      // the sum of mismatched positions' weights — the closed form replayed
-      // here; the weight literal is interpolated from Lke.weightMilli, ONE
-      // source of truth) → closed-form 1-D 2-means threshold (cumulative-moment
-      // SSE scan, all doubles converted from exact longs so every comparison is
-      // bit-identical to the engine) → recursive-CTE components → ONE
-      // private-content split round (this corpus reaches fixpoint after it;
-      // LkeSpec drives multi-round and the unequal-length DP)
-      ("WITH RECURSIVE lines AS (SELECT repeat(substr(event_type, 1, 1), 8) || ' ' || " +
-        "substr(event_type, 1, 1) || CAST(user_id % 5 AS VARCHAR) || ' job ' || " +
-        "substr(event_type, 1, 1) || CAST(user_id % 3 AS VARCHAR) AS line FROM events), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "pr AS (SELECT row_number() OVER (ORDER BY p) AS pid, p, cnt, " +
-        "string_split_regex(p, '\\s+') AS toks FROM pat), " +
-        s"w AS (SELECT ${graft.lke.Lke.weightMilliSqlList} AS wt), " +
-        "pairs AS (SELECT a.pid AS ia, b.pid AS ib, CAST(list_sum(list_transform(" +
-        "range(1, len(a.toks) + 1), i -> CASE WHEN a.toks[i] != b.toks[i] " +
-        "THEN w.wt[i] ELSE 0 END)) AS BIGINT) AS dist " +
-        "FROM pr a, pr b, w WHERE a.pid < b.pid), " +
-        "dv AS (SELECT dist, count(*) AS w FROM pairs GROUP BY dist), " +
-        "o AS (SELECT dist, sum(w) OVER wo AS cn, sum(w * dist) OVER wo AS cs, " +
-        "sum(w * dist * dist) OVER wo AS cq, sum(w) OVER () AS tn, " +
-        "sum(w * dist) OVER () AS ts, sum(w * dist * dist) OVER () AS tq FROM dv " +
-        "WINDOW wo AS (ORDER BY dist ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), " +
-        "sp AS (SELECT dist, (CAST(cq AS DOUBLE) - CAST(cs AS DOUBLE) * CAST(cs AS DOUBLE) / CAST(cn AS DOUBLE)) + " +
-        "CASE WHEN tn = cn THEN 0.0 ELSE CAST(tq - cq AS DOUBLE) - " +
-        "CAST(ts - cs AS DOUBLE) * CAST(ts - cs AS DOUBLE) / CAST(tn - cn AS DOUBLE) END AS sse FROM o), " +
-        "thr AS (SELECT min(dist) AS t FROM sp WHERE sse = (SELECT min(sse) FROM sp)), " +
-        "e AS (SELECT ia AS src, ib AS dst FROM pairs WHERE dist <= (SELECT t FROM thr) " +
-        "UNION SELECT ib, ia FROM pairs WHERE dist <= (SELECT t FROM thr)), " +
-        "r AS (SELECT src AS id, src AS comp FROM e UNION SELECT e.dst, r.comp FROM r JOIN e ON r.id = e.src), " +
-        "lab AS (SELECT id, min(comp) AS component FROM r GROUP BY id), " +
-        "wc AS (SELECT pr.pid, pr.cnt, pr.toks, CAST(coalesce(lab.component, pr.pid) AS VARCHAR) AS cluster " +
-        "FROM pr LEFT JOIN lab ON pr.pid = lab.id), " +
-        "pe AS (SELECT cluster, pid, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM wc), " +
-        "ms AS (SELECT cluster, count(*) AS m FROM wc GROUP BY cluster), " +
-        "cst AS (SELECT cluster, pos1, count(DISTINCT tok) AS nd, count(*) AS np FROM pe GROUP BY 1, 2), " +
-        "ch AS (SELECT cluster, pos1 AS spos FROM (SELECT cst.cluster, cst.pos1, cst.nd, " +
-        "row_number() OVER (PARTITION BY cst.cluster ORDER BY cst.nd, cst.pos1) AS rk " +
-        "FROM cst JOIN ms ON cst.cluster = ms.cluster " +
-        "WHERE cst.np = ms.m AND cst.nd > 1 AND cst.nd <= 4) WHERE rk = 1), " +
-        "nk AS (SELECT pe.pid, pe.cluster || '|' || pe.tok AS nc FROM pe " +
-        "JOIN ch ON pe.cluster = ch.cluster AND pe.pos1 = ch.spos), " +
-        "wc2 AS (SELECT wc.pid, wc.cnt, wc.toks, coalesce(nk.nc, wc.cluster) AS cluster " +
-        "FROM wc LEFT JOIN nk ON wc.pid = nk.pid), " +
-        "pe2 AS (SELECT cluster, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM wc2), " +
-        "m2 AS (SELECT cluster, count(*) AS m, sum(cnt) AS occ FROM wc2 GROUP BY cluster), " +
-        "agg AS (SELECT cluster, pos1, min(tok) AS lo, max(tok) AS hi, count(*) AS np FROM pe2 GROUP BY 1, 2), " +
-        "tpl AS (SELECT agg.cluster, string_agg(CASE WHEN agg.lo = agg.hi AND agg.np = m2.m THEN agg.lo " +
-        "ELSE '<*>' END, ' ' ORDER BY agg.pos1) AS event_template " +
-        "FROM agg JOIN m2 ON agg.cluster = m2.cluster GROUP BY agg.cluster) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(sum(m2.occ) AS BIGINT) AS occurrences FROM tpl JOIN m2 ON tpl.cluster = m2.cluster " +
-        "GROUP BY event_template"),
-    "logsig_templates" ->
-      // LogSig replayed relationally: ascii-initial init (provably the search
-      // fixpoint on this corpus — no cross-type pair exists, see the query
-      // comment) → per-(group, pos) weighted token counts → strict-majority
-      // signature assembly
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id % 4 AS VARCHAR) || ' ' || " +
-        "upper(substr(event_type, 1, 2)) AS line FROM events), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "a AS (SELECT p, cnt, string_split_regex(p, '\\s+') AS toks, " +
-        "ascii(substr(p, 1, 1)) % 3 AS g FROM pat), " +
-        "gs AS (SELECT g, sum(cnt) AS sz FROM a GROUP BY g), " +
-        "pe AS (SELECT g, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM a), " +
-        "tc AS (SELECT g, pos1, tok, sum(cnt) AS c FROM pe GROUP BY 1, 2, 3), " +
-        "bs AS (SELECT g, pos1, tok AS btok, c AS bc FROM (SELECT g, pos1, tok, c, " +
-        "row_number() OVER (PARTITION BY g, pos1 ORDER BY c DESC, tok DESC) AS rk FROM tc) WHERE rk = 1), " +
-        "pieces AS (SELECT bs.g, bs.pos1, CASE WHEN bs.bc * 2 > gs.sz THEN bs.btok ELSE '<*>' END AS piece " +
-        "FROM bs JOIN gs ON bs.g = gs.g), " +
-        "tpl AS (SELECT g, string_agg(piece, ' ' ORDER BY pos1) AS event_template FROM pieces GROUP BY g) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
-        "CAST(sum(gs.sz) AS BIGINT) AS occurrences FROM tpl JOIN gs ON tpl.g = gs.g " +
-        "GROUP BY event_template"),
-    "slct_templates" ->
-      // SLCT's two counting passes replayed relationally: global (position, word)
-      // frequencies ≥ support → per-line abstraction (ordered string_agg) →
-      // cluster support filter
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id AS VARCHAR) || ' v' || " +
-        "CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS line FROM events), " +
-        "s AS (SELECT count(*) // 10 AS sup FROM lines), " +
-        "t AS (SELECT row_number() OVER () AS lid, string_split_regex(trim(line), '\\s+') AS toks FROM lines), " +
-        "pe AS (SELECT lid, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
-        "freq AS (SELECT pos1, tok FROM (SELECT pos1, tok, count(*) AS wf FROM pe GROUP BY pos1, tok) " +
-        "WHERE wf >= (SELECT sup FROM s)), " +
-        "ab AS (SELECT lid, string_agg(CASE WHEN f.tok IS NOT NULL THEN pe.tok ELSE '<*>' END, ' ' ORDER BY pe.pos1) " +
-        "AS event_template FROM pe LEFT JOIN freq f ON pe.pos1 = f.pos1 AND pe.tok = f.tok GROUP BY lid) " +
-        "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, count(*) AS occurrences " +
-        "FROM ab GROUP BY event_template HAVING count(*) >= (SELECT sup FROM s)"),
-    "logcluster_templates" ->
-      // LogCluster replayed relationally: line-support word frequencies → running
-      // count assigns gap slots → per-cluster min/max gap bounds (explicit zero
-      // rows keep the min honest) → ordered reassembly
-      ("WITH lines AS (SELECT event_type || ' u' || CAST(user_id AS VARCHAR) || ' v' || " +
-        "CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR) AS line FROM events), " +
-        "s AS (SELECT count(*) // 10 AS sup FROM lines), " +
-        "t AS (SELECT row_number() OVER () AS lid, string_split_regex(trim(line), '\\s+') AS toks FROM lines), " +
-        "pe AS (SELECT lid, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
-        "freq AS (SELECT tok FROM (SELECT tok, count(DISTINCT lid) AS wf FROM pe GROUP BY tok) " +
-        "WHERE wf >= (SELECT sup FROM s)), " +
-        "mk AS (SELECT pe.lid, pe.pos1, pe.tok, f.tok IS NOT NULL AS isf, " +
-        "sum(CASE WHEN f.tok IS NOT NULL THEN 1 ELSE 0 END) OVER (PARTITION BY pe.lid ORDER BY pe.pos1) AS fseq " +
-        "FROM pe LEFT JOIN freq f ON pe.tok = f.tok), " +
-        "mk2 AS (SELECT *, CASE WHEN isf THEN fseq - 1 ELSE fseq END AS slot FROM mk), " +
-        "keys AS (SELECT lid, coalesce(string_agg(CASE WHEN isf THEN tok END, ' ' ORDER BY pos1), '') AS ckey, " +
-        "CAST(sum(CASE WHEN isf THEN 1 ELSE 0 END) AS BIGINT) AS nfreq FROM mk2 GROUP BY lid), " +
-        "gapc AS (SELECT lid, slot, count(*) AS g FROM mk2 WHERE NOT isf GROUP BY lid, slot), " +
-        "slots AS (SELECT k.lid, k.ckey, u.slot, coalesce(g.g, 0) AS g FROM " +
-        "(SELECT lid, ckey, unnest(range(0, nfreq + 1)) AS slot FROM keys) u " +
-        "JOIN keys k ON u.lid = k.lid LEFT JOIN gapc g ON u.lid = g.lid AND u.slot = g.slot), " +
-        "members AS (SELECT ckey, max(nfreq) AS nfreq, count(DISTINCT lid) AS occurrences FROM keys GROUP BY ckey " +
-        "HAVING count(DISTINCT lid) >= (SELECT sup FROM s)), " +
-        "gb AS (SELECT sl.ckey, sl.slot, min(sl.g) AS mn, max(sl.g) AS mx FROM slots sl " +
-        "WHERE sl.ckey IN (SELECT ckey FROM members) GROUP BY sl.ckey, sl.slot), " +
-        "gp AS (SELECT ckey, slot * 2 AS ord, '*{' || CAST(mn AS VARCHAR) || ',' || CAST(mx AS VARCHAR) || '}' AS piece " +
-        "FROM gb WHERE mx > 0), " +
-        "wp AS (SELECT ckey, generate_subscripts(ws, 1) * 2 - 1 AS ord, unnest(ws) AS piece FROM " +
-        "(SELECT ckey, string_split(ckey, ' ') AS ws FROM members WHERE nfreq > 0)), " +
-        "asm AS (SELECT ckey, string_agg(piece, ' ' ORDER BY ord) AS event_template FROM " +
-        "(SELECT * FROM gp UNION ALL SELECT * FROM wp) GROUP BY ckey) " +
-        "SELECT substr(md5(a.event_template), 1, 8) AS event_id, a.event_template, " +
-        "CAST(m.occurrences AS BIGINT) AS occurrences FROM asm a JOIN members m ON a.ckey = m.ckey"),
-    "d_para_dedup" ->
-      // full relational replay: split on the double-newline separator, keeper =
-      // first (doc_id, pos) per paragraph hash, ordered reassembly
-      ("WITH docs AS (SELECT doc_id, substr(text, 1, 50) || chr(10) || chr(10) || " +
-        "'subscribe to our newsletter for updates' || chr(10) || chr(10) || " +
-        "substr(text, 51, 50) AS text FROM documents), " +
-        "paras AS (SELECT doc_id, generate_subscripts(p, 1) AS pos1, unnest(p) AS para " +
-        "FROM (SELECT doc_id, string_split(text, chr(10) || chr(10)) AS p FROM docs)), " +
-        "kept AS (SELECT doc_id, pos1, para, row_number() OVER " +
-        "(PARTITION BY md5(para) ORDER BY doc_id, pos1) AS rk FROM paras), " +
-        "asm AS (SELECT doc_id, string_agg(para, chr(10) || chr(10) ORDER BY pos1) AS text " +
-        "FROM kept WHERE rk = 1 GROUP BY doc_id) " +
-        "SELECT doc_id, md5(text) AS text_md5, CAST(length(text) AS BIGINT) AS n_chars FROM asm"),
-    "d_minhash_pairs" ->
-      // exact all-pairs shingle Jaccard — LSH's precision is exact (verify stage)
-      // and its recall on this corpus is 1.0 (see the query comment), so the
-      // approximate path must reproduce the exact pair set
-      ("WITH docs AS (SELECT doc_id, text FROM documents UNION ALL " +
-        "SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0), " +
-        "sh AS (SELECT doc_id, list_distinct(CASE WHEN len(ts) < 3 THEN [array_to_string(ts, ' ')] " +
-        "ELSE list_transform(range(1, len(ts) - 1), i -> array_to_string(ts[i:i+2], ' ')) END) AS s " +
-        "FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM docs)) " +
-        "SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh a, sh b WHERE a.doc_id < b.doc_id " +
-        "AND len(list_intersect(a.s, b.s))::DOUBLE / GREATEST(len(list_distinct(a.s || b.s)), 1) >= 0.9"),
-    "d_simhash_pairs" ->
-      // full simhash recomputation: FNV-1a-64 per token (HUGEINT mod-2^64, same
-      // emulation as t_rolling_fp), token hash → 64-char binary string, per-bit
-      // strict majority (2·#set > #tokens, ties → 0) → 64-bit key; pairs = equal
-      // keys. Hamming-0 banding on the Spark side is pigeonhole-exact, so the two
-      // sides must agree exactly.
-      ("WITH docs AS (SELECT doc_id, text FROM documents UNION ALL " +
-        "SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0), " +
-        "toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM docs), " +
-        "th AS (SELECT doc_id, list_transform(ts, t -> list_reduce(" +
-        "list_prepend(14695981039346656037::HUGEINT, " +
-        "list_transform(list_filter(regexp_split_to_array(t, ''), x -> x != ''), c -> unicode(c)::HUGEINT)), " +
-        "(acc, c) -> ((acc - (acc % 65536) + xor((acc % 65536)::BIGINT, (c % 65536)::BIGINT)::HUGEINT) " +
-        "* 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT)) AS hs FROM toks), " +
-        "bits AS (SELECT doc_id, list_transform(hs, u -> lpad(bin(u), 64, '0')) AS bs FROM th), " +
-        "k AS (SELECT doc_id, array_to_string(list_transform(range(1, 65), i -> " +
-        "CASE WHEN 2 * len(list_filter(bs, b -> b[i] = '1')) > len(bs) THEN '1' ELSE '0' END), '') AS key FROM bits) " +
-        "SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM k a JOIN k b ON a.key = b.key AND a.doc_id < b.doc_id"),
-    "d_components" ->
-      // recursive CTE label propagation: r holds every (node, reachable label);
-      // min per node = smallest id in the component — same canonical rule as the
-      // iterative Spark path
-      ("WITH RECURSIVE docs AS (SELECT doc_id, text FROM documents UNION ALL " +
-        "SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0), " +
-        "sh AS (SELECT doc_id, list_distinct(CASE WHEN len(ts) < 3 THEN [array_to_string(ts, ' ')] " +
-        "ELSE list_transform(range(1, len(ts) - 1), i -> array_to_string(ts[i:i+2], ' ')) END) AS s " +
-        "FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM docs)), " +
-        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh a, sh b WHERE a.doc_id < b.doc_id " +
-        "AND len(list_intersect(a.s, b.s))::DOUBLE / GREATEST(len(list_distinct(a.s || b.s)), 1) >= 0.9), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p), " +
-        "r AS (SELECT src AS id, src AS comp FROM e UNION SELECT e.dst, r.comp FROM r JOIN e ON r.id = e.src) " +
-        "SELECT id, min(comp) AS component FROM r GROUP BY id"),
-    "d_jaccard_pairs" ->
-      ("WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 100 " +
-        "UNION ALL SELECT doc_id + 100000, text || ' zzappended' FROM documents " +
-        "WHERE doc_id < 100 AND doc_id % 2 = 0), " +
-        "sh AS (SELECT doc_id, list_distinct(CASE WHEN len(ts) < 3 THEN [array_to_string(ts, ' ')] " +
-        "ELSE list_transform(range(1, len(ts) - 1), i -> array_to_string(ts[i:i+2], ' ')) END) AS s " +
-        "FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM docs)) " +
-        "SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh a, sh b WHERE a.doc_id < b.doc_id " +
-        "AND len(list_intersect(a.s, b.s))::DOUBLE / GREATEST(len(list_distinct(a.s || b.s)), 1) >= 0.5"),
-    "td_pipeline_full" ->
-      // all six stages replayed: quality+langid gate, exact dedup (min doc per
-      // md5), exact Jaccard≥0.9 pairs (= the LSH+verify result, recall 1.0 on
-      // this corpus), recursive-CTE components, keep-min survivors, hash-ordered
-      // token budget window, final per-language stats
-      (s"WITH RECURSIVE scored AS (SELECT d.doc_id, d.text, $qualityExpr AS q, l.pred_lang " +
-        s"FROM documents d JOIN ($langIdSubquery) l ON d.doc_id = l.doc_id), " +
-        "filtered AS (SELECT * FROM scored WHERE q >= 30000), " +
-        "kept0 AS (SELECT * FROM filtered WHERE doc_id IN " +
-        "(SELECT min(doc_id) FROM filtered GROUP BY md5(text))), " +
-        "sh AS (SELECT doc_id, list_distinct(CASE WHEN len(ts) < 3 THEN [array_to_string(ts, ' ')] " +
-        "ELSE list_transform(range(1, len(ts) - 1), i -> array_to_string(ts[i:i+2], ' ')) END) AS s " +
-        "FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM kept0)), " +
-        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sh a, sh b WHERE a.doc_id < b.doc_id " +
-        "AND len(list_intersect(a.s, b.s))::DOUBLE / GREATEST(len(list_distinct(a.s || b.s)), 1) >= 0.9), " +
-        "e AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p), " +
-        "r AS (SELECT src AS id, src AS comp FROM e UNION SELECT e.dst, r.comp FROM r JOIN e ON r.id = e.src), " +
-        "losers AS (SELECT id FROM (SELECT id, min(comp) AS component FROM r GROUP BY id) WHERE id != component), " +
-        "kept AS (SELECT doc_id, pred_lang, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END::BIGINT AS n_tokens, " +
-        "list_reduce(list_prepend(0::BIGINT, " +
-        "list_transform(list_filter(regexp_split_to_array(substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), ''), x -> x != ''), " +
-        "c -> (strpos('0123456789abcdef', c) - 1)::BIGINT)), (a, c) -> a * 16 + c) AS h " +
-        "FROM kept0 WHERE doc_id NOT IN (SELECT id FROM losers)), " +
-        "rr AS (SELECT *, SUM(n_tokens) OVER (PARTITION BY pred_lang ORDER BY h, doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run FROM kept) " +
-        "SELECT pred_lang, count(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens " +
-        "FROM rr WHERE run <= 20000 GROUP BY pred_lang"),
-    "td_stratified_sample" ->
-      // same md5-hex → uint32 arithmetic; bounds are floor(fraction · 2^32)
-      ("WITH hk AS (SELECT doc_id, lang, list_reduce(list_prepend(0::BIGINT, " +
-        "list_transform(list_filter(regexp_split_to_array(substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), ''), x -> x != ''), " +
-        "c -> (strpos('0123456789abcdef', c) - 1)::BIGINT)), (a, c) -> a * 16 + c) AS h FROM documents), " +
-        "b(lang, hb) AS (VALUES ('en', 2147483648), ('es', 1073741824), ('de', 429496729)) " +
-        "SELECT hk.doc_id, hk.lang FROM hk JOIN b ON hk.lang = b.lang WHERE hk.h < b.hb"),
-    "td_budget_sample" ->
-      ("WITH d AS (SELECT doc_id, lang, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END::BIGINT AS n_tokens, " +
-        "list_reduce(list_prepend(0::BIGINT, " +
-        "list_transform(list_filter(regexp_split_to_array(substr(md5(CAST(doc_id AS VARCHAR)), 1, 8), ''), x -> x != ''), " +
-        "c -> (strpos('0123456789abcdef', c) - 1)::BIGINT)), (a, c) -> a * 16 + c) AS h FROM documents), " +
-        "r AS (SELECT doc_id, SUM(n_tokens) OVER (PARTITION BY lang ORDER BY h, doc_id " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run FROM d) " +
-        "SELECT doc_id FROM r WHERE run <= 5000"),
-    "td_decontam" ->
-      // 5-gram shingles on both sides (list_distinct per doc, DISTINCT across the
-      // benchmark set), inner join on the shingle, per-train-doc distinct count
-      ("WITH bench AS (SELECT doc_id, text FROM documents WHERE doc_id % 37 = 0), " +
-        "train AS (SELECT doc_id, text FROM documents WHERE doc_id % 37 != 0 " +
-        "UNION ALL SELECT doc_id + 200000, 'leaked copy of ' || text FROM bench), " +
-        "bsh AS (SELECT DISTINCT unnest(sh) AS sh FROM (SELECT " +
-        "CASE WHEN len(ts) < 5 THEN [array_to_string(ts, ' ')] " +
-        "ELSE list_transform(range(1, len(ts) - 3), i -> array_to_string(ts[i:i+4], ' ')) END AS sh " +
-        "FROM (SELECT string_split_regex(trim(text), '\\s+') AS ts FROM bench))), " +
-        "tsh AS (SELECT doc_id, unnest(list_distinct(sh)) AS sh FROM (SELECT doc_id, " +
-        "CASE WHEN len(ts) < 5 THEN [array_to_string(ts, ' ')] " +
-        "ELSE list_transform(range(1, len(ts) - 3), i -> array_to_string(ts[i:i+4], ' ')) END AS sh " +
-        "FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM train))) " +
-        "SELECT t.doc_id AS train_id, count(DISTINCT t.sh)::BIGINT AS n_overlap " +
-        "FROM tsh t JOIN bsh b USING (sh) GROUP BY t.doc_id HAVING count(DISTINCT t.sh) >= 3"),
-    "ann_brute_topk" -> annBruteOracle,
-    // exactness settings (probe everything) provably reduce both ANN paths to
-    // brute force — one float64 oracle serves all three
-    "ann_lsh_topk" -> annBruteOracle,
-    "ann_ivf_topk" -> annBruteOracle,
-    "ann_topk_join" ->
-      ("WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) " +
-        "SELECT id_l, id_r, rank FROM (" +
-        "SELECT l.vec_id AS id_l, r.vec_id AS id_r, " +
-        "CAST(row_number() OVER (PARTITION BY l.vec_id ORDER BY " +
-        "list_dot_product(l.v, r.v) / GREATEST(sqrt(list_dot_product(l.v, l.v)) * " +
-        "sqrt(list_dot_product(r.v, r.v)), 1e-12) DESC, r.vec_id) AS BIGINT) AS rank " +
-        "FROM (SELECT * FROM e WHERE vec_id < 20) l, e r) WHERE rank <= 5"),
-    "d_embed_pairs" ->
-      // exact all-pairs float64 cosine ≥ threshold — the LSH-bucketed path's
-      // verify stage makes precision exact and recall is 1.0 on this corpus
-      // (deterministic seeded planes; see the query comment)
-      ("WITH w AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings " +
-        "UNION ALL SELECT vec_id + 100000, " +
-        "list_transform(embedding, x -> CAST(x + CAST(0.001 AS FLOAT) AS FLOAT))::DOUBLE[] " +
-        "FROM embeddings WHERE vec_id % 5 = 0) " +
-        "SELECT a.vec_id AS id_a, b.vec_id AS id_b FROM w a, w b " +
-        "WHERE a.vec_id < b.vec_id AND list_dot_product(a.v, b.v) / " +
-        "GREATEST(sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)), 1e-12) >= 0.99"),
-    "mm_features" ->
-      ("SELECT CAST(doc_id AS VARCHAR) AS url, 'html' AS kind, " +
-        "CAST(octet_length(encode(b)) AS BIGINT) AS byte_len, md5(b) AS content_hash, " +
-        "CAST(16 + octet_length(encode(b)) % 1024 AS INTEGER) AS width, " +
-        "CAST(16 + octet_length(encode(b)) % 768 AS INTEGER) AS height " +
-        "FROM (SELECT doc_id, '<html><body>' || text || '</body></html>' AS b FROM documents)"),
-    "mm_frames" ->
-      // byte offsets every `stride` bytes up to maxFrames, replayed over the
-      // same UTF-8 byte length; sequence() end is inclusive, range() exclusive
-      ("SELECT doc_id, array_to_string(list_transform(" +
-        "range(0, GREATEST(octet_length(encode(b)) - 1, 0) + 1, 1000)[1:4], x -> CAST(x AS VARCHAR)), ',') AS offsets " +
-        "FROM (SELECT doc_id, '<html><body>' || text || '</body></html>' AS b FROM documents)"),
-    "d_exact_groups" ->
-      ("SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_count FROM " +
-        "(SELECT doc_id, text FROM documents UNION ALL " +
-        "SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0) GROUP BY 1"),
-    "d_exact_dedup" ->
-      ("SELECT doc_id FROM (SELECT doc_id, text FROM documents UNION ALL " +
-        "SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0) u " +
-        "WHERE doc_id IN (SELECT min(doc_id) FROM (SELECT doc_id, text FROM documents UNION ALL " +
-        "SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0) GROUP BY md5(text))"),
-    "d_incremental" ->
-      // NOT EXISTS, not NOT IN: Spark's left_anti keeps batch rows whose key has
-      // no match, even when the seen side contains NULLs — NOT IN would return
-      // zero rows overall if any seen hash were NULL (round-4 ADVICE; benign on
-      // this non-null corpus, but the semantics should match for nullable text)
-      ("WITH batch AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0), " +
-        "seen AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 2 = 0), " +
-        "keep AS (SELECT min(doc_id) AS doc_id FROM batch GROUP BY md5(text)) " +
-        "SELECT b.doc_id FROM batch b JOIN keep k USING (doc_id) " +
-        "WHERE NOT EXISTS (SELECT 1 FROM seen s WHERE s.h = md5(b.text))"),
-    "e_type_agg" ->
-      ("SELECT event_type, count(*) AS cnt, CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents " +
-        "FROM events GROUP BY event_type"),
-    "e_hourly" ->
-      ("SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour, count(*) AS cnt " +
-        "FROM events GROUP BY 1"),
-    "e_json_extract" ->
-      ("SELECT event_type, CAST(SUM(CAST(regexp_extract(props, '\"k\":\\s*(\\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k " +
-        "FROM events GROUP BY event_type"),
-    "e_sessionize" ->
-      ("SELECT user_id, CAST(SUM(new_sess) AS BIGINT) AS n_sessions, count(*) AS n_events FROM (" +
-        "SELECT user_id, CASE WHEN prev_ts IS NULL OR date_diff('second', prev_ts, ts) > 1800 " +
-        "THEN 1 ELSE 0 END::BIGINT AS new_sess FROM (" +
-        "SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts " +
-        "FROM events)) GROUP BY user_id"),
-    "e_pivot" ->
-      ("SELECT date_trunc('hour', ts) AS hour, " +
-        "CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click, " +
-        "CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error, " +
-        "CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase, " +
-        "CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup, " +
-        "CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view " +
-        "FROM events GROUP BY 1"),
-    "j_asof" ->
-      ("SELECT l.user_id, l.ts, l.event_id, r.p_event_id, r.p_cents FROM " +
-        "(SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') l " +
-        "ASOF LEFT JOIN (SELECT user_id, ts, max(event_id) AS p_event_id, " +
-        "CAST(round(max_by(value, event_id) * 100) AS BIGINT) AS p_cents " +
-        "FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts) r " +
-        "ON l.user_id = r.user_id AND l.ts >= r.ts"),
-    "e_session_windows" ->
-      // replay session_window's merge rule (windows merge when they overlap or
-      // TOUCH — SessionizeSpec pins the boundary): diff > 30 min starts a new
-      // session, window = [min(ts), max(ts) + gap)
-      ("SELECT user_id, MIN(ts) AS sess_start, MAX(ts) + INTERVAL 30 MINUTE AS sess_end, " +
-        "count(*) AS n_events FROM (" +
-        "SELECT user_id, ts, SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
-        "ROWS UNBOUNDED PRECEDING) AS sess_id FROM (" +
-        "SELECT user_id, ts, event_id, CASE WHEN prev_ts IS NULL OR " +
-        "date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END::BIGINT AS new_sess FROM (" +
-        "SELECT user_id, ts, event_id, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) " +
-        "AS prev_ts FROM events))) GROUP BY user_id, sess_id"),
-    "e_topk_users" ->
-      ("SELECT user_id, CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS purchase_cents FROM events " +
-        "WHERE event_type = 'purchase' GROUP BY user_id " +
-        "ORDER BY purchase_cents DESC, user_id LIMIT 10"),
-    "q1_agg" ->
-      ("SELECT l_returnflag, l_linestatus, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty, " +
-        "CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_cents, count(*) AS cnt " +
-        "FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00' " +
-        "GROUP BY l_returnflag, l_linestatus"),
-    "q3_join" ->
-      ("SELECT c_mktsegment, CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) AS rev_e4, " +
-        "count(*) AS n FROM customer JOIN orders ON c_custkey = o_custkey " +
-        "JOIN lineitem ON o_orderkey = l_orderkey GROUP BY c_mktsegment"),
-    "j_semi" ->
-      ("SELECT o_orderstatus, count(*) AS n FROM orders WHERE EXISTS " +
-        "(SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey) GROUP BY o_orderstatus"),
-    "j_anti" ->
-      ("SELECT c_mktsegment, count(*) AS n FROM customer WHERE NOT EXISTS " +
-        "(SELECT 1 FROM orders WHERE o_custkey = c_custkey) GROUP BY c_mktsegment"),
-    "w_window_topk" ->
-      ("SELECT l_suppkey, l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, rn FROM (" +
-        "SELECT l_suppkey, l_orderkey, l_linenumber, CAST(row_number() OVER " +
-        "(PARTITION BY l_suppkey ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS BIGINT) AS rn " +
-        "FROM lineitem) WHERE rn <= 2"),
-    "set_except" ->
-      ("SELECT DISTINCT l_partkey FROM lineitem EXCEPT " +
-        "SELECT DISTINCT p_partkey AS l_partkey FROM part WHERE p_size > 40"),
-    "agg_distinct" ->
-      ("SELECT l_returnflag, count(DISTINCT l_orderkey) AS n_orders, " +
-        "count(DISTINCT l_partkey) AS n_parts FROM lineitem GROUP BY l_returnflag"),
-    "agg_rollup" ->
-      ("SELECT l_returnflag, l_linestatus, count(*) AS n, " +
-        "CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty " +
-        "FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)")
-  )
+  val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
 }

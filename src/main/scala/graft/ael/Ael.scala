@@ -1,7 +1,7 @@
 package graft.ael
 
 import graft.miner.MinerOutput
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** AEL-style template miner (Jiang, Hassan, Hamann & Flora, "An Automated Approach
@@ -35,28 +35,18 @@ import org.apache.spark.sql.functions._
 object Ael {
 
   private val Wildcard = "<*>"
-
-  /** Per-token anonymization, shared by the miner and the oracle's SQL mirror. */
-  def anonymizeTokens(toks: Column): Column =
-    transform(toks, t =>
-      when(t.rlike("^\\w+=\\S+$"), regexp_replace(t, "=.*$", "=<*>"))
-        .when(t.rlike("[0-9]"), lit(Wildcard))
-        .otherwise(t))
-
-  /** [[anonymizeTokens]] as one compiled-pattern UDF pass over a token array
-    * (round 6): the HOF form evaluates two interpreted regex predicates per
-    * token. Rule-for-rule identical: `key=value` → `key=<*>` (the replace
-    * pattern `=.*$` consumes from the FIRST '=' to end-of-token, exactly like
-    * `regexp_replace`), else any digit-bearing token → `<*>`, else unchanged.
-    */
   private val KeyValue = java.util.regex.Pattern.compile("^\\w+=\\S+$")
-  private val anonymize = udf { (toks: Seq[String]) =>
-    toks.map { t =>
-      if (KeyValue.matcher(t).matches()) t.substring(0, t.indexOf('=')) + "=<*>"
-      else if (t.exists(c => c >= '0' && c <= '9')) Wildcard
-      else t
-    }
-  }
+
+  /** Stage 1 for one token: `key=value` → `key=<*>` (the value is everything
+    * after the FIRST '='), else any digit-bearing token → `<*>`, else unchanged.
+    */
+  private[ael] def anonymizeToken(t: String): String =
+    if (KeyValue.matcher(t).matches()) t.substring(0, t.indexOf('=')) + "=<*>"
+    else if (t.exists(c => c >= '0' && c <= '9')) Wildcard
+    else t
+
+  /** [[anonymizeToken]] over a token array in one compiled-pattern UDF pass. */
+  private val anonymize = udf((toks: Seq[String]) => toks.map(anonymizeToken))
 
   /** One leftmost-hole reconcile round over a `(pieces, occurrences)` template
     * table; bins (len, nwild) are recomputed from the pieces so merged templates

@@ -409,13 +409,13 @@ object LogStyles {
   def urlFor(spec: StyleSpec, rowId: Long): String =
     s"https://${WebPagesGen.domainFor(rowId)}/${spec.style.name}/$rowId"
 
-  /** [[WebPagesGen.templateIdAt]] for a style: the `gt_tpl` that
-    * [[groundTruthFor]] holds for (url, lineNo), or None when there is none.
+  /** [[WebPagesGen.templateIdAt]] for a style: the ground-truth template of
+    * (url, lineNo), or None when there is none.
     */
   def templateIdAt(spec: StyleSpec, url: String, lineNo: Int): Option[Int] =
     WebPagesGen.rowIdAt(url, lineNo, urlFor(spec, _)).map(templateIdFor(spec, _, lineNo))
 
-  /** Styled pages + groundtruth, same determinism contract as WebPagesGen. */
+  /** Styled pages, same determinism contract as WebPagesGen. */
   def pagesFor(spark: org.apache.spark.sql.SparkSession, spec: StyleSpec, n: Long)
       : org.apache.spark.sql.Dataset[WebPage] = {
     import spark.implicits._
@@ -426,16 +426,6 @@ object LogStyles {
       WebPage(urlFor(spec, rowId), new java.sql.Timestamp(1704067200000L + rowId * 997L),
         s"<html><body>$text</body></html>".getBytes(java.nio.charset.StandardCharsets.UTF_8),
         text, "en")
-    }
-  }
-
-  def groundTruthFor(spark: org.apache.spark.sql.SparkSession, spec: StyleSpec, n: Long)
-      : org.apache.spark.sql.Dataset[GroundTruthLine] = {
-    import spark.implicits._
-    spark.range(n).as[Long].flatMap { rowId =>
-      val url = urlFor(spec, rowId)
-      (0 until WebPagesGen.linesPerPage(rowId))
-        .map(i => GroundTruthLine(url, i, templateIdFor(spec, rowId, i)))
     }
   }
 }

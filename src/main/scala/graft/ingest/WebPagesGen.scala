@@ -7,11 +7,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 final case class WebPage(url: String, warc_ts: Timestamp, html: Array[Byte],
                          text: String, lang: String)
 
-/** Per-line ground truth emitted by the generator — plays the role of the reference's
-  * `<Dataset>_2k.log_structured.csv` golden grouping (FIXTURES.md §3).
-  */
-final case class GroundTruthLine(url: String, line_no: Int, gt_tpl: Int)
-
 /** Narrow page row for consumers that only read (url, warc_ts, text) — the
   * mine/match pipeline (explodeLines projects url+text) and the streaming source.
   * Field-identical to [[WebPage]]'s url/warc_ts/text (same hash streams); skips
@@ -161,9 +156,8 @@ object WebPagesGen {
 
   /** Inverse of the (url, line_no) keying: the ground-truth template id of line
     * `lineNo` of the page whose url is `url`, or None when `url` is not one
-    * [[urlFor]] builds or the page has no such line. Equal, row for row, to the
-    * `gt_tpl` of [[groundTruth]] joined on (url, line_no), without generating
-    * or shuffling the ground truth.
+    * [[urlFor]] builds or the page has no such line: the line's ground truth,
+    * without generating or shuffling a ground-truth table.
     */
   def templateIdAt(url: String, lineNo: Int): Option[Int] =
     rowIdAt(url, lineNo, urlFor).map(templateIdFor(_, lineNo))
@@ -202,14 +196,6 @@ object WebPagesGen {
       val text = (0 until linesPerPage(rowId)).map(lineFor(rowId, _)).mkString("\n")
       WebPageNarrow(urlFor(rowId), new Timestamp(BaseTs + rowId * 997L), text)
     })
-  }
-
-  def groundTruth(spark: SparkSession, n: Long): Dataset[GroundTruthLine] = {
-    import spark.implicits._
-    spark.range(n).as[Long].flatMap { rowId =>
-      val url = urlFor(rowId)
-      (0 until linesPerPage(rowId)).map(i => GroundTruthLine(url, i, templateIdFor(rowId, i)))
-    }
   }
 
   /** Enrichment dimension (FIXTURES.md §2) — small, broadcastable. */

@@ -1,6 +1,6 @@
 package graft.lenma
 
-import graft.miner.MinerOutput
+import graft.miner.{MinerOutput, Pigeonhole}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -75,15 +75,9 @@ object LenMa {
       // exact pigeonhole banding over the LENGTH VECTOR (LogMine's trick): with
       // nb = floor(frac·len)+1 contiguous bands, a pair differing in ≤ floor(frac·len)
       // positions leaves at least one band untouched
-      val banded = patterns
-        .withColumn("nb", (floor(col("len") * maxMismatchFrac) + 1).cast("int"))
-        .select(col("pid"), col("len"), col("lv"), col("nb"),
-          explode(sequence(lit(0), col("nb") - 1)).as("band"))
-        .withColumn("bstart", floor(col("band") * col("len") / col("nb")).cast("int"))
-        .withColumn("bend", floor((col("band") + 1) * col("len") / col("nb")).cast("int"))
-        .withColumn("bh", xxhash64(col("band"), concat_ws(",",
-          transform(slice(col("lv"), col("bstart") + 1, col("bend") - col("bstart")),
-            x => x.cast("string")))))
+      val banded = Pigeonhole.bandHashes(
+          patterns.withColumn("nb", (floor(col("len") * maxMismatchFrac) + 1).cast("int")),
+          "len", "nb", "lv")(slice => concat_ws(",", transform(slice, x => x.cast("string"))))
         .select(col("len"), col("band"), col("bh"), col("pid"))
 
       val ca = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))

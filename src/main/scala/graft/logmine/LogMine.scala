@@ -1,6 +1,6 @@
 package graft.logmine
 
-import graft.miner.MinerOutput
+import graft.miner.{MinerOutput, Pigeonhole}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -65,14 +65,9 @@ object LogMine {
     * least one full band. Candidate pairs `(id_a, id_b)`, id_a < id_b.
     */
   private def sameLenCandidates(patterns: DataFrame, maxDist: Double): DataFrame = {
-    val banded = patterns
-      .withColumn("nb", (floor(col("len") * maxDist) + 1).cast("int"))
-      .select(col("pid"), col("len"), col("toks"), col("nb"),
-        explode(sequence(lit(0), col("nb") - 1)).as("band"))
-      .withColumn("bstart", floor(col("band") * col("len") / col("nb")).cast("int"))
-      .withColumn("bend", floor((col("band") + 1) * col("len") / col("nb")).cast("int"))
-      .withColumn("bh", xxhash64(col("band"),
-        concat_ws(" ", slice(col("toks"), col("bstart") + 1, col("bend") - col("bstart")))))
+    val banded = Pigeonhole.bandHashes(
+        patterns.withColumn("nb", (floor(col("len") * maxDist) + 1).cast("int")),
+        "len", "nb", "toks")(concat_ws(" ", _))
       .select(col("len"), col("band"), col("bh"), col("pid"))
     val a = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
     val b = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_b"))
@@ -194,31 +189,22 @@ object LogMine {
         // band and each of the delta insertion points splits one band into an
         // offset-0/offset-k boundary — one band always survives intact
         val sMax = floor(col("len") - (lit(1.0) - maxDist) * (col("len") * 2 + delta) / 2)
-        val bandedShort = patterns
-          .withColumn("nbx", (greatest(sMax, lit(0)) + delta + 1).cast("int"))
-          .filter(sMax >= 0)
-          .select(col("pid"), col("len"), col("toks"), col("nbx"),
-            explode(sequence(lit(0), col("nbx") - 1)).as("band"))
-          .withColumn("bstart", floor(col("band") * col("len") / col("nbx")).cast("int"))
-          .withColumn("bend", floor((col("band") + 1) * col("len") / col("nbx")).cast("int"))
-          .withColumn("bh", xxhash64(col("band"),
-            concat_ws(" ", slice(col("toks"), col("bstart") + 1, col("bend") - col("bstart")))))
+        val bandedShort = Pigeonhole.bandHashes(
+            patterns
+              .withColumn("nbx", (greatest(sMax, lit(0)) + delta + 1).cast("int"))
+              .filter(sMax >= 0),
+            "len", "nbx", "toks")(concat_ws(" ", _))
           .select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
         // the longer pattern bands against the SHORTER length's geometry, at
         // every insertion offset 0..delta
         val lenShort = col("len") - delta
         val sMaxL = floor(lenShort - (lit(1.0) - maxDist) * (lenShort * 2 + delta) / 2)
-        val bandedLong = patterns
-          .filter(col("len") > delta && sMaxL >= 0)
-          .withColumn("nbx", (greatest(sMaxL, lit(0)) + delta + 1).cast("int"))
-          .withColumn("lshort", lenShort)
-          .select(col("pid"), col("lshort"), col("toks"), col("nbx"),
-            explode(sequence(lit(0), col("nbx") - 1)).as("band"))
-          .withColumn("off", explode(sequence(lit(0), lit(delta))))
-          .withColumn("bstart", floor(col("band") * col("lshort") / col("nbx")).cast("int"))
-          .withColumn("bend", floor((col("band") + 1) * col("lshort") / col("nbx")).cast("int"))
-          .withColumn("bh", xxhash64(col("band"), concat_ws(" ",
-            slice(col("toks"), col("bstart") + col("off") + 1, col("bend") - col("bstart")))))
+        val bandedLong = Pigeonhole.bandHashes(
+            patterns
+              .filter(col("len") > delta && sMaxL >= 0)
+              .withColumn("nbx", (greatest(sMaxL, lit(0)) + delta + 1).cast("int"))
+              .withColumn("lshort", lenShort),
+            "lshort", "nbx", "toks", maxOffset = delta)(concat_ws(" ", _))
           .select(col("lshort").as("len"), col("band"), col("bh"), col("pid").as("id_b"))
         bandedShort.join(bandedLong, Seq("len", "band", "bh"))
           .select("id_a", "id_b").distinct()

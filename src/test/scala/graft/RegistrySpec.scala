@@ -4,15 +4,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
 
-/** `SparkEntry` keeps query bodies and oracle SQL in two parallel maps; they must
-  * name the same queries, and README's query count must follow them.
+/** `SparkEntry.queries` and `oracleSql` are maps derived from one list of
+  * registry entries: a duplicate name would silently drop an entry from both,
+  * and README's query count must follow the list.
   */
 class RegistrySpec extends AnyFunSuite {
 
-  test("queries and oracleSql have the same keys") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q == o, s"queries without oracle: ${q -- o}; oracles without query: ${o -- q}")
+  test("registry names are unique") {
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate query names: ${dups.mkString(", ")}")
+    assert(SparkEntry.queries.size == names.size && SparkEntry.oracleSql.size == names.size)
   }
 
   test("README's \"(N queries\" equals queries.size") {

@@ -1,7 +1,6 @@
 package graft.ael
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 class AelSpec extends SparkSuite {
   import spark.implicits._
@@ -11,10 +10,8 @@ class AelSpec extends SparkSuite {
       .as[(String, Long)].collect().toMap
 
   test("anonymize: key=value and digit-bearing tokens wildcard, others stay") {
-    val out = Seq("send id=42 to host7 now").toDF("line")
-      .select(Ael.anonymizeTokens(split(trim(col("line")), "\\s+")))
-      .as[Seq[String]].head()
-    assert(out == Seq("send", "id=<*>", "to", "<*>", "now"))
+    val out = Seq("send", "id=42", "to", "host7", "now", "k=v=1").map(Ael.anonymizeToken)
+    assert(out == Seq("send", "id=<*>", "to", "<*>", "now", "k=<*>"))
   }
 
   test("categorize: identical anonymized lines merge counts") {

@@ -21,8 +21,8 @@ class EvalCsvSpec extends SparkSuite {
         st = sp.style.st, depth = sp.style.depth)).getOrElse(PipelineConfig.hdfs)
       val pages = spec.map(sp => LogStyles.pagesFor(spark, sp, 80).toDF())
         .getOrElse(WebPagesGen.pages(spark, 80).toDF())
-      val gt = spec.map(sp => LogStyles.groundTruthFor(spark, sp, 80).toDF())
-        .getOrElse(WebPagesGen.groundTruth(spark, 80).toDF())
+      val gt = spec.map(sp => GroundTruth.forStyle(spark, sp, 80).toDF())
+        .getOrElse(GroundTruth.hdfs(spark, 80).toDF())
       val (_, assigned) = LogPipeline.assignAll(spark, pages, cfg)
 
       // write both sides as CSV (the reference's interchange format)…

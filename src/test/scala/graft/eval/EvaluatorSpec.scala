@@ -82,7 +82,7 @@ class EvaluatorSpec extends SparkSuite {
     val n = WebPagesGen.pagesForSfDir("sf0.001")
     val (_, asg) = LogPipeline.assignNarrow(spark, WebPagesGen.pagesNarrow(spark, n).toDF(),
       PipelineConfig.hdfs)
-    val sc = checkAssignment(asg, WebPagesGen.groundTruth(spark, n).toDF(),
+    val sc = checkAssignment(asg, GroundTruth.hdfs(spark, n).toDF(),
       WebPagesGen.templateIdAt)
     assert(sc.total > 20000 && sc.parsingAccuracy > 0.9, sc.toString)
   }
@@ -107,7 +107,7 @@ class EvaluatorSpec extends SparkSuite {
   test("hdfs 150-page assignment: identical scores, templateIdAt == joined groundTruth") {
     val (_, asg) = LogPipeline.assignNarrow(spark,
       WebPagesGen.pagesNarrow(spark, StylePages).toDF(), PipelineConfig.hdfs)
-    checkAssignment(asg, WebPagesGen.groundTruth(spark, StylePages).toDF(),
+    checkAssignment(asg, GroundTruth.hdfs(spark, StylePages).toDF(),
       WebPagesGen.templateIdAt)
   }
 
@@ -118,7 +118,7 @@ class EvaluatorSpec extends SparkSuite {
         st = spec.style.st, depth = spec.style.depth)
       val (_, asg) = LogPipeline.assignNarrow(spark,
         LogStyles.pagesFor(spark, spec, StylePages).toDF(), cfg)
-      checkAssignment(asg, LogStyles.groundTruthFor(spark, spec, StylePages).toDF(),
+      checkAssignment(asg, GroundTruth.forStyle(spark, spec, StylePages).toDF(),
         LogStyles.templateIdAt(spec, _, _))
     }
   }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.SparkSuite
 import graft.drain.DrainTree
-import graft.eval.Evaluator
+import graft.eval.{Evaluator, GroundTruth}
 import graft.ingest.LogStyles
 import graft.rex.RexCompiler
 import org.apache.spark.sql.functions._
@@ -43,7 +43,7 @@ class MultiStyleSpec extends SparkSuite {
     test(s"${spec.style.name}: grouping accuracy vs groundtruth") {
       val pages = LogStyles.pagesFor(spark, spec, N).toDF()
       val (_, assigned) = LogPipeline.assignAll(spark, pages, cfg)
-      val gt = LogStyles.groundTruthFor(spark, spec, N).toDF()
+      val gt = GroundTruth.forStyle(spark, spec, N).toDF()
       val joined = assigned.select("url", "line_no", "event_id")
         .join(gt, Seq("url", "line_no")).withColumnRenamed("gt_tpl", "gt_id")
       val scores = Evaluator.evaluate(joined)

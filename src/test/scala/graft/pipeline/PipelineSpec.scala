@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.SparkSuite
 import graft.drain.DrainTree
-import graft.eval.Evaluator
+import graft.eval.{Evaluator, GroundTruth}
 import graft.ingest.WebPagesGen
 import graft.rex.RexCompiler
 import org.apache.spark.sql.functions._
@@ -60,7 +60,7 @@ class PipelineSpec extends SparkSuite {
 
   test("mined templates cover the generator's template pool with high PA") {
     val (_, assigned) = LogPipeline.assignAll(spark, pages, cfg)
-    val gt = WebPagesGen.groundTruth(spark, N).toDF()
+    val gt = GroundTruth.hdfs(spark, N).toDF()
     val joined = assigned.select("url", "line_no", "event_id")
       .join(gt, Seq("url", "line_no"))
       .withColumnRenamed("gt_tpl", "gt_id")

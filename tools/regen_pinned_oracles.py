@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Mechanically rebuild the pinned VALUES oracles in SparkEntry.scala from a
+"""Mechanically rebuild the pinned VALUES oracles in
+src/main/scala/graft/registry/LogQueries.scala from a
 graft.Verify output directory (round-4 ADVICE: the regeneration recipe must be
 a checked-in tool, not a comment pointing at git history).
 
@@ -12,9 +13,10 @@ correctness gate runs. After an INTENDED mining-semantics change:
   1. sbt -batch 'runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_verify'
      (optionally SPARK_GRAFT_VERIFY_ONLY=log_templates,... to run a subset)
   2. python3 tools/regen_pinned_oracles.py /tmp/graft_verify
-  3. paste each emitted SQL into the matching oracle in SparkEntry.scala
-     (log_stream_templates shares logTemplatesOracle — never pin it separately),
-     and justify the catalog diff in the commit message (GoldenSpec contract).
+  3. paste each emitted SQL into the matching entry's `oracle` in
+     LogQueries.scala (log_stream_templates shares logTemplatesOracle — never
+     pin it separately), update its digest in OraclePinSpec, and justify the
+     catalog diff in the commit message (GoldenSpec contract).
 
 Driver-side tooling only (python/pyarrow are not part of the shipped library).
 
