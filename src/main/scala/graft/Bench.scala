@@ -3,7 +3,6 @@ package graft
 import graft.ingest.WebPagesGen
 import graft.pipeline.{LogPipeline, PipelineConfig}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -156,11 +155,8 @@ object Bench {
     // efficiency loss, not work.
     import scala.concurrent.{Await, Future}
     val routedF = Future {
-      // normalized routed schema, same as LogPipeline.routedWrite: the template
-      // string rides in the templates sink, not on every routed row
-      enriched.repartitionByRange(col("event_id"), p.saltCol)
-        .drop("masked", "parsed", "event_template")
-        .write.mode("overwrite").partitionBy("event_id").parquet(s"$outDir/routed")
+      p.routed(enriched).write.mode("overwrite").partitionBy("event_id")
+        .parquet(s"$outDir/routed")
     }(sinkPool)
     val templatesF = Future {
       p.templateCounts(assigned)

@@ -38,7 +38,7 @@ final class DrainNode extends Serializable {
   *
   * This class is single-threaded mutable state, used in three Spark contexts:
   *  - partition-local mining inside `mapPartitions`/`Aggregator` (one tree per task),
-  *  - associative merge of partial trees ([[mergeFrom]]),
+  *  - commutative merge of partial trees ([[canonicalMerge]]),
   *  - frozen read-only catalog broadcast to the match phase ([[search]]).
   */
 final class DrainTree(val depth: Int = 4, val st: Double = 0.4, val maxChild: Int = 100)
@@ -221,18 +221,6 @@ final class DrainTree(val depth: Int = 4, val st: Double = 0.4, val maxChild: In
     * broadcast match phase; returns null for Drain-unmatched residue (→ Spell).
     */
   def search(tokens: Array[String]): LogCluster = treeSearch(tokens)
-
-  /** In-place merge: re-insert every right-side cluster via the same search/match
-    * rules, in canonical (length, template-string) order. NOTE: this keeps the left
-    * tree's structure intact, so `a.mergeFrom(b)` and `b.mergeFrom(a)` need not be
-    * bit-identical — use [[canonicalMerge]] where commutativity matters (the
-    * partial-aggregation path, where Spark does not fix which side is "left").
-    */
-  def mergeFrom(other: DrainTree): DrainTree = {
-    val ordered = other.clusterList.sortBy(c => (c.template.length, c.templateStr))
-    ordered.foreach(mergeCluster)
-    this
-  }
 
   /** Commutative merge for partial aggregation: rebuild a FRESH tree from the union
     * of both cluster lists in canonical (length, template-string) order. Because the

@@ -1,12 +1,12 @@
 package graft.pipeline
 
 import graft.drain.{DrainTree, ParamExtractor}
-import graft.ingest.WebPagesGen
+import graft.ingest.{LogStyle, WebPagesGen}
 import graft.rex.RexCompiler
 import graft.spell.SpellModel
 import graft.table.ParquetManifestTable
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
@@ -24,29 +24,18 @@ import scala.collection.mutable
   * @param spellMineLimit cap on residue lines mined PER PARTITION by the distributed
   *   Spell residue mine (round 3 — was a global cap on a driver-side collect);
   *   overflow lines fall through to the self-template match path.
-  * @param mineSaltBuckets salt width for the FULL mine's (len, hash(url) % nb)
-  *   exchange — lifts the #distinct-lengths reducer ceiling; 1 = bit-exact
-  *   sequential per-length mine. 0 (the default) = AUTO: nb is derived from the
-  *   parsed-line count as ceil(lines / mineRowsPerBucket) clamped to [1, 256]
-  *   (round-4 fix — a static 8 still bottlenecked the full-mine exchange on ~8
-  *   reducers per hot length at a genuine 100× corpus; same cure as
-  *   `Ann.autoPlanes`). Derived from the CORPUS SIZE, never the physical
-  *   partition layout: nb shapes the bucket-merge tree, so a layout-derived nb
-  *   would make the catalog depend on partition count / cluster size and break
-  *   the north_rule's routed-row-equality bar between N and 4N executors.
-  *   The 256 ceiling bounds the per-length merge-tree FAN-IN, not driver cost
-  *   (round 6): the bucket partials of each length are folded DISTRIBUTED —
-  *   one shuffle keyed by `len`, the owning executor merges its ≤ nb trees in
-  *   ascending-bucket order — and the driver receives ONE tree per length, so
-  *   driver work is O(#lengths) at any nb. Beyond the clamp the full-mine
-  *   reducer ceiling returns at #lengths × 256; that is by design, not a scale
-  *   wall: at a genuine 100×-beyond-the-clamp corpus the documented scale path
-  *   is the SAMPLED mine (`mineSampleLimit` — templates saturate after a
-  *   bounded prefix per length; the match phase covers every line either way),
-  *   which bounds the exchange to O(limit × partitions) rows and is what the
-  *   bench profile runs. Ignored when mineSampleLimit bounds the exchange.
-  * @param mineRowsPerBucket auto-salt target rows per (length, bucket) reducer;
-  *   sized so one reducer's group stays comfortably in executor memory.
+  * @param mineRowsPerBucket target rows per (length, bucket) reducer of the FULL
+  *   mine's (len, hash(url) % nb) exchange, which lifts the #distinct-lengths
+  *   reducer ceiling: nb = ceil(parsed lines / mineRowsPerBucket) clamped to
+  *   [1, 256] (round 4; nb = 1 is the bit-exact sequential per-length mine).
+  *   Derived from the CORPUS SIZE, never the physical partition layout: nb
+  *   shapes the bucket-merge tree, so a layout-derived nb would make the catalog
+  *   depend on partition count and break routed-row equality between N and 4N
+  *   executors. The clamp bounds the per-length merge FAN-IN an executor folds
+  *   (round 6: the driver receives one tree per length at any nb); beyond it the
+  *   scale path is the SAMPLED mine (`mineSampleLimit`, always nb = 1), which
+  *   bounds the exchange to O(limit × partitions) rows. Sized so one reducer's
+  *   group stays comfortably in executor memory.
   */
 final case class PipelineConfig(
     logFormat: String,
@@ -57,17 +46,16 @@ final case class PipelineConfig(
     tau: Double = 0.5,
     mineSampleLimit: Option[Int] = None,
     spellMineLimit: Int = 100000,
-    saltBuckets: Int = 8,
-    mineSaltBuckets: Int = 0,
     mineRowsPerBucket: Int = 500000) {
   lazy val fmt: RexCompiler.CompiledFormat = RexCompiler.compile(logFormat)
 }
 
 object PipelineConfig {
-  def hdfs: PipelineConfig = {
-    val s = WebPagesGen.HdfsStyle
-    PipelineConfig(s.logFormat, s.rexes, st = s.st, depth = s.depth)
-  }
+  /** The dataset-style settings (log_format, rex, st, depth) of `style`. */
+  def forStyle(style: LogStyle): PipelineConfig =
+    PipelineConfig(style.logFormat, style.rexes, st = style.st, depth = style.depth)
+
+  def hdfs: PipelineConfig = forStyle(WebPagesGen.HdfsStyle)
 }
 
 /** Frozen match-phase state: the mined Drain tree (exact mining tree, paths intact)
@@ -103,8 +91,8 @@ final class MatchCatalog(val drain: DrainTree, val spell: SpellModel) extends Se
   *    grows, round 4) + `sortWithinPartitions` + `mapPartitions`, then fold the
   *    per-(length, bucket) trees canonically — DISTRIBUTED per length since
   *    round 6 (the driver receives one tree per length; bit-exact sequential
-  *    per length at mineSaltBuckets = 1). The catalog is invariant to partition
-  *    count — the keystone of the routed-row-equality parity bar.
+  *    per length at nb = 1). The catalog is invariant to partition count —
+  *    the keystone of the routed-row-equality parity bar.
   *
   *  - '''MATCH''' — the frozen tree is broadcast; per-line matching is a pure
   *    vectorized map (Drain tree walk, Spell fallback on residue, self-template last),
@@ -207,14 +195,13 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
     // global-first-`limit` cap semantics stay exact.
     val nb =
       if (cfgL.mineSampleLimit.isDefined) 1
-      else if (cfgL.mineSaltBuckets > 0) cfgL.mineSaltBuckets
       else {
-        // AUTO (mineSaltBuckets = 0): one cheap count over the (persisted)
-        // masked frame sizes the salt to the corpus — small corpora get nb = 1
-        // (bit-exact sequential per-length mine), a 100× corpus gets ~100×
-        // more buckets, so reducer parallelism scales with the data instead of
-        // plateauing at a constant (see the config scaladoc for why the
-        // derivation must be layout-independent). Counted over the physical
+        // one cheap count over the (persisted) masked frame sizes the salt
+        // to the corpus — small corpora get nb = 1 (bit-exact sequential
+        // per-length mine), a 100× corpus gets ~100× more buckets, so reducer
+        // parallelism scales with the data instead of plateauing at a
+        // constant (see the config scaladoc for why the derivation must be
+        // layout-independent). Counted over the physical
         // rows, not with Dataset.count(): that one job scans (and so fills)
         // the cache, where count()'s aggregate exchange costs three jobs.
         val parsedLines = masked.filter(col("parsed")).queryExecution.toRdd.count()
@@ -317,6 +304,15 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
       .foldLeft(new SpellModel(cfg.tau))((acc, m) => acc.canonicalMerge(m))
   }
 
+  /** The MINE stage: the frozen match catalog of a masked frame — the Drain
+    * mine, then the Spell mine over its residue. `masked` is read two to three
+    * times, so callers pass a persisted frame.
+    */
+  def mineCatalog(masked: DataFrame): MatchCatalog = {
+    val drain = mineDrain(masked)
+    new MatchCatalog(drain, mineSpellResidue(masked, drain))
+  }
+
   // ---- MATCH ---------------------------------------------------------------
 
   /** Broadcast-catalog match phase: adds `event_template`, `matched_by`,
@@ -359,33 +355,41 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
 
   // ---- route + aggregate ---------------------------------------------------
 
-  /** Salt column: spreads hot keys (template or domain) over `saltBuckets` reducers.
-    * north_rule wants skew handled explicitly; the salt is derived from the row key,
-    * not `rand()`, so retried tasks route identically (determinism under retry).
+  /** The ROUTE stage: `enriched` laid out for per-template-cluster sinks
+    * (`partitionBy("event_id")`, one partition dir per template = one logical
+    * sink), in the routed schema. Every routed sink — [[routedWrite]], the
+    * resumable runner's staged chunk, `graft.Bench` — writes this frame.
+    *
+    * RANGE (not hash) exchange on (event_id, salt): each writer task holds a
+    * contiguous slice, so it touches 1–2 sink dirs instead of all of them — file
+    * count stays O(tasks), not O(tasks × sinks), which keeps the commit cheap and
+    * the sink readable at 1000 executors. The salt splits a hot template's rows
+    * across adjacent tasks (explicit skew handling, north_rule); it is derived
+    * from the row key, not `rand()`, so retried tasks route identically.
+    *
+    * The partition count is pinned to the session's shuffle partitions (round
+    * 6): left unpinned, AQE coalesces the exchange by BYTES, and a small input
+    * becomes one task sequentially opening ~#templates parquet dirs (file-open
+    * latency, not byte throughput — measured ~0.5 s per resume chunk).
     */
-  def saltCol: Column = pmod(xxhash64(col("url"), col("line_no")), lit(cfg.saltBuckets))
+  def routed(enriched: DataFrame): DataFrame =
+    routedColumns(enriched.repartitionByRange(
+      enriched.sparkSession.sessionState.conf.numShufflePartitions,
+      col("event_id"), pmod(xxhash64(col("url"), col("line_no")), lit(RouteSaltBuckets))))
 
-  /** Fan-out: RANGE-repartition by (event_id, salt), then write per-template-cluster
-    * sinks via `partitionBy("event_id")` on the snapshot table (one partition dir per
-    * template cluster = one logical sink).
-    *
-    * Range (not hash) partitioning is deliberate: each writer task holds a contiguous
-    * (event_id, salt) slice, so it touches 1–2 sink dirs instead of all of them —
-    * file count stays O(tasks), not O(tasks × sinks), which keeps the commit cheap
-    * and the sink readable at 1000 executors. The salt still splits a hot template's
-    * rows across adjacent tasks (explicit skew handling, north_rule).
-    *
-    * The routed schema is NORMALIZED: `event_template` (a long string repeated per
-    * row) is dropped — it is the metadata of the `event_id` partition key and lives
-    * once per template in the templates sink. At 10^12 rows the string would
-    * dominate the route shuffle and the sink bytes for zero information.
+  /** The routed frame as a staged, not yet visible, tagged append to the
+    * manifest table `routedTable` (the resume checkpoint commits it last).
     */
-  def routedWrite(enriched: DataFrame, routedTable: String, tag: String): Long = {
-    val salted = enriched.repartitionByRange(col("event_id"), saltCol)
-    ParquetManifestTable.appendTagged(
-      salted.drop("masked", "parsed", "event_template"), routedTable, tag,
+  def stageRouted(enriched: DataFrame, routedTable: String,
+                  tag: String): ParquetManifestTable.StagedAppend =
+    ParquetManifestTable.stageTagged(routed(enriched), routedTable, tag,
       partitionBy = Seq("event_id"))
-  }
+
+  /** [[routed]] appended to the manifest table `routedTable` as one tagged
+    * snapshot; returns the snapshot id.
+    */
+  def routedWrite(enriched: DataFrame, routedTable: String, tag: String): Long =
+    stageRouted(enriched, routedTable, tag).commit()
 
   /** A1/S5 aggregate sink: per-template occurrence counts (and per-sink row counts —
     * the north_rule's parity quantity). Partial aggregation (map-side combine) is
@@ -398,6 +402,21 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
 }
 
 object LogPipeline {
+
+  /** Salt width of the route exchange: a hot template's rows spread over up to
+    * this many range slices.
+    */
+  private val RouteSaltBuckets = 8
+
+  /** The routed schema: the match output minus the mine inputs (`masked`,
+    * `parsed`) and `event_template`. The routed rows are NORMALIZED: the
+    * template string is the metadata of the `event_id` partition key and lives
+    * once per template in the templates sink — at 10^12 rows it would dominate
+    * the route shuffle and the sink bytes for zero information. The streaming
+    * routed sink writes the same schema.
+    */
+  def routedColumns(matched: DataFrame): DataFrame =
+    matched.drop("masked", "parsed", "event_template")
 
   def serialize(o: AnyRef): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
@@ -421,7 +440,10 @@ object LogPipeline {
     * owns unpersist (dropping the returned DataFrame releases it with the session).
     */
   def assignAll(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig)
-      : (MatchCatalog, DataFrame) = assign(spark, pages, cfg, narrow = false)
+      : (MatchCatalog, DataFrame) = {
+    val (catalog, assigned, _) = assign(spark, pages, cfg, narrow = false)
+    (catalog, assigned)
+  }
 
   /** [[assignAll]] for consumers that only read
     * (url, line_no, event_id, event_template, matched_by) — the evaluator /
@@ -435,26 +457,37 @@ object LogPipeline {
     * catalog — and with it every projected column — is provably identical.
     */
   def assignNarrow(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig)
-      : (MatchCatalog, DataFrame) = assign(spark, pages, cfg, narrow = true)
+      : (MatchCatalog, DataFrame) = {
+    val (catalog, assigned, _) = assign(spark, pages, cfg, narrow = true)
+    (catalog, assigned)
+  }
 
-  /** The one assign body behind [[assignAll]] and [[assignNarrow]]. `narrow`
+  /** [[assignNarrow]] for a caller that consumes the assignment eagerly: `use`
+    * runs on it, then the persisted intermediate is released.
+    */
+  def withAssignedNarrow[T](spark: SparkSession, pages: DataFrame, cfg: PipelineConfig)
+                           (use: DataFrame => T): T = {
+    val (_, assigned, masked) = assign(spark, pages, cfg, narrow = true)
+    try use(assigned) finally masked.unpersist()
+  }
+
+  /** The one assign body behind [[assignAll]] and [[assignNarrow]]: returns the
+    * catalog, the assignment and the persisted masked frame it reads. `narrow`
     * changes only the persisted columns and the match projection; the full path
     * adds no projection, so its plan is the plain `matchPhase` plan.
     */
   private def assign(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig,
-                     narrow: Boolean): (MatchCatalog, DataFrame) = {
+                     narrow: Boolean): (MatchCatalog, DataFrame, DataFrame) = {
     val p = new LogPipeline(cfg)
     val structured = p.withMasked(p.structure(p.explodeLines(pages)))
     val masked = (if (narrow) structured.select("url", "line_no", "parsed", "masked")
       else structured).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val drain = p.mineDrain(masked)
-    val spell = p.mineSpellResidue(masked, drain)
-    val catalog = new MatchCatalog(drain, spell)
+    val catalog = p.mineCatalog(masked)
     val bc = spark.sparkContext.broadcast(catalog)
     val assigned =
       if (narrow) p.matchCore(masked, bc)
         .select("url", "line_no", "event_id", "event_template", "matched_by")
       else p.matchPhase(masked, bc)
-    (catalog, assigned)
+    (catalog, assigned, masked)
   }
 }

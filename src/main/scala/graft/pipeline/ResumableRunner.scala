@@ -52,10 +52,8 @@ object ResumableRunner {
       val in = fs.open(catPath)
       try LogPipeline.deserialize[MatchCatalog](in.readAllBytes()) finally in.close()
     } else {
-      val masked = p.withMasked(p.structure(p.explodeLines(pages)))
-      val drain = p.mineDrain(masked)
-      val spell = p.mineSpellResidue(masked, drain)
-      val cat = new MatchCatalog(drain, spell)
+      val masked = p.withMasked(p.structure(p.explodeLines(pages))).persist()
+      val cat = try p.mineCatalog(masked) finally masked.unpersist()
       val tmp = new Path(outDir, "catalog.bin.tmp")
       val out = fs.create(tmp, true)
       try out.write(LogPipeline.serialize(cat)) finally out.close()
@@ -136,10 +134,10 @@ object ResumableRunner {
       // partition-pruned scan: only the chunk=c directory is read
       val chunkPages = spark.read.parquet(inputDir).filter(col("chunk") === c).drop("chunk")
       val masked = p.withMasked(p.structure(p.explodeLines(chunkPages))).persist()
+      // the match output feeds the routed write, the metrics and the template
+      // counts: materialized once instead of running the match UDF per consumer
+      val assigned = p.matchPhase(masked, bc).persist()
       try {
-        val assigned = p.matchPhase(masked, bc)
-        val enriched = p.enrich(assigned, dim)
-
         // COMMIT ORDER: routed data files are WRITTEN first (staged, invisible), the
         // control sinks (lineage, metrics) commit next, and the routed manifest swap
         // — the resume checkpoint marker — commits LAST. Any crash before the routed
@@ -147,19 +145,7 @@ object ResumableRunner {
         // (same-tag replace), so "chunk committed ⇒ lineage+metrics present" holds
         // through every crash window. Round 1 committed routed first: a crash in
         // between marked the chunk done with its lineage/metrics lost forever.
-        // numPartitions pinned to the session conf (round 6): without it AQE
-        // coalesces this exchange by BYTES — for a small chunk that is one
-        // task sequentially opening ~#templates parquet dirs (file-open
-        // latency, not byte throughput, measured ~0.5 s/chunk single-task).
-        // The pinned value is the same conf the implicit form started from,
-        // so cluster-scale behavior is unchanged; range partitioning still
-        // gives each writer a contiguous (event_id, salt) slice.
-        val salted = enriched.repartitionByRange(
-            spark.sessionState.conf.numShufflePartitions,
-            col("event_id"), p.saltCol)
-          .drop("masked", "parsed")
-        val staged = ParquetManifestTable.stageTagged(salted, routed, s"c$c",
-          partitionBy = Seq("event_id"))
+        val staged = p.stageRouted(p.enrich(assigned, dim), routed, s"c$c")
 
         // lineage: one row per physical output file of this chunk's staged snapshot
         val lineage = spark.read.parquet(staged.dataPath)
@@ -187,7 +173,10 @@ object ResumableRunner {
 
         ran += c
         if (failAfterChunk.contains(c)) throw new SimulatedCrash(c)
-      } finally masked.unpersist()
+      } finally {
+        assigned.unpersist()
+        masked.unpersist()
+      }
     }
 
     // final aggregate sink: rollup of the per-chunk partial counts (no full routed

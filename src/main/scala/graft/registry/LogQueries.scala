@@ -6,6 +6,7 @@ import graft.ingest.WebPagesGen
 import graft.pipeline.{LogPipeline, PipelineConfig}
 import graft.rex.RexCompiler
 import graft.registry.QuerySupport._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The log pipeline's queries: mine, match, route, evaluate, stream and resume
@@ -236,21 +237,20 @@ object LogQueries {
         // would, and every mine/score is per-invocation state (no globals).
         // Future.traverse preserves input order, so the output rows (and the
         // floor checks) are deterministic.
-        // assignNarrow (round 6): the scorer reads only (url, line_no, event_id),
-        // so none of the 16 mini-pipelines computes headers or parameter arrays
+        // narrow assignments (round 6): the scorer reads only (url, line_no,
+        // event_id), so no mini-pipeline computes headers or parameter arrays;
+        // each evaluation is eager, so its cached input is released right after
+        def score(pages: DataFrame, cfg: PipelineConfig,
+                  gtAt: (String, Int) => Option[Int]): Evaluator.Scores =
+          LogPipeline.withAssignedNarrow(s, pages, cfg)(asg =>
+            Evaluator.evaluate(Evaluator.withGtId(asg, gtAt)))
         val tasks: Seq[() => (String, Evaluator.Scores)] =
-          (() => {
-            val (_, asg) = LogPipeline.assignNarrow(s, WebPagesGen.pagesNarrow(s, n).toDF(),
-              PipelineConfig.hdfs)
-            ("hdfs", Evaluator.evaluate(Evaluator.withGtId(asg, WebPagesGen.templateIdAt)))
-          }) +: graft.ingest.LogStyles.all.map { spec => () => {
-            val cfg = PipelineConfig(spec.style.logFormat, spec.style.rexes,
-              st = spec.style.st, depth = spec.style.depth)
-            val (_, asg) = LogPipeline.assignNarrow(s,
-              graft.ingest.LogStyles.pagesFor(s, spec, n).toDF(), cfg)
-            (spec.style.name, Evaluator.evaluate(
-              Evaluator.withGtId(asg, graft.ingest.LogStyles.templateIdAt(spec, _, _))))
-          }}
+          (() => ("hdfs", score(WebPagesGen.pagesNarrow(s, n).toDF(), PipelineConfig.hdfs,
+            WebPagesGen.templateIdAt))) +:
+          graft.ingest.LogStyles.all.map { spec => () =>
+            (spec.style.name, score(graft.ingest.LogStyles.pagesFor(s, spec, n).toDF(),
+              PipelineConfig.forStyle(spec.style), graft.ingest.LogStyles.templateIdAt(spec, _, _)))
+          }
         val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
         val rows = try {
           implicit val ec: scala.concurrent.ExecutionContext =

@@ -130,11 +130,12 @@ object StreamingMatch {
     * with the SAME checkpointLocation resumes from the last committed micro-batch —
     * Spark's file-sink commit log (`_spark_metadata`) plays the role the snapshot
     * manifest plays on the batch path, so a crash never duplicates or loses a
-    * routed row. Same normalized schema as the batch routed sink (template string
-    * lives in the templates sink).
+    * routed row. Same schema as the batch routed sink
+    * ([[LogPipeline.routedColumns]]); no range exchange, which a stream cannot
+    * sample bounds for.
     */
   def routedSink(matched: DataFrame, outDir: String, checkpointDir: String) =
-    matched.drop("masked", "parsed", "event_template")
+    LogPipeline.routedColumns(matched)
       .writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)

@@ -4,28 +4,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
 
-/** Snapshot-capable table abstraction (SURVEY §0.3).
+/** Parquet + JSON-manifest snapshot table format (SURVEY §0.3).
   *
   * The north_star names Iceberg tables, but this image ships no Iceberg runtime jar
-  * (offline, `/opt/spark/jars` has none), so the in-sandbox implementation is
-  * [[ParquetManifestTable]]: partitioned parquet plus a tiny JSON snapshot manifest we
-  * write ourselves, giving real append/snapshot/time-travel-by-id semantics. An
-  * Iceberg implementation is a documented drop-in: `spark.read.format("iceberg")`
-  * with the `snapshot-id` read option, `df.writeTo(tbl).append()`, and
-  * `table.currentSnapshot().snapshotId()` — same trait surface.
-  */
-trait TableFormat {
-  /** Read the latest snapshot (empty DataFrame with no schema is an error — callers
-    * check [[currentSnapshotId]] first). */
-  def read(spark: SparkSession, table: String): DataFrame
-  /** Read a specific snapshot by id. */
-  def readSnapshot(spark: SparkSession, table: String, snapshotId: Long): DataFrame
-  /** Append a DataFrame as a new snapshot; returns the new snapshot id. */
-  def append(df: DataFrame, table: String): Long
-  def currentSnapshotId(spark: SparkSession, table: String): Option[Long]
-}
-
-/** Parquet + JSON-manifest table format.
+  * (offline, `/opt/spark/jars` has none), so this is partitioned parquet plus a tiny
+  * JSON snapshot manifest we write ourselves, giving real append/snapshot/
+  * time-travel-by-id semantics. Iceberg is a documented drop-in for the same
+  * surface: `spark.read.format("iceberg")` with the `snapshot-id` read option
+  * ([[read]], [[readSnapshot]]), `df.writeTo(tbl).append()` ([[append]]), and
+  * `table.currentSnapshot().snapshotId()` ([[currentSnapshotId]]).
   *
   * Layout: `table/data/s<id>/…parquet` per snapshot, `table/manifest.json` holding
   * `[{"id":1,"dirs":["s1"]},{"id":2,"dirs":["s1","s2"]}]` — each snapshot lists the
@@ -34,7 +21,7 @@ trait TableFormat {
   * write is atomic (write temp + rename), which is the same single-writer commit
   * protocol Iceberg's metadata pointer swap relies on.
   */
-object ParquetManifestTable extends TableFormat {
+object ParquetManifestTable {
 
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -78,10 +65,11 @@ object ParquetManifestTable extends TableFormat {
     f.rename(tmp, mp)
   }
 
-  override def currentSnapshotId(spark: SparkSession, table: String): Option[Long] =
+  def currentSnapshotId(spark: SparkSession, table: String): Option[Long] =
     loadManifest(spark, table).lastOption.map(_._1)
 
-  override def append(df: DataFrame, table: String): Long = appendTagged(df, table, "")
+  /** Append a DataFrame as a new snapshot; returns the new snapshot id. */
+  def append(df: DataFrame, table: String): Long = appendTagged(df, table, "")
 
   /** Append with an idempotency tag (e.g. a resume chunk id): the data dir is named
     * by the tag, and [[tags]] lets a resuming job see which tagged appends already
@@ -149,13 +137,15 @@ object ParquetManifestTable extends TableFormat {
 
   def dataDir(table: String, dir: String): String = new Path(table, s"data/$dir").toString
 
-  override def read(spark: SparkSession, table: String): DataFrame = {
+  /** Read the latest snapshot; a table with no snapshot is an error. */
+  def read(spark: SparkSession, table: String): DataFrame = {
     val snaps = loadManifest(spark, table)
     require(snaps.nonEmpty, s"table $table has no snapshots")
     readDirs(spark, table, snaps.last._2)
   }
 
-  override def readSnapshot(spark: SparkSession, table: String, snapshotId: Long): DataFrame = {
+  /** Read a specific snapshot by id. */
+  def readSnapshot(spark: SparkSession, table: String, snapshotId: Long): DataFrame = {
     val snaps = loadManifest(spark, table)
     val snap = snaps.find(_._1 == snapshotId)
       .getOrElse(throw new IllegalArgumentException(s"no snapshot $snapshotId in $table"))

@@ -17,8 +17,7 @@ class EvalCsvSpec extends SparkSuite {
     val styles = Seq(("hdfs", None), ("apache", Some(LogStyles.Apache)))
 
     val scores = styles.map { case (name, spec) =>
-      val cfg = spec.map(sp => PipelineConfig(sp.style.logFormat, sp.style.rexes,
-        st = sp.style.st, depth = sp.style.depth)).getOrElse(PipelineConfig.hdfs)
+      val cfg = spec.map(sp => PipelineConfig.forStyle(sp.style)).getOrElse(PipelineConfig.hdfs)
       val pages = spec.map(sp => LogStyles.pagesFor(spark, sp, 80).toDF())
         .getOrElse(WebPagesGen.pages(spark, 80).toDF())
       val gt = spec.map(sp => GroundTruth.forStyle(spark, sp, 80).toDF())

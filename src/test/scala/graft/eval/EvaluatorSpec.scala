@@ -114,8 +114,7 @@ class EvaluatorSpec extends SparkSuite {
   for (spec <- LogStyles.all) {
     test(s"${spec.style.name} 150-page assignment: identical scores, " +
         "templateIdAt == joined groundTruthFor") {
-      val cfg = PipelineConfig(spec.style.logFormat, spec.style.rexes,
-        st = spec.style.st, depth = spec.style.depth)
+      val cfg = PipelineConfig.forStyle(spec.style)
       val (_, asg) = LogPipeline.assignNarrow(spark,
         LogStyles.pagesFor(spark, spec, StylePages).toDF(), cfg)
       checkAssignment(asg, GroundTruth.forStyle(spark, spec, StylePages).toDF(),

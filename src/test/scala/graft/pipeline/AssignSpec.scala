@@ -43,8 +43,7 @@ class AssignSpec extends SparkSuite {
 
   test(s"${LogStyles.Apache.style.name} 150 pages: assignNarrow == assignAll projected, " +
       "same catalog") {
-    val s = LogStyles.Apache.style
     checkFold(LogStyles.pagesFor(spark, LogStyles.Apache, Pages).toDF(),
-      PipelineConfig(s.logFormat, s.rexes, st = s.st, depth = s.depth))
+      PipelineConfig.forStyle(LogStyles.Apache.style))
   }
 }

@@ -17,8 +17,7 @@ class MultiStyleSpec extends SparkSuite {
   private val N = 120L
 
   for (spec <- LogStyles.all) {
-    val cfg = PipelineConfig(spec.style.logFormat, spec.style.rexes,
-      st = spec.style.st, depth = spec.style.depth)
+    val cfg = PipelineConfig.forStyle(spec.style)
 
     test(s"${spec.style.name}: structuring parses every line") {
       val p = new LogPipeline(cfg)

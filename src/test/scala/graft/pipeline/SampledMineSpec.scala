@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.SparkSuite
 import graft.ingest.WebPagesGen
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.functions._
 
 /** The scale-path knob: `mineSampleLimit` bounds lines mined per length group
@@ -51,8 +52,7 @@ class SampledMineSpec extends SparkSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       p.mineDrain(masked)
-      // listener events are async; give the bus a moment to drain
-      Thread.sleep(2000)
+      ListenerBusDrain(spark.sparkContext) // listener events are async
     } finally spark.sparkContext.removeSparkListener(listener)
     masked.unpersist()
     // generous structural bound: 2 partitions × 20/len-group × ~16 groups = 640 « 23k
@@ -87,7 +87,7 @@ class SampledMineSpec extends SparkSuite {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       val tree = try {
         val t = new LogPipeline(cfg).mineDrain(maskedAllSameLen)
-        Thread.sleep(2000) // listener bus is async
+        ListenerBusDrain(spark.sparkContext) // listener events are async
         t
       } finally {
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -95,17 +95,16 @@ class SampledMineSpec extends SparkSuite {
       }
       (recs.toArray(Array.empty[java.lang.Long]).map(_.toLong).toSeq, tree)
     }
-    // AUTO derivation under test (round 4): mineSaltBuckets stays 0 and the
-    // rows-per-bucket target is shrunk so this 4000-line corpus derives nb = 8 —
-    // the listener bound below holds on the full mine at the DERIVED salt width
+    // the rows-per-bucket target is shrunk so this 4000-line corpus derives
+    // nb = 8: the listener bound below holds at the DERIVED salt width
     val (salted, saltedTree) = reduceTaskRecords(
       PipelineConfig.hdfs.copy(mineRowsPerBucket = 500))
     assert(salted.count(_ > 0) >= 2,
       s"salted mine must spread the hot length over several reducers: $salted")
     assert(salted.max < salted.sum,
       s"no single reducer may see the whole length group: $salted")
-    val (unsalted, unsaltedTree) = reduceTaskRecords(
-      PipelineConfig.hdfs.copy(mineSaltBuckets = 1))
+    // the default target (500,000 rows per bucket) derives nb = 1 here
+    val (unsalted, unsaltedTree) = reduceTaskRecords(PipelineConfig.hdfs)
     assert(unsalted.count(_ > 0) == 1, // the ceiling this test exists to document
       s"unsalted mine funnels through one reducer: $unsalted")
     // quality/determinism: bucketed merge reproduces the unsalted catalog here
