@@ -2,7 +2,7 @@ package graft
 
 import graft.ingest.WebPagesGen
 import graft.pipeline.{LogPipeline, PipelineConfig}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -96,6 +96,25 @@ object Bench {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Seconds to run one registry query into the noop sink, and its error if it
+    * failed. Only a plan the noop sink rejects is retried (with `count()`); any
+    * other failure is reported, never timed as if the query had run.
+    */
+  private[graft] def timeQuery(spark: SparkSession, sfDir: String,
+                               fn: (SparkSession, String) => DataFrame)
+      : (Double, Option[Exception]) = {
+    val t0 = System.nanoTime()
+    val error =
+      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None }
+      catch {
+        case _: UnsupportedOperationException =>
+          try { fn(spark, sfDir).count(); None }
+          catch { case e: Exception => Some(e) }
+        case e: Exception => Some(e)
+      }
+    ((System.nanoTime() - t0) / 1e9, error)
   }
 
   private def localDir: String = TempDirs.root.resolve("graft_bench_local").toString
@@ -300,20 +319,13 @@ object Bench {
     // ---- per-query timings at full parallelism (driver contract) -------------
     spark = session(cpus)
     val queriesToRun = if (sys.env.contains("SPARK_GRAFT_SKIP_QUERIES"))
-      Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
+      Map.empty[String, (SparkSession, String) => DataFrame]
     else SparkEntry.queries
     val failed = ArrayBuffer[String]()
     val results = queriesToRun.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
-      catch {
-        case _: Throwable =>
-          // some sinks reject specific plans; a count still times the computation —
-          // but a second failure is a REAL failure and is reported, not swallowed
-          try fn(spark, sfDir).count()
-          catch { case _: Throwable => failed += name }
-      }
-      name -> (System.nanoTime() - t0) / 1e9
+      val (sec, error) = timeQuery(spark, sfDir, fn)
+      if (error.isDefined) failed += name
+      name -> sec
     }
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
     val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")

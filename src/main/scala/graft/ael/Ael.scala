@@ -92,9 +92,9 @@ object Ael {
       .agg(sum(col("occ")).as("occurrences"))
   }
 
-  /** Mine the reconciled catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String,
-                    maxReconcile: Int = 20): DataFrame = {
+  /** Mine the reconciled catalog: (event_id, event_template, occurrences). */
+  def mineCatalog(lines: DataFrame, lineCol: String,
+                  maxReconcile: Int = 20): DataFrame = {
     // stages 1–3: anonymize the distinct lines' tokens, bin, categorize
     var cat = MinerOutput.distinctLines(lines, lineCol)
       .select(anonymize(col("toks")).as("pieces"), col("cnt"))
@@ -116,12 +116,7 @@ object Ael {
     if (!converged)
       throw new IllegalStateException(
         s"AEL reconcile did not reach a fixpoint in $maxReconcile rounds")
-    cat.groupBy(concat_ws(" ", col("pieces")).as("event_template"))
-      .agg(sum(col("occurrences")).as("occurrences"))
+    MinerOutput.withEventId(cat.groupBy(concat_ws(" ", col("pieces")).as("event_template"))
+      .agg(sum(col("occurrences")).as("occurrences")))
   }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String,
-                  maxReconcile: Int = 20): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol, maxReconcile))
 }

@@ -38,17 +38,15 @@ import org.apache.spark.sql.functions._
   */
 object Brain {
 
-  /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame =
-    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
-      // The per-line joins below key on pid = xxhash64(p), not the line
+  /** Mine the template catalog: (event_id, event_template, occurrences). */
+  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
+    MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { base =>
+      // The per-line joins below key on the pattern's pid, not the line
       // STRING (round 6): the modal/LCP stages shuffle one row per (line,
       // position), each formerly carrying the full raw line as its key — 8-byte
       // keys shuffle and compare for a fraction of that (guide §2.3 "narrower
-      // types"). Collision contract as LogMine's pattern lid: ~n²/2⁶⁴.
-      val base = dl.withColumn("pid", xxhash64(col("p")))
-        .withColumn("len", size(col("toks")))
-
+      // types"). A pid collision fails the mine instead of merging two lines.
+      MinerOutput.requireDistinctPids(base)
       val pe = base.select(col("pid"), col("cnt"), col("len"),
         posexplode(col("toks")).as(Seq("pos", "tok")))
       // frequency of each (len, pos, word), weighted by line multiplicity
@@ -77,12 +75,6 @@ object Brain {
         .withColumn("ckey", ckeyU(col("len"),
           col("arr.tok"), col("arr.f")))
 
-      MinerOutput.agreementTemplates(
-        withCluster.select(col("ckey"), col("cnt").as("w"),
-          posexplode(col("arr.tok")).as(Seq("pos", "tok"))))
-    }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol))
+      MinerOutput.agreementTemplates(withCluster, col("ckey"), col("cnt"), col("arr.tok"))
+    })
 }

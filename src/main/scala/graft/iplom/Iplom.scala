@@ -48,11 +48,11 @@ object Iplom {
     *                    partitions whose single-valued-position ratio is >= ct are
     *                    already "good" and skip the bijection split; ct <= 0
     *                    disables step 3 entirely.
-    * @return (event_template, occurrences), identical templates from different
-    *         partitions merged, deterministically ordered by the caller.
+    * @return (event_id, event_template, occurrences), identical templates from
+    *         different partitions merged, deterministically ordered by the caller.
     */
-  def mineTemplates(lines: DataFrame, lineCol: String, refinements: Int = 1,
-                    ct: Double = 0.35): DataFrame = {
+  def mineCatalog(lines: DataFrame, lineCol: String, refinements: Int = 1,
+                  ct: Double = 0.35): DataFrame = {
     // step 1: tokenize; the initial partition key is the token count
     val toks = MinerOutput.lineTokens(lines, lineCol)
       .select(col("toks"), size(col("toks")).as("len"))
@@ -132,13 +132,7 @@ object Iplom {
 
     // step 4: per partition, a position is constant iff it has exactly one
     // distinct token — the shared agreement assembly (weight 1 per raw line)
-    MinerOutput.agreementTemplates(
-      mapped.select(col("pkey").as("ckey"), lit(1L).as("w"),
-        posexplode(col("toks")).as(Seq("pos", "tok"))))
+    MinerOutput.withEventId(
+      MinerOutput.agreementTemplates(mapped, col("pkey"), lit(1L), col("toks")))
   }
-
-  /** [[mineTemplates]] plus the md5-prefix event id used across the engine. */
-  def mineCatalog(lines: DataFrame, lineCol: String, refinements: Int = 1,
-                  ct: Double = 0.35): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol, refinements, ct))
 }

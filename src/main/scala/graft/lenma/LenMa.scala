@@ -17,14 +17,14 @@ import org.apache.spark.sql.functions._
   *
   * Two deterministic, order-independent instances ship:
   *
-  *  - [[mineTemplates]] — similarity threshold 1.0 WITH norm equality, i.e.
+  *  - [[mineCatalog]] — similarity threshold 1.0 WITH norm equality, i.e.
   *    clusters are exact length-vector groups (cosine 1.0 alone admits
   *    parallel-but-scaled integer vectors; requiring equal norms makes the
   *    relation transitive, so the result is a partition — no first-match-wins
   *    order dependence). One groupBy on the length-vector key (map-side
   *    combinable) + one per-(cluster, pos) agreement agg.
   *
-  *  - [[mineTemplatesSim]] (round 4) — the reference's TUNABLE sub-1.0 cosine:
+  *  - [[mineCatalogSim]] (round 4) — the reference's TUNABLE sub-1.0 cosine:
   *    clusters are connected components of {same token count ∧ length vectors
   *    differ in ≤ ⌊maxMismatchFrac·len⌋ positions ∧ cosine ≥ sim} (transitive
   *    closure replaces the reference's order-dependent first-match-wins scan,
@@ -45,46 +45,31 @@ import org.apache.spark.sql.functions._
   */
 object LenMa {
 
-  /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame = {
+  /** Mine the template catalog: (event_id, event_template, occurrences). */
+  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame = {
     val toks = MinerOutput.lineTokens(lines, lineCol)
       .withColumn("lkey", concat_ws(",",
         transform(col("toks"), t => length(t).cast("string"))))
-
-    MinerOutput.agreementTemplates(
-      toks.select(col("lkey").as("ckey"), lit(1L).as("w"),
-        posexplode(col("toks")).as(Seq("pos", "tok"))))
+    MinerOutput.withEventId(
+      MinerOutput.agreementTemplates(toks, col("lkey"), lit(1L), col("toks")))
   }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 
   /** The sub-1.0 cosine instance (see class doc): clusters = connected
     * components of {equal token count ∧ ≤ ⌊maxMismatchFrac·len⌋ differing
     * length-vector positions ∧ cosine(lv_a, lv_b) ≥ sim}.
     */
-  def mineTemplatesSim(lines: DataFrame, lineCol: String, sim: Double,
-                       maxMismatchFrac: Double = 0.5): DataFrame =
-    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+  def mineCatalogSim(lines: DataFrame, lineCol: String, sim: Double,
+                     maxMismatchFrac: Double = 0.5): DataFrame =
+    MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+      MinerOutput.requireDistinctPids(dl)
       val patterns = dl
-        .withColumn("pid", xxhash64(col("p")))
         .withColumn("lv", transform(col("toks"), t => length(t).cast("long")))
-        .withColumn("len", size(col("toks")))
 
       // exact pigeonhole banding over the LENGTH VECTOR (LogMine's trick): with
       // nb = floor(frac·len)+1 contiguous bands, a pair differing in ≤ floor(frac·len)
       // positions leaves at least one band untouched
-      val banded = Pigeonhole.bandHashes(
-          patterns.withColumn("nb", (floor(col("len") * maxMismatchFrac) + 1).cast("int")),
-          "len", "nb", "lv")(slice => concat_ws(",", transform(slice, x => x.cast("string"))))
-        .select(col("len"), col("band"), col("bh"), col("pid"))
-
-      val ca = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
-      val cb = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_b"))
-      val cand = ca.join(cb, Seq("len", "band", "bh"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
+      val cand = Pigeonhole.sameLenPairs(patterns, "lv", maxMismatchFrac)(
+        slice => concat_ws(",", transform(slice, x => x.cast("string"))))
 
       // verify: mismatch bound + cosine over exact long moments (IEEE-identical
       // to the DuckDB oracle's expression)
@@ -103,18 +88,7 @@ object LenMa {
         .filter(col("dot") / (sqrt(sumSq(col("lv_a"))) * sqrt(sumSq(col("lv_b")))) >= sim)
         .select("id_a", "id_b")
 
-      val labeled = graft.dedup.Dedup.connectedComponents(pairs)
-      val withCluster = patterns
-        .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
-        .withColumn("cluster", coalesce(col("component"), col("pid")))
-      MinerOutput.agreementTemplates(
-        withCluster.select(col("cluster").as("ckey"), col("cnt").as("w"),
-          posexplode(col("toks")).as(Seq("pos", "tok"))))
-    }
-
-  /** [[mineTemplatesSim]] plus the engine's md5-prefix event id. */
-  def mineCatalogSim(lines: DataFrame, lineCol: String, sim: Double,
-                     maxMismatchFrac: Double = 0.5): DataFrame =
-    MinerOutput.withEventId(
-      mineTemplatesSim(lines, lineCol, sim, maxMismatchFrac))
+      MinerOutput.agreementTemplates(MinerOutput.clusters(patterns, pairs),
+        col("cluster"), col("cnt"), col("toks"))
+    })
 }

@@ -32,12 +32,12 @@ object Lfa {
 
   private val Wildcard = "<*>"
 
-  /** Mine the template catalog: (event_template, occurrences). Every line lands in
+  /** Mine the template catalog: (event_id, event_template, occurrences). Every line lands in
     * exactly one template (LFA has no outlier stream — rare lines simply become
     * heavily-wildcarded templates with small occurrence counts).
     */
-  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame =
-    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
+    MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { dl =>
       // Round-6 shape: pass 2 — the largest-relative-gap split — is a PURE
       // FUNCTION of a line's token frequencies, and duplicate lines only scale
       // counts, so the mine runs over DISTINCT lines with multiplicities: one
@@ -93,9 +93,5 @@ object Lfa {
           col("cnt"))
         .groupBy("event_template")
         .agg(sum(col("cnt")).as("occurrences"))
-    }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol))
+    })
 }

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *     sums of the histogram instead of Lloyd iteration: deterministic, no seed, no iteration
   *     count. Ties on SSE resolve to the SMALLER boundary (connect less).
   *     Clusters = connected components of the ≤threshold relation
-  *     ([[graft.dedup.Dedup.connectedComponents]]).
+  *     ([[graft.miner.MinerOutput.clusters]]).
   *  3. PRIVATE-CONTENT SPLITTING to fixpoint: within a cluster, a token column
   *     is splittable iff every member has the position and its distinct-value
   *     count is in (1, splitThreshold]; each round splits every splittable
@@ -102,15 +102,15 @@ object Lke {
     dp(m)(n)
   }
 
-  /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String, splitThreshold: Int = 4,
-                    maxPatterns: Int = 2000, maxRounds: Int = 10): DataFrame =
-    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
-      val patterns = dl.withColumn("pid", xxhash64(col("p")))
+  /** Mine the template catalog: (event_id, event_template, occurrences). */
+  def mineCatalog(lines: DataFrame, lineCol: String, splitThreshold: Int = 4,
+                  maxPatterns: Int = 2000, maxRounds: Int = 10): DataFrame =
+    MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { patterns =>
       val n = patterns.count()
       require(n <= maxPatterns,
-        s"Lke.mineTemplates: $n distinct lines exceeds maxPatterns=$maxPatterns; " +
+        s"Lke.mineCatalog: $n distinct lines exceeds maxPatterns=$maxPatterns; " +
           "the pairwise distance graph would be quadratic — sample or raise the cap explicitly")
+      MinerOutput.requireDistinctPids(patterns)
 
       val a = patterns.select(col("pid").as("id_a"), col("toks").as("t_a"))
       val b = patterns.select(col("pid").as("id_b"), col("toks").as("t_b"))
@@ -166,13 +166,11 @@ object Lke {
         case Some(t) => pairs.filter(col("dist") <= t).select("id_a", "id_b")
         case None => pairs.select("id_a", "id_b")
       }
-      val labeled = graft.dedup.Dedup.connectedComponents(edges)
-      pairs.unpersist()
-      var cur = patterns
-        .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
+      var cur = MinerOutput.clusters(patterns, edges)
         .select(col("pid"), col("cnt"), col("toks"),
-          coalesce(col("component"), col("pid")).cast("string").as("cluster"))
+          col("cluster").cast("string").as("cluster"))
         .localCheckpoint(true)
+      pairs.unpersist()
 
       // private-content splitting to fixpoint; localCheckpoint per round truncates
       // the growing iterative plan (same guard as connectedComponents)
@@ -214,11 +212,5 @@ object Lke {
           .getField("piece")).as("event_template"))
         .groupBy("event_template")
         .agg(sum("occ").as("occurrences"))
-    }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String, splitThreshold: Int = 4,
-                  maxPatterns: Int = 2000): DataFrame =
-    MinerOutput.withEventId(
-      mineTemplates(lines, lineCol, splitThreshold, maxPatterns))
+    })
 }

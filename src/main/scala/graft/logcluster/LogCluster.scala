@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object LogCluster {
 
-  /** Mine: (event_template, occurrences) with occurrences ≥ support.
+  /** Mine: (event_id, event_template, occurrences) with occurrences ≥ support.
     *
     * Round-6 shape: everything per-line is a PURE FUNCTION of the line text
     * (cluster key = ordered frequent words; gap lengths per slot), and
@@ -47,8 +47,8 @@ object LogCluster {
     * broadcast — bounded by Σlines/support, the same bound that let the old
     * per-token join broadcast it.
     */
-  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+  def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
+    MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { dl =>
       // support = lines containing the word, counted once per line
       val freqWords = dl
         .select(col("cnt"), explode(array_distinct(col("toks"))).as("tok"))
@@ -114,9 +114,5 @@ object LogCluster {
 
       members.join(assembled, Seq("ckey"))
         .select(col("event_template"), col("occurrences"))
-    }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
+    })
 }

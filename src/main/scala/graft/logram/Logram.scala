@@ -41,15 +41,15 @@ object Logram {
   val Bos = "\u0001"
   val Eos = "\u0002"
 
-  /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
-      // Joins below key on pid = xxhash64(p), not the line STRING (round 6):
+  /** Mine the template catalog: (event_id, event_template, occurrences). */
+  def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
+    MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { base =>
+      // Joins below key on the pattern's pid, not the line STRING (round 6):
       // the vote/judge joins each shuffled ~4 rows per line keyed by the full
       // raw line — 8-byte keys shuffle and compare for a fraction of that
-      // (guide §2.3 "narrower types"). Collision contract is the same as
-      // LogMine's pattern lid: ~n²/2⁶⁴, negligible at mine-phase inputs.
-      val base = dl.withColumn("pid", xxhash64(col("p")))
+      // (guide §2.3 "narrower types"). A pid collision fails the mine instead
+      // of merging two lines.
+      MinerOutput.requireDistinctPids(base)
       // boundary-extended bigrams: ext = BOS +: toks :+ EOS; bigram k =
       // (ext(k), ext(k+1)), k = 0..len — bigram k covers token k−1 (right
       // element) and token k (left element)
@@ -82,9 +82,5 @@ object Logram {
           .getField("piece")).as("event_template"))
         .groupBy("event_template")
         .agg(sum("cnt").as("occurrences"))
-    }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
+    })
 }

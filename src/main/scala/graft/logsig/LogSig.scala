@@ -45,10 +45,10 @@ object LogSig {
     */
   private val Sep = "\u0001"
 
-  /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String, k: Int = 3,
-                    maxIters: Int = 10, init: Option[Column] = None): DataFrame =
-    MinerOutput.withDistinctLines(lines, lineCol) { patterns =>
+  /** Mine the template catalog: (event_id, event_template, occurrences). */
+  def mineCatalog(lines: DataFrame, lineCol: String, k: Int = 3,
+                  maxIters: Int = 10, init: Option[Column] = None): DataFrame =
+    MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { patterns =>
       // distinct ordered term pairs per message (same-value pair counted once)
       val pe = patterns.select(col("p"), posexplode(col("toks")).as(Seq("pos", "tok")))
       val msgPairs = pe.as("a").join(pe.as("b"), col("a.p") === col("b.p") &&
@@ -102,9 +102,5 @@ object LogSig {
           .getField("piece")).as("event_template"))
         .groupBy("event_template")
         .agg(sum("sz").as("occurrences"))
-    }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String, k: Int = 3): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol, k))
+    })
 }

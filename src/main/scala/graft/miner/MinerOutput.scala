@@ -3,12 +3,14 @@ package graft.miner
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The DataFrame miners' one input stage and shared output shapes: every miner
-  * reads its lines through [[lineTokens]] (IPLoM and exact LenMa, per raw
-  * line), [[distinctLines]] or [[withDistinctLines]] (everyone else), and emits
-  * the engine's md5-prefix event id through [[withEventId]]. A change to
-  * tokenization, to the id or to the cache lifetime of the distinct lines is a
-  * single edit.
+/** The DataFrame miners' one contract, input and output: every miner reads its
+  * lines through [[lineTokens]] (IPLoM and exact LenMa, per raw line),
+  * [[distinctLines]] or [[withDistinctLines]] (everyone else), clusters pattern
+  * pairs through [[clusters]], assembles agreement templates through
+  * [[agreementTemplates]] and emits the engine's md5-prefix event id through
+  * [[withEventId]]. A change to tokenization, to the pattern id, to the cluster
+  * step, to the id or to the cache lifetime of the distinct lines is a single
+  * edit.
   */
 object MinerOutput {
 
@@ -26,12 +28,15 @@ object MinerOutput {
   def lineTokens(lines: DataFrame, lineCol: String): DataFrame =
     lines.select(tokens(col(lineCol)).as("toks"))
 
-  /** Distinct non-blank lines with multiplicities: `(p, cnt, toks)`, where
-    * `toks` are the line's [[tokens]] and `p` is those tokens joined by single
-    * spaces — so code that reads `p` (a first character, a re-split on ' ', a
-    * sort key) sees exactly `toks`, and lines that differ only in whitespace
-    * are one pattern. One map-side-combinable aggregation keyed by `p`;
-    * `toks` is re-split from `p` per distinct line, after the shuffle.
+  /** The pattern table: distinct non-blank lines with multiplicities,
+    * `(p, cnt, toks, pid, len)`. `toks` are the line's [[tokens]] and `p` is
+    * those tokens joined by single spaces — so code that reads `p` (a first
+    * character, a re-split on ' ', a sort key) sees exactly `toks`, and lines
+    * that differ only in whitespace are one pattern. `pid = xxhash64(p)` is the
+    * 8-byte key the pid-keyed miners join and shuffle on instead of the line
+    * string (they check it with [[requireDistinctPids]]); `len` is the token
+    * count. One map-side-combinable aggregation keyed by `p`; the other columns
+    * are derived per distinct line, after the shuffle.
     */
   def distinctLines(lines: DataFrame, lineCol: String): DataFrame =
     lines
@@ -39,6 +44,8 @@ object MinerOutput {
       .filter(col("p") =!= "")
       .groupBy("p").agg(count(lit(1)).as("cnt"))
       .withColumn("toks", split(col("p"), " "))
+      .withColumn("pid", xxhash64(col("p")))
+      .withColumn("len", size(col("toks")))
 
   /** Runs `mine` over the persisted [[distinctLines]] (a miner that reads
     * them more than once scans and dedups the corpus once) and returns its
@@ -52,6 +59,35 @@ object MinerOutput {
     finally dl.unpersist()
   }
 
+  /** Fails when two patterns of `patterns` (one row per pattern, columns `pid`
+    * and `p`, as [[distinctLines]] gives) share a `pid`: a miner keyed on pid
+    * would merge them silently. One job, a map-side-combined count per pid; the
+    * patterns are read again only to name a collision.
+    */
+  def requireDistinctPids(patterns: DataFrame): Unit = {
+    val shared = patterns.select("pid").queryExecution.toRdd
+      .map(r => (r.getLong(0), 1L)).reduceByKey(_ + _)
+      .filter(_._2 > 1).keys.collect()
+    shared.headOption.foreach { pid =>
+      val named = patterns.filter(col("pid") === pid).select("p").collect()
+        .map(_.getString(0)).sorted
+      throw new IllegalStateException(
+        s"pid $pid is shared by distinct patterns ${named.map("\"" + _ + "\"").mkString(" and ")}")
+    }
+  }
+
+  /** `patterns` (keyed by `pid`) with `cluster`: the smallest pid of its
+    * connected component in the pair graph `pairs` (`id_a`, `id_b` over pid;
+    * [[graft.dedup.Dedup.connectedComponents]]), or its own pid when it is in no
+    * pair.
+    */
+  def clusters(patterns: DataFrame, pairs: DataFrame): DataFrame = {
+    val labeled = graft.dedup.Dedup.connectedComponents(pairs)
+    patterns
+      .join(labeled.withColumnRenamed("id", "pid"), Seq("pid"), "left")
+      .withColumn("cluster", coalesce(col("component"), col("pid")))
+  }
+
   /** `(event_template, occurrences)` → the engine's catalog projection with
     * `event_id = substr(md5(template), 1, 8)` (F5, same as [[graft.drain.DrainTree.eventId]]).
     */
@@ -60,15 +96,19 @@ object MinerOutput {
       col("event_template"), col("occurrences"))
 
   /** Shared template assembly for the agreement-based miners (IPLoM step 4,
-    * LenMa, LogMine): `rows` carries one row per (cluster member, position) as
-    * `(ckey, w, pos, tok)` with weight `w` (1 for raw lines, the pattern
-    * multiplicity for deduped patterns). A position is a constant iff every
-    * member agrees (min == max detects it without a per-cell count_distinct);
-    * occurrences = Σw, read off at pos 0 (every member contributes exactly one
-    * row there); identical templates from different clusters merge their counts.
+    * LenMa, LogMine, ULP, SHISO, Brain): `clustered` carries one row per
+    * cluster member, its cluster `key`, weight (1 for raw lines, the pattern
+    * multiplicity for deduped patterns) and tokens `toks`. A position is a
+    * constant iff every member agrees (min == max detects it without a per-cell
+    * count_distinct); occurrences = Σ weight, read off at pos 0 (every member
+    * contributes exactly one row there); identical templates from different
+    * clusters merge their counts.
     */
-  def agreementTemplates(rows: DataFrame): DataFrame =
-    rows.groupBy("ckey", "pos")
+  def agreementTemplates(clustered: DataFrame, key: Column, weight: Column,
+                         toks: Column): DataFrame =
+    clustered
+      .select(key.as("ckey"), weight.as("w"), posexplode(toks).as(Seq("pos", "tok")))
+      .groupBy("ckey", "pos")
       .agg(min(col("tok")).as("lo"), max(col("tok")).as("hi"), sum(col("w")).as("n"))
       .withColumn("piece",
         when(col("lo") === col("hi"), col("lo")).otherwise(lit("<*>")))

@@ -32,4 +32,22 @@ object Pigeonhole {
       .withColumn("bh", xxhash64(col("band"),
         render(slice(col(vec), start, col("bend") - col("bstart")))))
   }
+
+  /** Candidate pairs `(id_a, id_b)`, id_a < id_b, of equal-length `patterns`
+    * (columns `pid`, `len`, vector `vec`) that may differ in at most
+    * ⌊frac·len⌋ positions: the band self-join at nb = ⌊frac·len⌋ + 1 bands, so
+    * every such pair agrees on at least one whole band.
+    */
+  def sameLenPairs(patterns: DataFrame, vec: String, frac: Double)(
+      render: Column => Column): DataFrame = {
+    val banded = bandHashes(
+        patterns.withColumn("nb", (floor(col("len") * frac) + 1).cast("int")),
+        "len", "nb", vec)(render)
+      .select(col("len"), col("band"), col("bh"), col("pid"))
+    val a = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_a"))
+    val b = banded.select(col("len"), col("band"), col("bh"), col("pid").as("id_b"))
+    a.join(b, Seq("len", "band", "bh"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
+  }
 }

@@ -51,29 +51,26 @@ object Molfi {
 
   private val Wildcard = "<*>"
 
-  /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String, pop: Int = 16,
-                    gens: Int = 20, maxGroup: Int = 2000): DataFrame = {
+  /** Mine the template catalog: (event_id, event_template, occurrences). */
+  def mineCatalog(lines: DataFrame, lineCol: String, pop: Int = 16,
+                  gens: Int = 20, maxGroup: Int = 2000): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
-    MinerOutput.distinctLines(lines, lineCol)
-      .as[(String, Long, Seq[String])] // (p, cnt, toks)
+    val templates = MinerOutput.distinctLines(lines, lineCol)
+      .select("p", "cnt", "toks").as[(String, Long, Seq[String])]
       .groupByKey(_._3.length)
       .flatMapGroups { (len, it) =>
         val msgs = it.toVector.sortBy(_._1)
           .map { case (_, w, toks) => (toks.toVector, w) }
         require(msgs.size <= maxGroup,
-          s"Molfi.mineTemplates: length group $len has ${msgs.size} distinct " +
+          s"Molfi.mineCatalog: length group $len has ${msgs.size} distinct " +
             s"messages > maxGroup=$maxGroup; sample or raise the cap explicitly")
         search(len, msgs, pop, gens).iterator
       }
       .toDF("event_template", "occurrences")
       .groupBy("event_template").agg(sum("occurrences").as("occurrences"))
+    MinerOutput.withEventId(templates)
   }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 
   // ---- per-length-group NSGA-II (sequential by design; see scaladoc) --------
 

@@ -42,8 +42,6 @@ final case class PipelineConfig(
     rexes: Seq[String],
     st: Double = 0.4,
     depth: Int = 4,
-    maxChild: Int = 100,
-    tau: Double = 0.5,
     mineSampleLimit: Option[Int] = None,
     spellMineLimit: Int = 100000,
     mineRowsPerBucket: Int = 500000) {
@@ -223,7 +221,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
           val n = mined.getOrElse(len, 0)
           if (cfgL.mineSampleLimit.forall(n < _)) {
             trees.getOrElseUpdate((len, bucket),
-              new DrainTree(cfgL.depth, cfgL.st, cfgL.maxChild)).add(RexCompiler.tokenize(m))
+              new DrainTree(cfgL.depth, cfgL.st)).add(RexCompiler.tokenize(m))
             mined(len) = n + 1
           }
         }
@@ -251,7 +249,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
           (len, serialize(folded))
         }.collect()
 
-    val merged = new DrainTree(cfg.depth, cfg.st, cfg.maxChild)
+    val merged = new DrainTree(cfg.depth, cfg.st)
     lenTrees.sortBy(_._1).foreach { case (len, bytes) =>
       val t = deserialize[DrainTree](bytes)
       t.lengthLayer.get(len).foreach(node => merged.lengthLayer(len) = node)
@@ -279,7 +277,6 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
     val spark = masked.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(drain)
-    val tauL = cfg.tau
     val limitL = cfg.spellMineLimit
     // residue predicate as a scalar UDF, NOT a typed Dataset.filter (round 6):
     // the typed filter deserialized every 3-column row into a tuple just to
@@ -293,7 +290,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
       .sortWithinPartitions("url", "line_no")
       .as[(String, Int, String)]
       .mapPartitions { it =>
-        val m = new SpellModel(tauL)
+        val m = new SpellModel()
         it.foreach { r =>
           if (m.minedLines < limitL) m.add(RexCompiler.tokenizeSpell(r._3))
         }
@@ -301,7 +298,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
         else Iterator((org.apache.spark.TaskContext.getPartitionId(), serialize(m)))
       }.collect()
     partials.sortBy(_._1).map(p => deserialize[SpellModel](p._2))
-      .foldLeft(new SpellModel(cfg.tau))((acc, m) => acc.canonicalMerge(m))
+      .foldLeft(new SpellModel())((acc, m) => acc.canonicalMerge(m))
   }
 
   /** The MINE stage: the frozen match catalog of a masked frame — the Drain
@@ -393,12 +390,13 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
 
   /** A1/S5 aggregate sink: per-template occurrence counts (and per-sink row counts —
     * the north_rule's parity quantity). Partial aggregation (map-side combine) is
-    * free from Catalyst's HashAggregate.
+    * free from Catalyst's HashAggregate. Unordered: a sort would cost a range
+    * sampling job, and every reader re-aggregates or sorts itself. Batch, resume
+    * and stream count templates here.
     */
   def templateCounts(assigned: DataFrame): DataFrame =
     assigned.groupBy("event_id", "event_template")
       .agg(count(lit(1)).as("occurrences"))
-      .orderBy("event_id", "event_template")
 }
 
 object LogPipeline {

@@ -164,8 +164,7 @@ object ResumableRunner {
         // per-chunk template counts: computed from `assigned` (which still carries
         // event_template — the routed sink is normalized and does not), committed
         // before the checkpoint marker like every control sink
-        val chunkCounts = assigned.groupBy("event_id", "event_template")
-          .agg(count(lit(1)).as("occurrences")).withColumn("chunk", lit(c))
+        val chunkCounts = p.templateCounts(assigned).withColumn("chunk", lit(c))
         ParquetManifestTable.appendTagged(chunkCounts, templatesChunksTable(outDir), s"c$c")
 
         if (failBeforeRoutedCommit.contains(c)) throw new SimulatedCrash(c)

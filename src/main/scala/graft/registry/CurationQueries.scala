@@ -2,8 +2,8 @@ package graft.registry
 
 import graft.eval.Evaluator
 import graft.mm.Multimodal
+import graft.pipeline.{LogPipeline, PipelineConfig}
 import graft.registry.QuerySupport._
-import graft.rex.RexCompiler
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,12 +54,14 @@ object CurationQueries {
         "SELECT doc_id, 'REQ ' || lang || ' ' || source || ': ' || substr(text, 1, 40) AS line, " +
         "'^(.*?)\\s+(.*?)\\s+(.*?):\\s+(.*?)$' AS p FROM documents)",
       build = (s, dir) => {
-        val fmt = RexCompiler.compile("<Tag> <Lang> <Src>: <Rest>")
+        // the pipeline's structuring stage; every line matches the format, so
+        // its null headers for an unmatched line never meet the oracle's ""
         val lines = t(s, dir, "documents")
           .select(col("doc_id"),
             concat(lit("REQ "), col("lang"), lit(" "), col("source"), lit(": "),
               substring(col("text"), 1, 40)).as("line"))
-        lines.select(Seq(col("doc_id")) ++ RexCompiler.structureColumns(col("line"), fmt): _*)
+        new LogPipeline(PipelineConfig("<Tag> <Lang> <Src>: <Rest>", Nil))
+          .structure(lines).drop("parsed")
       }),
     Query("f5_eventid_md5",
       oracle = "SELECT doc_id, substr(md5(text), 1, 8) AS event_id FROM documents",

@@ -79,8 +79,7 @@ object LogQueries {
           graft.streaming.StreamingMatch.readPages(s, streamSrcFor(s, dir),
             maxFilesPerTrigger = Some(32)),
           PipelineConfig.hdfs, bc)
-        val counts = matched.groupBy("event_id", "event_template")
-          .agg(count(lit(1)).as("occurrences"))
+        val counts = new LogPipeline(PipelineConfig.hdfs).templateCounts(matched)
         val name = "log_stream_templates_out"
         graft.streaming.StreamingMatch.runToMemory(counts, name,
           org.apache.spark.sql.streaming.OutputMode.Complete())
@@ -302,7 +301,7 @@ object LogQueries {
         val toks = p.withMasked(p.structure(p.explodeLines(pages)))
           .filter(col("parsed")).select("masked").as[String]
           .map(RexCompiler.tokenize)
-        val agg = new graft.drain.DrainAggregator(cfg.depth, cfg.st, cfg.maxChild)
+        val agg = new graft.drain.DrainAggregator(cfg.depth, cfg.st)
         toks.select(agg.toColumn).collect()(0).toSeq
           .sortBy(r => (r.event_template, r.event_id))
           .toDF()
@@ -334,7 +333,7 @@ object LogQueries {
         val pages = WebPagesGen.pagesNarrow(s, 300).toDF()
         val masked = p.withMasked(p.structure(p.explodeLines(pages)))
         val model = p.mineSpellResidue(masked,
-          new graft.drain.DrainTree(cfg.depth, cfg.st, cfg.maxChild))
+          new graft.drain.DrainTree(cfg.depth, cfg.st))
         import s.implicits._
         model.clusterList.toSeq
           .map(c => (graft.drain.DrainTree.eventId(c.templateStr), c.templateStr, c.count))

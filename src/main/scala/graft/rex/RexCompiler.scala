@@ -96,12 +96,6 @@ object RexCompiler {
     n
   }
 
-  /** One `regexp_extract` column per header — all codegen'd, no UDF (SURVEY §2.1 S2). */
-  def structureColumns(line: Column, fmt: CompiledFormat): Seq[Column] =
-    fmt.headers.zip(fmt.groupIdx).map { case (h, gi) =>
-      regexp_extract(line, fmt.pattern, gi).as(h)
-    }
-
   /** The reference's `preprocess` (F1): for each masking regex, replace every match
     * with `<*>`, in list order. Chained `regexp_replace` — Catalyst codegens the chain.
     */

@@ -48,8 +48,8 @@ object Shiso {
     concat_ws(":", u, l, d, o)
   }
 
-  /** Mine the template catalog: (event_template, occurrences). */
-  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame = {
+  /** Mine the template catalog: (event_id, event_template, occurrences). */
+  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame = {
     // fan the distinct-pattern set back out to cluster width (round 6): AQE
     // coalesces the level-0 dedup's reduce side to ONE partition by byte size,
     // but the class-signature transform below is CPU-bound per pattern — a
@@ -62,12 +62,7 @@ object Shiso {
     val keyed = patterns.withColumn("ckey",
       concat_ws(",", transform(col("toks"), classSignature(_))))
 
-    MinerOutput.agreementTemplates(
-      keyed.select(col("ckey"), col("cnt").as("w"),
-        posexplode(col("toks")).as(Seq("pos", "tok"))))
+    MinerOutput.withEventId(
+      MinerOutput.agreementTemplates(keyed, col("ckey"), col("cnt"), col("toks")))
   }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 }

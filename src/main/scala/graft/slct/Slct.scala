@@ -30,7 +30,7 @@ object Slct {
 
   private val Wildcard = "<*>"
 
-  /** Mine the cluster catalog: (event_template, occurrences), occurrences ≥ support.
+  /** Mine the cluster catalog: (event_id, event_template, occurrences), occurrences ≥ support.
     *
     * Round-6 shape: pass 2's abstraction is a PURE FUNCTION of the line text
     * given the frequent (position, word) set, and duplicate lines only scale
@@ -44,8 +44,8 @@ object Slct {
     * driver-collected and broadcast — ≤ positions·n/support entries, the same
     * bound that made the old per-token broadcast join safe.
     */
-  def mineTemplates(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    MinerOutput.withDistinctLines(lines, lineCol) { dl =>
+  def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
+    MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { dl =>
       val freqSet = dl
         .select(col("cnt"), posexplode(col("toks")).as(Seq("pos", "tok")))
         .groupBy("pos", "tok").agg(sum(col("cnt")).as("wf"))
@@ -63,9 +63,5 @@ object Slct {
         .groupBy("event_template")
         .agg(sum(col("cnt")).as("occurrences"))
         .filter(col("occurrences") >= support)
-    }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String, support: Long): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol, support))
+    })
 }

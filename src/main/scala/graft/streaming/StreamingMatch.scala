@@ -92,9 +92,7 @@ object StreamingMatch {
     val spark = pages.sparkSession
     import spark.implicits._
     val p = new LogPipeline(cfg)
-    val lines = pages.select(col("url"),
-      posexplode(split(col("text"), "\n")).as(Seq("line_no", "line")))
-    val masked = p.withMasked(p.structure(lines))
+    val masked = p.withMasked(p.structure(p.explodeLines(pages)))
       .filter(col("parsed")).select("masked").as[String]
       .map(graft.rex.RexCompiler.tokenize)
     implicit val treeEnc: org.apache.spark.sql.Encoder[graft.drain.DrainTree] =
@@ -103,7 +101,7 @@ object StreamingMatch {
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (_: Int, rows: Iterator[Array[String]], state: GroupState[graft.drain.DrainTree]) =>
           val tree = state.getOption.getOrElse(
-            new graft.drain.DrainTree(cfg.depth, cfg.st, cfg.maxChild))
+            new graft.drain.DrainTree(cfg.depth, cfg.st))
           rows.foreach(tree.add)
           state.update(tree)
           tree.catalog().iterator

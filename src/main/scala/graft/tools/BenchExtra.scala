@@ -79,18 +79,7 @@ object BenchExtra {
             df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
         }
-        val t0 = System.nanoTime()
-        // only a plan the noop sink rejects is retried (with count()); any other
-        // failure is reported, never timed as if the query had run
-        val error =
-          try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None }
-          catch {
-            case _: UnsupportedOperationException =>
-              try { fn(spark, sfDir).count(); None }
-              catch { case e: Exception => Some(e) }
-            case e: Exception => Some(e)
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, error) = graft.Bench.timeQuery(spark, sfDir, fn)
         error.foreach { e =>
           val msg = String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")
             .replace("\\", "\\\\").replace("\"", "\\\"")

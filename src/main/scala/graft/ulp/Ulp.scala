@@ -46,11 +46,11 @@ object Ulp {
   def maskTokens(toks: Column): Column =
     transform(toks, t => when(t.rlike("[0-9]"), lit(Wildcard)).otherwise(t))
 
-  /** Mine the template catalog: `(event_template, occurrences)`. Every line
+  /** Mine the template catalog: `(event_id, event_template, occurrences)`. Every line
     * lands in exactly one template (like LFA, ULP has no outlier stream — a
     * singleton group simply keeps all its surviving tokens static).
     */
-  def mineTemplates(lines: DataFrame, lineCol: String): DataFrame = {
+  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame = {
     // distinct-pattern compression: the distinct lines, then mask and
     // re-aggregate (two distinct lines can collapse onto one masked pattern)
     val pat = MinerOutput.distinctLines(lines, lineCol)
@@ -62,12 +62,7 @@ object Ulp {
         t => when(t === Wildcard, lit(Wildcard)).otherwise(lit("_")))))
     // stage 3: positionwise agreement inside each group, weighted by pattern
     // multiplicity; masked positions agree on <*> by construction
-    val rows = keyed.select(col("ckey"), col("cnt").as("w"),
-      posexplode(col("toks")).as(Seq("pos", "tok")))
-    MinerOutput.agreementTemplates(rows)
+    MinerOutput.withEventId(
+      MinerOutput.agreementTemplates(keyed, col("ckey"), col("cnt"), col("toks")))
   }
-
-  /** [[mineTemplates]] plus the engine's md5-prefix event id. */
-  def mineCatalog(lines: DataFrame, lineCol: String): DataFrame =
-    MinerOutput.withEventId(mineTemplates(lines, lineCol))
 }

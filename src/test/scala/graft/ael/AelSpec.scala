@@ -6,8 +6,8 @@ class AelSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String]): Map[String, Long] =
-    Ael.mineTemplates(lines.toDF("line"), "line")
-      .as[(String, Long)].collect().toMap
+    Ael.mineCatalog(lines.toDF("line"), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("anonymize: key=value and digit-bearing tokens wildcard, others stay") {
     val out = Seq("send", "id=42", "to", "host7", "now", "k=v=1").map(Ael.anonymizeToken)
@@ -50,8 +50,8 @@ class AelSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 200).map(i => s"evt type${i % 4} stage${i % 5} end")
-    val a = Ael.mineTemplates(lines.toDF("line").repartition(11), "line")
-      .as[(String, Long)].collect().toMap
+    val a = Ael.mineCatalog(lines.toDF("line").repartition(11), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == mined(lines))
     assert(a.values.sum == 200L)
   }

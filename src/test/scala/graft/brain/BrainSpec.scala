@@ -6,8 +6,8 @@ class BrainSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String]): Map[String, Long] =
-    Brain.mineTemplates(lines.toDF("line"), "line")
-      .as[(String, Long)].collect().toMap
+    Brain.mineCatalog(lines.toDF("line"), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("constant positions share the modal frequency; variables wildcard") {
     // per line freq values [6, 1, 6]: value 6 carried by 2 positions → LCP =
@@ -43,10 +43,10 @@ class BrainSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 200).map(i => s"evt u${i % 40} c${i % 7}")
-    val a = Brain.mineTemplates(lines.toDF("line").repartition(9), "line")
-      .as[(String, Long)].collect().toMap
-    val b = Brain.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = Brain.mineCatalog(lines.toDF("line").repartition(9), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = Brain.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
   }
 

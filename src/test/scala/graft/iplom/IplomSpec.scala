@@ -6,8 +6,8 @@ class IplomSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String], refinements: Int = 1): Map[String, Long] =
-    Iplom.mineTemplates(lines.toDF("line"), "line", refinements)
-      .as[(String, Long)].collect().toMap
+    Iplom.mineCatalog(lines.toDF("line"), "line", refinements)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("step 1+2+4: length partition, lowest-cardinality split, constant detection") {
     val lines = Seq(
@@ -51,10 +51,10 @@ class IplomSpec extends SparkSuite {
   test("deterministic under repartition (declarative mine has no order dependence)") {
     val lines = (0 until 200).map(i => s"evt type${i % 3} user$i done") ++
       (0 until 50).map(i => s"ping host${i % 7}")
-    val a = Iplom.mineTemplates(lines.toDF("line").repartition(13), "line")
-      .as[(String, Long)].collect().toMap
-    val b = Iplom.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = Iplom.mineCatalog(lines.toDF("line").repartition(13), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = Iplom.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
     assert(a.values.sum == 250L)
   }
@@ -80,8 +80,8 @@ class IplomSpec extends SparkSuite {
       "s2 c <*>" -> 2L,
       "s3 <*> <*>" -> 4L))
     // ct <= 0 disables step 3: s1 collapses to a single catch-all partition
-    val noStep3 = Iplom.mineTemplates(lines.toDF("line"), "line", ct = 0.0)
-      .as[(String, Long)].collect().toMap
+    val noStep3 = Iplom.mineCatalog(lines.toDF("line"), "line", ct = 0.0)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(noStep3("s1 <*> <*>") == 8L)
   }
 

@@ -6,8 +6,8 @@ class LenMaSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String]): Map[String, Long] =
-    LenMa.mineTemplates(lines.toDF("line"), "line")
-      .as[(String, Long)].collect().toMap
+    LenMa.mineCatalog(lines.toDF("line"), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("same word-length shape clusters; disagreeing positions wildcard") {
     val lines = Seq(
@@ -36,10 +36,10 @@ class LenMaSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 200).map(i => s"evt user${100 + i} done")
-    val a = LenMa.mineTemplates(lines.toDF("line").repartition(9), "line")
-      .as[(String, Long)].collect().toMap
-    val b = LenMa.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = LenMa.mineCatalog(lines.toDF("line").repartition(9), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = LenMa.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
     assert(a == Map("evt <*> done" -> 200L))
   }
@@ -52,12 +52,12 @@ class LenMaSpec extends SparkSuite {
     // cosine([2,4,7,2],[2,4,8,4]) = 84/sqrt(73·100) ≈ 0.9832 ≥ 0.98, two
     // mismatched positions ≤ floor(4·0.5) — the sim instance merges them: a
     // cluster the 1.0 instance CANNOT produce
-    val sim = LenMa.mineTemplatesSim(lines.toDF("line"), "line", sim = 0.98)
-      .as[(String, Long)].collect().toMap
+    val sim = LenMa.mineCatalogSim(lines.toDF("line"), "line", sim = 0.98)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(sim == Map("up link <*> <*>" -> 4L))
     // tightening the threshold above 0.9832 restores the exact partition
-    val tight = LenMa.mineTemplatesSim(lines.toDF("line"), "line", sim = 0.999)
-      .as[(String, Long)].collect().toMap
+    val tight = LenMa.mineCatalogSim(lines.toDF("line"), "line", sim = 0.999)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(tight == mined(lines))
   }
 
@@ -65,17 +65,17 @@ class LenMaSpec extends SparkSuite {
     // cosine([2,1],[3,2]) = 8/sqrt(5·13) ≈ 0.992 ≥ 0.98, but BOTH positions
     // differ > floor(2·0.5) = 1 — the banding-compatible relation excludes it
     val lines = Seq("ab c", "ab d", "abc de", "abc df")
-    val m = LenMa.mineTemplatesSim(lines.toDF("line"), "line", sim = 0.98)
-      .as[(String, Long)].collect().toMap
+    val m = LenMa.mineCatalogSim(lines.toDF("line"), "line", sim = 0.98)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(m == Map("ab <*>" -> 2L, "abc <*>" -> 2L))
   }
 
   test("sim instance deterministic under repartition") {
     val lines = (0 until 120).map(i => s"evt user${100 + i % 40} c${"9" * (1 + i % 3)}")
-    val a = LenMa.mineTemplatesSim(lines.toDF("line").repartition(9), "line", 0.98)
-      .as[(String, Long)].collect().toMap
-    val b = LenMa.mineTemplatesSim(lines.toDF("line").repartition(1), "line", 0.98)
-      .as[(String, Long)].collect().toMap
+    val a = LenMa.mineCatalogSim(lines.toDF("line").repartition(9), "line", 0.98)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = LenMa.mineCatalogSim(lines.toDF("line").repartition(1), "line", 0.98)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
   }
 

@@ -6,8 +6,8 @@ class LfaSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String]): Map[String, Long] =
-    Lfa.mineTemplates(lines.toDF("line"), "line")
-      .as[(String, Long)].collect().toMap
+    Lfa.mineCatalog(lines.toDF("line"), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("largest relative frequency gap splits constants from parameters, no support knob") {
     val lines = Seq.tabulate(50)(i => s"login user$i ok") ++
@@ -40,10 +40,10 @@ class LfaSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 300).map(i => s"req type${i % 3} user$i done")
-    val a = Lfa.mineTemplates(lines.toDF("line").repartition(11), "line")
-      .as[(String, Long)].collect().toMap
-    val b = Lfa.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = Lfa.mineCatalog(lines.toDF("line").repartition(11), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = Lfa.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
     assert(a.values.sum == 300L)
   }

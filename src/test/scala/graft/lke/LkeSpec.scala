@@ -6,8 +6,8 @@ class LkeSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String], splitThreshold: Int = 4): Map[String, Long] =
-    Lke.mineTemplates(lines.toDF("line"), "line", splitThreshold)
-      .as[(String, Long)].collect().toMap
+    Lke.mineCatalog(lines.toDF("line"), "line", splitThreshold)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("edit-distance clusters separate; high-cardinality column wildcards") {
     // intra distances 1 (digit changes), inter distances >> — the learned 2-means
@@ -82,17 +82,17 @@ class LkeSpec extends SparkSuite {
   test("fail-stop above maxPatterns instead of a quadratic job") {
     val lines = (0 until 50).map(i => s"line nr$i")
     val ex = intercept[IllegalArgumentException] {
-      Lke.mineTemplates(lines.toDF("line"), "line", 4, maxPatterns = 10).count()
+      Lke.mineCatalog(lines.toDF("line"), "line", 4, maxPatterns = 10).count()
     }
     assert(ex.getMessage.contains("maxPatterns"))
   }
 
   test("deterministic under repartition") {
     val lines = (0 until 60).map(i => s"evt u${i % 6} code c${i % 12}")
-    val a = Lke.mineTemplates(lines.toDF("line").repartition(9), "line")
-      .as[(String, Long)].collect().toMap
-    val b = Lke.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = Lke.mineCatalog(lines.toDF("line").repartition(9), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = Lke.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
   }
 

@@ -6,8 +6,8 @@ class LogClusterSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String], support: Long): Map[String, Long] =
-    LogCluster.mineTemplates(lines.toDF("line"), "line", support)
-      .as[(String, Long)].collect().toMap
+    LogCluster.mineCatalog(lines.toDF("line"), "line", support)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("frequent words keep order; infrequent runs become *{min,max} gaps") {
     val lines = Seq(
@@ -48,8 +48,8 @@ class LogClusterSpec extends SparkSuite {
   test("deterministic under repartition") {
     val lines = (0 until 120).map(i => s"req ses${i} GET /idx done") ++
       (0 until 30).map(i => s"req ses${i} tail POST /api done")
-    val a = LogCluster.mineTemplates(lines.toDF("line").repartition(13), "line", 25)
-      .as[(String, Long)].collect().toMap
+    val a = LogCluster.mineCatalog(lines.toDF("line").repartition(13), "line", 25)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == mined(lines, 25))
     // freq: req 150, GET/idx 120, POST/api/tail 30, done 150
     assert(a == Map("req *{1,1} GET /idx done" -> 120L,

@@ -6,8 +6,8 @@ class LogMineSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String], maxDist: Double = 0.3): Map[String, Long] =
-    LogMine.mineTemplates(lines.toDF("line"), "line", maxDist)
-      .as[(String, Long)].collect().toMap
+    LogMine.mineCatalog(lines.toDF("line"), "line", maxDist)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("patterns within maxDist cluster; positionwise agreement forms the template") {
     // len 3, maxDist 0.34 -> 1 mismatch allowed
@@ -41,17 +41,17 @@ class LogMineSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 200).map(i => s"evt u${i % 20} c${i % 5}")
-    val a = LogMine.mineTemplates(lines.toDF("line").repartition(13), "line", 0.34)
-      .as[(String, Long)].collect().toMap
-    val b = LogMine.mineTemplates(lines.toDF("line").repartition(1), "line", 0.34)
-      .as[(String, Long)].collect().toMap
+    val a = LogMine.mineCatalog(lines.toDF("line").repartition(13), "line", 0.34)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = LogMine.mineCatalog(lines.toDF("line").repartition(1), "line", 0.34)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
     assert(a.values.sum == 200L)
   }
 
   private def minedX(lines: Seq[String], maxDist: Double = 0.34): Map[String, Long] =
-    LogMine.mineTemplatesXLen(lines.toDF("line"), "line", maxDist)
-      .as[(String, Long)].collect().toMap
+    LogMine.mineCatalogXLen(lines.toDF("line"), "line", maxDist)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("cross-length alignment merges templates of different token counts") {
     // "start u1" (2 toks) vs "start u1 extra" (3): LCS 2 → dist 1 − 4/5 = 0.2;
@@ -85,10 +85,10 @@ class LogMineSpec extends SparkSuite {
   test("XLen deterministic under repartition") {
     val lines = (0 until 120).map(i =>
       if (i % 4 == 0) s"evt u${i % 6} extra" else s"evt u${i % 6}")
-    val a = LogMine.mineTemplatesXLen(lines.toDF("line").repartition(11), "line", 0.34)
-      .as[(String, Long)].collect().toMap
-    val b = LogMine.mineTemplatesXLen(lines.toDF("line").repartition(1), "line", 0.34)
-      .as[(String, Long)].collect().toMap
+    val a = LogMine.mineCatalogXLen(lines.toDF("line").repartition(11), "line", 0.34)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = LogMine.mineCatalogXLen(lines.toDF("line").repartition(1), "line", 0.34)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
     assert(a.values.sum == 120L)
   }

@@ -6,8 +6,8 @@ class LogramSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String], support: Long): Map[String, Long] =
-    Logram.mineTemplates(lines.toDF("line"), "line", support)
-      .as[(String, Long)].collect().toMap
+    Logram.mineCatalog(lines.toDF("line"), "line", support)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("dynamic tokens break their covering bigrams; static text survives") {
     // (BOS,conn)=(conn,from)=(ok,EOS)=6 ≥ 3; every host bigram has freq 1
@@ -42,10 +42,10 @@ class LogramSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 200).map(i => s"evt u${i % 40} done")
-    val a = Logram.mineTemplates(lines.toDF("line").repartition(9), "line", 20)
-      .as[(String, Long)].collect().toMap
-    val b = Logram.mineTemplates(lines.toDF("line").repartition(1), "line", 20)
-      .as[(String, Long)].collect().toMap
+    val a = Logram.mineCatalog(lines.toDF("line").repartition(9), "line", 20)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = Logram.mineCatalog(lines.toDF("line").repartition(1), "line", 20)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
     assert(a == Map("evt <*> done" -> 200L))
   }

@@ -7,8 +7,8 @@ class LogSigSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String], k: Int = 3): Map[String, Long] =
-    LogSig.mineTemplates(lines.toDF("line"), "line", k)
-      .as[(String, Long)].collect().toMap
+    LogSig.mineCatalog(lines.toDF("line"), "line", k)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("deterministic init separates distinct-initial families; majority signature") {
     // initials a/b/c -> groups 1/2/0 under ascii mod 3; u tokens are minority
@@ -26,9 +26,9 @@ class LogSigSpec extends SparkSuite {
     val init = when(col("p").startsWith("alpha"),
       when(digit < 8, 0).otherwise(1))
       .otherwise(when(digit < 8, 1).otherwise(0))
-    val m = LogSig.mineTemplates(lines.toDF("line"), "line", k = 2,
+    val m = LogSig.mineCatalog(lines.toDF("line"), "line", k = 2,
         maxIters = 10, init = Some(init))
-      .as[(String, Long)].collect().toMap
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(m == Map("alpha c <*>" -> 10L, "beta c <*>" -> 10L))
   }
 
@@ -47,10 +47,10 @@ class LogSigSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 120).map(i => s"ev${i % 3} u${i % 5} done")
-    val a = LogSig.mineTemplates(lines.toDF("line").repartition(9), "line")
-      .as[(String, Long)].collect().toMap
-    val b = LogSig.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = LogSig.mineCatalog(lines.toDF("line").repartition(9), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = LogSig.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
   }
 

@@ -83,4 +83,15 @@ class MinerOutputSpec extends SparkSuite {
     }
     assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
   }
+
+  test("two distinct patterns under one pid fail the pid-keyed mine, naming both") {
+    val shared = Seq((42L, "conn a ok"), (42L, "conn b ok"), (7L, "drop x err"))
+      .toDF("pid", "p")
+    val ex = intercept[IllegalStateException](MinerOutput.requireDistinctPids(shared))
+    assert(ex.getMessage.contains("\"conn a ok\"") && ex.getMessage.contains("\"conn b ok\""),
+      ex.getMessage)
+    assert(!ex.getMessage.contains("drop x err"), ex.getMessage)
+    // one row per pid passes
+    MinerOutput.requireDistinctPids(shared.filter($"p" =!= "conn b ok"))
+  }
 }

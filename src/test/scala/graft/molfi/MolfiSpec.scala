@@ -6,8 +6,8 @@ class MolfiSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String]): Map[String, Long] =
-    Molfi.mineTemplates(lines.toDF("line"), "line")
-      .as[(String, Long)].collect().toMap
+    Molfi.mineCatalog(lines.toDF("line"), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("single shape: knee keeps one template with the parameter wildcarded") {
     // one cluster scores spec 2/3 × freq 1; all-singletons scores 1 × 1/6 —
@@ -37,17 +37,17 @@ class MolfiSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 120).map(i => s"ev${i % 2} u${i % 10} s${i % 3}")
-    val a = Molfi.mineTemplates(lines.toDF("line").repartition(9), "line")
-      .as[(String, Long)].collect().toMap
-    val b = Molfi.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = Molfi.mineCatalog(lines.toDF("line").repartition(9), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = Molfi.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
   }
 
   test("fail-stop above maxGroup instead of a silently degraded search") {
     val lines = (0 until 50).map(i => s"line nr$i")
     val ex = intercept[Exception] {
-      Molfi.mineTemplates(lines.toDF("line"), "line", maxGroup = 10).count()
+      Molfi.mineCatalog(lines.toDF("line"), "line", maxGroup = 10).count()
     }
     assert(ex.getMessage.contains("maxGroup"))
   }

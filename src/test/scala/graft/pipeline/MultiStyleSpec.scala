@@ -35,7 +35,7 @@ class MultiStyleSpec extends SparkSuite {
         .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))
         .sortBy(r => (r._1, r._2))
       val seq = DrainTree.mine(seqLines.iterator.map(r => RexCompiler.tokenize(r._3)),
-        cfg.depth, cfg.st, cfg.maxChild).catalog()
+        cfg.depth, cfg.st).catalog()
       assert(dist == seq)
     }
 

@@ -26,7 +26,7 @@ class PipelineSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getInt(1), r.getString(2)))
       .sortBy(r => (r._1, r._2))
     DrainTree.mine(lines.iterator.map(r => RexCompiler.tokenize(r._3)),
-      cfg.depth, cfg.st, cfg.maxChild).catalog()
+      cfg.depth, cfg.st).catalog()
   }
 
   test("structuring parses every generated line; headers extracted") {

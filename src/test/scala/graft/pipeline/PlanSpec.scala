@@ -99,7 +99,7 @@ class PlanSpec extends SparkSuite {
   test("declarative miners: no cartesian products, broadcast where intended") {
     import spark.implicits._
     val lines = (0 until 400).map(i => s"evt type${i % 3} user$i done").toDF("line")
-    val iplom = graft.iplom.Iplom.mineTemplates(lines, "line")
+    val iplom = graft.iplom.Iplom.mineCatalog(lines, "line")
       .queryExecution.executedPlan.toString
     assert(!iplom.contains("CartesianProduct"), iplom)
     // the per-partition split table is broadcast back onto rows, never shuffled
@@ -110,22 +110,22 @@ class PlanSpec extends SparkSuite {
     // down), and the returned catalog is eagerly checkpointed, so the
     // executed plan is an ExistingRDD scan — only the no-cartesian invariant
     // remains assertable here; exactness is pinned by SlctSpec + the oracle.
-    val slct = graft.slct.Slct.mineTemplates(lines, "line", 50)
+    val slct = graft.slct.Slct.mineCatalog(lines, "line", 50)
       .queryExecution.executedPlan.toString
     assert(!slct.contains("CartesianProduct"), slct)
-    val ael = graft.ael.Ael.mineTemplates(lines, "line")
+    val ael = graft.ael.Ael.mineCatalog(lines, "line")
       .queryExecution.executedPlan.toString
     assert(!ael.contains("CartesianProduct"), ael)
-    val lc = graft.logcluster.LogCluster.mineTemplates(lines, "line", 50)
+    val lc = graft.logcluster.LogCluster.mineCatalog(lines, "line", 50)
       .queryExecution.executedPlan.toString
     assert(!lc.contains("CartesianProduct"), lc)
-    val lfa = graft.lfa.Lfa.mineTemplates(lines, "line")
+    val lfa = graft.lfa.Lfa.mineCatalog(lines, "line")
       .queryExecution.executedPlan.toString
     assert(!lfa.contains("CartesianProduct"), lfa)
-    val lenma = graft.lenma.LenMa.mineTemplates(lines, "line")
+    val lenma = graft.lenma.LenMa.mineCatalog(lines, "line")
       .queryExecution.executedPlan.toString
     assert(!lenma.contains("CartesianProduct"), lenma)
-    val lm = graft.logmine.LogMine.mineTemplates(lines, "line", 0.3)
+    val lm = graft.logmine.LogMine.mineCatalog(lines, "line", 0.3)
       .queryExecution.executedPlan.toString
     assert(!lm.contains("CartesianProduct"), lm) // band equi-join, never all-pairs
   }

@@ -6,8 +6,8 @@ class ShisoSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String]): Map[String, Long] =
-    Shiso.mineTemplates(lines.toDF("line"), "line")
-      .as[(String, Long)].collect().toMap
+    Shiso.mineCatalog(lines.toDF("line"), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("same char-class shape clusters; disagreeing positions wildcard") {
     // host1/host2/host9 all have class vector (0 upper, 4 lower, 1 digit, 0 other)
@@ -43,10 +43,10 @@ class ShisoSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 200).map(i => s"evt user${100 + i} done")
-    val a = Shiso.mineTemplates(lines.toDF("line").repartition(9), "line")
-      .as[(String, Long)].collect().toMap
-    val b = Shiso.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = Shiso.mineCatalog(lines.toDF("line").repartition(9), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = Shiso.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
     assert(a == Map("evt <*> done" -> 200L))
   }

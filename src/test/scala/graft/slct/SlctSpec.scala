@@ -6,8 +6,8 @@ class SlctSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String], support: Long): Map[String, Long] =
-    Slct.mineTemplates(lines.toDF("line"), "line", support)
-      .as[(String, Long)].collect().toMap
+    Slct.mineCatalog(lines.toDF("line"), "line", support)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("frequent words stay, infrequent positions wildcard, sub-support clusters drop") {
     val lines =
@@ -31,8 +31,8 @@ class SlctSpec extends SparkSuite {
 
   test("deterministic under repartition") {
     val lines = (0 until 300).map(i => s"evt type${i % 3} user$i done")
-    val a = Slct.mineTemplates(lines.toDF("line").repartition(17), "line", 50)
-      .as[(String, Long)].collect().toMap
+    val a = Slct.mineCatalog(lines.toDF("line").repartition(17), "line", 50)
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     val b = mined(lines, 50)
     assert(a == b && a.keySet == Set("evt type0 <*> done", "evt type1 <*> done",
       "evt type2 <*> done"))

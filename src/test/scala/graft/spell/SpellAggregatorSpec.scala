@@ -27,8 +27,8 @@ class SpellAggregatorSpec extends SparkSuite {
     // one url => one hash partition => canonical (url, line_no) order end-to-end
     val rows = lines.zipWithIndex.map { case (l, i) => ("u1", i, l) }
     val p = new LogPipeline(cfg)
-    val dist = p.mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st, cfg.maxChild))
-    val seq = SpellModel.mine(lines.iterator.map(RexCompiler.tokenizeSpell), cfg.tau)
+    val dist = p.mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st))
+    val seq = SpellModel.mine(lines.iterator.map(RexCompiler.tokenizeSpell))
     assert(catalogOf(dist) == catalogOf(seq))
     assert(dist.minedLines == lines.size)
   }
@@ -38,9 +38,9 @@ class SpellAggregatorSpec extends SparkSuite {
       (0 until 40).map(i => s"recv ack from node$i ok")
     val rows = lines.zipWithIndex.map { case (l, i) => (s"u${i % 8}", i, l) }
     val p = new LogPipeline(cfg)
-    val dist = p.mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st, cfg.maxChild))
+    val dist = p.mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st))
     val seq = SpellModel.mine(
-      rows.sortBy(r => (r._1, r._2)).iterator.map(r => RexCompiler.tokenizeSpell(r._3)), cfg.tau)
+      rows.sortBy(r => (r._1, r._2)).iterator.map(r => RexCompiler.tokenizeSpell(r._3)))
     assert(catalogOf(dist) == catalogOf(seq))
     // the merged model's prefix tree is live: it matches without minting clusters
     val probe = RexCompiler.tokenizeSpell("send block blk_<*> to nodeZZ")
@@ -48,7 +48,7 @@ class SpellAggregatorSpec extends SparkSuite {
   }
 
   test("canonicalMerge is commutative bit-identically") {
-    def model(ls: Seq[String]) = SpellModel.mine(ls.iterator.map(RexCompiler.tokenizeSpell), cfg.tau)
+    def model(ls: Seq[String]) = SpellModel.mine(ls.iterator.map(RexCompiler.tokenizeSpell))
     val a = model(Seq("alpha beta 1", "alpha beta 2", "gamma d"))
     val b = model(Seq("alpha beta 9", "delta e f g", "gamma d"))
     val ab = a.canonicalMerge(b)
@@ -62,9 +62,9 @@ class SpellAggregatorSpec extends SparkSuite {
     val lines = (0 until 50).map(i => s"evt kind$i payload")
     val rows = lines.zipWithIndex.map { case (l, i) => ("u1", i, l) }
     val capped = new LogPipeline(cfg.copy(spellMineLimit = 10))
-      .mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st, cfg.maxChild))
+      .mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st))
     assert(capped.minedLines == 10L)
-    val seq10 = SpellModel.mine(lines.take(10).iterator.map(RexCompiler.tokenizeSpell), cfg.tau)
+    val seq10 = SpellModel.mine(lines.take(10).iterator.map(RexCompiler.tokenizeSpell))
     assert(catalogOf(capped) == catalogOf(seq10))
   }
 }

@@ -6,8 +6,8 @@ class UlpSpec extends SparkSuite {
   import spark.implicits._
 
   private def mined(lines: Seq[String]): Map[String, Long] =
-    Ulp.mineTemplates(lines.toDF("line"), "line")
-      .as[(String, Long)].collect().toMap
+    Ulp.mineCatalog(lines.toDF("line"), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
 
   test("digit-bearing tokens mask in preprocessing; same-layout lines group") {
     val lines = Seq.tabulate(30)(i => s"conn open port $i") ++
@@ -42,10 +42,10 @@ class UlpSpec extends SparkSuite {
 
   test("deterministic under repartition, every line lands in exactly one template") {
     val lines = (0 until 300).map(i => s"req type${('a' + i % 3).toChar} user $i done")
-    val a = Ulp.mineTemplates(lines.toDF("line").repartition(11), "line")
-      .as[(String, Long)].collect().toMap
-    val b = Ulp.mineTemplates(lines.toDF("line").repartition(1), "line")
-      .as[(String, Long)].collect().toMap
+    val a = Ulp.mineCatalog(lines.toDF("line").repartition(11), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
+    val b = Ulp.mineCatalog(lines.toDF("line").repartition(1), "line")
+      .select("event_template", "occurrences").as[(String, Long)].collect().toMap
     assert(a == b)
     assert(a.values.sum == 300L)
     // typea/typeb/typec are digit-free and vary inside the one layout -> <*>
