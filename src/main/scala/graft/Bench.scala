@@ -117,7 +117,8 @@ object Bench {
     ((System.nanoTime() - t0) / 1e9, error)
   }
 
-  private def localDir: String = TempDirs.root.resolve("graft_bench_local").toString
+  /** This process's spill dir: two benches on one host never share one. */
+  private lazy val localDir: String = TempDirs.create("graft_bench_local").toString
 
   /** The scale-configured pipeline: identical operators to the correctness path, with
     * the SURVEY-documented 10^12-row knob engaged — `mineSampleLimit` bounds the rows
@@ -217,6 +218,8 @@ object Bench {
     // stays reproducible via SPARK_GRAFT_SCALE_MULT=2 (BENCH/RESULTS.md §1).
     val scalePages = nPages * sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "1").toInt
     val pagesPath = s"$work/input/web_pages_$scalePages"
+    // the input is shared; the sinks are this process's, safe from a second bench
+    val outRoot = TempDirs.create("run_", java.nio.file.Paths.get(work)).toString
 
     // ---- materialize input once (fixed seed; reused at both parallelism levels)
     var spark = session(cpus)
@@ -227,8 +230,8 @@ object Bench {
 
     // ---- JIT warm-up: two full-width runs (fast wall-clock, compiles the hot
     // paths), because single runs keep improving through ~5 executions on this host.
-    pipelineRun(spark, pagesPath, s"$work/out_warm")
-    pipelineRun(spark, pagesPath, s"$work/out_warm")
+    pipelineRun(spark, pagesPath, s"$outRoot/out_warm")
+    pipelineRun(spark, pagesPath, s"$outRoot/out_warm")
 
     // ---- rep-until-converged, levels ALTERNATED: one pinned warm-up per level (C2
     // finishes compiling under the level's real affinity), then timed reps in N/4N
@@ -249,7 +252,7 @@ object Bench {
       // which is exactly the one-sided hiccup class the pair estimator fights.
       // Paying it here makes every timed run start from the same near-empty heap.
       System.gc()
-      val t = pipelineRun(spark, pagesPath, s"$work/out_$tag")
+      val t = pipelineRun(spark, pagesPath, s"$outRoot/out_$tag")
       pinCpus(cpus)
       t
     }

@@ -19,9 +19,9 @@ object TempDirs {
     */
   private[graft] def root: Path = base(new File("/dev/shm"), MinFreeBytes)
 
-  /** A fresh temp dir named `prefix…`, removed with its contents on JVM exit. */
-  def create(prefix: String): Path = {
-    val d = Files.createTempDirectory(root, prefix)
+  /** A fresh temp dir `prefix…` under `parent`, removed with its contents on JVM exit. */
+  def create(prefix: String, parent: Path = root): Path = {
+    val d = Files.createTempDirectory(Files.createDirectories(parent), prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(d.toFile)))
     d
   }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.text.{TextOps, Tokens}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -86,11 +87,11 @@ object Dedup {
 
   // ---- shingles / MinHash / LSH ----------------------------------------------
 
-  /** Word k-shingles as an array column — `transform(sequence(...))` keeps it inside
-    * whole-stage codegen (no UDF).
+  /** Word k-shingles over [[Tokens]] as an array column — `transform(sequence(...))`
+    * keeps it inside whole-stage codegen (no UDF).
     */
   def wordShingles(textCol: Column, k: Int): Column = {
-    val toks = split(trim(textCol), "\\s+")
+    val toks = Tokens.words(textCol)
     val n = size(toks)
     when(n < k, array(concat_ws(" ", toks)))
       .otherwise(transform(sequence(lit(1), n - k + 1),
@@ -101,11 +102,10 @@ object Dedup {
     * the HOF form (`transform` over `sequence` + `slice` + `concat_ws`, then
     * `array_distinct`) is evaluated by the interpreter per lambda element and
     * allocates a k-token slice array per shingle — the dominant cost of the
-    * shingle-producing operators (minhash staging, decontamination). Semantics
-    * replicated token-for-token: Spark `trim` strips ' ' only, Spark `split`
-    * keeps trailing empties (limit -1), n<k docs contribute the whole-line
-    * shingle, and the distinct keeps first-occurrence order (LinkedHashSet) —
-    * same element set and order as the HOF chain, null in → null out.
+    * shingle-producing operators (minhash staging, decontamination). Same
+    * [[Tokens]], n<k docs contribute the whole-line shingle, and the distinct
+    * keeps first-occurrence order (LinkedHashSet) — same element set and order
+    * as the HOF chain, null in → null out.
     */
   def wordShinglesDistinct(textCol: Column, k: Int): Column =
     wordShinglesDistinctUdf(textCol, lit(k))
@@ -113,26 +113,13 @@ object Dedup {
   private val wordShinglesDistinctUdf = udf { (text: String, k: Int) =>
     if (text == null) null
     else {
-      var b = 0; var e = text.length
-      while (b < e && text.charAt(b) == ' ') b += 1
-      while (e > b && text.charAt(e - 1) == ' ') e -= 1
-      val toks = text.substring(b, e).split("\\s+", -1)
+      val toks = Tokens.words(text)
       val out = new scala.collection.mutable.LinkedHashSet[String]()
       if (toks.length < k) out.add(toks.mkString(" "))
       else {
-        val sb = new java.lang.StringBuilder()
+        val ts = java.util.Arrays.asList(toks: _*)
         var i = 0
-        while (i <= toks.length - k) {
-          sb.setLength(0)
-          var j = 0
-          while (j < k) {
-            if (j > 0) sb.append(' ')
-            sb.append(toks(i + j))
-            j += 1
-          }
-          out.add(sb.toString)
-          i += 1
-        }
+        while (i <= toks.length - k) { out.add(String.join(" ", ts.subList(i, i + k))); i += 1 }
       }
       out.toSeq
     }
@@ -309,30 +296,19 @@ object Dedup {
 
   // ---- SimHash ---------------------------------------------------------------
 
-  /** 64-bit SimHash over word tokens: per-bit majority vote of token hashes, a
+  /** 64-bit SimHash over [[Tokens]]: per-bit majority vote of token hashes, a
     * Scala UDF (bit loop; per-row cost O(tokens × 64 / word)). Tokens hash with
-    * FNV-1a (same per-token hash as [[graft.text.TextOps.rollingFingerprint]],
-    * whose wrapping 64-bit arithmetic is already emulated in DuckDB HUGEINT), so
-    * a SQL oracle reproduces every sketch bit for bit.
+    * [[graft.text.TextOps.fnvToken]], whose wrapping 64-bit arithmetic is
+    * emulated in DuckDB HUGEINT, so a SQL oracle reproduces every sketch bit
+    * for bit.
     */
   val simhash64Fnv = udf { (text: String) =>
     if (text == null) 0L
     else {
-      val toks = text.trim.split("\\s+")
+      val toks = Tokens.words(text)
       val counts = new Array[Int](64)
       toks.foreach { t =>
-        var h = -3750763034362895579L // FNV-1a 64 offset basis (unsigned 14695981039346656037)
-        // CODEPOINT iteration with a low-16-bit mask — DuckDB's regexp_split('')
-        // yields codepoints, so UTF-16-unit iteration would diverge on astral
-        // chars, and an unmasked codepoint (> 0xFFFF) would corrupt the oracle's
-        // low-16 XOR emulation. Identical to the old char loop for BMP text.
-        var i = 0
-        while (i < t.length) {
-          val cp = t.codePointAt(i)
-          h ^= (cp & 0xFFFF).toLong
-          h *= 1099511628211L
-          i += Character.charCount(cp)
-        }
+        val h = TextOps.fnvToken(t)
         var j = 0
         while (j < 64) { if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1; j += 1 }
       }

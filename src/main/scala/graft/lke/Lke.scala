@@ -106,11 +106,10 @@ object Lke {
   def mineCatalog(lines: DataFrame, lineCol: String, splitThreshold: Int = 4,
                   maxPatterns: Int = 2000, maxRounds: Int = 10): DataFrame =
     MinerOutput.withEventId(MinerOutput.withDistinctLines(lines, lineCol) { patterns =>
-      val n = patterns.count()
+      val n = MinerOutput.requireDistinctPids(patterns)
       require(n <= maxPatterns,
         s"Lke.mineCatalog: $n distinct lines exceeds maxPatterns=$maxPatterns; " +
           "the pairwise distance graph would be quadratic — sample or raise the cap explicitly")
-      MinerOutput.requireDistinctPids(patterns)
 
       val a = patterns.select(col("pid").as("id_a"), col("toks").as("t_a"))
       val b = patterns.select(col("pid").as("id_b"), col("toks").as("t_b"))

@@ -1,5 +1,6 @@
 package graft.miner
 
+import graft.text.Tokens
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,23 +15,16 @@ import org.apache.spark.sql.functions._
   */
 object MinerOutput {
 
-  /** Whitespace tokens of a line, Python `str.split()` semantics (the
-    * reference's): split on runs of `\s`, no empty tokens, so a leading tab or
-    * a trailing CR adds no `""` token and a blank line gives `[]`. Built-ins
-    * only (Spark `trim` strips ' ' alone, so trim-then-split is not enough).
-    */
-  private def tokens(line: Column): Column = array_remove(split(line, "\\s+"), "")
-
-  /** One row per raw line, its [[tokens]] as `toks` (a blank line gives `[]`,
-    * which every positional explode drops): the input of the miners that
-    * weight raw lines instead of distinct ones (IPLoM, exact LenMa).
+  /** One row per raw line, its [[graft.text.Tokens]] as `toks` (a blank line
+    * gives `[]`, which every positional explode drops): the input of the miners
+    * that weight raw lines instead of distinct ones (IPLoM, exact LenMa).
     */
   def lineTokens(lines: DataFrame, lineCol: String): DataFrame =
-    lines.select(tokens(col(lineCol)).as("toks"))
+    lines.select(Tokens.words(col(lineCol)).as("toks"))
 
   /** The pattern table: distinct non-blank lines with multiplicities,
-    * `(p, cnt, toks, pid, len)`. `toks` are the line's [[tokens]] and `p` is
-    * those tokens joined by single spaces — so code that reads `p` (a first
+    * `(p, cnt, toks, pid, len)`. `toks` are the line's [[graft.text.Tokens]] and
+    * `p` is those tokens joined by single spaces — so code that reads `p` (a first
     * character, a re-split on ' ', a sort key) sees exactly `toks`, and lines
     * that differ only in whitespace are one pattern. `pid = xxhash64(p)` is the
     * 8-byte key the pid-keyed miners join and shuffle on instead of the line
@@ -40,7 +34,7 @@ object MinerOutput {
     */
   def distinctLines(lines: DataFrame, lineCol: String): DataFrame =
     lines
-      .select(array_join(tokens(col(lineCol)), " ").as("p"))
+      .select(array_join(Tokens.words(col(lineCol)), " ").as("p"))
       .filter(col("p") =!= "")
       .groupBy("p").agg(count(lit(1)).as("cnt"))
       .withColumn("toks", split(col("p"), " "))
@@ -59,21 +53,24 @@ object MinerOutput {
     finally dl.unpersist()
   }
 
-  /** Fails when two patterns of `patterns` (one row per pattern, columns `pid`
-    * and `p`, as [[distinctLines]] gives) share a `pid`: a miner keyed on pid
-    * would merge them silently. One job, a map-side-combined count per pid; the
-    * patterns are read again only to name a collision.
+  /** The number of `patterns` (one row per pattern, columns `pid` and `p`, as
+    * [[distinctLines]] gives); fails when two share a `pid`, which a miner keyed
+    * on pid would merge silently. One job, a map-side-combined count per pid;
+    * the patterns are read again only to name a collision.
     */
-  def requireDistinctPids(patterns: DataFrame): Unit = {
-    val shared = patterns.select("pid").queryExecution.toRdd
+  def requireDistinctPids(patterns: DataFrame): Long = {
+    val (n, shared) = patterns.select("pid").queryExecution.toRdd
       .map(r => (r.getLong(0), 1L)).reduceByKey(_ + _)
-      .filter(_._2 > 1).keys.collect()
+      .aggregate((0L, List.empty[Long]))(
+        { case ((m, sh), (pid, c)) => (m + c, if (c > 1) pid :: sh else sh) },
+        { case ((m1, sh1), (m2, sh2)) => (m1 + m2, sh1 ::: sh2) })
     shared.headOption.foreach { pid =>
       val named = patterns.filter(col("pid") === pid).select("p").collect()
         .map(_.getString(0)).sorted
       throw new IllegalStateException(
         s"pid $pid is shared by distinct patterns ${named.map("\"" + _ + "\"").mkString(" and ")}")
     }
+    n
   }
 
   /** `patterns` (keyed by `pid`) with `cluster`: the smallest pid of its

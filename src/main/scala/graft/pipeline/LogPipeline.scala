@@ -5,6 +5,7 @@ import graft.ingest.{LogStyle, WebPagesGen}
 import graft.rex.RexCompiler
 import graft.spell.SpellModel
 import graft.table.ParquetManifestTable
+import graft.text.Tokens
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,11 +63,11 @@ object PipelineConfig {
 final class MatchCatalog(val drain: DrainTree, val spell: SpellModel) extends Serializable {
   /** Returns (template, matchedBy) — matchedBy ∈ drain|spell|self. */
   def matchLine(masked: String): (String, String) = {
-    val toks = RexCompiler.tokenize(masked)
+    val toks = Tokens.words(masked)
     val c = drain.search(toks)
     if (c != null) (c.templateStr, "drain")
     else {
-      val stoks = RexCompiler.tokenizeSpell(masked)
+      val stoks = Tokens.spell(masked)
       val sc = if (spell != null) spell.search(stoks) else null
       if (sc != null) (sc.templateStr, "spell")
       else (toks.mkString(" "), "self")
@@ -153,7 +154,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
     // re-encoded it — breaking whole-stage codegen for the entire pre-exchange
     // stage — where the UDF converts only the one string it reads and leaves
     // the row in Tungsten form for the shuffle write. Same tokenizer, same key.
-    val tokLen = udf { (m: String) => RexCompiler.tokenize(m).length }
+    val tokLen = udf { (m: String) => Tokens.words(m).length }
     val keyed = masked.filter(col("parsed"))
       .select(tokLen(col("masked")).as("len"), col("url"), col("line_no"),
         col("masked"))
@@ -221,7 +222,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
           val n = mined.getOrElse(len, 0)
           if (cfgL.mineSampleLimit.forall(n < _)) {
             trees.getOrElseUpdate((len, bucket),
-              new DrainTree(cfgL.depth, cfgL.st)).add(RexCompiler.tokenize(m))
+              new DrainTree(cfgL.depth, cfgL.st)).add(Tokens.words(m))
             mined(len) = n + 1
           }
         }
@@ -282,7 +283,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
     // the typed filter deserialized every 3-column row into a tuple just to
     // read `masked`; the UDF converts only that string and keeps the full-corpus
     // residue scan inside whole-stage codegen. Same tree search, same residue.
-    val isResidue = udf { (m: String) => bc.value.search(RexCompiler.tokenize(m)) == null }
+    val isResidue = udf { (m: String) => bc.value.search(Tokens.words(m)) == null }
     val partials: Array[(Int, Array[Byte])] = masked.filter(col("parsed"))
       .select(col("url"), col("line_no"), col("masked"))
       .filter(isResidue(col("masked")))
@@ -292,7 +293,7 @@ class LogPipeline(val cfg: PipelineConfig) extends Serializable {
       .mapPartitions { it =>
         val m = new SpellModel()
         it.foreach { r =>
-          if (m.minedLines < limitL) m.add(RexCompiler.tokenizeSpell(r._3))
+          if (m.minedLines < limitL) m.add(Tokens.spell(r._3))
         }
         if (m.clusterList.isEmpty) Iterator.empty
         else Iterator((org.apache.spark.TaskContext.getPartitionId(), serialize(m)))

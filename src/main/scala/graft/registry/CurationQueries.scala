@@ -4,7 +4,7 @@ import graft.eval.Evaluator
 import graft.mm.Multimodal
 import graft.pipeline.{LogPipeline, PipelineConfig}
 import graft.registry.QuerySupport._
-import graft.text.TextOps
+import graft.text.{TextOps, Tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,8 +35,7 @@ object CurationQueries {
       "filtered AS (SELECT * FROM scored WHERE q >= 30000), "
 
   /** DuckDB replay of `TextOps.tokenCount`. */
-  private val tokenCountSql =
-    "CASE WHEN trim(text) = '' THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END"
+  private val tokenCountSql = s"len(${Tokens.sql("text")})"
 
   /** DuckDB replay of the samplers' doc hash: `md5(doc_id)`'s first 8 hex
     * digits as an unsigned 32-bit value.
@@ -129,15 +128,14 @@ object CurationQueries {
       oracle = s"SELECT doc_id, $qualityExpr::BIGINT AS quality_milli FROM documents",
       build = perDoc(Seq(TextOps.qualityScoreMilli(col("text")).as("quality_milli")))),
     Query("t_stopword_ratio",
-      oracle = "SELECT doc_id, CASE WHEN trim(text) = '' THEN 0 ELSE " +
-        "CAST(floor(len(list_filter(string_split_regex(trim(text), '\\s+'), " +
+      oracle = "SELECT doc_id, CAST(floor(len(list_filter(ts, " +
         "x -> list_contains(['the','of','and','a','to','in','is','it','that','for','on','with'], x))) " +
-        "* 1000 / GREATEST(len(string_split_regex(trim(text), '\\s+')), 1)) AS BIGINT) END::BIGINT " +
-        "AS stopword_milli FROM documents",
+        "* 1000 / GREATEST(len(ts), 1)) AS BIGINT) AS stopword_milli " +
+        s"FROM (SELECT doc_id, ${Tokens.sql("text")} AS ts FROM documents)",
       build = perDoc(Seq(
         TextOps.stopwordRatioMilli(col("text"), TextOps.EnglishStopwords).as("stopword_milli")))),
     Query("t_fingerprint",
-      oracle = "SELECT doc_id, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fp FROM documents",
+      oracle = s"SELECT doc_id, md5(lower(array_to_string(${Tokens.sql("text")}, ' '))) AS fp FROM documents",
       build = perDoc(Seq(TextOps.normFingerprint(col("text")).as("fp")))),
     Query("t_langid",
       oracle = langIdSubquery,
@@ -145,7 +143,7 @@ object CurationQueries {
     Query("t_rolling_fp",
       // the token hashes folded by the same wrapping chain, the final value
       // mapped back to signed BIGINT
-      oracle = "WITH toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM documents), " +
+      oracle = s"WITH toks AS (SELECT doc_id, ${Tokens.sql("text")} AS ts FROM documents), " +
         s"th AS (SELECT doc_id, $fnvTokenHashesSql AS hs FROM toks) " +
         "SELECT doc_id, CAST(CASE WHEN u >= 9223372036854775808::HUGEINT " +
         "THEN u - 18446744073709551616::HUGEINT ELSE u END AS BIGINT) AS rfp " +
@@ -188,12 +186,13 @@ object CurationQueries {
       }),
     Query("t_quality_gate",
       oracle = "WITH m AS (SELECT doc_id, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE len(ts) END AS n_tok, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE CAST(floor(list_sum(list_transform(ts, t -> length(t))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS mean_word_milli, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE CAST(floor(len(list_filter(ts, t -> regexp_matches(t, '[A-Za-z]'))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS alpha_word_milli, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE CAST(floor((len(ts) - len(list_distinct(ts))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS dup_milli, " +
-        "CASE WHEN trim(text) = '' THEN 0 ELSE CAST(floor(len(list_filter(ts, x -> list_contains(['the','of','and','a','to','in','is','it','that','for','on','with'], x))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS sw " +
-        "FROM (SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS ts FROM documents)) " +
+        "len(ts) AS n_tok, " +
+        // list_sum([]) is NULL: the one guard a blank text still needs
+        "CASE WHEN len(ts) = 0 THEN 0 ELSE CAST(floor(list_sum(list_transform(ts, t -> length(t))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS mean_word_milli, " +
+        "CAST(floor(len(list_filter(ts, t -> regexp_matches(t, '[A-Za-z]'))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) AS alpha_word_milli, " +
+        "CAST(floor((len(ts) - len(list_distinct(ts))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) AS dup_milli, " +
+        "CAST(floor(len(list_filter(ts, x -> list_contains(['the','of','and','a','to','in','is','it','that','for','on','with'], x))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) AS sw " +
+        s"FROM (SELECT doc_id, ${Tokens.sql("text")} AS ts FROM documents)) " +
         "SELECT doc_id, mean_word_milli, alpha_word_milli, " +
         "(n_tok BETWEEN 10 AND 100000 AND mean_word_milli BETWEEN 2000 AND 12000 " +
         "AND alpha_word_milli >= 800 AND dup_milli <= 500 AND sw >= 1)::BIGINT AS pass FROM m",
@@ -240,11 +239,11 @@ object CurationQueries {
           "domain", "doc_id", k = 50)
       }),
     Query("t_repetition",
-      oracle = "WITH base AS (SELECT doc_id, CASE WHEN trim(text) = '' THEN 0 ELSE " +
-        "CAST(floor((len(ts) - len(list_distinct(ts))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) END AS dup_word_milli, " +
+      oracle = "WITH base AS (SELECT doc_id, " +
+        "CAST(floor((len(ts) - len(list_distinct(ts))) * 1000 / GREATEST(len(ts), 1)) AS BIGINT) AS dup_word_milli, " +
         "CASE WHEN len(ts) < 2 THEN [array_to_string(ts, ' ')] " +
         "ELSE list_transform(range(1, len(ts)), i -> array_to_string(ts[i:i+1], ' ')) END AS bigrams " +
-        "FROM (SELECT doc_id, text, string_split_regex(trim(text), '\\s+') AS ts FROM documents)), " +
+        s"FROM (SELECT doc_id, ${Tokens.sql("text")} AS ts FROM documents)), " +
         "cnt AS (SELECT doc_id, bg, count(*) AS c FROM (SELECT doc_id, unnest(bigrams) AS bg FROM base) GROUP BY doc_id, bg), " +
         "agg AS (SELECT doc_id, max(c) AS top_c, sum(c) AS n_bg FROM cnt GROUP BY doc_id) " +
         "SELECT b.doc_id, b.dup_word_milli, CAST(floor(top_c * 1000 / n_bg) AS BIGINT) AS top_bigram_milli " +
@@ -257,31 +256,15 @@ object CurationQueries {
         // ~1M-row (doc_id, bigram) shuffle → re-agg → join-back moved zero
         // information between rows (2 Exchanges + 1 join removed, guide §2.4 —
         // and the shape stays shuffle-free at any corpus size). The UDF replays
-        // wordShingles(k=2) token-for-token: Spark `trim` strips ' ' only, Spark
-        // `split` keeps trailing empties (split limit -1), n<2 docs contribute
-        // one whole-text shingle (count 1/1, same ratio as the joined string).
+        // wordShingles(k=2) over the same Tokens: n<2 docs contribute one
+        // whole-text shingle (count 1/1, same ratio as the joined string).
         val bigramStats = udf { (text: String) =>
           if (text == null) null
           else {
-            var b = 0; var e = text.length
-            while (b < e && text.charAt(b) == ' ') b += 1
-            while (e > b && text.charAt(e - 1) == ' ') e -= 1
-            val toks = text.substring(b, e).split("\\s+", -1)
-            var top = 1L
-            var nbg = 1L
-            if (toks.length >= 2) {
-              val m = new scala.collection.mutable.HashMap[String, Long]()
-              var i = 0
-              while (i < toks.length - 1) {
-                val bg = toks(i) + " " + toks(i + 1)
-                val c = m.getOrElse(bg, 0L) + 1L
-                m.update(bg, c)
-                if (c > top) top = c
-                i += 1
-              }
-              nbg = toks.length - 1L
-            }
-            (top, nbg)
+            val toks = Tokens.words(text)
+            if (toks.length < 2) (1L, 1L)
+            else ((0 until toks.length - 1).groupMapReduce(i => toks(i) + " " + toks(i + 1))(
+              _ => 1L)(_ + _).values.max, toks.length - 1L)
           }
         }
         t(s, dir, "documents")
@@ -383,11 +366,11 @@ object CurationQueries {
         "bsh AS (SELECT DISTINCT unnest(sh) AS sh FROM (SELECT " +
         "CASE WHEN len(ts) < 5 THEN [array_to_string(ts, ' ')] " +
         "ELSE list_transform(range(1, len(ts) - 3), i -> array_to_string(ts[i:i+4], ' ')) END AS sh " +
-        "FROM (SELECT string_split_regex(trim(text), '\\s+') AS ts FROM bench))), " +
+        s"FROM (SELECT ${Tokens.sql("text")} AS ts FROM bench))), " +
         "tsh AS (SELECT doc_id, unnest(list_distinct(sh)) AS sh FROM (SELECT doc_id, " +
         "CASE WHEN len(ts) < 5 THEN [array_to_string(ts, ' ')] " +
         "ELSE list_transform(range(1, len(ts) - 3), i -> array_to_string(ts[i:i+4], ' ')) END AS sh " +
-        "FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM train))) " +
+        s"FROM (SELECT doc_id, ${Tokens.sql("text")} AS ts FROM train))) " +
         "SELECT t.doc_id AS train_id, count(DISTINCT t.sh)::BIGINT AS n_overlap " +
         "FROM tsh t JOIN bsh b USING (sh) GROUP BY t.doc_id HAVING count(DISTINCT t.sh) >= 3",
       build = (s, dir) => {

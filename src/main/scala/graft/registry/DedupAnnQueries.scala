@@ -3,6 +3,7 @@ package graft.registry
 import graft.dedup.Dedup
 import graft.registry.QuerySupport._
 import graft.sim.Ann
+import graft.text.Tokens
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -107,7 +108,7 @@ object DedupAnnQueries {
       // pigeonhole banding is EXACT (hamming 0 ⇒ all four 16-bit bands equal), so
       // the pair set is provably all equal-simhash pairs — no recall caveat
       oracle = s"WITH docs AS ($docsWithDupsSql), " +
-        "toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM docs), " +
+        s"toks AS (SELECT doc_id, ${Tokens.sql("text")} AS ts FROM docs), " +
         s"th AS (SELECT doc_id, $fnvTokenHashesSql AS hs FROM toks), " +
         "bits AS (SELECT doc_id, list_transform(hs, u -> lpad(bin(u), 64, '0')) AS bs FROM th), " +
         "k AS (SELECT doc_id, array_to_string(list_transform(range(1, 65), i -> " +

@@ -4,8 +4,8 @@ import graft.TempDirs
 import graft.eval.Evaluator
 import graft.ingest.WebPagesGen
 import graft.pipeline.{LogPipeline, PipelineConfig}
-import graft.rex.RexCompiler
 import graft.registry.QuerySupport._
+import graft.text.Tokens
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -300,7 +300,7 @@ object LogQueries {
         val pages = WebPagesGen.pagesNarrow(s, 2000L).toDF()
         val toks = p.withMasked(p.structure(p.explodeLines(pages)))
           .filter(col("parsed")).select("masked").as[String]
-          .map(RexCompiler.tokenize)
+          .map(Tokens.words(_))
         val agg = new graft.drain.DrainAggregator(cfg.depth, cfg.st)
         toks.select(agg.toColumn).collect()(0).toSeq
           .sortBy(r => (r.event_template, r.event_id))

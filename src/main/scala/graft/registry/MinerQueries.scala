@@ -1,6 +1,7 @@
 package graft.registry
 
 import graft.registry.QuerySupport._
+import graft.text.Tokens
 import org.apache.spark.sql.functions._
 
 /** The DataFrame miners over line shapes built from `events`. Every catalog
@@ -19,6 +20,11 @@ object MinerQueries {
       "SELECT substr(md5(event_template), 1, 8) AS event_id, event_template, " +
       "CAST(SUM(occurrences) AS BIGINT) AS occurrences FROM tpl GROUP BY event_template"
 
+  /** CTE `name(key, cnt)` over `lines`: the SQL twin of [[graft.miner.MinerOutput.distinctLines]]. */
+  private def patternsSql(name: String, key: String = "p"): String =
+    s"$name AS (SELECT $key, count(*) AS cnt FROM (SELECT array_to_string(${Tokens.sql("line")}, ' ') " +
+      s"AS $key FROM lines) WHERE $key != '' GROUP BY 1), "
+
   val all: Seq[Query] = Seq(
     Query("iplom_templates",
       // the full IPLoM mine replayed relationally: length partition → cardinality
@@ -26,8 +32,8 @@ object MinerQueries {
       // gate → bijection-mapping split (B1/B2/MM, round 3) → per-partition
       // constant/wildcard pieces → merged catalog
       oracle = typeUserValue.linesCte +
-        "t2 AS (SELECT string_split_regex(trim(line), '\\s+') AS toks, " +
-        "CAST(len(string_split_regex(trim(line), '\\s+')) AS VARCHAR) AS pkey FROM lines), " +
+        s"t2 AS (SELECT ${Tokens.sql("line")} AS toks, " +
+        s"CAST(len(${Tokens.sql("line")}) AS VARCHAR) AS pkey FROM lines), " +
         "pe AS (SELECT pkey, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t2), " +
         "cards AS (SELECT pkey, arg_min(pos1, nd * 1000000 + pos1) AS split_pos1 FROM " +
         "(SELECT pkey, pos1, count(DISTINCT tok) AS nd FROM pe GROUP BY pkey, pos1) WHERE nd > 1 GROUP BY pkey), " +
@@ -66,7 +72,7 @@ object MinerQueries {
       // cluster support filter
       oracle = typeUserValue.linesCte +
         "s AS (SELECT count(*) // 10 AS sup FROM lines), " +
-        "t AS (SELECT row_number() OVER () AS lid, string_split_regex(trim(line), '\\s+') AS toks FROM lines), " +
+        s"t AS (SELECT row_number() OVER () AS lid, ${Tokens.sql("line")} AS toks FROM lines), " +
         "pe AS (SELECT lid, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
         "freq AS (SELECT pos1, tok FROM (SELECT pos1, tok, count(*) AS wf FROM pe GROUP BY pos1, tok) " +
         "WHERE wf >= (SELECT sup FROM s)), " +
@@ -90,7 +96,7 @@ object MinerQueries {
       oracle = "WITH lines AS (SELECT CASE WHEN event_type = 'click' THEN event_type || ' ping' " +
         "ELSE event_type || ' user=' || CAST(user_id AS VARCHAR) || ' code ' || " +
         "CAST(user_id % 7 AS VARCHAR) END AS line FROM events), " +
-        "anon AS (SELECT list_transform(string_split_regex(trim(line), '\\s+'), t -> " +
+        s"anon AS (SELECT list_transform(${Tokens.sql("line")}, t -> " +
         "CASE WHEN regexp_matches(t, '^\\w+=\\S+$') THEN regexp_replace(t, '=.*$', '=<*>') " +
         "WHEN regexp_matches(t, '[0-9]') THEN '<*>' ELSE t END) AS pieces FROM lines), " +
         "cat AS (SELECT pieces, len(pieces) AS len, " +
@@ -128,7 +134,7 @@ object MinerQueries {
       // rows keep the min honest) → ordered reassembly
       oracle = typeUserValue.linesCte +
         "s AS (SELECT count(*) // 10 AS sup FROM lines), " +
-        "t AS (SELECT row_number() OVER () AS lid, string_split_regex(trim(line), '\\s+') AS toks FROM lines), " +
+        s"t AS (SELECT row_number() OVER () AS lid, ${Tokens.sql("line")} AS toks FROM lines), " +
         "pe AS (SELECT lid, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
         "freq AS (SELECT tok FROM (SELECT tok, count(DISTINCT lid) AS wf FROM pe GROUP BY tok) " +
         "WHERE wf >= (SELECT sup FROM s)), " +
@@ -169,7 +175,7 @@ object MinerQueries {
       // recursive-CTE components → positionwise template assembly
       oracle = "WITH RECURSIVE lines AS (SELECT event_type || ' u' || CAST(user_id % 30 AS VARCHAR) || " +
         "' c' || CAST(user_id % 7 AS VARCHAR) AS line FROM events), " +
-        "pat AS (SELECT line AS p, count(*) AS cnt FROM lines GROUP BY line), " +
+        patternsSql("pat") +
         "pr AS (SELECT row_number() OVER (ORDER BY p) AS pid, p, cnt, " +
         "string_split(p, ' ') AS toks, len(string_split(p, ' ')) AS l FROM pat), " +
         "pairs AS (SELECT a.pid AS ia, b.pid AS ib FROM pr a, pr b WHERE a.pid < b.pid " +
@@ -199,9 +205,9 @@ object MinerQueries {
       // covering-bigram frequency vs support → piece assembly
       oracle = typeUser50Value.linesCte +
         "s AS (SELECT count(*) // 100 AS sup FROM lines), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "t AS (SELECT p, cnt, string_split_regex(p, '\\s+') AS toks, " +
-        "list_concat(list_concat([chr(1)], string_split_regex(p, '\\s+')), [chr(2)]) AS ext FROM pat), " +
+        patternsSql("pat") +
+        "t AS (SELECT p, cnt, string_split(p, ' ') AS toks, " +
+        "list_concat(list_concat([chr(1)], string_split(p, ' ')), [chr(2)]) AS ext FROM pat), " +
         "bgx AS (SELECT p, cnt, i AS bpos1, ext[i] || ' ' || ext[i + 1] AS bg FROM " +
         "(SELECT p, cnt, ext, unnest(range(1, len(ext))) AS i FROM t)), " +
         "dict AS (SELECT bg, sum(cnt) AS f FROM bgx GROUP BY bg), " +
@@ -229,9 +235,9 @@ object MinerQueries {
       // (the (pos:word) set at the modal f, sorted as strings exactly like the
       // engine's array_sort(collect_list)) → agreement assembly
       oracle = typeUser50Value.linesCte +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "t AS (SELECT p, cnt, string_split_regex(p, '\\s+') AS toks, " +
-        "len(string_split_regex(p, '\\s+')) AS l FROM pat), " +
+        patternsSql("pat") +
+        "t AS (SELECT p, cnt, string_split(p, ' ') AS toks, " +
+        "len(string_split(p, ' ')) AS l FROM pat), " +
         "pe AS (SELECT p, cnt, l, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
         "freq AS (SELECT l, pos1, tok, sum(cnt) AS f FROM pe GROUP BY 1, 2, 3), " +
         "m AS (SELECT pe.p, pe.l, pe.pos1, pe.tok, freq.f FROM pe JOIN freq " +
@@ -259,8 +265,8 @@ object MinerQueries {
       oracle = "WITH lines AS (SELECT event_type || ' ' || " +
         "repeat('pad ', ascii(substr(event_type, 1, 1)) % 4) || 'u' || " +
         "repeat(chr(97 + CAST(user_id % 3 AS INT)), 2) || ' n' || CAST(user_id AS VARCHAR) AS line FROM events), " +
-        "pat0 AS (SELECT trim(line) AS line, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "mk AS (SELECT list_transform(string_split_regex(line, '\\s+'), " +
+        patternsSql("pat0", "line") +
+        "mk AS (SELECT list_transform(string_split(line, ' '), " +
         "t -> CASE WHEN regexp_matches(t, '[0-9]') THEN '<*>' ELSE t END) AS toks, cnt FROM pat0), " +
         "pat AS (SELECT toks, sum(cnt) AS cnt FROM mk GROUP BY toks), " +
         "keyed AS (SELECT array_to_string(list_transform(toks, " +
@@ -314,7 +320,7 @@ object MinerQueries {
       // matching the engine exactly — IEEE double division of equal integers)
       // → constant/wildcard assembly
       oracle = typeUserValue.linesCte +
-        "t AS (SELECT row_number() OVER () AS lid, string_split_regex(trim(line), '\\s+') AS toks FROM lines), " +
+        s"t AS (SELECT row_number() OVER () AS lid, ${Tokens.sql("line")} AS toks FROM lines), " +
         "pe AS (SELECT lid, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM t), " +
         "freq AS (SELECT pos1, tok, count(*) AS wf FROM pe GROUP BY 1, 2), " +
         "m AS (SELECT pe.lid, pe.pos1, pe.tok, f.wf FROM pe JOIN freq f ON pe.pos1 = f.pos1 AND pe.tok = f.tok), " +
@@ -333,7 +339,7 @@ object MinerQueries {
       // LenMa replayed relationally: cluster key = word-length vector; a position
       // is constant iff min(tok) = max(tok) within the cluster
       oracle = typeUserValue.linesCte +
-        "t AS (SELECT string_split_regex(trim(line), '\\s+') AS toks FROM lines), " +
+        s"t AS (SELECT ${Tokens.sql("line")} AS toks FROM lines), " +
         "k AS (SELECT toks, array_to_string(list_transform(toks, x -> CAST(length(x) AS VARCHAR)), ',') AS lkey FROM t), " +
         "pe AS (SELECT lkey, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM k), " +
         "agg AS (SELECT lkey, pos1, min(tok) AS lo, max(tok) AS hi, count(*) AS n FROM pe GROUP BY 1, 2), " +
@@ -353,9 +359,9 @@ object MinerQueries {
         "repeat('x', 19 - 4 * (ascii(substr(event_type, 1, 1)) % 5)) || ' u' || " +
         "CAST(user_id % 7 AS VARCHAR) || ' ' || " +
         "repeat('9', CAST(1 + user_id % 3 AS INT)) AS line FROM events), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
+        patternsSql("pat") +
         "pr AS (SELECT row_number() OVER (ORDER BY p) AS pid, p, cnt, " +
-        "string_split_regex(p, '\\s+') AS toks, len(string_split_regex(p, '\\s+')) AS l FROM pat), " +
+        "string_split(p, ' ') AS toks, len(string_split(p, ' ')) AS l FROM pat), " +
         "lvt AS (SELECT pid, cnt, toks, l, list_transform(toks, t -> length(t)::BIGINT) AS v FROM pr), " +
         "pairs AS (SELECT a.pid AS ia, b.pid AS ib FROM lvt a, lvt b WHERE a.pid < b.pid " +
         "AND a.l = b.l AND len(list_filter(range(1, a.l + 1), i -> a.v[i] != b.v[i])) " +
@@ -392,8 +398,8 @@ object MinerQueries {
       // max(tok) within the cluster ('g' flag: DuckDB regexp_replace is
       // first-match-only by default, Spark's replaces all)
       oracle = typeUserValue.linesCte +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "k AS (SELECT cnt, string_split_regex(p, '\\s+') AS toks FROM pat), " +
+        patternsSql("pat") +
+        "k AS (SELECT cnt, string_split(p, ' ') AS toks FROM pat), " +
         "k2 AS (SELECT cnt, toks, array_to_string(list_transform(toks, x -> " +
         "CAST(length(regexp_replace(x, '[^A-Z]', '', 'g')) AS VARCHAR) || ':' || " +
         "CAST(length(regexp_replace(x, '[^a-z]', '', 'g')) AS VARCHAR) || ':' || " +
@@ -422,9 +428,9 @@ object MinerQueries {
       oracle = "WITH RECURSIVE lines AS (SELECT repeat(substr(event_type, 1, 1), 8) || ' ' || " +
         "substr(event_type, 1, 1) || CAST(user_id % 5 AS VARCHAR) || ' job ' || " +
         "substr(event_type, 1, 1) || CAST(user_id % 3 AS VARCHAR) AS line FROM events), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
+        patternsSql("pat") +
         "pr AS (SELECT row_number() OVER (ORDER BY p) AS pid, p, cnt, " +
-        "string_split_regex(p, '\\s+') AS toks FROM pat), " +
+        "string_split(p, ' ') AS toks FROM pat), " +
         s"w AS (SELECT ${graft.lke.Lke.weightMilliSqlList} AS wt), " +
         "pairs AS (SELECT a.pid AS ia, b.pid AS ib, CAST(list_sum(list_transform(" +
         "range(1, len(a.toks) + 1), i -> CASE WHEN a.toks[i] != b.toks[i] " +
@@ -489,8 +495,8 @@ object MinerQueries {
       // signature assembly
       oracle = "WITH lines AS (SELECT event_type || ' u' || CAST(user_id % 4 AS VARCHAR) || ' ' || " +
         "upper(substr(event_type, 1, 2)) AS line FROM events), " +
-        "pat AS (SELECT trim(line) AS p, count(*) AS cnt FROM lines GROUP BY 1), " +
-        "a AS (SELECT p, cnt, string_split_regex(p, '\\s+') AS toks, " +
+        patternsSql("pat") +
+        "a AS (SELECT p, cnt, string_split(p, ' ') AS toks, " +
         "ascii(substr(p, 1, 1)) % 3 AS g FROM pat), " +
         "gs AS (SELECT g, sum(cnt) AS sz FROM a GROUP BY g), " +
         "pe AS (SELECT g, cnt, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos1 FROM a), " +

@@ -4,6 +4,7 @@ import graft.TempDirs
 import graft.dedup.Dedup
 import graft.ingest.WebPagesGen
 import graft.pipeline.{LogPipeline, MatchCatalog, PipelineConfig}
+import graft.text.Tokens
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -115,7 +116,7 @@ object QuerySupport {
       "len(list_filter(toks, x -> list_contains(['der','die','und','das','nicht','ein','mit'], x))) AS s3, " +
       "len(list_filter(toks, x -> list_contains(['le','les','des','est','une','dans','pour'], x))) AS s4, " +
       "len(list_filter(toks, x -> list_contains(['的','是','不','了','在','人','有'], x))) AS s5 " +
-      "FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents)))"
+      s"FROM (SELECT doc_id, ${Tokens.sql("lower(text)")} AS toks FROM documents)))"
 
   /** documents ∪ exact copies (ids +100000 for every 5th doc) — guaranteed
     * duplicates so dedup queries return non-empty, fully deterministic results.
@@ -136,7 +137,7 @@ object QuerySupport {
   def shingleSetsSql(from: String): String =
     "sh AS (SELECT doc_id, list_distinct(CASE WHEN len(ts) < 3 THEN [array_to_string(ts, ' ')] " +
       "ELSE list_transform(range(1, len(ts) - 1), i -> array_to_string(ts[i:i+2], ' ')) END) AS s " +
-      s"FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ts FROM $from))"
+      s"FROM (SELECT doc_id, ${Tokens.sql("text")} AS ts FROM $from))"
 
   /** Every pair `(id_a, id_b)` of [[shingleSetsSql]] docs whose exact shingle
     * Jaccard is at least `threshold` (a SQL literal).

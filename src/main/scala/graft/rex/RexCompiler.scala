@@ -105,16 +105,4 @@ object RexCompiler {
   /** Driver-side variant for the sequential oracle and pure-Scala tests. */
   def applyMasksStr(s: String, rexes: Seq[String]): String =
     rexes.foldLeft(s)((acc, r) => acc.replaceAll(r, "<*>"))
-
-  /** Whitespace tokenization matching Python's `str.strip().split()` (F2):
-    * strip unicode whitespace, split on whitespace runs, drop empties.
-    */
-  def tokenize(s: String): Array[String] = {
-    val t = s.strip()
-    if (t.isEmpty) Array.empty[String] else t.split("\\s+")
-  }
-
-  /** Spell's tokenizer (F3): split on `[\s=:,]`, drop empties. */
-  def tokenizeSpell(s: String): Array[String] =
-    s.split("[\\s=:,]").filter(_.nonEmpty)
 }

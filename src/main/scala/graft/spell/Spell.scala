@@ -169,7 +169,7 @@ final class SpellModel(val tau: Double = 0.5) extends Serializable {
   var minedLines: Long = 0L
 
   /** One online step — the body of reference `::parse` ≈L210–260. `tokens` must
-    * already be Spell-tokenized (`[\s=:,]` split) and mask-preprocessed.
+    * already be [[graft.text.Tokens.spell]] tokens of a mask-preprocessed line.
     * `weight` lets a merge replay a whole cluster (template × count) as one step.
     */
   def add(tokens: Array[String], weight: Long = 1L): LcsCluster = {

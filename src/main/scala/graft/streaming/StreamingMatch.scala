@@ -94,7 +94,7 @@ object StreamingMatch {
     val p = new LogPipeline(cfg)
     val masked = p.withMasked(p.structure(p.explodeLines(pages)))
       .filter(col("parsed")).select("masked").as[String]
-      .map(graft.rex.RexCompiler.tokenize)
+      .map(graft.text.Tokens.words(_))
     implicit val treeEnc: org.apache.spark.sql.Encoder[graft.drain.DrainTree] =
       org.apache.spark.sql.Encoders.javaSerialization[graft.drain.DrainTree]
     masked.groupByKey(_.length)

@@ -4,14 +4,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline over the `documents` table:
-  * token counting, quality scoring, language ID, fingerprinting. All column
+  * token counting, quality scoring, language ID, fingerprinting. Words are
+  * [[Tokens]] (ASCII-whitespace runs; a blank text has none). All column
   * expressions here are built-ins (codegen'd, no UDF) except where noted.
   */
 object TextOps {
 
-  /** Whitespace token count (Python `len(s.split())` semantics: 0 for blank). */
-  def tokenCount(c: Column): Column =
-    when(trim(c) === "", lit(0)).otherwise(size(split(trim(c), "\\s+")))
+  /** Token count ([[Tokens]]; 0 for blank). */
+  def tokenCount(c: Column): Column = size(Tokens.words(c))
 
   /** BPE-ish subword count approximation: word-boundary pieces + digit runs +
     * punctuation each count as a token (a cheap, deterministic proxy for a real
@@ -47,12 +47,14 @@ object TextOps {
     * stopword set, scaled by 1000 (integer).
     */
   def stopwordRatioMilli(c: Column, stopwords: Seq[String]): Column = {
-    val toks = split(trim(c), "\\s+")
+    val toks = Tokens.words(c)
     val sw = array(stopwords.map(lit): _*)
-    when(trim(c) === "", lit(0L)).otherwise(
-      floor(size(filter(toks, t => array_contains(sw, t))).cast("long") * 1000L /
-        greatest(size(toks).cast("long"), lit(1L))).cast("long"))
+    perWordMilli(size(filter(toks, t => array_contains(sw, t))), toks)
   }
+
+  /** `floor(n · 1000 / max(#toks, 1))` as a long (0 for a blank text). */
+  private def perWordMilli(n: Column, toks: Column): Column =
+    floor(n.cast("long") * 1000L / greatest(size(toks).cast("long"), lit(1L))).cast("long")
 
   val EnglishStopwords: Seq[String] =
     Seq("the", "of", "and", "a", "to", "in", "is", "it", "that", "for", "on", "with")
@@ -72,7 +74,7 @@ object TextOps {
     * no hits → "und"). Pure column expression over tokens.
     */
   def langId(c: Column): Column = {
-    val toks = split(lower(trim(c)), "\\s+")
+    val toks = Tokens.words(lower(c))
     val scores = LangMarkers.map { case (lang, markers) =>
       val m = array(markers.map(lit): _*)
       struct(size(filter(toks, t => array_contains(m, t))).as("score"), lit(lang).as("lang"))
@@ -87,9 +89,9 @@ object TextOps {
     when(best.getField("score") === 0, lit("und")).otherwise(best.getField("lang"))
   }
 
-  /** Normalized-text md5 fingerprint (exact-dup key): lowercase, collapse whitespace. */
+  /** Normalized-text md5 fingerprint (exact-dup key): lowercase, tokens joined by ' '. */
   def normFingerprint(c: Column): Column =
-    md5(lower(regexp_replace(trim(c), "\\s+", " ")))
+    md5(lower(array_join(Tokens.words(c), " ")))
 
   /** PII masking patterns, applied in order (most specific first). All patterns are
     * RE2-compatible (no lookaround, no backreferences) so a DuckDB/RE2 oracle replays
@@ -120,10 +122,8 @@ object TextOps {
     * (0 = all tokens distinct, 1000 → everything repeated). Pure column expression.
     */
   def dupWordMilli(c: Column): Column = {
-    val toks = split(trim(c), "\\s+")
-    when(trim(c) === "", lit(0L)).otherwise(
-      floor((size(toks) - size(array_distinct(toks))).cast("long") * 1000L /
-        greatest(size(toks).cast("long"), lit(1L))).cast("long"))
+    val toks = Tokens.words(c)
+    perWordMilli(size(toks) - size(array_distinct(toks)), toks)
   }
 
   /** Mean token length in milli-chars (e.g. 4500 = 4.5 chars/word) — a Gopher
@@ -131,20 +131,16 @@ object TextOps {
     * tiny so ANSI overflow is unreachable.
     */
   def meanWordLenMilli(c: Column): Column = {
-    val toks = split(trim(c), "\\s+")
-    when(trim(c) === "", lit(0L)).otherwise(
-      floor(aggregate(toks, lit(0L), (acc, t) => acc + length(t)) * 1000L /
-        greatest(size(toks).cast("long"), lit(1L))).cast("long"))
+    val toks = Tokens.words(c)
+    perWordMilli(aggregate(toks, lit(0L), (acc, t) => acc + length(t)), toks)
   }
 
   /** Fraction of tokens containing at least one ASCII letter, in milli — Gopher's
     * "80% of words must contain an alphabetic character" rule.
     */
   def alphaWordRatioMilli(c: Column): Column = {
-    val toks = split(trim(c), "\\s+")
-    when(trim(c) === "", lit(0L)).otherwise(
-      floor(size(filter(toks, t => regexp_like(t, lit("[A-Za-z]")))).cast("long") * 1000L /
-        greatest(size(toks).cast("long"), lit(1L))).cast("long"))
+    val toks = Tokens.words(c)
+    perWordMilli(size(filter(toks, t => regexp_like(t, lit("[A-Za-z]")))), toks)
   }
 
   /** Composite Gopher-style quality gate: token count, mean word length, alpha-word
@@ -193,21 +189,24 @@ object TextOps {
     if (text == null) 0L
     else {
       var h = 1469598103934665603L
-      text.trim.split("\\s+").foreach { t =>
-        var th = -3750763034362895579L // FNV offset basis
-        // codepoints, masked to 16 bits — keeps the DuckDB HUGEINT oracle
-        // (which folds codepoints) bit-identical even for astral chars;
-        // unchanged for BMP text
-        var i = 0
-        while (i < t.length) {
-          val cp = t.codePointAt(i)
-          th ^= (cp & 0xFFFF).toLong
-          th *= 1099511628211L
-          i += Character.charCount(cp)
-        }
-        h = h * 1099511628211L + th
-      }
+      Tokens.words(text).foreach(t => h = h * 1099511628211L + fnvToken(t))
       h
     }
+  }
+
+  /** FNV-1a 64 of token `t` over its codepoints masked to 16 bits, bit-identical
+    * to the DuckDB HUGEINT replay `QuerySupport.fnvTokenHashesSql` even for
+    * astral chars (used by [[rollingFingerprint]] and `Dedup.simhash64Fnv`).
+    */
+  private[graft] def fnvToken(t: String): Long = {
+    var h = -3750763034362895579L // FNV-1a 64 offset basis (unsigned 14695981039346656037)
+    var i = 0
+    while (i < t.length) {
+      val cp = t.codePointAt(i)
+      h ^= (cp & 0xFFFF).toLong
+      h *= 1099511628211L
+      i += Character.charCount(cp)
+    }
+    h
   }
 }

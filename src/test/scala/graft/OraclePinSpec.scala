@@ -16,23 +16,23 @@ class OraclePinSpec extends AnyFunSuite {
     "a1_group_counts" -> "314bd2929baf47aa",
     "a4_contingency" -> "a3fee5d2bcec6039",
     "a5_eval_scores" -> "2e9e225dd2da8d87",
-    "ael_templates" -> "10d8030c57151ea3",
+    "ael_templates" -> "d1fa2d47249792b4",
     "agg_distinct" -> "952c0d873df0fc7e",
     "agg_rollup" -> "ae462d28ef53d445",
     "ann_brute_topk" -> "82c9fcc42f612074",
     "ann_ivf_topk" -> "82c9fcc42f612074",
     "ann_lsh_topk" -> "82c9fcc42f612074",
     "ann_topk_join" -> "8fcf5ae480af22b8",
-    "brain_templates" -> "0906733413394603",
-    "d_components" -> "41928aa1e11abaea",
+    "brain_templates" -> "9bf0e834403981c4",
+    "d_components" -> "d5360734f1f7a1b1",
     "d_embed_pairs" -> "58a07ec0477f7f31",
     "d_exact_dedup" -> "905b2ee463e49d04",
     "d_exact_groups" -> "2149739fa40f8d84",
     "d_incremental" -> "116ef9263868dcba",
-    "d_jaccard_pairs" -> "12a24360f6340724",
-    "d_minhash_pairs" -> "477d166212f61bde",
+    "d_jaccard_pairs" -> "09071cf165b8dbe0",
+    "d_minhash_pairs" -> "c9063a4c507370f3",
     "d_para_dedup" -> "4d3bbc3b4450ea0f",
-    "d_simhash_pairs" -> "7c43d8dd21dde978",
+    "d_simhash_pairs" -> "8da1ded9d0e211d2",
     "e_hourly" -> "7dfbba85b0ec494f",
     "e_json_extract" -> "43e9b21585160c20",
     "e_pivot" -> "d2f253e22466e709",
@@ -41,15 +41,15 @@ class OraclePinSpec extends AnyFunSuite {
     "e_topk_users" -> "84209fc32124f1fe",
     "e_type_agg" -> "d8fb84b17d935bf0",
     "f5_eventid_md5" -> "ae997edd10fab3ad",
-    "iplom_templates" -> "c1dd692372eab985",
+    "iplom_templates" -> "60804a468b51d5af",
     "j1_line_join" -> "3b2b02647d7fbc43",
     "j_anti" -> "fc9b18b56477d63b",
     "j_asof" -> "339e9aa15e46bd55",
     "j_semi" -> "b6b797fd547a7b99",
-    "lenma_sim_templates" -> "4e2e8e4706b126e4",
-    "lenma_templates" -> "a66e82aced05ef6d",
-    "lfa_templates" -> "f8da99184ca601b5",
-    "lke_templates" -> "db1ababca3276e93",
+    "lenma_sim_templates" -> "9f4967af0e9c4093",
+    "lenma_templates" -> "9c90cf54a9f29bbd",
+    "lfa_templates" -> "e6949bf58e7fe5f4",
+    "lke_templates" -> "d937be1c4d235b16",
     "log_enrich_region" -> "a4e766eb09a2f2e0",
     "log_eval_scores" -> "837518abd96e6289",
     "log_matched_by" -> "9ced0bc521a58cd0",
@@ -61,11 +61,11 @@ class OraclePinSpec extends AnyFunSuite {
     "log_stream_templates" -> "4a5a5a1ac413ec56",
     "log_templates" -> "4a5a5a1ac413ec56",
     "log_templates_agg" -> "c2d4b28750996062",
-    "logcluster_templates" -> "4c3add191322de61",
-    "logmine_templates" -> "5ab6e127de2e9fa1",
+    "logcluster_templates" -> "dedbd3970e6df9fa",
+    "logmine_templates" -> "1da4f741381440f6",
     "logmine_xlen_templates" -> "3937b489679ccdfb",
-    "logram_templates" -> "7e1a95269085179d",
-    "logsig_templates" -> "bb075e92895d2230",
+    "logram_templates" -> "98bf8314e1c9bb84",
+    "logsig_templates" -> "053c0e6f58512278",
     "mm_features" -> "29c1b2cf9d143d0f",
     "mm_frames" -> "7644c39ae7165ed1",
     "molfi_templates" -> "5dbee1154006f2ba",
@@ -73,26 +73,26 @@ class OraclePinSpec extends AnyFunSuite {
     "q3_join" -> "dce85ce0bf5c606b",
     "s2_structure" -> "83579642daea6e40",
     "set_except" -> "0b9bb2dc31ed00b9",
-    "shiso_templates" -> "8d27e4c52600c079",
-    "slct_templates" -> "ea7d34130d402066",
-    "t_fingerprint" -> "621abf92cac14dc6",
-    "t_langid" -> "4f147560c2dd3765",
+    "shiso_templates" -> "ab30938728f81ebe",
+    "slct_templates" -> "bd3056bbffb336bc",
+    "t_fingerprint" -> "23a3dfa3683b2bc9",
+    "t_langid" -> "dfa2a3fa0559a0fe",
     "t_pii_mask" -> "82e88411165e0ae9",
     "t_quality" -> "d0a607fc324fc349",
-    "t_quality_gate" -> "1524731b27406bc0",
-    "t_repetition" -> "d30f61a1a9b93888",
-    "t_rolling_fp" -> "53987eb9bb713ae2",
-    "t_stopword_ratio" -> "8bde38ad928f7eb5",
+    "t_quality_gate" -> "a997844bcd6ab732",
+    "t_repetition" -> "a4a190132122bfa8",
+    "t_rolling_fp" -> "62bada14e7fafb99",
+    "t_stopword_ratio" -> "9bd43645daf5efe0",
     "t_subword_count" -> "8a6bb858f45e9d5c",
-    "t_token_count" -> "db5a87db56d8ffbe",
+    "t_token_count" -> "2b9abcd857e7d09c",
     "t_url_ops" -> "7612d5c645838a18",
-    "td_budget_sample" -> "6898d6c658527b02",
-    "td_decontam" -> "8e1826fa1aa09833",
+    "td_budget_sample" -> "496057e6871617b1",
+    "td_decontam" -> "7874b611965347bd",
     "td_domain_cap" -> "73d2829dff372c7d",
-    "td_pipeline" -> "f9b45e43d57ac665",
-    "td_pipeline_full" -> "d80ebe91c76252e3",
+    "td_pipeline" -> "997544f7b524dc72",
+    "td_pipeline_full" -> "d19964dfe5e5f58f",
     "td_stratified_sample" -> "cf5793641d83eb74",
-    "ulp_templates" -> "54e3bfbd66f46853",
+    "ulp_templates" -> "fcde765377a4d0cf",
     "w_window_topk" -> "b43bc638dd0135df"
   )
 

@@ -3,7 +3,7 @@ package graft.drain
 import graft.SparkSuite
 import graft.ingest.WebPagesGen
 import graft.pipeline.{LogPipeline, PipelineConfig}
-import graft.rex.RexCompiler
+import graft.text.Tokens
 import org.apache.spark.sql.functions._
 
 /** The Aggregator-based (one-pass, merge-canonical) miner: run-reproducible, and
@@ -18,7 +18,7 @@ class DrainAggregatorSpec extends SparkSuite {
     val pages = WebPagesGen.pages(spark, 150L).toDF()
     p.withMasked(p.structure(p.explodeLines(pages)))
       .select("masked").as[String]
-      .map(RexCompiler.tokenize)
+      .map(Tokens.words(_))
   }
 
   test("aggregator mines a catalog; repeated runs are bit-identical") {

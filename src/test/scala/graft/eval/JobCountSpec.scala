@@ -1,15 +1,17 @@
 package graft.eval
 
 import graft.{SparkEntry, SparkSuite}
+import graft.lke.Lke
+import graft.miner.MinerOutput
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Guards the number of Spark jobs the evaluator path submits: each job costs
-  * scheduling latency whatever its size, so a ground-truth join, one-row
-  * aggregates or a `Dataset.count()` creeping back in shows up here as extra
-  * jobs. Counts are exact for this suite's session config.
+/** Guards the number of Spark jobs the evaluator path and LKE's mine submit:
+  * each job costs scheduling latency whatever its size, so a ground-truth join,
+  * one-row aggregates or a `Dataset.count()` creeping back in shows up here as
+  * extra jobs. Counts are exact for this suite's session config.
   */
 class JobCountSpec extends SparkSuite {
 
@@ -40,6 +42,23 @@ class JobCountSpec extends SparkSuite {
     val dir = s"/job-count-${java.util.UUID.randomUUID()}/sf0.001"
     val jobs = jobsOf(SparkEntry.queries("log_eval_scores")(spark, dir).collect())
     assert(jobs == 8, s"log_eval_scores ran $jobs jobs")
+  }
+
+  test("LKE's size guard and pid check share one job") {
+    import spark.implicits._
+    val lines = ((1 to 6).map(i => s"conn host$i ok") ++
+      (1 to 6).map(i => s"shutdown imminent t$i")).toDF("line")
+    // the pid check returns the pattern count the size guard reads
+    val patterns = MinerOutput.distinctLines(lines, "line").cache()
+    patterns.count()
+    try {
+      var n = 0L
+      val jobs = jobsOf { n = MinerOutput.requireDistinctPids(patterns) }
+      assert(n == 12L && jobs == 1, s"requireDistinctPids counted $n patterns in $jobs jobs")
+    } finally patterns.unpersist()
+    // so the whole mine runs no separate count job before the pairs
+    val mine = jobsOf(Lke.mineCatalog(lines, "line").collect())
+    assert(mine == 48, s"Lke.mineCatalog ran $mine jobs")
   }
 
   test("evaluate over a cached input: one aggregate, 2 jobs") {

@@ -4,7 +4,7 @@ import graft.SparkSuite
 import graft.drain.DrainTree
 import graft.eval.{Evaluator, GroundTruth}
 import graft.ingest.LogStyles
-import graft.rex.RexCompiler
+import graft.text.Tokens
 import org.apache.spark.sql.functions._
 
 /** The reference's benchmark sweep (E2): one pipeline run per dataset-style config
@@ -34,7 +34,7 @@ class MultiStyleSpec extends SparkSuite {
       val seqLines = masked.filter(col("parsed")).select("url", "line_no", "masked")
         .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2)))
         .sortBy(r => (r._1, r._2))
-      val seq = DrainTree.mine(seqLines.iterator.map(r => RexCompiler.tokenize(r._3)),
+      val seq = DrainTree.mine(seqLines.iterator.map(r => Tokens.words(r._3)),
         cfg.depth, cfg.st).catalog()
       assert(dist == seq)
     }

@@ -4,7 +4,7 @@ import graft.SparkSuite
 import graft.drain.DrainTree
 import graft.eval.{Evaluator, GroundTruth}
 import graft.ingest.WebPagesGen
-import graft.rex.RexCompiler
+import graft.text.Tokens
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkSuite {
@@ -25,7 +25,7 @@ class PipelineSpec extends SparkSuite {
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2)))
       .sortBy(r => (r._1, r._2))
-    DrainTree.mine(lines.iterator.map(r => RexCompiler.tokenize(r._3)),
+    DrainTree.mine(lines.iterator.map(r => Tokens.words(r._3)),
       cfg.depth, cfg.st).catalog()
   }
 

@@ -84,14 +84,4 @@ class RexCompilerSpec extends AnyFunSuite {
       Seq("blk_(|-)[0-9]+", "(/|)(\\d+\\.){3}\\d+(:\\d+)?"))
     assert(masked == "Receiving block <*> src: <*> dest: <*>")
   }
-
-  test("tokenize matches Python str.strip().split() semantics") {
-    assert(RexCompiler.tokenize("  a  b\tc ").toSeq == Seq("a", "b", "c"))
-    assert(RexCompiler.tokenize("").isEmpty)
-    assert(RexCompiler.tokenize("   ").isEmpty)
-  }
-
-  test("Spell tokenizer splits on whitespace = : , and drops empties") {
-    assert(RexCompiler.tokenizeSpell("k=v, x:y z").toSeq == Seq("k", "v", "x", "y", "z"))
-  }
 }

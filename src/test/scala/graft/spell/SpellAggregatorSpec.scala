@@ -3,7 +3,7 @@ package graft.spell
 import graft.SparkSuite
 import graft.drain.DrainTree
 import graft.pipeline.{LogPipeline, PipelineConfig}
-import graft.rex.RexCompiler
+import graft.text.Tokens
 
 class SpellAggregatorSpec extends SparkSuite {
   import spark.implicits._
@@ -28,7 +28,7 @@ class SpellAggregatorSpec extends SparkSuite {
     val rows = lines.zipWithIndex.map { case (l, i) => ("u1", i, l) }
     val p = new LogPipeline(cfg)
     val dist = p.mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st))
-    val seq = SpellModel.mine(lines.iterator.map(RexCompiler.tokenizeSpell))
+    val seq = SpellModel.mine(lines.iterator.map(Tokens.spell))
     assert(catalogOf(dist) == catalogOf(seq))
     assert(dist.minedLines == lines.size)
   }
@@ -40,15 +40,15 @@ class SpellAggregatorSpec extends SparkSuite {
     val p = new LogPipeline(cfg)
     val dist = p.mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st))
     val seq = SpellModel.mine(
-      rows.sortBy(r => (r._1, r._2)).iterator.map(r => RexCompiler.tokenizeSpell(r._3)))
+      rows.sortBy(r => (r._1, r._2)).iterator.map(r => Tokens.spell(r._3)))
     assert(catalogOf(dist) == catalogOf(seq))
     // the merged model's prefix tree is live: it matches without minting clusters
-    val probe = RexCompiler.tokenizeSpell("send block blk_<*> to nodeZZ")
+    val probe = Tokens.spell("send block blk_<*> to nodeZZ")
     assert(dist.search(probe) != null)
   }
 
   test("canonicalMerge is commutative bit-identically") {
-    def model(ls: Seq[String]) = SpellModel.mine(ls.iterator.map(RexCompiler.tokenizeSpell))
+    def model(ls: Seq[String]) = SpellModel.mine(ls.iterator.map(Tokens.spell))
     val a = model(Seq("alpha beta 1", "alpha beta 2", "gamma d"))
     val b = model(Seq("alpha beta 9", "delta e f g", "gamma d"))
     val ab = a.canonicalMerge(b)
@@ -64,7 +64,7 @@ class SpellAggregatorSpec extends SparkSuite {
     val capped = new LogPipeline(cfg.copy(spellMineLimit = 10))
       .mineSpellResidue(maskedFrame(rows), new DrainTree(cfg.depth, cfg.st))
     assert(capped.minedLines == 10L)
-    val seq10 = SpellModel.mine(lines.take(10).iterator.map(RexCompiler.tokenizeSpell))
+    val seq10 = SpellModel.mine(lines.take(10).iterator.map(Tokens.spell))
     assert(catalogOf(capped) == catalogOf(seq10))
   }
 }
